@@ -553,20 +553,26 @@ def main() -> None:
             )
     except (OSError, ValueError, ZeroDivisionError):
         pass
-    # Per-branch attribution for the heaviest union gate (r13 verdict #4):
-    # ONE isolated post-sweep run with SPARK_GRAFT_BRANCH_TIMING=1 (never
-    # inside the timed reps — the attribution materializes each branch
-    # twice). Per-branch seconds go to stderr with ratios against the
-    # committed per-branch baseline (r11_baseline_queries.json
-    # learned_sketch_branches), so a regression inside the 13-branch
-    # union is attributable without a manual bisect.
+    # Per-branch attribution for every union gate (r13 verdict #4): ONE
+    # isolated post-sweep run per gate with SPARK_GRAFT_BRANCH_TIMING=1
+    # (never inside the timed reps — the attribution materializes each
+    # branch twice). Per-branch seconds go to stderr, with ratios against
+    # the committed per-branch baseline where r11_baseline_queries.json
+    # has one, so a regression inside a union is attributable without a
+    # manual bisect.
     if sf == "0.1":
-        import importlib
+        from enterprise_warp_spark.queries import BRANCH_SECONDS
 
-        for gate, module, basekey in (
-            ("learned_sketch_ops", "queries_sketch",
-             "learned_sketch_branches"),
-            ("web_hygiene_ops", "queries_hygiene", "web_hygiene_branches"),
+        for gate, basekey in (
+            ("learned_sketch_ops", "learned_sketch_branches"),
+            ("web_hygiene_ops", "web_hygiene_branches"),
+            ("temporal_curation_ops", None),
+            ("repeated_ngram_spans", None),
+            ("embedding_ann_methods", None),
+            ("search_rank_ops", None),
+            ("matching_geo_ops", None),
+            ("kernel_value_slices", None),
+            ("ntile_bins_orders", None),
         ):
             if not _extras_ok(f"branch attribution for {gate}"):
                 continue
@@ -576,11 +582,6 @@ def main() -> None:
                 REGISTRY[gate].spark(spark, sf_dir).write.format(
                     "noop"
                 ).mode("overwrite").save()
-                secs = dict(
-                    importlib.import_module(
-                        f"enterprise_warp_spark.{module}"
-                    ).LAST_BRANCH_SECONDS
-                )
                 with open(
                     os.path.join(
                         os.path.dirname(__file__),
@@ -588,7 +589,7 @@ def main() -> None:
                     )
                 ) as fh:
                     bb = json.load(fh).get(basekey, {})
-                for bname, bsec in sorted(secs.items()):
+                for bname, bsec in sorted(BRANCH_SECONDS[gate].items()):
                     b0 = bb.get(bname)
                     ratio = (
                         f" ({bsec / b0:.2f}x vs baseline {b0:.3f}s)"

@@ -20,12 +20,18 @@ Reference operators covered per query are noted as SURVEY §2 ids (A1, J6, ...).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import itertools
+import os
+import time
+from collections.abc import Callable, Mapping
+from concurrent.futures import FIRST_EXCEPTION, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
+from pyspark.util import inheritable_thread_target
 
 from enterprise_warp_spark.functions.arrays import spread
 from enterprise_warp_spark.functions.orf import hd_orf
@@ -61,37 +67,99 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-def make_branch_timer(gate_name: str, seconds: dict):
-    """Shared per-branch attribution instrumentation for multi-branch
-    union gates (r13 verdict #4; one definition so a fix cannot miss a
-    gate). Returns (timing, _b): with SPARK_GRAFT_BRANCH_TIMING=1 —
-    bench's isolated post-sweep pass, never a timed rep — each
-    `_b(name, fn, *args)` ALSO materializes the branch and records its
-    seconds into `seconds` and stderr; otherwise `_b` is a passthrough.
-    Gates MUST run branches strictly sequentially when `timing` is set
-    (drop their thread pools to one worker): concurrently-built branches
-    would charge each other's contention to whichever branch overlapped,
-    which is exactly the misattribution this instrument exists to
-    remove."""
-    import os
-    import sys as _sys
-    import time as _time
+# Width of every union gate's branch pool. FIFO scheduling back-fills
+# executor gaps, so a wider pool adds driver threads, not executor pressure
+# (8 won an interleaved 4-vs-8 A/B on learned_sketch_ops, OPTIMIZATION_r14).
+BRANCH_WIDTH = 8
 
+# {gate: {branch: seconds to build and materialize that branch alone}},
+# filled by run_branches only when SPARK_GRAFT_BRANCH_TIMING=1.
+BRANCH_SECONDS: dict[str, dict[str, float]] = {}
+
+_gate_runs = itertools.count()
+
+
+class _SharedInputs(dict):
+    """name -> Future of a shared input; indexing blocks until it is built."""
+
+    def __getitem__(self, name: str) -> Any:
+        return super().__getitem__(name).result()
+
+
+def run_branches(
+    spark: SparkSession,
+    gate: str,
+    branches: dict[str, Callable[[Mapping[str, Any]], Any]],
+    shared: dict[str, Callable[[Mapping[str, Any]], Any]] | None = None,
+) -> list:
+    """Build a union gate's branches on one thread pool and return their
+    results in `branches` order (the union order is fixed by code, never
+    by completion order).
+
+    Every callable gets one argument, a mapping whose `[name]` blocks
+    until the shared input `name` is built. Shared inputs are submitted
+    first, in order (one may read an earlier one), so no pool width can
+    deadlock a branch waiting on its input.
+
+    Each callable runs under pyspark's inheritable_thread_target, so the
+    caller's local properties (a job group, job tags) reach the pool
+    thread, and adds two job tags: `ews-gate:<gate>:<run id>` for this
+    call and `ews-branch:<gate>:<name>`. On the first failure the jobs
+    tagged with this call's run tag are cancelled until every sibling has
+    exited, queued callables are dropped, and that first error is raised.
+
+    With SPARK_GRAFT_BRANCH_TIMING=1 the pool has one thread, so branches
+    build strictly one after another with the shared inputs already
+    resolved; each branch is also materialized (noop write) and its
+    seconds are recorded in BRANCH_SECONDS[gate]. Concurrent builds would
+    charge each other's contention to whichever branch overlapped."""
+    sc = spark.sparkContext
     timing = os.environ.get("SPARK_GRAFT_BRANCH_TIMING") == "1"
-    seconds.clear()
+    seconds: dict[str, float] = {}
+    if timing:
+        BRANCH_SECONDS[gate] = seconds
+    else:
+        BRANCH_SECONDS.pop(gate, None)
+    run_tag = f"ews-gate:{gate}:{next(_gate_runs)}"
+    inputs = _SharedInputs()
 
-    def _b(name, fn, *args):
-        if not timing:
-            return fn(*args)
-        t0 = _time.perf_counter()
-        df = fn(*args)
-        df.write.format("noop").mode("overwrite").save()
-        sec = round(_time.perf_counter() - t0, 4)
-        seconds[name] = sec
-        print(f"# {gate_name} branch {name}: {sec:.3f}s", file=_sys.stderr)
-        return df
+    def task(name: str, fn: Callable, timed: bool) -> Callable[[], Any]:
+        @inheritable_thread_target(spark)
+        def run() -> Any:
+            sc.addJobTag(run_tag)
+            sc.addJobTag(f"ews-branch:{gate}:{name}")
+            t0 = time.perf_counter()
+            out = fn(inputs)
+            if timed:
+                if isinstance(out, DataFrame):
+                    out.write.format("noop").mode("overwrite").save()
+                seconds[name] = round(time.perf_counter() - t0, 4)
+            return out
 
-    return timing, _b
+        return run
+
+    pool = ThreadPoolExecutor(max_workers=1 if timing else BRANCH_WIDTH)
+    submitted: list[Future] = []
+    try:
+        for name, fn in (shared or {}).items():
+            f = inputs[name] = pool.submit(task(name, fn, False))
+            submitted.append(f)
+        futures = [pool.submit(task(n, fn, timing)) for n, fn in branches.items()]
+        submitted += futures
+        done, _ = wait(submitted, return_when=FIRST_EXCEPTION)
+        for f in submitted:
+            if f in done and f.exception() is not None:
+                raise f.exception()
+        return [f.result() for f in futures]
+    except BaseException:
+        pool.shutdown(wait=False, cancel_futures=True)
+        pending = [f for f in submitted if not f.done()]
+        while pending:
+            sc.cancelJobsWithTag(run_tag)
+            pending = list(wait(pending, timeout=0.1).not_done)
+        raise
+    finally:
+        pool.shutdown(wait=True)
 
 
 def _dec(col: str | F.Column, prec: int, scale: int) -> F.Column:
@@ -456,14 +524,9 @@ def ntile_bins_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     # the two-phase rank (sample + checkpoint + offsets collect) and the
     # staged quickselect (stats + histogram + bounded collect) are
-    # independent driver-side job chains — run them on a 2-thread pool
-    # (the learned_sketch_ops pattern) so neither waits on the other
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        f_base = pool.submit(
-            ntile_bins_scalable,
+    # independent driver-side job chains, so neither waits on the other
+    base, res = run_branches(spark, "ntile_bins_orders", {
+        "ntile": lambda _: ntile_bins_scalable(
             # project to the two columns the ranking and the aggs touch
             # BEFORE the range exchange (guide §2.3): the two-phase rank
             # checkpoints its ranged input, so every dropped column is
@@ -478,18 +541,12 @@ def ntile_bins_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("o_totalprice").alias("max_price"),
                 F.round(F.stddev_samp("o_totalprice"), 2).alias("std_price"),
             ],
-        )
-        f_res = pool.submit(
-            exact_rank_select,
+        ),
+        "rank_select": lambda _: exact_rank_select(
             orders, "o_orderpriority", "o_totalprice",
             probs=(0.5, 0.9), collect_cap=20_000,
-        )
-        base = f_base.result()
-        res = f_res.result()
-    finally:
-        # exceptions between submit and result must not leak in-flight
-        # builds on non-daemon threads
-        pool.shutdown(wait=True, cancel_futures=True)
+        ),
+    })
     gi = {g: i for i, g in enumerate(sorted({t["group"] for t in res}))}
     pidx = {0.5: 0, 0.9: 1}
     rows = [

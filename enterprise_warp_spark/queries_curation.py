@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.tables import table
 
 HOUR_US = 3_600_000_000
@@ -369,100 +369,78 @@ def temporal_curation_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The build-phase branches each run their own driver-side jobs (the
     # hourly-MIN checkpoint; SCD2's real dimension write/merge/read; the
-    # mix and pack/chunk materializations) that are independent — run
-    # them on a thread pool (the learned_sketch_ops pattern) so the
-    # serial build chain collapses to the longest branch. Union order
-    # below stays fixed by code.
-    from concurrent.futures import ThreadPoolExecutor
+    # mix and pack/chunk materializations) that are independent, and the
+    # gapfill/zscore/funnel/retention CONSTRUCTIONS are pure plan building
+    # (hundreds of py4j round-trips each) that overlaps the eager lanes.
+    def gf(inp, method: str, tag: str, rounded: bool) -> DataFrame:
+        g = gapfill(
+            inp["hm"], "b", ["event_type"], HOUR_US, "v",
+            agg="min", method=method,
+        )
+        v1 = (F.round("v", 6) + F.lit(0.0)) if rounded else F.col("v")
+        return g.select(
+            F.lit(tag).alias("gate"),
+            F.col("event_type").alias("k1"),
+            F.col("bucket_us").cast("long").alias("k2"),
+            v1.alias("v1"),
+            F.col("filled").cast("double").alias("v2"),
+        )
 
-    import os
+    def _z(inp) -> DataFrame:
+        return rolling_zscore(
+            inp["hm"], "b", "v", ["event_type"],
+            window_rows=24, threshold=2.0,
+        ).select(
+            F.lit("zsc").alias("gate"),
+            F.col("event_type").alias("k1"),
+            F.col("b").cast("long").alias("k2"),
+            (F.round("zscore", 4) + F.lit(0.0)).alias("v1"),
+            F.col("is_anomaly").cast("double").alias("v2"),
+        )
 
-    width = int(os.environ.get("EWS_TEMPORAL_POOL_WIDTH", "8"))
-    pool = ThreadPoolExecutor(max_workers=width)
-    try:
+    def _fnl(_) -> DataFrame:
+        return funnel(ev, list(_FUNNEL_STEPS)).select(
+            F.lit("fnl").alias("gate"),
+            F.col("event_type").alias("k1"),
+            F.col("step").cast("long").alias("k2"),
+            F.col("n_users").cast("double").alias("v1"),
+            F.lit(0.0).alias("v2"),
+        )
+
+    def _ret(_) -> DataFrame:
+        return retention_cohorts(ev, WEEK_US).select(
+            F.lit("ret").alias("gate"),
+            F.col("cohort_us").cast("string").alias("k1"),
+            F.col("offset").cast("long").alias("k2"),
+            F.col("n_users").cast("double").alias("v1"),
+            F.lit(0.0).alias("v2"),
+        )
+
+    parts = run_branches(
+        spark,
+        "temporal_curation_ops",
+        {
+            # the eager lanes first, so they hold threads from the start
+            "scd": lambda _: _scd2_branch(spark, sf_dir),
+            "mix": lambda _: _mix_branch(spark, sf_dir),
+            "pak": lambda _: _pack_chunk_branches(spark, sf_dir),
+            "gfl": lambda inp: gf(inp, "locf", "gfl", False),
+            "gfi": lambda inp: gf(inp, "linear", "gfi", True),
+            "zsc": _z,
+            "fnl": _fnl,
+            "ret": _ret,
+        },
         # ONE hourly-MIN aggregate shared by gfl/gfi/zsc (the
         # _customer_slim / grams= pattern): min is idempotent under
         # re-aggregation, so gapfill over the pre-bucketed series (ts=b,
         # agg=min) is value-identical to gapfill over raw events — three
         # corpus scans+aggregates become one
-        f_hm = pool.submit(
-            lambda: _hourly_min_series(spark, sf_dir).localCheckpoint(
+        shared={
+            "hm": lambda _: _hourly_min_series(spark, sf_dir).localCheckpoint(
                 eager=True
-            )
-        )
-        f_scd = pool.submit(_scd2_branch, spark, sf_dir)
-        f_mix = pool.submit(_mix_branch, spark, sf_dir)
-        f_pak = pool.submit(_pack_chunk_branches, spark, sf_dir)
-
-        # the gapfill/zscore/funnel/retention CONSTRUCTIONS are pure plan
-        # building (hundreds of py4j round-trips each) — submit them to
-        # the pool too, so their chatter overlaps the eager SCD2/mix/pack
-        # lanes instead of running serially after every lane has resolved
-        # (r14). Each hm-consumer blocks on f_hm inside its own closure;
-        # union order below stays fixed by code.
-        def gf(method: str, tag: str, rounded: bool) -> DataFrame:
-            g = gapfill(
-                f_hm.result(), "b", ["event_type"], HOUR_US, "v",
-                agg="min", method=method,
-            )
-            v1 = (F.round("v", 6) + F.lit(0.0)) if rounded else F.col("v")
-            return g.select(
-                F.lit(tag).alias("gate"),
-                F.col("event_type").alias("k1"),
-                F.col("bucket_us").cast("long").alias("k2"),
-                v1.alias("v1"),
-                F.col("filled").cast("double").alias("v2"),
-            )
-
-        def _z() -> DataFrame:
-            return rolling_zscore(
-                f_hm.result(), "b", "v", ["event_type"],
-                window_rows=24, threshold=2.0,
-            ).select(
-                F.lit("zsc").alias("gate"),
-                F.col("event_type").alias("k1"),
-                F.col("b").cast("long").alias("k2"),
-                (F.round("zscore", 4) + F.lit(0.0)).alias("v1"),
-                F.col("is_anomaly").cast("double").alias("v2"),
-            )
-
-        def _fnl() -> DataFrame:
-            return funnel(ev, list(_FUNNEL_STEPS)).select(
-                F.lit("fnl").alias("gate"),
-                F.col("event_type").alias("k1"),
-                F.col("step").cast("long").alias("k2"),
-                F.col("n_users").cast("double").alias("v1"),
-                F.lit(0.0).alias("v2"),
-            )
-
-        def _ret() -> DataFrame:
-            return retention_cohorts(ev, WEEK_US).select(
-                F.lit("ret").alias("gate"),
-                F.col("cohort_us").cast("string").alias("k1"),
-                F.col("offset").cast("long").alias("k2"),
-                F.col("n_users").cast("double").alias("v1"),
-                F.lit(0.0).alias("v2"),
-            )
-
-        f_gfl = pool.submit(gf, "locf", "gfl", False)
-        f_gfi = pool.submit(gf, "linear", "gfi", True)
-        f_z = pool.submit(_z)
-        f_fnl = pool.submit(_fnl)
-        f_ret = pool.submit(_ret)
-        parts = [
-            f_gfl.result(),
-            f_gfi.result(),
-            f_z.result(),
-            f_fnl.result(),
-            f_ret.result(),
-            f_scd.result(),
-            f_mix.result(),
-            f_pak.result(),
-        ]
-    finally:
-        # exceptions between submit and result must not leak in-flight
-        # branch builds on non-daemon threads
-        pool.shutdown(wait=True, cancel_futures=True)
+            ),
+        },
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -712,7 +690,7 @@ def matching_geo_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of py4j round-trips (the haversine/ray-cast/q-gram expression
     # trees); build them on a pool so the round-trip latency overlaps
     # (r14). Union order stays fixed by code.
-    def _rad():
+    def _rad(_):
         return (
             radius_join(pts, pts, _RADIUS_KM, lat_col="lat", lng_col="lng")
             .filter(F.col("id_l") < F.col("id_r"))
@@ -741,7 +719,7 @@ def matching_geo_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     )
-    def _pip():
+    def _pip(_):
         polys = spark.createDataFrame(
             [(name, verts) for name, verts in _POLYGONS.items()], poly_schema
         )
@@ -755,7 +733,7 @@ def matching_geo_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("v2"),
         )
 
-    def _fuz():
+    def _fuz(_):
         names = base
         return edit_distance_join(
             names.filter(F.col("c_custkey") % 20 == 0),
@@ -771,16 +749,12 @@ def matching_geo_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("v2"),
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [
-            pool.submit(_rad),
-            pool.submit(_pip),
-            pool.submit(_fuz),
-            pool.submit(_img_branch, spark, sf_dir, base),
-        ]
-        parts = [f.result() for f in futures]
+    parts = run_branches(spark, "matching_geo_ops", {
+        "rad": _rad,
+        "pip": _pip,
+        "fuz": _fuz,
+        "img": lambda _: _img_branch(spark, sf_dir, base),
+    })
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

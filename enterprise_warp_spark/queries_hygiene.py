@@ -62,13 +62,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.queries_pipeline import _D_SIG_CTE
 from enterprise_warp_spark.tables import table
-
-# filled by web_hygiene_ops when SPARK_GRAFT_BRANCH_TIMING=1 (bench's
-# isolated attribution pass): {branch: isolated build+materialize sec}
-LAST_BRANCH_SECONDS: dict[str, float] = {}
 
 # RE2 twin of the tokenizer's _PY_PRETOKEN_RE (" ?[^\W\d_]+| ?\d+|\s+|
 # [^\s\w]+|_+"): Python's str-mode classes expand to Unicode categories —
@@ -401,19 +397,20 @@ def _docs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     every branch's heavy per-row map (URL regex, mojibake repair, BPE
     encode, redaction) ran serially regardless of cluster width. The
     spread is a no-op once the scan is at least cluster-parallel (the
-    100 TB case)."""
-    import os
+    100 TB case).
 
+    Cost at scale: the eager localCheckpoint reads the whole table once
+    before any branch starts and keeps a decoded copy of every row in
+    executor block storage (MEMORY_AND_DISK) until the gate's DataFrame
+    is garbage-collected, so the gate holds roughly the decoded size of
+    documents.parquet, which is larger than its compressed file. Where
+    that copy does not fit the executors' storage memory the blocks spill
+    to local disk and the checkpoint becomes a full disk write of the
+    text column. It still replaces 12 scans with one."""
     from enterprise_warp_spark.functions.arrays import spread
 
-    mode = os.environ.get("EWS_HYGIENE_DOCS_MODE", "ckpt")
-    docs = table(spark, sf_dir, "documents")
-    if mode == "raw":
-        return docs
-    docs = spread(docs, "doc_id")
-    if mode == "ckpt":
-        docs = docs.localCheckpoint(eager=True)
-    return docs
+    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
+    return docs.localCheckpoint(eager=True)
 
 
 def _url_dom_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,60 +905,42 @@ def _gqr_branch(spark: SparkSession, sf_dir: str, docs_in: DataFrame) -> DataFra
     "pipeline/dedup.py strip_repeated_lines).",
 )
 def web_hygiene_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # EVERY branch builds on the thread pool (the learned_sketch_ops
-    # pattern), not just the two obviously-eager ones ([stm] runs a full
-    # availableNow stream, [wrc] collects + encodes + re-ingests a WARC
-    # file): [spl] turned out to run eager connected-components
+    # EVERY branch builds on the branch pool, not just the two
+    # obviously-eager ones ([stm] runs a full availableNow stream, [wrc]
+    # collects + encodes + re-ingests a WARC file): [spl] turned out to run eager connected-components
     # checkpoint jobs inside its build (~5 s of blocking driver jobs the
     # old stm/wrc-only pool left on the main thread), and even the lazy
     # branches each spend hundreds of py4j round-trips CONSTRUCTING
     # their plans — round-trip latency overlaps across threads (one
     # gateway connection per thread), so pooling collapses the serial
-    # ~7k-call build chain to the longest single lane. Union order stays
-    # fixed by code, never completion order.
-    # SPARK_GRAFT_BRANCH_TIMING=1 (bench's isolated post-sweep
-    # attribution pass, r13 verdict #4) additionally materializes each
-    # branch alone and records its seconds in LAST_BRANCH_SECONDS; the
-    # pool then drops to ONE worker so branches build strictly
-    # sequentially in submission order (make_branch_timer's no-overlap
-    # contract).
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    from enterprise_warp_spark.queries import make_branch_timer
-
-    timing, _b = make_branch_timer("web_hygiene_ops", LAST_BRANCH_SECONDS)
-
-    width = int(os.environ.get("EWS_HYGIENE_POOL_WIDTH", "8"))
-    with ThreadPoolExecutor(max_workers=1 if timing else width) as pool:
+    # ~7k-call build chain to the longest single lane.
+    parts = run_branches(
+        spark,
+        "web_hygiene_ops",
+        {
+            "url_dom": lambda _: _url_dom_branches(spark, sf_dir),
+            "moj": lambda inp: _moj_branch(spark, sf_dir, inp["docs"]),
+            "tag": lambda inp: _tag_branch(spark, sf_dir, inp["docs"]),
+            "tok": lambda inp: _tok_branch(spark, sf_dir, inp["docs"]),
+            "spl": lambda inp: _spl_branch(spark, sf_dir, inp["docs"]),
+            "stm": lambda _: _stm_branch(spark, sf_dir),
+            "pii": lambda inp: _pii_branch(spark, sf_dir, inp["docs"]),
+            "wrc": lambda inp: _wrc_branch(spark, sf_dir, inp["docs"]),
+            "nfc": lambda inp: _nfc_branch(spark, sf_dir, inp["docs"]),
+            "bpe": lambda inp: _bpe_branch(spark, sf_dir, inp["docs"]),
+            "uni": lambda inp: _uni_branch(spark, sf_dir, inp["docs"]),
+            "gqr": lambda inp: _gqr_branch(spark, sf_dir, inp["docs"]),
+            "c4f": lambda inp: _c4f_branch(spark, sf_dir, inp["docs"]),
+            "lnd": lambda inp: _lnd_branch(spark, sf_dir, inp["docs"]),
+        },
         # ONE spread + checkpointed documents table feeds the 12
         # docs-consuming branches (r15; the learned_sketch_ops shared-
         # input pattern): 12 single-partition re-scans of the text
         # column become one cluster-wide materialization every branch's
-        # heavy map inherits. Submitted first so no pool width can
-        # deadlock; [stm] (a readStream source) and [url_dom] (customer)
-        # don't consume it.
-        f_docs = pool.submit(_docs_shared, spark, sf_dir)
-        branches = [
-            ("url_dom", lambda: _url_dom_branches(spark, sf_dir)),
-            ("moj", lambda: _moj_branch(spark, sf_dir, f_docs.result())),
-            ("tag", lambda: _tag_branch(spark, sf_dir, f_docs.result())),
-            ("tok", lambda: _tok_branch(spark, sf_dir, f_docs.result())),
-            ("spl", lambda: _spl_branch(spark, sf_dir, f_docs.result())),
-            ("stm", lambda: _stm_branch(spark, sf_dir)),
-            ("pii", lambda: _pii_branch(spark, sf_dir, f_docs.result())),
-            ("wrc", lambda: _wrc_branch(spark, sf_dir, f_docs.result())),
-            ("nfc", lambda: _nfc_branch(spark, sf_dir, f_docs.result())),
-            ("bpe", lambda: _bpe_branch(spark, sf_dir, f_docs.result())),
-            ("uni", lambda: _uni_branch(spark, sf_dir, f_docs.result())),
-            ("gqr", lambda: _gqr_branch(spark, sf_dir, f_docs.result())),
-            ("c4f", lambda: _c4f_branch(spark, sf_dir, f_docs.result())),
-            ("lnd", lambda: _lnd_branch(spark, sf_dir, f_docs.result())),
-        ]
-        futures = [
-            pool.submit(_b, name, fn) for name, fn in branches
-        ]
-        parts = [f.result() for f in futures]
+        # heavy map inherits. [stm] (a readStream source) and [url_dom]
+        # (customer) don't consume it.
+        shared={"docs": lambda _: _docs_shared(spark, sf_dir)},
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.tables import table
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap
@@ -1028,23 +1028,16 @@ def _build_kernel_value_slices():
     def kernel_value_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the six physics branches each run independent driver-side build
         # work (synthetic-residual createDataFrames, per-pulsar reduction
-        # kernels) — build them on a thread pool (the learned_sketch_ops
-        # pattern) so the serial build chain collapses; union order stays
-        # the fixed _SLICE_BRANCHES order
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=3)
-        try:
-            futures = {
-                tag: pool.submit(specs[tag].spark, spark, sf_dir)
-                for tag in _SLICE_BRANCHES
-            }
-            out = None
-            for tag in _SLICE_BRANCHES:
-                branch = _spark_proj[tag](futures[tag].result())
-                out = branch if out is None else out.unionByName(branch)
-        finally:
-            pool.shutdown(wait=True, cancel_futures=True)
+        # kernels); union order stays the fixed _SLICE_BRANCHES order
+        parts = run_branches(spark, "kernel_value_slices", {
+            tag: lambda _, tag=tag: _spark_proj[tag](
+                specs[tag].spark(spark, sf_dir)
+            )
+            for tag in _SLICE_BRANCHES
+        })
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
         return out
 
     register("kernel_value_slices", oracle, doc=doc)(kernel_value_slices)

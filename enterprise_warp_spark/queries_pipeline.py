@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from enterprise_warp_spark.pipeline import dedup, similarity, text
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.tables import table
 
 # ---------------------------------------------------------------------------
@@ -336,119 +336,109 @@ _D_SUB = (
 )
 def embedding_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    # Every method branch builds on the thread pool (the
-    # learned_sketch_ops pattern): the eager lanes run independent
-    # driver-side jobs (IVF's centroid collect, the two PQ checkpoints,
-    # SQ8's param aggregate), and the lazy branch CONSTRUCTIONS are each
-    # hundreds of py4j round-trips whose latency overlaps across
-    # threads. Dependent branches (pqc/pq on the PQ lane, sqc/sq8 on the
-    # SQ8 params) block on their producer future inside their own
-    # closure, so they start the moment their input resolves instead of
-    # after every lane has. Union order below stays fixed by code, not
-    # completion order.
-    import os
-    from concurrent.futures import ThreadPoolExecutor
+    # Every method branch builds on the branch pool: the eager lanes run
+    # independent driver-side jobs (IVF's centroid collect, the two PQ
+    # checkpoints, SQ8's param aggregate), and the lazy branch
+    # CONSTRUCTIONS are each hundreds of py4j round-trips whose latency
+    # overlaps across threads. Dependent branches (pqc/pq on the PQ lane,
+    # sqc/sq8 on the SQ8 params) block on their shared input inside their
+    # own closure, so they start the moment it resolves.
 
-    width = int(os.environ.get("EWS_ANN_POOL_WIDTH", "8"))
-    pool = ThreadPoolExecutor(max_workers=width)
-    try:
-        # PQ: codebooks (M*K rows) and the code table are each built ONCE
-        # and checkpointed — the codes feed both the [pqc] rows and the
-        # [pq] search (encoded=), the codebooks feed encode + LUT + norms.
-        def _pq_lane():
-            cbs = similarity.pq_codebooks(emb, _PQ_M, _PQ_K).localCheckpoint(
-                eager=True
-            )
-            return cbs, similarity.pq_encode(emb, cbs, _PQ_M).localCheckpoint(
-                eager=True
-            )
+    # PQ: codebooks (M*K rows) and the code table are each built ONCE
+    # and checkpointed — the codes feed both the [pqc] rows and the
+    # [pq] search (encoded=), the codebooks feed encode + LUT + norms.
+    def _pq_lane(_):
+        cbs = similarity.pq_codebooks(emb, _PQ_M, _PQ_K).localCheckpoint(
+            eager=True
+        )
+        return cbs, similarity.pq_encode(emb, cbs, _PQ_M).localCheckpoint(
+            eager=True
+        )
 
-        f_pq = pool.submit(_pq_lane)
-        f_sq = pool.submit(similarity.sq8_params, emb)
+    def _brute(_):
+        return similarity.cosine_topk(emb, "vec_id < 10", 5).select(
+            F.lit("brute").alias("method"), "query_id", "neighbor_id",
+            "cosine", "rnk"
+        )
 
-        def _brute():
-            return similarity.cosine_topk(emb, "vec_id < 10", 5).select(
-                F.lit("brute").alias("method"), "query_id", "neighbor_id",
-                "cosine", "rnk"
-            )
+    def _lsh(_):
+        return similarity.bucketed_topk(
+            emb, "vec_id < 10", 5, n_planes=4
+        ).select(
+            F.lit("lsh").alias("method"), "query_id", "neighbor_id",
+            "cosine", "rnk"
+        )
 
-        def _lsh():
-            return similarity.bucketed_topk(
-                emb, "vec_id < 10", 5, n_planes=4
-            ).select(
-                F.lit("lsh").alias("method"), "query_id", "neighbor_id",
-                "cosine", "rnk"
-            )
+    def _ivf(_):
+        return similarity.ivf_topk(
+            emb, "vec_id < 10", 5, n_cells=16, nprobe=4
+        ).select(
+            F.lit("ivf").alias("method"), "query_id", "neighbor_id",
+            "cosine", "rnk"
+        )
 
-        def _ivf():
-            return similarity.ivf_topk(
-                emb, "vec_id < 10", 5, n_cells=16, nprobe=4
-            ).select(
-                F.lit("ivf").alias("method"), "query_id", "neighbor_id",
-                "cosine", "rnk"
-            )
+    def _pqc(inp):
+        _, codes = inp["pq_lane"]
+        return codes.select(
+            F.col("vec_id").alias("query_id"),
+            F.posexplode("codes").alias("subspace", "code"),
+        ).select(
+            F.lit("pqc").alias("method"),
+            "query_id",
+            F.col("subspace").cast("long").alias("neighbor_id"),
+            F.col("code").cast("double").alias("cosine"),
+            (F.col("subspace") + 1).cast("int").alias("rnk"),
+        )
 
-        def _pqc():
-            _, codes = f_pq.result()
-            return codes.select(
+    def _pqs(inp):
+        cbs, codes = inp["pq_lane"]
+        return similarity.pq_topk_reranked(
+            emb, cbs, _PQ_M, "vec_id < 10", k=5, rerank=_PQ_RERANK,
+            encoded=codes,
+        ).select(
+            F.lit("pq").alias("method"), "query_id", "neighbor_id",
+            "cosine", "rnk"
+        )
+
+    # SQ8 (r11): scalar quantization — [sqc] gates every vector's
+    # full 8-bit code array (exact integers, no rounding doctrine
+    # needed) and [sq8] the asymmetric-distance top-k against the
+    # dequantized corpus. ONE params derivation feeds encode and
+    # search.
+    def _sqc(inp):
+        return (
+            similarity.sq8_encode(emb, inp["sq8_params"])
+            .select(
                 F.col("vec_id").alias("query_id"),
-                F.posexplode("codes").alias("subspace", "code"),
-            ).select(
-                F.lit("pqc").alias("method"),
+                F.posexplode("codes").alias("j", "code"),
+            )
+            .select(
+                F.lit("sqc").alias("method"),
                 "query_id",
-                F.col("subspace").cast("long").alias("neighbor_id"),
+                (F.col("j") + 1).cast("long").alias("neighbor_id"),
                 F.col("code").cast("double").alias("cosine"),
-                (F.col("subspace") + 1).cast("int").alias("rnk"),
+                (F.col("j") + 1).cast("int").alias("rnk"),
             )
+        )
 
-        def _pqs():
-            cbs, codes = f_pq.result()
-            return similarity.pq_topk_reranked(
-                emb, cbs, _PQ_M, "vec_id < 10", k=5, rerank=_PQ_RERANK,
-                encoded=codes,
-            ).select(
-                F.lit("pq").alias("method"), "query_id", "neighbor_id",
-                "cosine", "rnk"
-            )
+    def _sq8(inp):
+        return similarity.sq8_topk_adc(
+            emb, "vec_id < 10", 5, params=inp["sq8_params"]
+        ).select(
+            F.lit("sq8").alias("method"), "query_id", "neighbor_id",
+            "cosine", "rnk"
+        )
 
-        # SQ8 (r11): scalar quantization — [sqc] gates every vector's
-        # full 8-bit code array (exact integers, no rounding doctrine
-        # needed) and [sq8] the asymmetric-distance top-k against the
-        # dequantized corpus. ONE params derivation feeds encode and
-        # search.
-        def _sqc():
-            return (
-                similarity.sq8_encode(emb, f_sq.result())
-                .select(
-                    F.col("vec_id").alias("query_id"),
-                    F.posexplode("codes").alias("j", "code"),
-                )
-                .select(
-                    F.lit("sqc").alias("method"),
-                    "query_id",
-                    (F.col("j") + 1).cast("long").alias("neighbor_id"),
-                    F.col("code").cast("double").alias("cosine"),
-                    (F.col("j") + 1).cast("int").alias("rnk"),
-                )
-            )
-
-        def _sq8():
-            return similarity.sq8_topk_adc(
-                emb, "vec_id < 10", 5, params=f_sq.result()
-            ).select(
-                F.lit("sq8").alias("method"), "query_id", "neighbor_id",
-                "cosine", "rnk"
-            )
-
-        futures = [
-            pool.submit(fn)
-            for fn in (_brute, _lsh, _ivf, _pqc, _pqs, _sqc, _sq8)
-        ]
-        parts = [f.result() for f in futures]
-    finally:
-        # exceptions between submit and result must not leak in-flight
-        # lane builds on non-daemon threads
-        pool.shutdown(wait=True, cancel_futures=True)
+    parts = run_branches(
+        spark,
+        "embedding_ann_methods",
+        {"brute": _brute, "lsh": _lsh, "ivf": _ivf, "pqc": _pqc, "pq": _pqs,
+         "sqc": _sqc, "sq8": _sq8},
+        shared={
+            "pq_lane": _pq_lane,
+            "sq8_params": lambda _: similarity.sq8_params(emb),
+        },
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -879,133 +869,122 @@ def repeated_ngram_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Every branch builds on the thread pool: the [sfx] suffix-array
+    # Every branch builds on the branch pool: the [sfx] suffix-array
     # machinery is a chain of blocking driver jobs (per-round two-pass
     # ranks), the grams and fingerprint checkpoints are eager corpus
     # jobs, and the gram-branch CONSTRUCTIONS are each hundreds of py4j
     # round-trips whose latency overlaps across threads. Dependent
-    # branches block on their producer future inside their own closure
+    # branches block on their shared input inside their own closure
     # (rep/dcn/str on the grams checkpoint, wfp/wov on the fingerprint
-    # checkpoint), so each starts the moment its input resolves. Union
-    # order stays fixed by code.
-    import os
-    from concurrent.futures import ThreadPoolExecutor
+    # checkpoint), so each starts the moment its input resolves.
+    toks = F.expr("filter(split(text, ' '), x -> x != '')")
+    evals = (
+        docs.filter(F.col("doc_id") % 41 == 0)
+        .select("doc_id", toks.alias("toks"))
+        .filter(F.size("toks") >= 14)
+        .select(
+            F.col("doc_id").alias("eval_id"),
+            F.expr("concat_ws(' ', slice(toks, 5, 10))").alias("text"),
+        )
+    )
 
-    width = int(os.environ.get("EWS_SPANS_POOL_WIDTH", "8"))
-    pool = ThreadPoolExecutor(max_workers=width)
-    try:
-        f_sfx = pool.submit(_sfx_branch, spark, docs)
-        # ONE corpus gram explode+hash pass shared by all three branches
-        # (rep / dcn / str each consume the same (doc_id, pos, gh) table)
-        f_grams = pool.submit(
-            lambda: _gram_position_hashes(docs, "text", 6).localCheckpoint(
-                eager=True
+    def _rep(inp):
+        return repeated_ngram_spans(
+            docs, k=6, min_count=2, grams=inp["grams"]
+        ).select(
+            F.lit("rep").alias("gate"),
+            "doc_id",
+            "span_start",
+            "span_end",
+            "n_grams",
+            F.lit("").alias("h"),
+        )
+
+    def _dcn(inp):
+        return contaminated_spans(
+            docs, evals, n=6, grams=inp["grams"]
+        ).select(
+            F.lit("dcn").alias("gate"),
+            "doc_id",
+            "span_start",
+            "span_end",
+            "n_grams",
+            F.lit("").alias("h"),
+        )
+
+    def _str(inp):
+        return strip_contaminated_spans(
+            docs, evals, n=6, grams=inp["grams"]
+        ).select(
+            F.lit("str").alias("gate"),
+            "doc_id",
+            F.col("n_removed_tokens").cast("long").alias("span_start"),
+            F.lit(0).cast("long").alias("span_end"),
+            F.lit(0).cast("long").alias("n_grams"),
+            F.substring(F.md5("cleaned_text"), 1, 16).alias("h"),
+        )
+
+    def _wfp(inp):
+        return (
+            inp["fp"]
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_fp"),
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            ",",
+                            F.transform(
+                                F.array_sort(F.collect_list("gh")),
+                                lambda x: x.cast("string"),
+                            ),
+                        )
+                    ),
+                    1,
+                    16,
+                ).alias("hh"),
             )
-        )
-        # shared slim: both winnowing branches consume the same selection
-        # (95k rows at sf0.1 — cheap to materialize, saves a full
-        # re-derive)
-        f_fp = pool.submit(
-            lambda: winnow_fingerprints(
-                docs, k=6, w=4, grams=f_grams.result()
-            ).localCheckpoint(eager=True)
-        )
-
-        toks = F.expr("filter(split(text, ' '), x -> x != '')")
-        evals = (
-            docs.filter(F.col("doc_id") % 41 == 0)
-            .select("doc_id", toks.alias("toks"))
-            .filter(F.size("toks") >= 14)
             .select(
-                F.col("doc_id").alias("eval_id"),
-                F.expr("concat_ws(' ', slice(toks, 5, 10))").alias("text"),
-            )
-        )
-
-        def _rep():
-            return repeated_ngram_spans(
-                docs, k=6, min_count=2, grams=f_grams.result()
-            ).select(
-                F.lit("rep").alias("gate"),
+                F.lit("wfp").alias("gate"),
                 "doc_id",
-                "span_start",
-                "span_end",
-                "n_grams",
-                F.lit("").alias("h"),
-            )
-
-        def _dcn():
-            return contaminated_spans(
-                docs, evals, n=6, grams=f_grams.result()
-            ).select(
-                F.lit("dcn").alias("gate"),
-                "doc_id",
-                "span_start",
-                "span_end",
-                "n_grams",
-                F.lit("").alias("h"),
-            )
-
-        def _str():
-            return strip_contaminated_spans(
-                docs, evals, n=6, grams=f_grams.result()
-            ).select(
-                F.lit("str").alias("gate"),
-                "doc_id",
-                F.col("n_removed_tokens").cast("long").alias("span_start"),
+                F.col("n_fp").cast("long").alias("span_start"),
                 F.lit(0).cast("long").alias("span_end"),
                 F.lit(0).cast("long").alias("n_grams"),
-                F.substring(F.md5("cleaned_text"), 1, 16).alias("h"),
+                F.col("hh").alias("h"),
             )
+        )
 
-        def _wfp():
-            return (
-                f_fp.result()
-                .groupBy("doc_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n_fp"),
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                F.transform(
-                                    F.array_sort(F.collect_list("gh")),
-                                    lambda x: x.cast("string"),
-                                ),
-                            )
-                        ),
-                        1,
-                        16,
-                    ).alias("hh"),
-                )
-                .select(
-                    F.lit("wfp").alias("gate"),
-                    "doc_id",
-                    F.col("n_fp").cast("long").alias("span_start"),
-                    F.lit(0).cast("long").alias("span_end"),
-                    F.lit(0).cast("long").alias("n_grams"),
-                    F.col("hh").alias("h"),
-                )
-            )
+    def _wov(inp):
+        return winnow_overlap_pairs(
+            inp["fp"], min_shared=2, max_df=50
+        ).select(
+            F.lit("wov").alias("gate"),
+            F.col("doc_a").alias("doc_id"),
+            F.col("doc_b").cast("long").alias("span_start"),
+            F.lit(0).cast("long").alias("span_end"),
+            F.col("shared_fp").cast("long").alias("n_grams"),
+            F.lit("").alias("h"),
+        )
 
-        def _wov():
-            return winnow_overlap_pairs(
-                f_fp.result(), min_shared=2, max_df=50
-            ).select(
-                F.lit("wov").alias("gate"),
-                F.col("doc_a").alias("doc_id"),
-                F.col("doc_b").cast("long").alias("span_start"),
-                F.lit(0).cast("long").alias("span_end"),
-                F.col("shared_fp").cast("long").alias("n_grams"),
-                F.lit("").alias("h"),
-            )
-
-        futures = [pool.submit(fn) for fn in (_rep, _dcn, _str, _wfp, _wov)]
-        parts = [f.result() for f in futures] + [f_sfx.result()]
-    finally:
-        # exceptions between submit and result must not leak in-flight
-        # branch builds on non-daemon threads
-        pool.shutdown(wait=True, cancel_futures=True)
+    parts = run_branches(
+        spark,
+        "repeated_ngram_spans_q",
+        {"rep": _rep, "dcn": _dcn, "str": _str, "wfp": _wfp, "wov": _wov,
+         "sfx": lambda _: _sfx_branch(spark, docs)},
+        shared={
+            # ONE corpus gram explode+hash pass shared by rep / dcn / str
+            # (each consumes the same (doc_id, pos, gh) table)
+            "grams": lambda _: _gram_position_hashes(
+                docs, "text", 6
+            ).localCheckpoint(eager=True),
+            # shared slim: both winnowing branches consume the same
+            # selection (95k rows at sf0.1 — cheap to materialize, saves a
+            # full re-derive)
+            "fp": lambda inp: winnow_fingerprints(
+                docs, k=6, w=4, grams=inp["grams"]
+            ).localCheckpoint(eager=True),
+        },
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.tables import table
 
 _BM25_QUERY = "spark hash window"
@@ -275,63 +275,47 @@ def search_rank_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dangling-mass aggregates are blocking driver jobs; the index build
     # runs two eager corpus jobs (doclen + postings checkpoints) and the
     # three query-branch CONSTRUCTIONS are each hundreds of py4j
-    # round-trips. Everything builds on the pool, the query branches
-    # blocking on the index future inside their own closures (union
-    # order below stays fixed by code).
-    import os
-    from concurrent.futures import ThreadPoolExecutor
+    # round-trips. Everything builds on the branch pool, the query
+    # branches blocking on the shared index inside their own closures.
 
-    width = int(os.environ.get("EWS_SEARCH_POOL_WIDTH", "8"))
-    pool = ThreadPoolExecutor(max_workers=width)
-    try:
-        f_pr = pool.submit(_pr_branch, spark, sf_dir)
+    # ONE corpus explode+shuffle serves all four branches: the
+    # positional postings are a strict superset of build_index's
+    # (term, doc_id, tf), so bm25/tfidf score straight off them and
+    # phrase_match gets its position lists — no second index build.
+    # Materialize so the three consumers read the aggregated
+    # postings, not three corpus scans (doclen is checkpointed
+    # inside _index_from_postings, where the stats read shares it).
+    def _idx(_):
+        idx = build_positional_index(docs)
+        idx["postings"] = idx["postings"].localCheckpoint(eager=True)
+        return idx
 
-        # ONE corpus explode+shuffle serves all four branches: the
-        # positional postings are a strict superset of build_index's
-        # (term, doc_id, tf), so bm25/tfidf score straight off them and
-        # phrase_match gets its position lists — no second index build.
-        # Materialize so the three consumers read the aggregated
-        # postings, not three corpus scans (doclen is checkpointed
-        # inside _index_from_postings, where the stats read shares it).
-        def _idx():
-            idx = build_positional_index(docs)
-            idx["postings"] = idx["postings"].localCheckpoint(eager=True)
-            return idx
-
-        f_idx = pool.submit(_idx)
-
-        # k far above corpus size: every matched doc is scored, so the
-        # gate's own rank window (over ROUNDED scores) is the only
-        # ordering that matters — bm25_topk's internal unrounded orderBy
-        # can't cut anything
-        big = 1 << 30
-        f_bm25 = pool.submit(
-            lambda: _ranked(bm25_topk(f_idx.result(), _BM25_QUERY, k=big), "bm25")
-        )
-        f_tfidf = pool.submit(
-            lambda: _ranked(
-                tfidf_topk(f_idx.result(), _TFIDF_QUERY, k=big), "tfidf"
-            )
-        )
-        f_phr = pool.submit(
-            lambda: phrase_match(f_idx.result(), _PHRASE).select(
+    # k far above corpus size: every matched doc is scored, so the
+    # gate's own rank window (over ROUNDED scores) is the only
+    # ordering that matters — bm25_topk's internal unrounded orderBy
+    # can't cut anything
+    big = 1 << 30
+    parts = run_branches(
+        spark,
+        "search_rank_ops",
+        {
+            "bm25": lambda inp: _ranked(
+                bm25_topk(inp["idx"], _BM25_QUERY, k=big), "bm25"
+            ),
+            "tfidf": lambda inp: _ranked(
+                tfidf_topk(inp["idx"], _TFIDF_QUERY, k=big), "tfidf"
+            ),
+            "phr": lambda inp: phrase_match(inp["idx"], _PHRASE).select(
                 F.lit("phr").alias("gate"),
                 F.lit("").alias("k1"),
                 F.col("doc_id").cast("long").alias("k2"),
                 F.col("n_occurrences").cast("double").alias("v1"),
                 F.lit("").alias("h"),
-            )
-        )
-        parts = [
-            f_bm25.result(),
-            f_tfidf.result(),
-            f_phr.result(),
-            f_pr.result(),
-        ]
-    finally:
-        # an index-build exception must not leak the in-flight pagerank
-        # iterations on a non-daemon thread
-        pool.shutdown(wait=True, cancel_futures=True)
+            ),
+            "pr": lambda _: _pr_branch(spark, sf_dir),
+        },
+        shared={"idx": _idx},
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -73,12 +73,10 @@ deterministic refit, JVM-only scoring plan) — documented exclusion.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from enterprise_warp_spark.queries import register
+from enterprise_warp_spark.queries import register, run_branches
 from enterprise_warp_spark.queries_pipeline import _D_DOT
 from enterprise_warp_spark.tables import table
 
@@ -1297,11 +1295,6 @@ def _dsr_branch(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
     )
 
 
-# filled by learned_sketch_ops when SPARK_GRAFT_BRANCH_TIMING=1 (the
-# bench attribution pass): {branch_name: isolated build+materialize sec}
-LAST_BRANCH_SECONDS: dict[str, float] = {}
-
-
 @register(
     "learned_sketch_ops",
     _SKETCH_ORACLE,
@@ -1349,86 +1342,36 @@ def learned_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The branch BUILDS are where most of the gate's wall-clock goes:
     # each runs its own driver-side jobs (eager checkpoints, k-means
     # iteration collects, LM/DSIR model totals) that are independent of
-    # every other branch. Spark job submission is thread-safe, so build
-    # the branches on a small thread pool and the serial chain collapses
-    # to the longest single branch (kmc's iteration chain). Results are
-    # deterministic: each branch is deterministic in isolation and the
-    # union order below is fixed by code, not completion order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from enterprise_warp_spark.queries import make_branch_timer
-
-    # per-branch attribution (r13 verdict #4): the gate is an 11+-branch
-    # union whose baseline total hides which branch regressed; see
-    # make_branch_timer. In timing mode the pool drops to ONE worker so
-    # branches build strictly sequentially (submission order) — timings
-    # from the 4-wide pool would include sibling contention and
-    # misattribute regressions (r14 review).
-    timing, _b = make_branch_timer("learned_sketch_ops", LAST_BRANCH_SECONDS)
-
-    # pool width is scale-dependent (how many concurrent branch builds the
-    # scheduler can absorb), so it is env-parameterised rather than
-    # hard-coded; the local default of 8 won an interleaved 4-vs-8 A/B on
-    # quiet hardware (median 12.1s -> 10.5s, 4 of 5 reps; r14, see
-    # OPTIMIZATION_r14.md). FIFO scheduling back-fills executor gaps, so
-    # a wider pool only adds driver threads, not executor pressure.
-    width = int(os.environ.get("EWS_SKETCH_POOL_WIDTH", "8"))
-    with ThreadPoolExecutor(max_workers=1 if timing else width) as pool:
-        # shared inputs build as futures; each branch blocks only on the
-        # input IT consumes, inside its own closure (r14) — a branch
-        # needing just the embeddings no longer waits for the events
-        # checkpoint. Producers are submitted first, so no pool width
-        # can deadlock. In timing mode (width 1) everything still runs
-        # strictly sequentially in submission order, with the shared
-        # inputs resolved before any timed branch.
-        f_td = pool.submit(_tokdocs, spark, sf_dir)
-        f_emb = pool.submit(_sketch_emb, spark, sf_dir)
-        f_ev = pool.submit(_events_slim, spark, sf_dir)
-        f_blm = pool.submit(_b, "blm", _blm_branch, spark, sf_dir)
-        futures = [
-            pool.submit(
-                _b, "semd",
-                lambda: _semd_branch(spark, sf_dir, f_emb.result()),
-            ),
-            pool.submit(
-                _b, "hh", lambda: _hh_branch(spark, sf_dir, f_ev.result()[0])
-            ),
-            pool.submit(
-                _b, "hll_gk",
-                lambda: _hll_gk_branches(spark, sf_dir, *f_ev.result()),
-            ),
-            pool.submit(
-                _b, "lmp", lambda: _lmp_branch(spark, sf_dir, f_td.result())
-            ),
-            pool.submit(
-                _b, "dsr", lambda: _dsr_branch(spark, sf_dir, f_td.result())
-            ),
-            f_blm,
-            pool.submit(
-                _b, "ccn", lambda: _ccn_branch(spark, sf_dir, f_td.result())
-            ),
-            pool.submit(
-                _b, "kmc",
-                lambda: _kmc_branch(spark, sf_dir, f_emb.result()),
-            ),
-            pool.submit(
-                _b, "rpj",
-                lambda: _rpj_branch(spark, sf_dir, f_emb.result()),
-            ),
-            pool.submit(
-                _b, "cms", lambda: _cms_branch(spark, sf_dir, f_ev.result()[0])
-            ),
-            pool.submit(
-                _b, "kvx", lambda: _kvx_branch(spark, sf_dir, f_ev.result()[0])
-            ),
-            pool.submit(
-                _b, "ams", lambda: _ams_branch(spark, sf_dir, f_ev.result()[0])
-            ),
-            pool.submit(
-                _b, "dds", lambda: _dds_branch(spark, sf_dir, f_ev.result()[0])
-            ),
-        ]
-        parts = [f.result() for f in futures]
+    # every other branch, so on the branch pool the serial chain collapses
+    # to the longest single branch (kmc's iteration chain). Each branch
+    # blocks only on the shared input IT consumes (r14) — a branch needing
+    # just the embeddings does not wait for the events checkpoint.
+    parts = run_branches(
+        spark,
+        "learned_sketch_ops",
+        {
+            # first: [blm] needs no shared input, so its eager probe
+            # starts as soon as the shared inputs have threads
+            "blm": lambda _: _blm_branch(spark, sf_dir),
+            "semd": lambda inp: _semd_branch(spark, sf_dir, inp["emb"]),
+            "hh": lambda inp: _hh_branch(spark, sf_dir, inp["ev"][0]),
+            "hll_gk": lambda inp: _hll_gk_branches(spark, sf_dir, *inp["ev"]),
+            "lmp": lambda inp: _lmp_branch(spark, sf_dir, inp["td"]),
+            "dsr": lambda inp: _dsr_branch(spark, sf_dir, inp["td"]),
+            "ccn": lambda inp: _ccn_branch(spark, sf_dir, inp["td"]),
+            "kmc": lambda inp: _kmc_branch(spark, sf_dir, inp["emb"]),
+            "rpj": lambda inp: _rpj_branch(spark, sf_dir, inp["emb"]),
+            "cms": lambda inp: _cms_branch(spark, sf_dir, inp["ev"][0]),
+            "kvx": lambda inp: _kvx_branch(spark, sf_dir, inp["ev"][0]),
+            "ams": lambda inp: _ams_branch(spark, sf_dir, inp["ev"][0]),
+            "dds": lambda inp: _dds_branch(spark, sf_dir, inp["ev"][0]),
+        },
+        shared={
+            "td": lambda _: _tokdocs(spark, sf_dir),
+            "emb": lambda _: _sketch_emb(spark, sf_dir),
+            "ev": lambda _: _events_slim(spark, sf_dir),
+        },
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

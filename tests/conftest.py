@@ -1,4 +1,5 @@
 import os
+import warnings
 
 import pytest
 
@@ -17,6 +18,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("EWS_TEST_SF_DIR", "/root/testdata/sf0.01")
+
+
+@pytest.fixture(scope="session")
+def sf_tiny(sf_dir):
+    """The sf0.001 tables next to sf_dir, for gates too slow to test at
+    sf_dir's scale."""
+    return os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
 
 
 @pytest.fixture(scope="session")
@@ -94,6 +102,30 @@ SLOW_TESTS = frozenset((
 
 
 def pytest_collection_modifyitems(config, items):
+    # match on nodeids relative to the repo root (the rootdir pyproject.toml
+    # sets), whatever directory pytest was started from
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    matched, modules = set(), set()
     for item in items:
-        if item.nodeid in SLOW_TESTS:
+        module = os.path.relpath(item.path, root).replace(os.sep, "/")
+        nodeid = module + item.nodeid[item.nodeid.index("::"):]
+        modules.add(module)
+        if nodeid in SLOW_TESTS:
+            matched.add(nodeid)
             item.add_marker(pytest.mark.slow)
+    # a listed test is stale when its module is gone, or was collected
+    # whole (no ::-selection on the command line) without it
+    if any("::" in arg for arg in config.args):
+        return
+    stale = sorted(
+        t for t in SLOW_TESTS - matched
+        if t.split("::")[0] in modules
+        or not os.path.exists(os.path.join(root, t.split("::")[0]))
+    )
+    if stale:
+        warnings.warn(
+            pytest.PytestConfigWarning(
+                "SLOW_TESTS entries that match no collected test: "
+                + ", ".join(stale)
+            )
+        )

@@ -234,7 +234,7 @@ def test_timestamped_chain_segments(spark, tmp_path):
     assert [int(r["values"][0]) for r in rows] == list(range(25))
 
 
-def test_global_rank_and_scalable_ntile(spark):
+def test_global_rank_and_scalable_ntile(spark, sf_dir):
     """Distributed ranking must equal the single-partition window exactly."""
     from pyspark.sql import Window
 
@@ -242,7 +242,7 @@ def test_global_rank_and_scalable_ntile(spark):
     from enterprise_warp_spark.operators.ranking import global_rank, ntile_bins_scalable
     from enterprise_warp_spark.tables import table
 
-    orders = table(spark, "/root/testdata/sf0.01", "orders")
+    orders = table(spark, sf_dir, "orders")
     got = global_rank(orders, ["o_totalprice", "o_orderkey"], "rank")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     want = orders.withColumn("rank", F.row_number().over(w))
@@ -1127,28 +1127,21 @@ def test_x_importance_wave_value_is_pinned(spark):
     assert abs(X_IMPORTANCE_LOGZ_PIN + 4.8465) < 0.02
 
 
-def test_sketch_branch_timing_instrumentation(spark, monkeypatch):
+def test_sketch_branch_timing_instrumentation(spark, monkeypatch, sf_tiny):
     """r13 verdict #4: SPARK_GRAFT_BRANCH_TIMING=1 fills
-    LAST_BRANCH_SECONDS with one positive entry per union branch and must
-    NOT change the gate's rows (the wrapper only adds isolated noop
+    BRANCH_SECONDS[gate] with one positive entry per union branch and must
+    NOT change the gate's rows (the executor only adds isolated noop
     materializations)."""
-    import os
-
-    from enterprise_warp_spark import queries_sketch
-    from enterprise_warp_spark.queries import REGISTRY
+    from enterprise_warp_spark.queries import BRANCH_SECONDS, REGISTRY
     from tests.oracle import _normalize
 
-    sf = "/root/testdata/sf0.001"
+    gate = "learned_sketch_ops"
     monkeypatch.delenv("SPARK_GRAFT_BRANCH_TIMING", raising=False)
-    plain = _normalize(
-        REGISTRY["learned_sketch_ops"].spark(spark, sf).toPandas()
-    )
-    assert queries_sketch.LAST_BRANCH_SECONDS == {}
+    plain = _normalize(REGISTRY[gate].spark(spark, sf_tiny).toPandas())
+    assert gate not in BRANCH_SECONDS
     monkeypatch.setenv("SPARK_GRAFT_BRANCH_TIMING", "1")
-    timed = _normalize(
-        REGISTRY["learned_sketch_ops"].spark(spark, sf).toPandas()
-    )
-    secs = dict(queries_sketch.LAST_BRANCH_SECONDS)
+    timed = _normalize(REGISTRY[gate].spark(spark, sf_tiny).toPandas())
+    secs = dict(BRANCH_SECONDS[gate])
     assert len(secs) == 13 and all(v > 0 for v in secs.values())
     assert set(secs) == {
         "blm", "hh", "semd", "hll_gk", "lmp", "ccn", "rpj", "dsr",
@@ -1157,24 +1150,19 @@ def test_sketch_branch_timing_instrumentation(spark, monkeypatch):
     assert plain.equals(timed)
 
 
-def test_web_hygiene_branch_timing_instrumentation(spark, monkeypatch):
+def test_web_hygiene_branch_timing_instrumentation(spark, monkeypatch, sf_tiny):
     """Same contract as the learned_sketch attribution: timing fills one
     positive entry per web_hygiene branch and does not change rows."""
-    from enterprise_warp_spark import queries_hygiene
-    from enterprise_warp_spark.queries import REGISTRY
+    from enterprise_warp_spark.queries import BRANCH_SECONDS, REGISTRY
     from tests.oracle import _normalize
 
-    sf = "/root/testdata/sf0.001"
+    gate = "web_hygiene_ops"
     monkeypatch.delenv("SPARK_GRAFT_BRANCH_TIMING", raising=False)
-    plain = _normalize(
-        REGISTRY["web_hygiene_ops"].spark(spark, sf).toPandas()
-    )
-    assert queries_hygiene.LAST_BRANCH_SECONDS == {}
+    plain = _normalize(REGISTRY[gate].spark(spark, sf_tiny).toPandas())
+    assert gate not in BRANCH_SECONDS
     monkeypatch.setenv("SPARK_GRAFT_BRANCH_TIMING", "1")
-    timed = _normalize(
-        REGISTRY["web_hygiene_ops"].spark(spark, sf).toPandas()
-    )
-    secs = dict(queries_hygiene.LAST_BRANCH_SECONDS)
+    timed = _normalize(REGISTRY[gate].spark(spark, sf_tiny).toPandas())
+    secs = dict(BRANCH_SECONDS[gate])
     assert set(secs) == {
         "stm", "wrc", "url_dom", "moj", "tag", "tok", "spl", "pii",
         "nfc", "bpe", "uni", "gqr", "c4f", "lnd",

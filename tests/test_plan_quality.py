@@ -329,32 +329,37 @@ def test_web_hygiene_static_branches_are_jvm_only(spark, sf001):
     pre-tokenizer (mapInPandas by design) but still join-free; the moj
     branch is Arrow-batched Python (bytes round-trip) and join-free."""
     from enterprise_warp_spark.queries_hygiene import (
+        _docs_shared,
         _moj_branch,
         _tag_branch,
         _tok_branch,
         _url_dom_branches,
     )
 
-    for branch in (_url_dom_branches, _tag_branch):
-        p = plan(branch(spark, sf001), "simple")
+    docs = _docs_shared(spark, sf001)
+    for df in (_url_dom_branches(spark, sf001), _tag_branch(spark, sf001, docs)):
+        p = plan(df, "simple")
         assert "Join" not in p and "CartesianProduct" not in p
         assert "InPandas" not in p and "BatchEvalPython" not in p
-        # codegen-starred projections over the scan (formatted mode marks
-        # codegen stages with '* '); no Python evaluation anywhere
-        pf = plan(branch(spark, sf001))
+        # codegen-starred projections (formatted mode marks codegen
+        # stages with '* '), read from the EXECUTED plan: before execution
+        # the AdaptiveSparkPlan wrapper that spread()'s exchange brings
+        # in prints the initial plan without codegen stages
+        df.collect()
+        pf = plan(df)
         assert "* Project" in pf or "* ColumnarToRow" in pf
         assert "ArrowEvalPython" not in pf
     for branch in (_moj_branch, _tok_branch):
-        p = plan(branch(spark, sf001), "simple")
+        p = plan(branch(spark, sf001, docs), "simple")
         assert "Join" not in p and "CartesianProduct" not in p
 
 
 def test_web_hygiene_spl_pairs_are_equi_join(spark, sf001):
     """The split branch's component propagation joins on ids only — never
     a cartesian — and the final label is a map-side hash expression."""
-    from enterprise_warp_spark.queries_hygiene import _spl_branch
+    from enterprise_warp_spark.queries_hygiene import _docs_shared, _spl_branch
 
-    p = plan(_spl_branch(spark, sf001), "simple")
+    p = plan(_spl_branch(spark, sf001, _docs_shared(spark, sf001)), "simple")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -430,11 +435,11 @@ def test_r13_branches_are_map_only(spark, sf001):
     construction + census and [uni] unigram encode are pure map chains —
     no shuffle, no join anywhere in either plan (per-document work only,
     the property that makes them free at 100 TB)."""
-    from enterprise_warp_spark.queries_hygiene import _uni_branch
+    from enterprise_warp_spark.queries_hygiene import _docs_shared, _uni_branch
 
     p = plan(REGISTRY["multimodal_binary_meta"].spark(spark, sf001))
     assert "Exchange" not in p and "Join" not in p, p
-    p = plan(_uni_branch(spark, sf001))
+    p = plan(_uni_branch(spark, sf001, _docs_shared(spark, sf001)))
     assert "Exchange" not in p and "Join" not in p, p
 
 

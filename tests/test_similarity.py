@@ -597,7 +597,7 @@ def test_persisted_ivf_index_hier_assign_matches_flat(spark, emb, tmp_path):
         similarity.build_ivf_index(emb, cents, str(tmp_path / "x"), assign="z")
 
 
-def test_cosine_near_dup_auto_plane_sizing(spark):
+def test_cosine_near_dup_auto_plane_sizing(spark, sf_dir):
     """n_planes=None derives the plane count so expected bucket population
     stays ~COSINE_TARGET_BUCKET_ROWS (the r13 answer to the sf1 sweep's
     density quadratic at fixed n_planes). Coarser auto buckets can only
@@ -611,7 +611,7 @@ def test_cosine_near_dup_auto_plane_sizing(spark):
     )
     from enterprise_warp_spark.tables import table
 
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     n = emb.count()
     want_planes = max(
         1, math.ceil(math.log2(max(n / COSINE_TARGET_BUCKET_ROWS, 2.0)))
@@ -734,7 +734,7 @@ def test_pq_encode_matches_joined_window_twin(spark, emb):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_group_gram_split_twin_matches_unsplit(spark):
+def test_group_gram_split_twin_matches_unsplit(spark, sf_dir):
     """r15 hot-key split (guide §2.1): the chunk-pair decomposition of the
     grouped gram kernel must emit EXACTLY the unsplit kernel's pair set —
     same (vec_a, vec_b) orientation, same round-6 cosines — for split
@@ -745,7 +745,7 @@ def test_group_gram_split_twin_matches_unsplit(spark):
     from enterprise_warp_spark.pipeline import similarity as sim
     from enterprise_warp_spark.tables import table
 
-    emb = table(spark, "/root/testdata/sf0.01", "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     n = sim._with_norm_sq(emb, "embedding", "vec_id").withColumn(
         "bucket", F.expr(sim.hyperplane_bucket("embedding", 2))
     )
