@@ -476,7 +476,10 @@ def cosine_near_dup_pairs(
     # proportional c underfills the cluster and load-imbalances
     # (interleaved sf1 A/B: c=3 median 2.22s vs c=8 1.17s vs unsplit
     # 6.65s). Unknown footprints (non-file inputs) stay unsplit: they
-    # are in-memory test frames, not 100 TB scans.
+    # are in-memory test frames, not 100 TB scans. Limitation:
+    # input_bytes sees only what emb.inputFiles() lists, so a
+    # checkpointed or in-memory emb reads as 0 bytes and stays unsplit
+    # however large it is.
     from enterprise_warp_spark.tables import input_bytes
 
     width_cap = max(

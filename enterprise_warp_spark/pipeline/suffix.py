@@ -50,6 +50,7 @@ SURVEY §2.8 training-data extension.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,6 +61,26 @@ from enterprise_warp_spark.pipeline.text import TOKENS
 # guide-recommended 10s-of-MB..low-100s-of-MB band; the caller's n_parts
 # stays the upper bound for genuinely large shards
 _ROWS_PER_PART = 2_000_000
+
+
+def _key_changes(pdf, order_cols: list[str], last: tuple | None):
+    """Rows of one batch, sorted by `order_cols` -> (bool array: the row
+    starts a new key, the batch's last key). The first row compares with
+    `last`, the previous batch's last key. Keys are never null (a null
+    would differ from its equal neighbour and count as a new key). Adjacent
+    rows are compared as numpy arrays: a `shift()` would turn int64 keys
+    into float64 and merge keys that differ beyond 2**53."""
+    import pandas as pd
+
+    keys = [pdf[c].to_numpy() for c in order_cols]
+    assert not any(pd.isna(k).any() for k in keys), (
+        f"dense-rank keys {order_cols} must be non-null"
+    )
+    changed = np.zeros(len(pdf), dtype=bool)
+    for k in keys:
+        changed[1:] |= k[1:] != k[:-1]
+    changed[0] = tuple(k[0] for k in keys) != last
+    return changed, tuple(k[-1] for k in keys)
 
 
 def _two_pass_dense_rank(
@@ -109,10 +130,8 @@ def _two_pass_dense_rank_counted(
             if pid is None:
                 pid = int(pdf["__pid"].iloc[0])
             nr += len(pdf)
-            for key in zip(*[pdf[c] for c in order_cols]):
-                if key != last:
-                    nd += 1
-                    last = key
+            changed, last = _key_changes(pdf, order_cols, last)
+            nd += int(changed.sum())
         if pid is not None:
             yield pd.DataFrame({"__pid": [pid], "nd": [nd], "nr": [nr]})
 
@@ -147,16 +166,11 @@ def _two_pass_dense_rank_counted(
                 continue
             if pid is None:
                 pid = int(pdf["__pid"].iloc[0])
-            ranks = []
-            for key in zip(*[pdf[c] for c in order_cols]):
-                if key != last_key:
-                    local += 1
-                    last_key = key
-                ranks.append(local)
+            changed, last_key = _key_changes(pdf, order_cols, last_key)
+            ranks = local + np.cumsum(changed)
+            local = int(ranks[-1])
             res = pdf.drop(columns=["__pid"]).copy()
-            res[out] = pd.Series(ranks, index=pdf.index) + b_off.value.get(
-                pid, 0
-            ) - 1
+            res[out] = ranks + b_off.value.get(pid, 0) - 1
             yield res
 
     return staged.mapInPandas(kernel, out_schema), n_distinct, n_rows

@@ -9,12 +9,18 @@ factors (A2/A3), noise files (K2), credible levels (A4), covariance
 collection (K4), chain separation (W3/K3), and the optimal-statistic
 analysis (§3.3, K6).
 
-Spark shape: one ``run_results_pipeline`` call loads ALL run directories
+Spark shape: one ``load_run_dirs`` call loads ALL run directories
 into a single long-form chain DataFrame (the reference loops directories
-sequentially); each flag then gates one aggregation + sink over that
-shared frame. Plot flags (--corner/--chains/--hists) compute their feeding
-aggregations (mode positions, credible levels — A4/A5) and write them as
-JSON data files; PNG rendering itself is out of engine scope (SURVEY K7).
+sequentially): the driver resolves each run dir's chain files and
+parameter names, then one text scan and one exchange hash-partitioned on
+run_id load every PTMCMC run, with step and burn-in computed in one
+window; bilby dirs are unioned in. The run ids and parameter names each
+flag iterates over (after the -n/-p filters) come from that driver-side
+resolution, not from distinct() jobs, so a command's job count does not
+grow with the number of PTMCMC run dirs (each bilby dir is read on its
+own). Each flag then gates one aggregation + sink over the shared frame. Plot flags (--corner/--chains/--hists) compute
+their feeding aggregations (mode positions, credible levels — A4/A5),
+write them as JSON data files and render PNGs on the driver (K7).
 """
 
 from __future__ import annotations
@@ -80,7 +86,7 @@ def parse_commandline(argv=None):
                     default=0, help="Load saved OS results, no recompute (1/0)")
     ap.add_argument("-y", "--bilby", type=int, default=0,
                     help="Bilby results (accepted for parity; source dispatch "
-                    "is automatic per run directory — read_run_dir)")
+                    "is automatic per run directory — load_run_dirs)")
     ap.add_argument("-P", "--custom_models_py", type=str, default=None,
                     help="Path to a .py file registering custom signals "
                     "(plugin registry; see plans.registry.register_signal)")
@@ -337,7 +343,8 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     )
     from enterprise_warp_spark.analytics.results_pipeline import (
         discover_run_dirs,
-        run_results_pipeline,
+        load_run_dirs,
+        results_stages,
     )
     from enterprise_warp_spark.sinks import write_noise_json_files
 
@@ -357,19 +364,25 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
               "is separated, exiting.")
         return {"outdir_all": outdir_all, "separated": seps}
 
-    out = run_results_pipeline(
+    kept, all_run_pars = load_run_dirs(
         spark, outdir_all, load_separated=bool(opts.load_separated),
         # with --load_separated + --par the reference selects the
         # par-masked segment family (get_chain_file_name/get_pars,
         # results.py:427-470)
         par_label="_".join(opts.par) if opts.par else None,
     )
+    out = results_stages(kept)
     chains = _filter_pars(
         _filter_runs(out["chains_long"], opts.name), opts.par
     ).persist()
-    run_ids = sorted(
-        r["run_id"] for r in chains.select("run_id").distinct().collect()
-    )
+    # the runs and parameters `chains` holds rows for, known on the driver
+    run_pars = {}
+    for rid, pars in all_run_pars.items():
+        wanted = [p for p in pars
+                  if not opts.par or any(s in p for s in opts.par)]
+        if wanted and (opts.name == "all" or opts.name in rid):
+            run_pars[rid] = wanted
+    run_ids = sorted(run_pars)
     results = {"outdir_all": outdir_all, "run_ids": run_ids}
 
     if opts.info:
@@ -395,7 +408,7 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
                     f"ess {info.get('ess', float('nan')):.1f}  "
                     f"waves {info.get('n_waves')}"
                 )
-        pars = [r["par"] for r in chains.select("par").distinct().collect()]
+        pars = {p for ps in run_pars.values() for p in ps}
         print("Parameters:", " ".join(sorted(pars)))
 
     if opts.logbf:
@@ -444,7 +457,8 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         results["modes"] = docs
 
     if opts.corner or opts.hists or opts.chains:
-        results["plots"] = render_plots(spark, opts, outdir_all, chains)
+        results["plots"] = render_plots(spark, opts, outdir_all, chains,
+                                        run_pars)
 
     if opts.covm:
         results["covm"] = collect_covariances(spark, outdir_all)
@@ -511,11 +525,13 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     return results
 
 
-def render_plots(spark, opts, outdir_all: str, chains) -> list[str]:
+def render_plots(spark, opts, outdir_all: str, chains,
+                 run_pars: dict[str, list[str]]) -> list[str]:
     """K7 — PNG plot sinks for the -c/-a/-H flags, reference filenames
     (results.py:634-636, 677-679, 697-699): per-run corner (one per nmodel
     value, over the burned chain), hist grid, and trace grid. Spark bins,
-    the driver rasterizes (see plotting.py module docstring)."""
+    the driver rasterizes (see plotting.py module docstring). run_pars maps
+    each run_id in `chains` to the parameters it holds rows for."""
     from pyspark.sql import functions as F
 
     from enterprise_warp_spark import plotting
@@ -526,8 +542,7 @@ def render_plots(spark, opts, outdir_all: str, chains) -> list[str]:
         with open(opts.truths) as fh:
             truths = json.load(fh)
     paths: list[str] = []
-    run_ids = [r["run_id"] for r in chains.select("run_id").distinct().collect()]
-    for rid in sorted(run_ids):
+    for rid in sorted(run_pars):
         ch = chains.filter(F.col("run_id") == rid)
         if opts.hists:
             paths.append(plotting.make_histogram_grid(
@@ -539,9 +554,7 @@ def render_plots(spark, opts, outdir_all: str, chains) -> list[str]:
             ))
         if opts.corner:
             burned = burn_in(ch)
-            pars = sorted(
-                r["par"] for r in ch.select("par").distinct().collect()
-            )
+            pars = sorted(set(run_pars[rid]))
             if "nmodel" in pars:  # one corner per model (results.py:621-627)
                 models = sorted(
                     r["m"] for r in burned.filter(F.col("par") == "nmodel")
@@ -574,6 +587,7 @@ def collect_covariances(spark, outdir_all: str):
     reference's covm_repeating_pars path."""
     from enterprise_warp_spark.analytics.covariance import assemble_block_diag
     from enterprise_warp_spark.sinks import write_covm_csv
+    from enterprise_warp_spark.sources.chains import read_pars_file
     from enterprise_warp_spark.sources.matrix import ingest_npy
 
     blocks = []
@@ -582,11 +596,9 @@ def collect_covariances(spark, outdir_all: str):
         pars_path = os.path.join(d, "pars.txt")
         if not (os.path.isfile(cov) and os.path.isfile(pars_path)):
             continue
-        with open(pars_path) as fh:
-            par_names = [ln.strip() for ln in fh if ln.strip()]
         rid = os.path.basename(d)
         blocks.append(
-            ingest_npy(spark, cov, par_names, run_id=rid)
+            ingest_npy(spark, cov, read_pars_file(pars_path), run_id=rid)
         )
     if not blocks:
         print("no cov.npy matrices found")

@@ -28,18 +28,29 @@ zero-temperature chain).
 
 from __future__ import annotations
 
+import glob
 import os
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 
-def read_bilby_result(
+class BilbyRun(NamedTuple):
+    """One bilby result: the chain plus what the driver learns reading it."""
+
+    chain: DataFrame  # `read_chain`'s wide schema
+    labels: list[str]  # sampled parameters, in `values` order
+    n_samples: int  # rows in `chain`
+
+
+def load_bilby_result(
     spark: SparkSession, path: str, run_id: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """-> (chain, pars): chain in `read_chain`'s wide schema, pars = (idx, par)
-    in sampled-parameter order (results.py:1070-1078 semantics)."""
+) -> BilbyRun:
+    """Result JSON -> BilbyRun. The labels and the posterior's array sizes
+    come back in the one row the label lookup already fetches."""
     run_id = run_id or os.path.basename(path).replace("_result.json", "") or "run"
     raw = spark.read.option("multiLine", "true").json(path)
     field_names = [f.name for f in raw.schema.fields]
@@ -48,8 +59,14 @@ def read_bilby_result(
         if "parameter_labels" in field_names
         else "search_parameter_keys"
     )
-    labels = list(raw.select(label_col).first()[0])
-    content = [f.name for f in raw.schema["posterior"].dataType["content"].dataType.fields]
+    content_fields = raw.schema["posterior"].dataType["content"].dataType.fields
+    content = [f.name for f in content_fields]
+    arrays = [f.name for f in content_fields if isinstance(f.dataType, ArrayType)]
+    head = raw.select(
+        label_col, *[F.size(f"posterior.content.`{c}`") for c in arrays]
+    ).first()
+    labels = list(head[0])
+    size_of = dict(zip(arrays, head[1:]))
     missing = [p for p in labels if p not in content]
     if missing:
         raise ValueError(
@@ -87,29 +104,43 @@ def read_bilby_result(
         F.lit(1.0).alias("accept"),
         F.lit(0.0).alias("pt"),
     )
+    # posexplode(arrays_zip(...)) yields as many rows as the longest array
+    zip_cols = labels + ["log_likelihood"] + (["log_prior"] if has_lp else [])
+    return BilbyRun(chain, labels, max(size_of[c] for c in zip_cols))
+
+
+def read_bilby_result(
+    spark: SparkSession, path: str, run_id: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """-> (chain, pars): chain in `read_chain`'s wide schema, pars = (idx, par)
+    in sampled-parameter order (results.py:1070-1078 semantics)."""
+    run = load_bilby_result(spark, path, run_id)
     pars = spark.createDataFrame(
-        pd.DataFrame({"idx": range(len(labels)), "par": labels})
+        pd.DataFrame({"idx": range(len(run.labels)), "par": run.labels})
     )
-    return chain, pars
+    return run.chain, pars
+
+
+def bilby_result_path(run_dir: str, label: str | None = None) -> str:
+    """Resolve a run directory's result file the way the reference does
+    (results.py:1056-1064): `<label>_result.json` when the label is known,
+    else the first `*_result.json` glob match."""
+    if label is not None:
+        cand = os.path.join(run_dir, f"{label}_result.json")
+        if not os.path.isfile(cand):
+            raise FileNotFoundError(f"no {label}_result.json in {run_dir}")
+        return cand
+    matches = sorted(glob.glob(os.path.join(run_dir, "*_result.json")))
+    if not matches:
+        raise FileNotFoundError(f"no *_result.json in {run_dir}")
+    return matches[0]
 
 
 def read_bilby_dir(
     spark: SparkSession, run_dir: str, label: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Resolve a run directory the way the reference does (results.py:
-    1056-1064): `<label>_result.json` when the label is known, else the first
-    `*_result.json` glob match."""
-    if label is not None:
-        cand = os.path.join(run_dir, f"{label}_result.json")
-        if not os.path.isfile(cand):
-            raise FileNotFoundError(f"no {label}_result.json in {run_dir}")
-    else:
-        import glob as _glob
-
-        matches = sorted(_glob.glob(os.path.join(run_dir, "*_result.json")))
-        if not matches:
-            raise FileNotFoundError(f"no *_result.json in {run_dir}")
-        cand = matches[0]
+    """One run directory (see bilby_result_path) -> (chain, pars)."""
     return read_bilby_result(
-        spark, cand, run_id=os.path.basename(run_dir.rstrip("/")) or None
+        spark, bilby_result_path(run_dir, label),
+        run_id=os.path.basename(run_dir.rstrip("/")) or None,
     )

@@ -69,8 +69,10 @@ def source_bytes(spark: SparkSession, path: str) -> int:
 def input_bytes(df: DataFrame) -> int:
     """Estimated byte footprint of a DataFrame's file-backed inputs:
     driver-side only (inputFiles + Hadoop FS metadata, no Spark job).
-    Large inputs are sampled (first 64 files extrapolated by file count)
-    so the estimate costs O(64) namenode calls, not O(files). Returns 0
+    Large inputs are sampled: the first 64 files are sized and the mean
+    of their non-zero sizes stands in for each unsampled file, so the
+    estimate costs O(64) namenode calls, not O(files). A sampled file
+    that reads as 0 bytes (empty or unreadable) counts as 0. Returns 0
     for non-file-backed inputs — callers fall back to their
     scale-unknown default."""
     try:
@@ -81,11 +83,10 @@ def input_bytes(df: DataFrame) -> int:
         return 0
     sample = files[:64]
     spark = df.sparkSession
-    got = [source_bytes(spark, f) for f in sample]
-    known = [b for b in got if b > 0]
+    known = [b for b in (source_bytes(spark, f) for f in sample) if b > 0]
     if not known:
         return 0
-    return int(sum(known) / len(known) * len(files))
+    return sum(known) + sum(known) * (len(files) - len(sample)) // len(known)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -3,7 +3,7 @@
 paramfile-configured inference but land the posterior as a BILBY-style
 ``<label>_result.json`` (the S6b source format) instead of PTMCMC
 chain_1.txt files — then run the results pipeline over it to show every
-analytics stage is source-agnostic (read_run_dir dispatches per run dir).
+analytics stage is source-agnostic (load_run_dirs dispatches per run dir).
 
     python examples/bilby_example.py --prfile example_params/demo_model.dat --num 0
 """

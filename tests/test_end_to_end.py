@@ -122,7 +122,7 @@ def test_results_pipeline(spark, run_dirs):
 def test_results_pipeline_cross_source(spark, run_dirs, tmp_path):
     """§3.2 over a MIXED base dir — one PTMCMC chain dir and one bilby-result
     dir side by side — in a single run_results_pipeline call: the per-dir
-    source dispatch (read_run_dir) feeds both through identical burn-in →
+    source dispatch (load_run_dirs) feeds both through identical burn-in →
     A4/A5/A6 stages, so every analytics output has the same schema and
     carries both run_ids; K2 noise files emit for both (VERDICT r4 item 9)."""
     import shutil

@@ -95,7 +95,7 @@ def test_custom_models_plugin_registers():
 
 def test_bilby_example_in_process(spark, demo_tree):
     """bilby_example: inference -> bilby-style result JSON -> the SAME
-    analytics pipeline over the S6b source (read_run_dir dispatch)."""
+    analytics pipeline over the S6b source (load_run_dirs dispatch)."""
     from examples_loader import load_module
 
     dest, prfile = demo_tree

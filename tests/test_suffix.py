@@ -465,3 +465,36 @@ def test_max_run_members_guard(spark):
     # bad mode name is rejected at plan time
     with pytest.raises(ValueError):
         exact_duplicate_spans(docs, on_oversized="nope")
+
+
+def test_key_changes_matches_the_row_loop():
+    """The vectorised key-change count equals the per-row loop it replaced,
+    across batch boundaries, for string keys and for int64 keys that
+    differ only beyond float64 precision."""
+    import numpy as np
+    import pandas as pd
+
+    from enterprise_warp_spark.pipeline.suffix import _key_changes
+
+    rng = np.random.default_rng(5)
+    big = 2**60
+    pdf = pd.DataFrame({
+        "a": np.sort(rng.integers(0, 4, 200)) + big,
+        "b": rng.integers(0, 2, 200) + big,
+        "s": rng.choice(["x", "y"], 200),
+    }).sort_values(["a", "b", "s"], kind="mergesort").reset_index(drop=True)
+    cols = ["a", "b", "s"]
+
+    want, last = [], None
+    for key in zip(*[pdf[c] for c in cols]):
+        want.append(key != last)
+        last = key
+
+    got, last = [], None
+    for lo in range(0, len(pdf), 37):  # batches split runs of equal keys
+        changed, last = _key_changes(pdf.iloc[lo:lo + 37], cols, last)
+        got.extend(changed.tolist())
+    assert got == want
+
+    with pytest.raises(AssertionError, match="non-null"):
+        _key_changes(pd.DataFrame({"a": [1.0, None]}), ["a"], None)
