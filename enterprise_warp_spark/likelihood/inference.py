@@ -26,6 +26,7 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from enterprise_warp_spark.likelihood.gp import (
     DetComponent,
@@ -204,6 +205,35 @@ def check_sample_table_bound(n_rows: int, n_cols: int, where: str) -> None:
         )
 
 
+def score_prior_draws(
+    spark: SparkSession,
+    residuals: DataFrame,
+    model_rows: list[dict],
+    n_samples: int = 256,
+    nfreqs: int = 20,
+    seed: int = 42,
+    fixed: dict[str, float] | None = None,
+    backends: list[str] | None = None,
+    tm: TMComponent | None = None,
+) -> tuple[DataFrame, pd.DataFrame, list[str]]:
+    """-> (lnl, samples_pd, sampled_names): the lazy per-draw total log
+    likelihood (sample_id, lnl), the prior table it scores (drawn once,
+    collected to the driver for the kernel closure) and the names of the
+    non-constant parameters. Arguments as in run_inference.
+
+    The row order of lnl is the order its aggregate emits; a caller that
+    SIR-resamples by position must keep it (run_paramfile joins the draws
+    on the driver with a left-ordered merge)."""
+    priors, comps = compile_priors_and_components(model_rows, fixed, nfreqs, backends)
+    priors, comps = _wire_tm(priors, comps, tm, nfreqs)
+    check_sample_table_bound(n_samples, len(priors) + 1, "score_prior_draws")
+    samples_pd = sample_priors(spark, priors, n_samples, seed).toPandas()
+    lnl = total_loglik(
+        gp_loglik_per_pulsar(residuals, samples_pd, nfreqs, components=comps or None)
+    )
+    return lnl, samples_pd, [p.name for p in priors if p.kind != "constant"]
+
+
 def run_inference(
     spark: SparkSession,
     residuals: DataFrame,
@@ -224,24 +254,22 @@ def run_inference(
     (enterprise_warp.py:500-508) — a TMComponent whose specs come from
     functions.timingmodel.tm_spec_from_par_file; 'ridge' mode adds the
     reference's Uniform(-20, -10) tm_log10_variance prior.
+
+    The prior table is drawn once (score_prior_draws) and joins the scores
+    as a broadcast Arrow local relation. run_paramfile joins the same
+    table on the driver instead, which saves the broadcast's job.
     """
-    priors, comps = compile_priors_and_components(model_rows, fixed, nfreqs, backends)
-    priors, comps = _wire_tm(priors, comps, tm, nfreqs)
-    check_sample_table_bound(n_samples, len(priors) + 1, "run_inference")
-    samples_df = sample_priors(spark, priors, n_samples, seed)
-    samples_pd: pd.DataFrame = samples_df.toPandas()
-    lnl = total_loglik(
-        gp_loglik_per_pulsar(residuals, samples_pd, nfreqs, components=comps or None)
+    lnl, samples_pd, sampled_names = score_prior_draws(
+        spark, residuals, model_rows, n_samples, nfreqs, seed, fixed,
+        backends, tm,
     )
-    joined = lnl.join(samples_df, "sample_id")
-    sampled_names = [p.name for p in priors if p.kind != "constant"]
-    summary = posterior_summary(joined, sampled_names)
-    return joined, summary
+    joined = lnl.join(F.broadcast(spark.createDataFrame(samples_pd)), "sample_id")
+    return joined, posterior_summary(joined, sampled_names)
 
 
 def _wire_tm(priors, comps, tm: TMComponent | None, nfreqs: int):
     """Append the paramfile-level tm component (and its ridge prior) to a
-    compiled (priors, comps) pair — shared by run_inference and
+    compiled (priors, comps) pair — shared by score_prior_draws and
     run_adaptive_inference."""
     if tm is None:
         return priors, comps

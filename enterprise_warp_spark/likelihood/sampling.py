@@ -100,13 +100,13 @@ def _column(p: Prior, u: F.Column, g: F.Column) -> F.Column:
 def sample_priors(
     spark: SparkSession, priors: list[Prior], n: int, seed: int = 42
 ) -> DataFrame:
-    """(sample_id, <param columns>) — one rand/randn stream per parameter."""
-    df = spark.range(n).withColumnRenamed("id", "sample_id")
-    for i, p in enumerate(priors):
-        u = F.rand(seed + 1000 * i)
-        g = F.randn(seed + 1000 * i)
-        df = df.withColumn(p.name, _column(p, u, g))
-    return df
+    """(sample_id, <param columns>) — one rand/randn stream per parameter,
+    all in one projection (a withColumn per parameter re-analyses the
+    growing plan each time)."""
+    return spark.range(n).select(F.col("id").alias("sample_id"), *[
+        _column(p, F.rand(seed + 1000 * i), F.randn(seed + 1000 * i)).alias(p.name)
+        for i, p in enumerate(priors)
+    ])
 
 
 def posterior_summary(
@@ -118,22 +118,32 @@ def posterior_summary(
     against max(logw_col) for stability; all aggregates are single-shuffle.
     logw_col: the log-weight column — 'lnl' for prior-sampled tables (the
     proposal IS the prior, so likelihood = importance weight); 'logw' for
-    importance_posterior tables (proposal-corrected weights)."""
-    mx = samples_lnl.agg(F.max(logw_col).alias("_mx"))
-    weighted = samples_lnl.join(F.broadcast(mx)).withColumn(
-        "w", F.exp(F.col(logw_col) - F.col("_mx"))
+    importance_posterior tables (proposal-corrected weights). The plan is
+    built from SQL text, one expression list for the aggregate: one py4j
+    call per F.* builder made the Column form take 0.23-0.34 s to build
+    (4-8 parameters, warm local[4]); this form takes 0.05-0.07 s."""
+    lw = _quote(logw_col)
+    mx = samples_lnl.selectExpr(f"max({lw}) AS _mx")
+    weighted = samples_lnl.join(F.broadcast(mx)).selectExpr(
+        "*", f"exp({lw} - _mx) AS w"
     )
     aggs = []
     for c in param_cols:
+        q = _quote(c)
+        mean = f"(sum({q} * w) / sum(w))"
         aggs += [
-            (F.sum(F.col(c) * F.col("w")) / F.sum("w")).alias(f"{c}_mean"),
-            F.sqrt(
-                F.sum(F.col(c) * F.col(c) * F.col("w")) / F.sum("w")
-                - F.pow(F.sum(F.col(c) * F.col("w")) / F.sum("w"), 2)
-            ).alias(f"{c}_std"),
-            F.max_by(F.col(c), F.col("lnl")).alias(f"{c}_map"),
+            f"{mean} AS {_quote(c + '_mean')}",
+            f"sqrt(sum({q} * {q} * w) / sum(w) - pow({mean}, 2)) "
+            f"AS {_quote(c + '_std')}",
+            f"max_by({q}, lnl) AS {_quote(c + '_map')}",
         ]
-    return weighted.agg(*aggs)
+    return weighted.selectExpr(*aggs)
+
+
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier, whatever characters it holds
+    (parameter names come from the user's noise-model files)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def posterior_quantiles(

@@ -32,6 +32,7 @@ import os
 import pickle
 
 import numpy as np
+import pandas as pd
 
 from enterprise_warp_spark.run_paramfile import output_base_dir
 
@@ -236,15 +237,17 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
     peps = [_par_value(par, "PEPOCH", 0.0) for _, par, _ in pairs]
     common_mjd0 = next((v for v in peps if v), 50000.0)
     res = None
-    pos_rows = []
-    tspan = 0.0
     for psr, par, tim in pairs:
         df, _, _ = build_standalone_residuals(
             spark, psr, par, tim, mjd0=common_mjd0
         )
         res = df if res is None else res.unionByName(df)
-        pos_rows.append((psr, psr_position(par)))
-    positions = spark.createDataFrame(pos_rows, "psr string, pos array<double>")
+    # through Arrow, a local relation: no Python task on any ORF pass
+    positions = spark.createDataFrame(
+        pd.DataFrame({"psr": [psr for psr, _, _ in pairs],
+                      "pos": [psr_position(par) for _, par, _ in pairs]}),
+        "psr string, pos array<double>",
+    )
     import pyspark.sql.functions as F
 
     b = res.agg(F.max("toa_s").alias("hi"), F.min("toa_s").alias("lo")).first()

@@ -16,7 +16,10 @@ Spark shape: a thin argparse wrapper over `plans.parse_paramfile` +
 `likelihood.inference` — the paramfile/model compile happens once on the
 driver (KB-scale config), prior-sample scoring runs distributed through the
 `applyInPandas` GP kernel, and the posterior chain is produced by
-importance resampling (SIR) of the scored prior draws.
+importance resampling (SIR) of the scored prior draws. The one Python task
+per pulsar is the GP kernel: residual frames are Arrow-built local
+relations and the prior table joins the scores on the driver
+(docs/paramfile.md, "Spark shape").
 
 Standalone-residual mode: this container has no tempo2, so the phase-
 connected residuals the reference gets from libstempo are not computable
@@ -39,6 +42,7 @@ import shutil
 import zlib
 
 import numpy as np
+import pandas as pd
 
 from enterprise_warp_spark.plans import Params, parse_paramfile
 
@@ -199,8 +203,11 @@ def build_standalone_residuals(
 
     Scale shape: per-pulsar TOA tables are the reference's own in-memory
     unit (libstempo materializes each pulsar fully); the numpy injection
-    here is per-pulsar-bounded driver work at CLI-config scale. Array runs
-    union the per-pulsar frames, and everything downstream is distributed.
+    here is per-pulsar-bounded driver work at CLI-config scale. The frame
+    is one pandas table handed to Arrow, so Spark holds it as a local
+    relation (`LocalTableScan`) and reads it without a Python task. The
+    callers (`run_from_paramfile` for array runs, the OS CLI) union the
+    per-pulsar frames.
     """
     from enterprise_warp_spark.functions.timingmodel import tm_spec_from_par_file
     from enterprise_warp_spark.likelihood.gp import powerlaw_phi
@@ -248,13 +255,13 @@ def build_standalone_residuals(
             phi = powerlaw_phi(np.repeat(f, 2), df2, lga, gam)
             r = r + (Fm @ rng.normal(0.0, np.sqrt(phi))) * scale
 
-    rows = [
-        (psr, float(t[i]), float(r[i]), float(sig[i]), 1.0, 0.0,
-         float(freq[i]), str(backend[i]), flag_dicts[i])
-        for i in range(len(t))
-    ]
+    pdf = pd.DataFrame({
+        "psr": psr, "toa_s": t, "residual_s": r, "toa_err_s": sig,
+        "efac": 1.0, "equad": 0.0, "freq_mhz": freq, "backend": backend,
+        "flags": flag_dicts,
+    })
     res = spark.createDataFrame(
-        rows,
+        pdf,
         "psr string, toa_s double, residual_s double, toa_err_s double, "
         "efac double, equad double, freq_mhz double, backend string, "
         "flags map<string,string>",
@@ -292,6 +299,11 @@ def _sir_resample(samples_pd, lnl_col: str, n_out: int, seed: int):
     (out-of-support defensive draws) are dropped before resampling."""
     lnl = samples_pd[lnl_col].to_numpy(dtype=np.float64)
     finite = np.isfinite(lnl) & (lnl > -1e29)
+    if not finite.any():
+        raise ValueError(
+            f"SIR resample: none of the {len(lnl)} scored draws has a "
+            f"finite {lnl_col!r} weight"
+        )
     samples_pd = samples_pd[finite].reset_index(drop=True)
     lnl = lnl[finite]
     w = np.exp(lnl - lnl.max())
@@ -327,7 +339,8 @@ def run_from_paramfile(
     noise from noise files) -> prior-sampled GP scoring -> SIR posterior ->
     reference-layout run dir. Returns {'output_dir', 'pars', 'chain',
     'summary'|'log_bf'}."""
-    from enterprise_warp_spark.likelihood.inference import run_inference
+    from enterprise_warp_spark.likelihood.inference import score_prior_draws
+    from enterprise_warp_spark.likelihood.sampling import posterior_summary
     from enterprise_warp_spark.likelihood.product_space import hypermodel_sample
     from enterprise_warp_spark.plans.noisemodel import (
         merge_noise_dicts,
@@ -472,14 +485,21 @@ def run_from_paramfile(
                 ),
                 diagnostics=adaptive_diag,
             )
+            pdf = joined.toPandas()
             w_col = "logw"
         else:
-            joined, summary = run_inference(
+            lnl, samples_pd, sampled = score_prior_draws(
                 spark, res, models[min(models)], n_samples=n_samples,
                 seed=seed, fixed=fixed or None, backends=bk, tm=tm,
             )
+            # join the draws on the driver; a left merge keeps the
+            # aggregate's row order, which the SIR resample indexes by.
+            # run_inference's lazy Spark join of the same table costs one
+            # broadcast job more and was 0.41 s slower per op in the
+            # median (docs/paramfile.md, "Spark shape")
+            pdf = lnl.toPandas().merge(samples_pd, on="sample_id", how="left")
+            summary = posterior_summary(spark.createDataFrame(pdf), sampled)
             w_col = "lnl"
-        pdf = joined.toPandas()
         par_names = [
             c for c in pdf.columns
             if c not in ("sample_id", "lnl", "logw", "wave")

@@ -9,8 +9,9 @@ only lines starting with a space are active TOAs (line_elements[0]=='' at
 TOA MJDs carry ~19 significant digits (ns over decades): kept as both
 DECIMAL(27,19) and the raw string (precision round-trip, SURVEY §1.9).
 
-The parse is a single projection over spark.read.text: splits, slices and a
-map_from_arrays — whole-stage codegen, parallel over file splits at scale.
+The parse is a filter and two projections over spark.read.text: splits,
+slices and a map_from_arrays — whole-stage codegen, parallel over file
+splits at scale.
 """
 
 from __future__ import annotations
@@ -25,39 +26,34 @@ TOA_SCHEMA = (
 
 
 def read_tim(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Parse one or many .tim files into the `toas` table; psr from filename."""
-    raw = spark.read.text(paths).select(
-        F.regexp_extract(F.input_file_name(), r"([^/]+)\.tim", 1).alias("psr"),
-        F.col("value"),
-    )
+    """Parse one or many .tim files into the `toas` table; psr from filename.
+
+    The plan is built from SQL text (a filter and two expression lists),
+    so its driver cost does not grow with one py4j call per column."""
     # active TOAs start with whitespace (reference: line_elements[0] == '')
-    active = raw.filter(F.col("value").rlike(r"^\s\S"))
-    fields = F.split(F.trim(F.col("value")), r"\s+")
-    parsed = active.select(
-        "psr",
-        fields.alias("f"),
-    ).select(
-        "psr",
-        F.col("f")[0].alias("src"),
-        F.col("f")[1].cast("double").alias("freq_mhz"),
-        F.col("f")[2].cast("decimal(27,19)").alias("toa_mjd"),
-        F.col("f")[2].alias("toa_mjd_str"),
-        F.col("f")[3].cast("double").alias("toa_err_us"),
-        F.col("f")[4].alias("obs"),
-        F.expr(
-            # trailing "-key value" pairs -> MAP<STRING,STRING>. Guards:
-            # rows with no flags (size(f)=5; sequence(6,5) would DESCEND) and
-            # a dangling key with no value (i < size(f)).
-            "IF(size(f) >= 7,"
-            " map_from_arrays("
-            "  transform(filter(sequence(6, size(f)), i -> (i - 6) % 2 = 0 AND i < size(f)),"
-            "            i -> substring(element_at(f, i), 2)),"
-            "  transform(filter(sequence(6, size(f)), i -> (i - 6) % 2 = 0 AND i < size(f)),"
-            "            i -> element_at(f, i + 1))),"
-            " map())"
-        ).alias("flags"),
+    fields = spark.read.text(paths).where(r"value RLIKE '^\\s\\S'").selectExpr(
+        r"regexp_extract(input_file_name(), '([^/]+)\\.tim', 1) AS psr",
+        r"split(trim(value), '\\s+') AS f",
     )
-    return parsed
+    return fields.selectExpr(
+        "psr",
+        "f[0] AS src",
+        "CAST(f[1] AS DOUBLE) AS freq_mhz",
+        "CAST(f[2] AS DECIMAL(27,19)) AS toa_mjd",
+        "f[2] AS toa_mjd_str",
+        "CAST(f[3] AS DOUBLE) AS toa_err_us",
+        "f[4] AS obs",
+        # trailing "-key value" pairs -> MAP<STRING,STRING>. Guards:
+        # rows with no flags (size(f)=5; sequence(6,5) would DESCEND) and
+        # a dangling key with no value (i < size(f)).
+        "IF(size(f) >= 7,"
+        " map_from_arrays("
+        "  transform(filter(sequence(6, size(f)), i -> (i - 6) % 2 = 0 AND i < size(f)),"
+        "            i -> substring(element_at(f, i), 2)),"
+        "  transform(filter(sequence(6, size(f)), i -> (i - 6) % 2 = 0 AND i < size(f)),"
+        "            i -> element_at(f, i + 1))),"
+        " map()) AS flags",
+    )
 
 
 def toas_with_seconds(toas: DataFrame, mjd_epoch: int = 0) -> DataFrame:

@@ -146,6 +146,23 @@ def test_posterior_summary(spark):
     assert row["theta_std"] == pytest.approx(1.0, abs=0.15)
 
 
+def test_posterior_summary_quotes_parameter_names(spark):
+    """Names from a noise-model file may hold any character; a backtick,
+    a dot or a space must not break or change the summary's plan."""
+    from enterprise_warp_spark.likelihood.sampling import posterior_summary
+
+    names = ["J0437-4715_PKS.10CM efac", "odd`name", "plain"]
+    rows = [(i, float(i), float(-i), 0.5, -0.1 * (i - 3) ** 2) for i in range(7)]
+    df = spark.createDataFrame(rows, ["sample_id", *names, "lnl"])
+    row = posterior_summary(df, names).first().asDict()
+    assert sorted(row) == sorted(
+        f"{n}_{s}" for n in names for s in ("mean", "std", "map")
+    )
+    assert row["J0437-4715_PKS.10CM efac_map"] == 3.0
+    assert row["odd`name_map"] == -3.0
+    assert row["plain_mean"] == 0.5
+
+
 def test_sample_blocks_equivalence_and_speed(spark, residuals_df):
     """sample_blocks partitions the sample set across tasks without changing
     any lnl value."""

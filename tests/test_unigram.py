@@ -267,6 +267,7 @@ def test_uni_oracle_per_char_unk_fallback(spark, tmp_path):
 
     from enterprise_warp_spark.queries_hygiene import (
         _HYGIENE_ORACLE,
+        _docs_shared,
         _uni_branch,
     )
     from tests.oracle import _normalize
@@ -305,7 +306,9 @@ def test_uni_oracle_per_char_unk_fallback(spark, tmp_path):
     want = con.sql(
         f"SELECT * FROM ({_HYGIENE_ORACLE}) WHERE gate = 'uni'"
     )
-    got = _uni_branch(spark, sf).filter(F.col("gate") == "uni")
+    got = _uni_branch(spark, sf, _docs_shared(spark, sf)).filter(
+        F.col("gate") == "uni"
+    )
     left = _normalize(got.toPandas())
     right = _normalize(want.df())
     assert len(left) == 4, left
