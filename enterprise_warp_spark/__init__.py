@@ -20,8 +20,8 @@ Layout:
     pipeline/   LLM-data-pipeline extensions: dedup (exact/MinHash/SimHash/
                 incremental index/transitive clusters), similarity (ANN),
                 text + repetition metrics, media codecs + multimodal
-                fingerprints, curation, packing/chunking, decontamination,
-                LM perplexity, redaction
+                fingerprints, MP3 metadata, curation, packing/chunking,
+                decontamination, LM perplexity, redaction
     streaming/  Structured Streaming surface: event rollups/dedup/sessions,
                 dedup'd corpus ingest, exactly-once parquet sink
     maintenance partition upsert / key merge / compaction for parquet tables

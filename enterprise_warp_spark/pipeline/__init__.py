@@ -4,10 +4,13 @@
     similarity  brute-force cosine top-k + LSH-bucketed ANN over embeddings
     text        language-ID, quality scoring, token counting, fingerprinting
     multimodal  opaque-binary columns with typed metadata; decode kernels as
-                Arrow-batched mapInPandas — REAL decode for container-less
-                formats (WAV/PCM, PPM/PGM, raw-RGB video via codecs.py);
-                compressed formats stub-fallback with decoded=false
-    codecs      pure struct+numpy WAV / netpbm / raw-video codecs
+                Arrow-batched mapInPandas — REAL decode for the formats in
+                codecs.py; every other mime (JPEG, GIF, FLAC, ...) decodes
+                through an optional plugin or stub-falls back with
+                decoded=false
+    codecs      pure struct+numpy WAV / AIFF / AU, netpbm / PNG / BMP /
+                TIFF / lossless WebP, raw-video codecs
+    mp3meta     MP3 frame/Xing/ID3 metadata census without decode
     curate      end-to-end corpus curation (quality/lang/repetition gates +
                 staged dedup)
     packing     token-budget sequence packing (two-phase prefix sum)

@@ -3,7 +3,7 @@
 Closes part of the compressed-audio gap (VERDICT r5 #7, timeboxed): WAV
 files with format tag 0x0011 (IMA/DVI ADPCM — telephony, games, embedded
 recorders; 4:1 compression) now decode FOR REAL in a container with no
-soundfile, same guarantee as FLAC. The algorithm is the public IMA
+soundfile. The algorithm is the public IMA
 (Interactive Multimedia Association) ADPCM specification, also in
 RFC 3551 §4.5.1 (DVI4): 4-bit differential codes against an 89-entry
 step-size table with an adaptive index.
@@ -13,8 +13,7 @@ normative data tables (Layer III Huffman code books, the 512-tap
 synthesis window) that cannot be derived from the algorithm description,
 so a faithful no-deps implementation cannot be written from the public
 algorithm alone — the optional soundfile/audioread plugin stays the
-boundary there. Vorbis, whose codebooks arrive IN the stream's setup
-header, decodes for real since round 7 (pipeline/vorbis.py).
+boundary there.
 
 Canonical pin (r11): CPython's `audioop` module carries the IMA/DVI
 reference codec in C (Jack Jansen's adpcm.c, the implementation the IMA

@@ -1,15 +1,19 @@
-"""Pure-python/numpy media codecs for container-less formats.
+"""Pure-python/numpy media codecs.
 
-Real decoding for every format that needs no external codec library:
+Real decoding, with no external codec library, for:
 
-  WAV / RIFF PCM   8/16/32-bit integer and 32/64-bit IEEE-float audio
-  PPM (P6) / PGM (P5)  binary netpbm images
+  WAV / RIFF       PCM, IEEE float, IMA ADPCM (pipeline/adpcm.py) and
+                   G.711 mu-law/A-law audio
+  AIFF / AU        PCM and G.711 audio (pipeline/aiff.py)
+  PPM (P6) / PGM (P5), PNG, BMP   images; baseline TIFF (pipeline/tiff.py)
+                   and lossless WebP (pipeline/vp8l.py) load lazily
   raw RGB video    concatenated width*height*3 frames (our canonical
                    uncompressed video layout for parquet BINARY columns)
 
-Compressed formats (JPEG/PNG/MP3/H.264/...) genuinely require codec
-libraries that are not in this container; callers fall back to the
-documented deterministic stub for those and mark rows `decoded=false`.
+Every other format (JPEG, GIF, FLAC, Ogg/Vorbis, MP3, H.264, ...) decodes
+only through the optional Pillow/soundfile plugins at the end of this
+module; without them callers fall back to the documented deterministic
+stub and mark rows `decoded=false`.
 
 These kernels run inside Arrow-batched mapInPandas workers — everything
 is numpy on contiguous buffers, no per-sample Python loops.
@@ -265,42 +269,6 @@ def decode_raw_frame(payload: bytes, width: int, height: int, frame_idx: int) ->
     if start + fsz > len(payload):
         raise ValueError(f"frame {frame_idx} out of range for payload of {len(payload)} bytes")
     return np.frombuffer(payload[start : start + fsz], dtype=np.uint8).reshape(height, width, 3)
-
-
-def mjpeg_video_features(payload: bytes) -> list[float]:
-    """video_features' 8-dim schema for an MJPEG AVI: per-frame stats come
-    from the really-decoded JPEG frames (first/last fully decoded; the
-    global mean/std from a bounded sample of up to 8 frames so a long clip
-    never decodes every frame just for features)."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg
-    from enterprise_warp_spark.pipeline.mjpeg import mjpeg_frames
-
-    frames = mjpeg_frames(payload)
-    n = len(frames)
-    step = -(-n // 8)  # ceil: at most 8 sampled decodes
-    sampled = [decode_jpeg(frames[i][1]) for i in range(0, n, step)]
-    first = sampled[0]
-    # reuse the sample when it already ends on the final frame
-    if n == 1 or (n - 1) % step == 0:
-        last = sampled[-1]
-    else:
-        last = decode_jpeg(frames[-1][1])
-    h, w = first.shape[:2]
-    means = [float(f.mean()) for f in sampled]
-    deltas = (
-        float(np.abs(np.diff(np.asarray(means))).mean()) if len(means) > 1 else 0.0
-    )
-    allpix = np.concatenate([f.reshape(-1).astype(np.float64) for f in sampled])
-    return [
-        float(n),
-        float(h),
-        float(w),
-        float(allpix.mean()),
-        float(allpix.std()),
-        float(first.mean()),
-        float(last.mean()),
-        deltas,
-    ]
 
 
 def video_features(payload: bytes, width: int, height: int, n_frames: int) -> list[float]:
@@ -697,20 +665,13 @@ DECODABLE_MIMES = {
     "image/x-portable-pixmap": "pnm",
     "image/x-portable-graymap": "pnm",
     "image/png": "png",
-    "image/jpeg": "jpeg",
-    "image/gif": "gif",
     "image/bmp": "bmp",
     "image/x-ms-bmp": "bmp",
     "image/tiff": "tiff",
-    "audio/flac": "flac",
-    "audio/ogg": "vorbis",
-    "application/ogg": "vorbis",
     "audio/aiff": "aiff",
     "audio/x-aiff": "aiff",
     "audio/basic": "au",  # the Sun/NeXT .snd registered mime
     "video/x-raw-rgb": "rawvideo",
-    "video/x-msvideo": "mjpeg",
-    "video/avi": "mjpeg",
     # VP8L lossless decodes natively (incl. VP8X-wrapped); lossy VP8
     # routes through the optional system-libwebp ctypes plugin and raises
     # NotImplementedError only when no libwebp shared library exists —
@@ -725,22 +686,6 @@ def decode_audio(payload: bytes, mime: str) -> tuple[np.ndarray, int]:
     family = DECODABLE_MIMES.get(mime)
     if family == "wav":
         return decode_wav(payload)
-    if family == "flac":
-        from enterprise_warp_spark.pipeline.flac import decode_flac_info
-
-        samples, rate, bps = decode_flac_info(payload)
-        if samples.ndim == 1:
-            samples = samples[:, None]
-        # match decode_wav's convention: float64 scaled to [-1, 1] by the
-        # STREAM's bits-per-sample full-scale (the numpy container is wider
-        # than bps for 8/12/20/24-bit streams), so a WAV and a FLAC of the
-        # same signal yield identical features/fingerprints
-        return samples.astype(np.float64) / float(2 ** (bps - 1)), rate
-    if family == "vorbis":
-        from enterprise_warp_spark.pipeline.vorbis import decode_vorbis
-
-        # decode_vorbis already yields float64 (n, ch) in [-1, 1]
-        return decode_vorbis(payload)
     if family == "aiff":
         from enterprise_warp_spark.pipeline.aiff import decode_aiff
 
@@ -760,14 +705,6 @@ def decode_image(payload: bytes, mime: str) -> np.ndarray:
         return decode_ppm(payload)
     if family == "png":
         return decode_png(payload)
-    if family == "jpeg":
-        from enterprise_warp_spark.pipeline.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if family == "gif":
-        from enterprise_warp_spark.pipeline.gif import decode_gif
-
-        return decode_gif(payload)
     if family == "bmp":
         return decode_bmp(payload)
     if family == "tiff":

@@ -15,9 +15,8 @@ size/bitrate extrapolation lies), and returns a plain dict.
 ``mp3_meta(df)`` is the Arrow-batched mapInPandas wrapper over media rows
 (the binary_meta shape: one row in, one row out, map-only).
 
-Correctness model: no canonical MP3 implementation exists in this
-container (same exclusion inventory as Vorbis — see pipeline/vorbis.py),
-so the pins are (a) hand-computed published-table fixtures — the classic
+Correctness model: no canonical MP3 implementation is a dependency, so
+the pins are (a) hand-computed published-table fixtures — the classic
 144*128000/44100 = 417-byte frame and friends — built with independent
 arithmetic in tests/test_mp3meta.py, and (b) hostile-byte fuzz (truncated
 frames, lying Xing counts, garbage between frames).

@@ -1,14 +1,13 @@
 """Multimodal columns: image/audio/video as opaque BINARY + typed metadata.
 
-Decoding is REAL for container-less formats AND every dominant
-compressed image/audio format (see pipeline
-codecs/jpeg/flac/gif/vorbis/tiff/vp8l): RIFF WAV (PCM, IMA ADPCM, G.711
-mu-law/A-law), FLAC, Ogg/Vorbis, binary PPM/PGM, raw-RGB video frames,
-PNG (all spec depths incl. 16-bit and Adam7 interlace), baseline AND
-progressive JPEG, GIF, BMP, baseline TIFF (LZW/PackBits/predictor), and
-lossless WebP (VP8L: all four transforms, color cache, meta codes, LZ77)
-all parse inside the Arrow batches with no external codec. Remaining
-formats (MP3/H.264, lossy WebP, ...) decode
+Decoding is REAL, with no external codec, for the formats in
+pipeline/codecs (and its tiff/vp8l/aiff/adpcm modules): RIFF WAV (PCM,
+IMA ADPCM, G.711 mu-law/A-law), AIFF/AU, binary PPM/PGM, raw-RGB video
+frames, PNG (all spec depths incl. 16-bit and Adam7 interlace), BMP,
+baseline TIFF (LZW/PackBits/predictor), and lossless WebP (VP8L: all four
+transforms, color cache, meta codes, LZ77) all parse inside the Arrow
+batches. Every other format (JPEG, GIF, FLAC, Ogg/Vorbis, MP3, H.264,
+lossy WebP, ...) decodes
 through optional Pillow/soundfile plugins when importable; otherwise
 those rows fall back to a deterministic byte-hash pseudo-feature flagged
 `decoded=false` — swap `_decode_stub` for torchaudio/pyav and nothing
@@ -121,14 +120,14 @@ def _decode_features(row: pd.Series, opt: dict | None = None) -> tuple[bool, lis
             return True, codecs.audio_features(*opt["audio"](payload))
         except Exception:
             pass
-    if family in ("wav", "flac", "vorbis", "aiff", "au"):
+    if family in ("wav", "aiff", "au"):
         try:
             return True, codecs.audio_features(
                 *codecs.decode_audio(payload, row["mime"])
             )
         except Exception:
             pass  # unsupported variant: optional plugin below, else stub
-    if family in ("pnm", "png", "jpeg", "gif", "bmp", "tiff", "webp"):
+    if family in ("pnm", "png", "bmp", "tiff", "webp"):
         try:
             return True, codecs.image_features(
                 codecs.decode_image(payload, row["mime"])
@@ -140,7 +139,7 @@ def _decode_features(row: pd.Series, opt: dict | None = None) -> tuple[bool, lis
             pass
     # prefer_native=False: the pure decoders had first refusal above; the
     # plugins now only catch formats the pure path cannot decode at all
-    # (progressive JPEG, 16-bit PNG, MP3, ...)
+    # (JPEG, 16-bit PNG, MP3, ...)
     if (
         not native_first
         and row["mime"] in codecs.OPTIONAL_IMAGE_MIMES
@@ -163,11 +162,6 @@ def _decode_features(row: pd.Series, opt: dict | None = None) -> tuple[bool, lis
         return True, codecs.video_features(
             payload, int(row["width"]), int(row["height"]), int(row["n_frames"])
         )
-    if family == "mjpeg":
-        try:
-            return True, codecs.mjpeg_video_features(payload)
-        except Exception:
-            pass  # corrupt container: stub below
     return False, _decode_stub(payload)
 
 
@@ -192,7 +186,7 @@ def extract_features(
     feature vectors than one processed without them. For bit-reproducible
     corpora pass ``prefer_native=False`` to force the pure-python decoders
     for every format they support (plugins then only handle formats the
-    pure decoders cannot, e.g. progressive JPEG); the default keeps the
+    pure decoders cannot, e.g. JPEG); the default keeps the
     native-first dispatch because it is ~100x faster on compressed media.
     """
 
@@ -320,10 +314,9 @@ def frame_sample(media: DataFrame, every_k: int = 10) -> DataFrame:
 def sample_frames_decoded(media: DataFrame, every_k: int = 10) -> DataFrame:
     """Frame sampling WITH real per-frame decode for raw-RGB video (every
     k-th frame sliced out of the concatenated payload, zero-copy
-    frombuffer) AND for MJPEG AVI (every k-th really-present JPEG frame
-    decoded via pipeline/jpeg). mapInPandas, partition-preserving;
-    other compressed containers (H.264/...) and corrupt payloads emit
-    decoded=false with null stats — one bad frame never aborts the job."""
+    frombuffer). mapInPandas, partition-preserving; compressed containers
+    (MJPEG/H.264/...) and corrupt payloads emit decoded=false with null
+    stats — one bad frame never aborts the job."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from enterprise_warp_spark.pipeline import codecs
@@ -335,25 +328,8 @@ def sample_frames_decoded(media: DataFrame, every_k: int = 10) -> DataFrame:
             }
             for _, r in pdf[pdf["kind"] == "video"].iterrows():
                 family = codecs.DECODABLE_MIMES.get(r["mime"])
-                mj = None
-                if family == "mjpeg":
-                    try:
-                        from enterprise_warp_spark.pipeline.mjpeg import (
-                            mjpeg_frames,
-                        )
-
-                        mj = dict(mjpeg_frames(r["payload"]))
-                    except Exception:
-                        family = None  # corrupt container -> stub rows
-                if mj is not None:
-                    # sample the frames that really exist: container dc
-                    # chunks may be sparse (non-JPEG frames interleaved),
-                    # so the index list — not a dense count — is the truth
-                    probe = sorted(mj)[::every_k]
-                else:
-                    n = int(r["n_frames"]) if r["n_frames"] is not None else 1
-                    probe = range(0, max(n, 1), every_k)
-                for idx in probe:
+                n = int(r["n_frames"]) if r["n_frames"] is not None else 1
+                for idx in range(0, max(n, 1), every_k):
                     rows["media_id"].append(r["media_id"])
                     rows["frame_idx"].append(idx)
                     frame = None
@@ -362,12 +338,6 @@ def sample_frames_decoded(media: DataFrame, every_k: int = 10) -> DataFrame:
                             frame = codecs.decode_raw_frame(
                                 r["payload"], int(r["width"]), int(r["height"]), idx
                             )
-                        elif mj is not None:
-                            from enterprise_warp_spark.pipeline.jpeg import (
-                                decode_jpeg,
-                            )
-
-                            frame = decode_jpeg(mj[idx])
                     except Exception:
                         frame = None  # corrupt frame: decoded=false row
                     rows["decoded"].append(frame is not None)
@@ -413,7 +383,7 @@ def resize_images(
                     return opt["image_resize"](payload, width, height), width, height, True
                 except Exception:
                     pass  # undecodable by the plugin: pure python below
-            if family in ("pnm", "png", "jpeg", "gif", "bmp", "tiff", "webp"):
+            if family in ("pnm", "png", "bmp", "tiff", "webp"):
                 try:
                     resized = codecs.resize_nearest(
                         codecs.decode_image(payload, row["mime"]), width, height
@@ -422,26 +392,18 @@ def resize_images(
                         enc = codecs.encode_ppm
                     elif family == "png":
                         enc = codecs.encode_png
-                    elif family == "jpeg":
-                        from enterprise_warp_spark.pipeline.jpeg import encode_jpeg
-
-                        enc = encode_jpeg
                     elif family == "bmp":
                         enc = codecs.encode_bmp
                     elif family == "tiff":
                         from enterprise_warp_spark.pipeline.tiff import encode_tiff
 
                         enc = encode_tiff
-                    elif family == "webp":
+                    else:
                         from enterprise_warp_spark.pipeline.vp8l import (
                             encode_webp_lossless,
                         )
 
                         enc = encode_webp_lossless
-                    else:
-                        from enterprise_warp_spark.pipeline.gif import encode_gif
-
-                        enc = encode_gif
                     return enc(resized), width, height, True
                 except Exception:
                     pass  # undecodable bytes: passthrough / strict below
@@ -491,9 +453,7 @@ def audio_fingerprints(media: DataFrame, n_bins: int = 32) -> DataFrame:
         from enterprise_warp_spark.pipeline import codecs
 
         def one(row: pd.Series) -> tuple[bool, int | None]:
-            if codecs.DECODABLE_MIMES.get(row["mime"]) not in (
-                "wav", "flac", "vorbis"
-            ):
+            if codecs.DECODABLE_MIMES.get(row["mime"]) != "wav":
                 return False, None
             try:
                 samples, _ = codecs.decode_audio(row["payload"], row["mime"])
@@ -559,7 +519,8 @@ def image_fingerprints(media: DataFrame) -> DataFrame:
     nearest-resize to 9x8 (pipeline.codecs), one bit per horizontal neighbor
     comparison. Comparison bits make it invariant to brightness/contrast
     scaling and robust to resizing — the classic perceptual image hash.
-    Non-decodable (MP3-art/corrupt/...) rows: decoded=false, null fingerprint."""
+    Every other mime (JPEG, GIF, ...) and undecodable bytes give
+    decoded=false and a null fingerprint."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -567,7 +528,7 @@ def image_fingerprints(media: DataFrame) -> DataFrame:
         from enterprise_warp_spark.pipeline import codecs
 
         def one(row: pd.Series) -> tuple[bool, int | None]:
-            if codecs.DECODABLE_MIMES.get(row["mime"]) not in ("pnm", "png", "jpeg", "gif"):
+            if codecs.DECODABLE_MIMES.get(row["mime"]) not in ("pnm", "png"):
                 return False, None
             try:
                 arr = codecs.decode_image(row["payload"], row["mime"])

@@ -1,6 +1,5 @@
-"""WebP-lossless (VP8L) codec, pure python + numpy — the second format
-after Vorbis where full in-repo decode is possible WITHOUT normative table
-blobs: every entropy code (the prefix codes, the code-length code) ships
+"""WebP-lossless (VP8L) codec, pure python + numpy — a format where full
+in-repo decode is possible WITHOUT normative table blobs: every entropy code (the prefix codes, the code-length code) ships
 IN the bitstream, and the only fixed tables are tiny structural constants
 printed in the public spec (the 19-entry code-length order and the
 120-entry short-distance map).
@@ -8,8 +7,7 @@ printed in the public spec (the 19-entry code-length order and the
 Sources: the public WebP Lossless Bitstream Specification (RFC 9649 /
 developers.google.com "webp lossless bitstream"). No reference-repo
 counterpart exists (the reference has no media surface); provenance
-citations therefore point at the spec sections, mirroring
-pipeline/vorbis.py's pattern.
+citations therefore point at the spec sections.
 
 Decoder capability: the full spec surface — all four transforms
 (predictor, color/cross-color, subtract-green, color-indexing incl. pixel

@@ -8,8 +8,7 @@ the driver (C rows, trivially small). Sketch-backed where exactness would
 shuffle the key space: distinct counts via HLL++, quantiles via GK, the
 modal value via Spark's mode() aggregate.
 
-Sibling of pipeline/report.py's corpus_report (text-corpus specific);
-this one profiles ANY table. Not in the oracle catalog (HLL/GK outputs
+Profiles ANY table. Not in the oracle catalog (HLL/GK outputs
 are engine-internal); correctness is pinned against exact pandas twins in
 tests/test_profiling.py, the sketch-family precedent.
 """

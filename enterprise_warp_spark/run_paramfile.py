@@ -26,9 +26,9 @@ connected residuals the reference gets from libstempo are not computable
 here (the K8 tempo2 source is feature-flagged, `sources/tempo2.py`).
 Instead the CLI builds residuals from the REAL observing setup — the .tim
 cadence, per-TOA uncertainties, backend flags and the .par design matrix —
-with noise injected per the configured noise files (F14,
-`functions/inject.py`), the same convention the golden-parity test pins
-(tests/test_end_to_end.py::test_golden_noise_file_parity_j1832). Every
+with noise injected per the configured noise files (F14, in numpy inside
+`build_standalone_residuals`), the same convention the golden-parity test
+pins (tests/test_end_to_end.py::test_golden_noise_file_parity_j1832). Every
 step downstream of residual construction is identical to a production run.
 """
 

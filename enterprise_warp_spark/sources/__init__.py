@@ -8,4 +8,3 @@ loops), so the scans scale and Catalyst prunes/pushes down as usual.
 from enterprise_warp_spark.sources.tim import read_tim  # noqa: F401
 from enterprise_warp_spark.sources.par import read_par  # noqa: F401
 from enterprise_warp_spark.sources.noisefiles import read_noise_files  # noqa: F401
-from enterprise_warp_spark.sources.chains import read_chain_dir  # noqa: F401

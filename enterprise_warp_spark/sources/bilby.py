@@ -19,11 +19,12 @@ Spark shape: `spark.read.json(multiLine)` parses the document JVM-side (one
 task per result file; a directory of runs parallelizes per file), the column
 lists are zipped with `arrays_zip` and `posexplode` assigns the step index —
 no driver-side JSON parse of the (potentially large) posterior arrays. The
-output matches `read_chain`'s wide schema (run_id, step, values, lnpost,
-lnlike, accept, pt) so every §3.2 analytics operator runs unchanged:
-lnpost = log_likelihood + log_prior; bilby stores no accept/pt columns, so
-they are filled with 1.0 / 0.0 (the values PTMCMC writes for an always-kept
-zero-temperature chain).
+output is the wide chain form (run_id, step, values, lnpost, lnlike,
+accept, pt); `analytics.results_pipeline` explodes it into the same long
+form the PTMCMC runs load into, so every §3.2 analytics operator runs
+unchanged. lnpost = log_likelihood + log_prior; bilby stores no accept/pt
+columns, so they are filled with 1.0 / 0.0 (the values PTMCMC writes for
+an always-kept zero-temperature chain).
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ import glob
 import os
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
@@ -41,7 +41,7 @@ from pyspark.sql.types import ArrayType
 class BilbyRun(NamedTuple):
     """One bilby result: the chain plus what the driver learns reading it."""
 
-    chain: DataFrame  # `read_chain`'s wide schema
+    chain: DataFrame  # (run_id, step, values, lnpost, lnlike, accept, pt)
     labels: list[str]  # sampled parameters, in `values` order
     n_samples: int  # rows in `chain`
 
@@ -109,38 +109,12 @@ def load_bilby_result(
     return BilbyRun(chain, labels, max(size_of[c] for c in zip_cols))
 
 
-def read_bilby_result(
-    spark: SparkSession, path: str, run_id: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """-> (chain, pars): chain in `read_chain`'s wide schema, pars = (idx, par)
-    in sampled-parameter order (results.py:1070-1078 semantics)."""
-    run = load_bilby_result(spark, path, run_id)
-    pars = spark.createDataFrame(
-        pd.DataFrame({"idx": range(len(run.labels)), "par": run.labels})
-    )
-    return run.chain, pars
-
-
-def bilby_result_path(run_dir: str, label: str | None = None) -> str:
+def bilby_result_path(run_dir: str) -> str:
     """Resolve a run directory's result file the way the reference does
-    (results.py:1056-1064): `<label>_result.json` when the label is known,
-    else the first `*_result.json` glob match."""
-    if label is not None:
-        cand = os.path.join(run_dir, f"{label}_result.json")
-        if not os.path.isfile(cand):
-            raise FileNotFoundError(f"no {label}_result.json in {run_dir}")
-        return cand
+    without a label (results.py:1056-1064): the first `*_result.json` glob
+    match."""
     matches = sorted(glob.glob(os.path.join(run_dir, "*_result.json")))
     if not matches:
         raise FileNotFoundError(f"no *_result.json in {run_dir}")
     return matches[0]
 
-
-def read_bilby_dir(
-    spark: SparkSession, run_dir: str, label: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """One run directory (see bilby_result_path) -> (chain, pars)."""
-    return read_bilby_result(
-        spark, bilby_result_path(run_dir, label),
-        run_id=os.path.basename(run_dir.rstrip("/")) or None,
-    )

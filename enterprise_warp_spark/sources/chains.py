@@ -19,9 +19,6 @@ burn-in bound — text splits are assigned in file order, which reproduces
 the reference's row index. Burned rows are dropped, the values posexploded
 and each `par` taken from a per-run literal array: long form
 (run_id, step, par, value) with no join and no per-run union.
-
-`read_chain` / `chains_long` keep the per-run wide form (run_id, step,
-values, lnpost, lnlike, accept, pt) for callers that want one chain.
 """
 
 from __future__ import annotations
@@ -55,50 +52,6 @@ def read_pars_file(path: str) -> list[str]:
     """pars.txt sidecar -> parameter names in chain column order."""
     with open(path) as fh:
         return [ln.strip() for ln in fh if ln.strip()]
-
-
-def read_chain(
-    spark: SparkSession, chain_path: str | list[str], run_id: str | None = None
-) -> DataFrame:
-    """chain file(s) -> (run_id, step, values ARRAY<DOUBLE>, lnpost, lnlike,
-    accept, pt); the 4 trailing sampler columns are split off. A list of
-    paths concatenates segments in filename order (the W2 sorted-file-order
-    contract: the step window orders by file, then line)."""
-    first = chain_path[0] if isinstance(chain_path, list) else chain_path
-    run_id = run_id or os.path.basename(os.path.dirname(first)) or "run"
-    w = Window.partitionBy("run_id").orderBy("file", "mid")
-    raw = (
-        spark.read.text(chain_path)
-        .filter(F.trim("value") != "")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.input_file_name().alias("file"),
-            F.monotonically_increasing_id().alias("mid"),
-            F.expr(_ROW).alias("row"),
-        )
-    )
-    n = F.size("row")
-    return (
-        raw.withColumn("step", F.row_number().over(w) - 1)
-        .select(
-            "run_id",
-            "step",
-            F.expr("slice(row, 1, size(row) - 4)").alias("values"),
-            F.element_at("row", n - 3).alias("lnpost"),
-            F.element_at("row", n - 2).alias("lnlike"),
-            F.element_at("row", n - 1).alias("accept"),
-            F.element_at("row", n).alias("pt"),
-        )
-    )
-
-
-def chains_long(chain: DataFrame, pars: DataFrame) -> DataFrame:
-    """J5 — explode to (run_id, step, par, value) with the pars sidecar."""
-    return (
-        chain.select("run_id", "step", F.posexplode("values").alias("idx", "value"))
-        .join(F.broadcast(pars), "idx")
-        .select("run_id", "step", "par", "value")
-    )
 
 
 # the full-width (suffix-free) segment family only: chain_STAMP.txt.
@@ -170,24 +123,6 @@ def sampled_pars(run: ChainRun) -> list[str]:
                 if width:
                     return run.pars[: max(0, width - len(AUX_COLS))]
     return []
-
-
-def _pars_frame(spark: SparkSession, pars: list[str]) -> DataFrame:
-    return spark.createDataFrame(list(enumerate(pars)), "idx int, par string")
-
-
-def read_chain_dir(spark: SparkSession, run_dir: str) -> tuple[DataFrame, DataFrame]:
-    """One run directory -> (chain, pars) in the wide per-run form."""
-    run = resolve_chain_dir(run_dir)
-    return read_chain(spark, run.files, run.run_id), _pars_frame(spark, run.pars)
-
-
-def read_separated_chain_dir(
-    spark: SparkSession, run_dir: str, par_label: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """--load_separated for one run directory (see resolve_chain_dir)."""
-    run = resolve_chain_dir(run_dir, separated=True, par_label=par_label)
-    return read_chain(spark, run.files, run.run_id), _pars_frame(spark, run.pars)
 
 
 def read_chain_runs(

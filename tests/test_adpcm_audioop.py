@@ -13,12 +13,6 @@ Framing notes: audioop is a raw nibble-stream codec with explicit
 (valpred, index) state and packs the HIGH nibble first; WAV 0x0011 blocks
 carry (predictor, index) in each block header and pack the LOW nibble
 first — the tests swap nibbles and seed audioop's state from the header.
-
-FLAC and Vorbis remain hermetic-twin-only: this container has no libFLAC/
-libvorbis/libogg (ldconfig sweep), no flac/oggenc/oggdec/ffmpeg/sox
-binaries, no *.flac/*.ogg/*.webm/*.mka files anywhere on the filesystem
-(find / sweep), no JVM SPI for either, and no network to fetch xiph.org /
-RFC 9639 vectors — documented in pipeline/flac.py and pipeline/vorbis.py.
 """
 
 import numpy as np

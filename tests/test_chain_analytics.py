@@ -37,30 +37,28 @@ def chain_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def loaded(spark, chain_dir):
-    from enterprise_warp_spark.sources.chains import chains_long, read_chain_dir
+    from enterprise_warp_spark.sources.chains import read_chain_runs, resolve_chain_dir
 
     d, mat = chain_dir
-    chain, pars = read_chain_dir(spark, d)
-    return chain.cache(), chains_long(chain, pars).cache(), mat
+    # burn_frac=0 keeps every step; the tests below burn in themselves
+    long = read_chain_runs(spark, [resolve_chain_dir(d)], burn_frac=0.0)
+    return long.cache(), mat
 
 
 def test_chain_shape_and_aux_split(loaded):
-    chain, long, mat = loaded
-    rows = chain.orderBy("step").collect()
-    assert len(rows) == NSTEP
-    assert len(rows[0]["values"]) == len(PARS)
+    long, mat = loaded
+    # the 4 trailing sampler columns are split off: one row per parameter
+    assert long.count() == NSTEP * len(PARS)
+    by_par = {r["par"]: r["value"] for r in long.filter("step = 7").collect()}
+    assert set(by_par) == set(PARS)
     # step order must reproduce file order exactly
-    np.testing.assert_allclose(rows[7]["values"], mat[7, :4])
-    np.testing.assert_allclose(
-        [rows[7]["lnpost"], rows[7]["lnlike"], rows[7]["accept"], rows[7]["pt"]],
-        mat[7, 4:],
-    )
+    np.testing.assert_allclose([by_par[p] for p in PARS], mat[7, :4])
 
 
 def test_burn_in(loaded):
     from enterprise_warp_spark.analytics.chains import burn_in
 
-    _, long, mat = loaded
+    long, mat = loaded
     kept = burn_in(long, 0.25)
     assert kept.filter("par = 'nmodel'").count() == NSTEP - int(0.25 * NSTEP)
     assert kept.agg({"step": "min"}).first()[0] == int(0.25 * NSTEP)
@@ -72,7 +70,7 @@ def test_model_counts_and_logbf(loaded):
         model_posterior_counts,
     )
 
-    _, long, mat = loaded
+    long, mat = loaded
     counts = {r["nmodel"]: r["n_samples"] for r in model_posterior_counts(long).collect()}
     vals, np_counts = np.unique(np.round(mat[:, 3]), return_counts=True)
     assert counts == {int(v): int(c) for v, c in zip(vals, np_counts)}
@@ -83,7 +81,7 @@ def test_model_counts_and_logbf(loaded):
 def test_credible_levels(loaded):
     from enterprise_warp_spark.analytics.chains import credible_levels_by_par
 
-    _, long, mat = loaded
+    long, mat = loaded
     got = {r["par"]: r for r in credible_levels_by_par(long).collect()}
     for j, par in enumerate(PARS):
         for p, col in [(16, "p16"), (50, "p50"), (84, "p84")]:
@@ -95,7 +93,7 @@ def test_credible_levels(loaded):
 def test_mode_positions(loaded):
     from enterprise_warp_spark.analytics.chains import mode_positions_by_par
 
-    _, long, mat = loaded
+    long, mat = loaded
     got = {r["par"]: r["mode_position"] for r in mode_positions_by_par(long).collect()}
     for j, par in enumerate(PARS):
         # reference dist_mode_position (results.py:154-170)
@@ -106,7 +104,7 @@ def test_mode_positions(loaded):
 def test_noise_summary_routing(loaded):
     from enterprise_warp_spark.analytics.chains import noise_summary
 
-    _, long, mat = loaded
+    long, mat = loaded
     got = {r["par"]: r["value"] for r in noise_summary(long).collect()}
     hist, edges = np.histogram(mat[:, 0], bins=50)
     assert got[PARS[0]] == pytest.approx(edges[np.argmax(hist)], rel=1e-9)  # efac -> mode
@@ -118,7 +116,7 @@ def test_noise_files_json(loaded):
 
     from enterprise_warp_spark.analytics.chains import noise_files_json, noise_summary
 
-    _, long, _ = loaded
+    long, _ = loaded
     doc = noise_files_json(noise_summary(long)).first()
     payload = json.loads(doc["noise_json"])
     assert set(payload) == set(PARS)
@@ -127,9 +125,10 @@ def test_noise_files_json(loaded):
 def test_split_chain(loaded):
     from enterprise_warp_spark.analytics.chains import split_chain
 
-    chain, _, _ = loaded
-    head, tail = split_chain(chain, 0.5)
-    assert head.count() == NSTEP // 2 and tail.count() == NSTEP - NSTEP // 2
+    long, _ = loaded
+    head, tail = split_chain(long, 0.5)
+    assert head.count() == len(PARS) * (NSTEP // 2)
+    assert tail.count() == len(PARS) * (NSTEP - NSTEP // 2)
     assert head.agg({"step": "max"}).first()[0] == NSTEP // 2 - 1
 
 

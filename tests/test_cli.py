@@ -384,7 +384,10 @@ def test_read_separated_selects_one_family(spark, tmp_path):
     full-width family; par_label selects the masked one against
     pars_<label>.txt; a label with no pars file falls back (reference
     get_chain_file_name/get_pars, results.py:427-470)."""
-    from enterprise_warp_spark.sources.chains import read_separated_chain_dir
+    from enterprise_warp_spark.sources.chains import (
+        read_chain_runs,
+        resolve_chain_dir,
+    )
 
     d = tmp_path / "0_J0001+0001"
     d.mkdir()
@@ -397,25 +400,30 @@ def test_read_separated_selects_one_family(spark, tmp_path):
     # fallback chain_1.txt would only be read if NO segments matched
     np.savetxt(d / "chain_1.txt", np.zeros((2, 7)))
 
-    chain, pars = read_separated_chain_dir(spark, str(d))
-    assert chain.count() == 5
-    assert chain.selectExpr("max(size(values)) m").first()["m"] == 3
-    assert [r["par"] for r in pars.orderBy("idx").collect()] == [
-        "alpha", "beta", "gamma",
-    ]
+    def load(par_label=None):
+        """-> (pars, {par: values in step order})"""
+        run = resolve_chain_dir(str(d), separated=True, par_label=par_label)
+        rows = read_chain_runs(spark, [run], burn_frac=0.0).collect()
+        cols = {}
+        for r in sorted(rows, key=lambda r: r["step"]):
+            cols.setdefault(r["par"], []).append(r["value"])
+        return run.pars, cols
 
-    chain_b, pars_b = read_separated_chain_dir(spark, str(d), par_label="beta")
-    assert chain_b.count() == 5
-    assert chain_b.selectExpr("max(size(values)) m").first()["m"] == 1
-    assert [r["par"] for r in pars_b.collect()] == ["beta"]
+    pars, cols = load()
+    assert pars == ["alpha", "beta", "gamma"]
+    assert set(cols) == set(pars) and all(len(v) == 5 for v in cols.values())
+    assert np.allclose(cols["beta"], full[:, 1])
+
+    pars_b, cols_b = load(par_label="beta")
+    assert pars_b == ["beta"]
+    assert list(cols_b) == ["beta"] and np.allclose(cols_b["beta"], full[:, 1])
 
     # label without a pars_<label>.txt -> full-width family (reference
     # get_pars existence fallback)
-    chain_f, pars_f = read_separated_chain_dir(
-        spark, str(d), par_label="nonexistent"
-    )
-    assert chain_f.selectExpr("max(size(values)) m").first()["m"] == 3
-    assert pars_f.count() == 3
+    pars_f, cols_f = load(par_label="nonexistent")
+    assert pars_f == ["alpha", "beta", "gamma"]
+    assert set(cols_f) == set(pars_f)
+    assert all(len(v) == 5 for v in cols_f.values())
 
 
 def test_expand_orfs_rejects_unsupported():

@@ -219,7 +219,10 @@ def test_timestamped_chain_segments(spark, tmp_path):
     name order (results.py:427-448, 481-489)."""
     import numpy as np
 
-    from enterprise_warp_spark.sources.chains import read_chain
+    from enterprise_warp_spark.sources.chains import (
+        read_chain_runs,
+        resolve_chain_dir,
+    )
 
     d = tmp_path / "run_seg"
     d.mkdir()
@@ -227,11 +230,13 @@ def test_timestamped_chain_segments(spark, tmp_path):
     m2 = np.column_stack([np.arange(10, 25) * 1.0, np.zeros(15), np.zeros(15), np.zeros(15), np.ones(15)])
     np.savetxt(d / "chain_20230101000000.txt", m1)
     np.savetxt(d / "chain_20230202000000.txt", m2)
-    chain = read_chain(spark, str(d / "chain_*.txt"), run_id="seg")
-    rows = chain.orderBy("step").collect()
+    (d / "pars.txt").write_text("x\n")
+    run = resolve_chain_dir(str(d), separated=True)
+    rows = read_chain_runs(spark, [run], burn_frac=0.0).orderBy("step").collect()
     assert len(rows) == 25
-    # steps follow file-name order then row order: values[0] == step index
-    assert [int(r["values"][0]) for r in rows] == list(range(25))
+    # steps follow file-name order then row order: the value == step index
+    assert [int(r["value"]) for r in rows] == list(range(25))
+    assert [r["step"] for r in rows] == list(range(25))
 
 
 def test_global_rank_and_scalable_ntile(spark, sf_dir):
@@ -257,45 +262,6 @@ def test_global_rank_and_scalable_ntile(spark, sf_dir):
         orders, ["o_totalprice", "o_orderkey"], 8
     ).collect()}
     assert a == b
-
-
-def test_stateful_running_user_stats(spark, sf_dir):
-    from enterprise_warp_spark.streaming import stream_events
-    from enterprise_warp_spark.streaming.stateful import running_user_stats
-
-    stream = stream_events(spark, sf_dir).select("user_id", "ts_us", "value")
-    q = (
-        running_user_stats(stream)
-        .writeStream.format("memory")
-        .queryName("stateful_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["user_id"]: r
-        for r in spark.sql(
-            "select * from stateful_test"
-        ).collect()
-    }
-    # batch oracle
-    from enterprise_warp_spark.tables import table
-
-    want = {
-        r["user_id"]: r
-        for r in table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.avg("value").alias("mean_value"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for uid in want:
-        assert got[uid]["n_events"] == want[uid]["n_events"]
-        assert got[uid]["mean_value"] == pytest.approx(want[uid]["mean_value"], rel=1e-9)
 
 
 def test_multimodal_resize(spark):

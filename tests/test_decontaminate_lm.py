@@ -130,30 +130,6 @@ def test_redact_patterns_and_counts(spark):
     assert got[1]["text"].startswith("mail me at jane.doe")
 
 
-def test_corpus_report(spark, sf_dir):
-    from enterprise_warp_spark.pipeline.report import corpus_report
-    from enterprise_warp_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents")
-    r = corpus_report(docs).collect()[0]
-    n = docs.count()
-    assert r["n_docs"] == n
-    assert r["n_tokens_total"] > 0 and r["tokens_p50"] <= r["tokens_p95"]
-    langs = {x["lang"] for x in docs.select("lang").distinct().collect()}
-    assert r["n_langs"] == len(langs) and r["top_lang"] in langs
-    assert 0 < r["top_lang_share"] <= 1
-    # HLL estimate within its error bound of the exact distinct count
-    exact = docs.select("text").distinct().count()
-    assert abs(r["approx_distinct_texts"] - exact) <= 0.1 * exact
-    assert 0 <= r["exact_dup_rate_est"] < 1
-    # duplicating the corpus doubles docs, halves the distinct share
-    doubled = corpus_report(
-        docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 10_000_000))
-    ).collect()[0]
-    assert doubled["n_docs"] == 2 * n
-    assert doubled["exact_dup_rate_est"] > 0.4
-
-
 def test_bigram_lm_matches_counter_reference(spark):
     from enterprise_warp_spark.pipeline.lm import (
         bigram_perplexity,

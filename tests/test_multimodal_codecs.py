@@ -495,7 +495,7 @@ def test_unsupported_png_variant_falls_through_to_plugin(spark):
 
 
 # ---------------------------------------------------------------------------
-# baseline JPEG codec (pipeline/jpeg.py)
+# Plugin dispatch order against the pure decoders
 # ---------------------------------------------------------------------------
 
 
@@ -504,140 +504,6 @@ def _gradient_rgb(h=21, w=37):
     y = np.linspace(0, 255, h)[:, None]
     base = np.clip(0.5 * x + 0.5 * y, 0, 255).astype(np.uint8)
     return np.stack([base, base[::-1], np.full_like(base, 100)], axis=-1)
-
-
-def test_jpeg_round_trip_gray_rgb_and_420():
-    """encode_jpeg -> decode_jpeg is near-lossless on smooth images in all
-    three layouts (gray, 4:4:4 RGB, 4:2:0 RGB), with non-multiple-of-8
-    dimensions exercising the edge padding."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    rgb = _gradient_rgb()
-    gray = rgb[..., 0]
-
-    out = decode_jpeg(encode_jpeg(gray, quality=95))
-    assert out.shape == gray.shape and out.dtype == np.uint8
-    assert np.abs(out.astype(float) - gray.astype(float)).max() <= 3
-
-    out = decode_jpeg(encode_jpeg(rgb, quality=95))
-    assert out.shape == rgb.shape
-    assert np.abs(out.astype(float) - rgb.astype(float)).max() <= 6
-
-    out = decode_jpeg(encode_jpeg(rgb, quality=95, subsample=True))
-    assert out.shape == rgb.shape
-    # chroma is box-averaged to half res: luma stays tight, chroma looser
-    assert np.abs(out.astype(float) - rgb.astype(float)).mean() <= 4
-
-
-def test_jpeg_noise_round_trip_bounded():
-    """Dense noise (worst case for DCT coding) stays bounded and shaped —
-    exercises ZRL runs, every magnitude category, and byte stuffing."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(11)
-    noise = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(noise, quality=90))
-    assert out.shape == noise.shape
-    assert np.abs(out.astype(float) - noise.astype(float)).mean() < 20
-
-
-def test_jpeg_decodes_real_third_party_files():
-    """Interop: decode JPEGs produced by other encoders (Python's own test
-    images on this box — includes a large 4:2:0 photographic file). Skipped
-    where the files don't exist; the hermetic round-trip tests above carry
-    the guarantee everywhere."""
-    import os
-
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg
-
-    candidates = [
-        "/mnt/sandboxing/model_tools_env/v1/python/install/lib/python3.11/test/test_email/data/python.jpg",
-        "/mnt/sandboxing/model_tools_env/v1/python/install/lib/python3.11/site-packages/IPython/core/tests/2x2.jpg",
-        "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/doc/rust/html/embedded-book/assets/verify.jpeg",
-    ]
-    found = [p for p in candidates if os.path.exists(p)]
-    if not found:
-        pytest.skip("no third-party JPEG fixtures on this box")
-    for p in found:
-        img = decode_jpeg(open(p, "rb").read())
-        assert img.dtype == np.uint8 and img.size > 0
-
-
-def test_jpeg_lossless_sof_raises_not_implemented():
-    """A lossless SOF3 marker must raise (the multimodal layer then falls
-    through to the optional plugin / stub, never crashes the kernel).
-    Progressive SOF2 is NOT in this class anymore — it decodes for real
-    (see test_progressive_jpeg_decodes_identically_to_baseline)."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    payload = bytearray(encode_jpeg(_gradient_rgb(16, 16)))
-    i = payload.find(b"\xff\xc0")
-    payload[i + 1] = 0xC3  # SOF3 lossless
-    with pytest.raises(NotImplementedError, match="SOF"):
-        decode_jpeg(bytes(payload))
-
-
-def test_jpeg_mime_decodes_for_real_in_spark(spark):
-    """image/jpeg media rows now get decoded=true with NO optional plugins:
-    the pure-numpy baseline codec is the always-on path, matching PNG."""
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_images,
-    )
-
-    payload = encode_jpeg(_gradient_rgb(), quality=95, subsample=True)
-    media = spark.createDataFrame(
-        [(31, "image", payload, "image/jpeg", 37, 21, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(decode_jpeg(payload)))
-
-    rrow = resize_images(media, 8, 8, decoders={}).first()
-    assert rrow["resized"] is True
-    assert decode_jpeg(rrow["payload"]).shape == (8, 8, 3)
-
-
-def test_jpeg_restart_markers_roundtrip():
-    """DRI/RSTn path: encoding with restart intervals (byte-aligned RSTn +
-    DC predictor reset) must decode IDENTICALLY to the marker-free encoding
-    of the same image — exercises the LUT decoder's unstuff/realign logic
-    for every layout (4:4:4, 4:2:0, grayscale) and interval parities."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(5)
-    for shape, sub in [((48, 56, 3), False), ((48, 56, 3), True), ((40, 24), False)]:
-        img = (rng.normal(128, 50, shape).clip(0, 255)).astype(np.uint8)
-        base = decode_jpeg(encode_jpeg(img, quality=88, subsample=sub))
-        for ri in (1, 3, 7):
-            p = encode_jpeg(img, quality=88, subsample=sub, restart_interval=ri)
-            assert b"\xff\xdd" in p and b"\xff\xd0" in p  # DRI + RST0 present
-            assert np.array_equal(decode_jpeg(p), base), (shape, sub, ri)
-
-
-def test_jpeg_multiscan_sequential_raises_not_implemented():
-    """A sequential frame whose first scan omits a frame component must
-    raise NotImplementedError (the optional-plugin boundary), not an opaque
-    KeyError (ADVICE r5)."""
-    import struct
-
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    payload = bytearray(encode_jpeg(_gradient_rgb(), quality=90))
-    # shrink the SOS component list from 3 to 1 (Y only), in place
-    i = payload.find(b"\xff\xda")
-    assert i >= 0
-    ns = payload[i + 4]
-    assert ns == 3
-    comp = bytes(payload[i + 5 : i + 7])  # first (id, tables) pair
-    tail = bytes(payload[i + 5 + 2 * ns : i + 5 + 2 * ns + 3])  # ss/se/ah
-    new_sos = b"\xff\xda" + struct.pack(">H", 2 + 1 + 2 + 3) + bytes([1]) + comp + tail
-    payload[i : i + 5 + 2 * ns + 3] = new_sos
-    with pytest.raises(NotImplementedError, match="multi-scan sequential"):
-        decode_jpeg(bytes(payload))
 
 
 def test_native_plugin_preferred_over_pure_python(spark):
@@ -651,16 +517,19 @@ def test_native_plugin_preferred_over_pure_python(spark):
        itself standing in for Pillow) yields byte-identical features to
        the no-plugin run.
     """
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
+    from enterprise_warp_spark.pipeline.codecs import (
+        decode_png,
+        encode_png,
+        image_features,
+    )
     from enterprise_warp_spark.pipeline.multimodal import (
         MEDIA_SCHEMA,
         extract_features,
     )
 
-    payload = encode_jpeg(_gradient_rgb(), quality=95, subsample=True)
+    payload = encode_png(_gradient_rgb())
     media = spark.createDataFrame(
-        [(41, "image", payload, "image/jpeg", 37, 21, None, None)], MEDIA_SCHEMA
+        [(41, "image", payload, "image/png", 37, 21, None, None)], MEDIA_SCHEMA
     )
 
     marker = np.full((4, 4, 3), 200, dtype=np.uint8)
@@ -669,7 +538,7 @@ def test_native_plugin_preferred_over_pure_python(spark):
     assert row["feature"] == pytest.approx(image_features(marker))  # plugin won
 
     faithful = extract_features(
-        media, decoders={"image": lambda p: decode_jpeg(p)}
+        media, decoders={"image": lambda p: decode_png(p)}
     ).first()
     pure = extract_features(media, decoders={}).first()
     assert pure["decoded"] is True and faithful["decoded"] is True
@@ -682,544 +551,6 @@ def test_native_plugin_preferred_over_pure_python(spark):
     fb = extract_features(media, decoders={"image": broken}).first()
     assert fb["decoded"] is True
     assert fb["feature"] == pure["feature"]
-
-
-# ---------------------------------------------------------------------------
-# FLAC codec (pipeline/flac.py)
-# ---------------------------------------------------------------------------
-
-
-def _tone(n=6000, rate=16000):
-    t = np.arange(n)
-    rng = np.random.default_rng(7)
-    return (
-        3000 * np.sin(2 * np.pi * 440 * t / rate) + 200 * rng.normal(size=n)
-    ).astype(np.int16)
-
-
-def test_flac_round_trip_lossless():
-    """FLAC is lossless: decode(encode(x)) == x exactly, for mono/stereo,
-    int8/int16, tonal/constant/noise content, multiple block sizes."""
-    from enterprise_warp_spark.pipeline.flac import decode_flac, encode_flac
-
-    mono = _tone()
-    out, rate = decode_flac(encode_flac(mono, 16000))
-    assert rate == 16000 and np.array_equal(out, mono)
-
-    stereo = np.stack([mono, (mono // 2 + 100).astype(np.int16)], axis=-1)
-    out, rate = decode_flac(encode_flac(stereo, 44100, block_size=1024))
-    assert rate == 44100 and np.array_equal(out, stereo)
-
-    const = np.full(5000, 12, dtype=np.int8)
-    out, _ = decode_flac(encode_flac(const, 8000))
-    assert np.array_equal(out, const)
-
-    rng = np.random.default_rng(3)
-    noise = rng.integers(-32768, 32767, 3000).astype(np.int16)
-    out, _ = decode_flac(encode_flac(noise, 8000))
-    assert np.array_equal(out, noise)
-
-    # compression actually happens on tonal content
-    assert len(encode_flac(mono, 16000)) < mono.nbytes
-
-
-def test_flac_decoder_lpc_and_midside_paths():
-    """The decoder paths our encoder never produces — LPC subframes and
-    mid-side stereo decorrelation — decoded from a hand-built spec-conformant
-    stream and checked against a direct Python reconstruction."""
-    import struct
-
-    from enterprise_warp_spark.pipeline.flac import (
-        _Writer,
-        _crc8,
-        _crc16,
-        _utf8_number,
-        decode_flac,
-    )
-
-    bsize, bps, rate = 64, 16, 8000
-    # channel 0 (mid) as an order-2 LPC subframe: x[i] = r[i] + (c0*x[i-1] + c1*x[i-2]) >> shift
-    warm = [100, 120]
-    coefs, prec, shift = [3, -1], 4, 1
-    resid = [((i * 7) % 11) - 5 for i in range(bsize - 2)]
-    mid = list(warm)
-    for i in range(2, bsize):
-        pred = (coefs[0] * mid[i - 1] + coefs[1] * mid[i - 2]) >> shift
-        mid.append(resid[i - 2] + pred)
-    # channel 1 (side), constant 9 (odd -> exercises the side&1 bit)
-    side = [9] * bsize
-
-    # reference reconstruction of mid/side per spec
-    want_l, want_r = [], []
-    for m, s in zip(mid, side):
-        mm = (m << 1) | (s & 1)
-        want_l.append((mm + s) >> 1)
-        want_r.append((mm - s) >> 1)
-
-    out = bytearray(b"fLaC")
-    si = _Writer()
-    si.write(bsize, 16); si.write(bsize, 16); si.write(0, 24); si.write(0, 24)
-    si.write(rate, 20); si.write(2 - 1, 3); si.write(bps - 1, 5); si.write(bsize, 36)
-    si.align()
-    body = bytes(si.out) + b"\x00" * 16
-    out += bytes([0x80]) + len(body).to_bytes(3, "big") + body
-
-    hw = _Writer()
-    hw.write(0b11111111111110, 14); hw.write(0, 1); hw.write(0, 1)
-    hw.write(7, 4)   # blocksize: 16-bit at end
-    hw.write(0, 4)   # rate from STREAMINFO
-    hw.write(10, 4)  # mid/side
-    hw.write(4, 3)   # 16 bps
-    hw.write(0, 1)
-    hw.align()
-    header = bytes(hw.out) + _utf8_number(0) + struct.pack(">H", bsize - 1)
-    header += bytes([_crc8(header)])
-
-    bw = _Writer()
-    # mid: LPC order 2
-    bw.write(0, 1); bw.write(32 + (2 - 1), 6); bw.write(0, 1)
-    for v in warm:
-        bw.swrite(v, bps)
-    bw.write(prec - 1, 4); bw.swrite(shift, 5)
-    for c in coefs:
-        bw.swrite(c, prec)
-    bw.write(0, 2); bw.write(0, 4)  # rice method 0, partition order 0
-    p = 3
-    bw.write(p, 4)
-    for v in resid:
-        u = (v << 1) ^ (v >> 63)
-        q, rem = u >> p, u & ((1 << p) - 1)
-        for _ in range(q):
-            bw.write(0, 1)
-        bw.write(1, 1)
-        bw.write(rem, p)
-    # side: CONSTANT 9 at bps+1 bits
-    bw.write(0, 1); bw.write(0, 6); bw.write(0, 1)
-    bw.swrite(9, bps + 1)
-    bw.align()
-    frame = header + bytes(bw.out)
-    frame += struct.pack(">H", _crc16(frame))
-    out += frame
-
-    decoded, got_rate = decode_flac(bytes(out))
-    assert got_rate == rate and decoded.shape == (bsize, 2)
-    assert decoded[:, 0].tolist() == want_l
-    assert decoded[:, 1].tolist() == want_r
-
-
-def test_flac_mime_decodes_for_real_in_spark(spark):
-    """audio/flac media rows get decoded=true with NO optional plugins, and
-    the energy-envelope fingerprint matches the WAV twin of the same
-    samples (codec-invariant audio near-dup)."""
-    from enterprise_warp_spark.pipeline.codecs import encode_wav
-    from enterprise_warp_spark.pipeline.flac import encode_flac
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        audio_fingerprints,
-        extract_features,
-    )
-
-    mono = _tone()
-    flac_payload = encode_flac(mono, 16000)
-    # encode_wav takes floats in [-1, 1] and writes round(x * 32767):
-    # feeding mono/32767 makes the PCM samples exactly `mono`, so both
-    # containers decode to the identical float signal
-    wav_payload = encode_wav(mono.astype(np.float64)[:, None] / 32767.0, 16000)
-    media = spark.createDataFrame(
-        [
-            (51, "audio", flac_payload, "audio/flac", None, None, 16000, None),
-            (52, "audio", wav_payload, "audio/wav", None, None, 16000, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in extract_features(media, decoders={}).collect()}
-    assert rows[51]["decoded"] is True and rows[52]["decoded"] is True
-    # identical samples -> identical features regardless of container
-    assert rows[51]["feature"] == pytest.approx(rows[52]["feature"])
-
-    fps = {r["media_id"]: r for r in audio_fingerprints(media).collect()}
-    assert fps[51]["decoded"] is True
-    assert fps[51]["fingerprint"] == fps[52]["fingerprint"]
-
-
-def test_jpeg_dqt_is_zigzag_serialized():
-    """The DQT segment must serialize the quantization table in zigzag
-    order (spec): parsing it back through the zigzag scatter must
-    reproduce the natural-order Annex-K table at the chosen quality."""
-    from enterprise_warp_spark.pipeline.jpeg import (
-        QT_LUM,
-        ZIGZAG,
-        _quality_scale,
-        encode_jpeg,
-    )
-
-    payload = encode_jpeg(_gradient_rgb(16, 16), quality=90)
-    i = payload.find(b"\xff\xdb")
-    dqt = np.frombuffer(payload[i + 5 : i + 5 + 64], np.uint8).astype(np.int32)
-    natural = np.zeros(64, np.int32)
-    natural[ZIGZAG] = dqt  # the decoder's scatter
-    assert np.array_equal(natural, _quality_scale(QT_LUM, 90))
-
-
-def test_jpeg_cmyk_component_count_rejected():
-    """A 4-component SOF0 (CMYK) must raise instead of silently producing
-    garbage RGB flagged decoded=true."""
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    payload = bytearray(encode_jpeg(_gradient_rgb(16, 16)))
-    i = payload.find(b"\xff\xc0")
-    # SOF body: len(2) prec(1) h(2) w(2) nc(1): bump nc byte 3->4
-    assert payload[i + 9] == 3
-    payload[i + 9] = 4
-    with pytest.raises(NotImplementedError, match="component"):
-        decode_jpeg(bytes(payload))
-
-
-def test_flac_8bit_features_match_wav_twin(spark):
-    """An 8-bit FLAC must scale by the STREAM's bps (2^7), not the int16
-    numpy container width — features must equal the 8-bit WAV twin."""
-    from enterprise_warp_spark.pipeline.codecs import decode_audio, encode_wav
-    from enterprise_warp_spark.pipeline.flac import encode_flac
-
-    rng = np.random.default_rng(9)
-    t = np.arange(4000)
-    mono8 = (100 * np.sin(2 * np.pi * 220 * t / 8000)).astype(np.int8)
-    flac_payload = encode_flac(mono8, 8000)
-    got, rate = decode_audio(flac_payload, "audio/flac")
-    assert rate == 8000 and got.shape == (4000, 1)
-    # full scale for 8-bit is 2^7: a +/-100 sine peaks near 0.78
-    assert 0.7 < np.abs(got).max() < 0.85
-    # decode_wav twin of the same signal (8-bit WAV stores unsigned around
-    # 128 and decode_wav scales by 2^7 too)
-    wav = encode_wav(mono8.astype(np.float64)[:, None] / 127.0, 8000)
-    want, _ = decode_audio(wav, "audio/wav")
-    # encode_wav writes 16-bit PCM; compare against the analytic signal
-    assert np.allclose(got[:, 0], mono8 / 128.0)
-    assert np.allclose(want[:, 0], np.round(mono8 / 127.0 * 32767) / 32768.0)
-
-
-# ---------------------------------------------------------------------------
-# GIF codec (pipeline/gif.py)
-# ---------------------------------------------------------------------------
-
-
-def test_gif_round_trip_lossless_within_palette():
-    """GIF is palettized: round-trips are exact whenever the image has
-    <= 256 distinct colors; >256 colors is a loud error, not quantization."""
-    from enterprise_warp_spark.pipeline.gif import decode_gif, encode_gif
-
-    rng = np.random.default_rng(3)
-    base = rng.integers(0, 16, (45, 67), dtype=np.uint8) * 16
-    img = np.stack([base, 255 - base, np.full_like(base, 7)], axis=-1)
-    assert np.array_equal(decode_gif(encode_gif(img)), img)
-
-    gray = rng.integers(0, 200, (20, 30), dtype=np.uint8)
-    assert np.array_equal(
-        decode_gif(encode_gif(gray)), np.stack([gray] * 3, axis=-1)
-    )
-
-    # LZW table growth/reset path: large image, full 256-color palette
-    flat = np.tile(np.arange(256, dtype=np.uint8).reshape(16, 16), (20, 20))
-    big = np.stack([flat, flat, flat], axis=-1)
-    assert np.array_equal(decode_gif(encode_gif(big)), big)
-
-    over = rng.integers(0, 255, (30, 30, 3), dtype=np.uint8)
-    with pytest.raises(ValueError, match="256"):
-        encode_gif(over)
-
-
-def test_gif_decodes_real_third_party_files():
-    """Interop: IDLE's icon GIFs (palette + LZW streams written by other
-    encoders). Skipped where absent; hermetic round-trips carry the
-    guarantee everywhere."""
-    import glob
-
-    from enterprise_warp_spark.pipeline.gif import decode_gif
-
-    found = sorted(
-        glob.glob(
-            "/mnt/sandboxing/model_tools_env/v1/python/install/lib/python3.11/idlelib/Icons/*.gif"
-        )
-    )[:5]
-    if not found:
-        pytest.skip("no third-party GIF fixtures on this box")
-    for p in found:
-        img = decode_gif(open(p, "rb").read())
-        assert img.dtype == np.uint8 and img.ndim == 3 and img.size > 0
-
-
-def test_gif_mime_decodes_for_real_in_spark(spark):
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.gif import decode_gif, encode_gif
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(8)
-    base = rng.integers(0, 8, (24, 33), dtype=np.uint8) * 32
-    img = np.stack([base, base // 2, 255 - base], axis=-1)
-    payload = encode_gif(img)
-    media = spark.createDataFrame(
-        [(61, "image", payload, "image/gif", 33, 24, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(img))
-
-    rrow = resize_images(media, 8, 8, decoders={}).first()
-    assert rrow["resized"] is True
-    assert decode_gif(rrow["payload"]).shape == (8, 8, 3)
-
-
-def test_gif_disposal_clamping_and_rgba_rejection():
-    """The four GIF review fixes: (a) disposal=2 restores the rect to
-    background between frames; (b) disposal=3 restores the prior canvas;
-    (c) frame rects past the logical screen are clamped, not IndexError;
-    (d) RGBA input to encode_gif raises instead of silently corrupting;
-    (e) decode_gif stops after frame 1 of an animation."""
-    import struct
-
-    from enterprise_warp_spark.pipeline.gif import (
-        _lzw_encode,
-        decode_gif,
-        decode_gif_frames,
-        encode_gif,
-    )
-
-    # hand-build a 2-frame animated GIF: screen 4x4, palette [black, red],
-    # frame 1 full red (disposal=2), frame 2 a 1x1 red dot at (0,0)
-    def img_block(ix, iy, iw, ih, indices):
-        blk = b"\x2c" + struct.pack("<HHHHB", ix, iy, iw, ih, 0)
-        lzw = _lzw_encode(indices, 2)
-        blk += bytes([2, len(lzw)]) + lzw + b"\x00"
-        return blk
-
-    def gce(disposal):
-        return b"\x21\xf9\x04" + bytes([disposal << 2, 0, 0, 0]) + b"\x00"
-
-    pal = bytes([0, 0, 0, 255, 0, 0]) + bytes(6 * 31)  # 2 used of 64... keep 2^1
-    # use 2-entry palette: flags 0x80 | size 0 -> 2 colors
-    payload = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 4, 4, 0x80, 0, 0)
-        + bytes([0, 0, 0, 255, 0, 0])
-        + gce(2)
-        + img_block(0, 0, 4, 4, [1] * 16)
-        + gce(0)
-        + img_block(0, 0, 1, 1, [1])
-        + b"\x3b"
-    )
-    frames = decode_gif_frames(payload)
-    assert len(frames) == 2
-    assert (frames[0] == [255, 0, 0]).all()  # full red
-    # disposal=2: frame 2 starts from background (black), red only at (0,0)
-    assert (frames[1][0, 0] == [255, 0, 0]).all()
-    assert (frames[1][1:] == 0).all() and (frames[1][0, 1:] == 0).all()
-    # decode_gif == first frame only
-    assert np.array_equal(decode_gif(payload), frames[0])
-
-    # disposal=3: restore-to-previous
-    payload3 = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 4, 4, 0x80, 0, 0)
-        + bytes([0, 0, 0, 255, 0, 0])
-        + gce(3)
-        + img_block(0, 0, 4, 4, [1] * 16)
-        + gce(0)
-        + img_block(0, 0, 1, 1, [0])
-        + b"\x3b"
-    )
-    f3 = decode_gif_frames(payload3)
-    # frame 2 draws black dot over the RESTORED background (black) canvas
-    assert (f3[1] == 0).all()
-
-    # out-of-bounds frame rect is clamped (no IndexError)
-    oob = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 4, 4, 0x80, 0, 0)
-        + bytes([0, 0, 0, 255, 0, 0])
-        + img_block(2, 2, 4, 4, [1] * 16)
-        + b"\x3b"
-    )
-    img = decode_gif(oob)
-    assert img.shape == (4, 4, 3)
-    assert (img[2:, 2:] == [255, 0, 0]).all() and (img[:2, :] == 0).all()
-
-    # RGBA rejection
-    with pytest.raises(ValueError, match="RGB"):
-        encode_gif(np.zeros((4, 4, 4), np.uint8))  # RGBA
-
-
-def test_progressive_jpeg_decodes_identically_to_baseline():
-    """Progressive (SOF2) and baseline encodes of the same image quantize
-    identically, so their decodes must match EXACTLY — gradient, noise,
-    sparse (long cross-block EOBn runs), flat, gray and RGB, odd dims.
-    The baseline path is interop-verified, making this a true oracle for
-    the multi-scan successive-approximation decode logic."""
-    from enterprise_warp_spark.pipeline.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(2)
-    rgb = _gradient_rgb()
-    cases = [
-        ("gray", rgb[..., 0], 90),
-        ("rgb", rgb, 90),
-        ("noise", rng.integers(0, 256, (17, 23, 3), dtype=np.uint8), 85),
-        ("sparse", np.zeros((64, 64, 3), np.uint8), 90),
-        ("flat", np.full((128, 96, 3), 77, np.uint8), 90),
-    ]
-    cases[3][1][30, 30] = [255, 0, 0]
-    for name, img, q in cases:
-        baseline = decode_jpeg(encode_jpeg(img, quality=q))
-        progressive = decode_jpeg(encode_jpeg_progressive(img, quality=q))
-        assert np.array_equal(progressive, baseline), name
-
-    # the progressive payload really is SOF2 with multiple scans
-    payload = encode_jpeg_progressive(rgb, quality=90)
-    # 11 scans: DC first, 3 comps x 2 AC bands, DC refine, 3 AC refines
-    assert b"\xff\xc2" in payload and payload.count(b"\xff\xda") == 11
-
-
-def test_progressive_jpeg_mime_decodes_in_spark(spark):
-    """image/jpeg rows carrying a PROGRESSIVE payload now get decoded=true
-    with no plugins (previously they stubbed out)."""
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    rgb = _gradient_rgb()
-    payload = encode_jpeg_progressive(rgb, quality=92)
-    media = spark.createDataFrame(
-        [(71, "image", payload, "image/jpeg", 37, 21, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(decode_jpeg(payload)))
-
-
-def test_truncated_progressive_jpeg_raises():
-    """A progressive payload cut before its first SOS must raise like the
-    baseline path (returning all-zero planes would fabricate a solid-gray
-    image flagged decoded=true — poisoning quality features)."""
-    from enterprise_warp_spark.pipeline.jpeg import (
-        decode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    payload = encode_jpeg_progressive(_gradient_rgb(16, 16))
-    cut = payload[: payload.find(b"\xff\xda")] + b"\xff\xd9"
-    with pytest.raises(ValueError, match="no SOS"):
-        decode_jpeg(cut)
-
-
-# ---------------------------------------------------------------------------
-# MJPEG AVI (pipeline/mjpeg.py)
-# ---------------------------------------------------------------------------
-
-
-def _mjpeg_clip(n=5, w=32, h=24):
-    x = np.linspace(0, 255, w)[None, :]
-    y = np.linspace(0, 255, h)[:, None]
-    frames = []
-    for t in range(n):
-        base = np.clip(0.5 * x + 0.5 * y + 10 * t, 0, 255).astype(np.uint8)
-        frames.append(
-            np.stack([base, base[::-1], np.full_like(base, 40 + t)], axis=-1)
-        )
-    return frames
-
-
-def test_mjpeg_avi_round_trip():
-    from enterprise_warp_spark.pipeline.mjpeg import (
-        decode_mjpeg_frame,
-        encode_mjpeg,
-        mjpeg_frames,
-    )
-
-    frames = _mjpeg_clip()
-    avi = encode_mjpeg(frames, fps=10, quality=95)
-    fr = mjpeg_frames(avi)
-    assert [i for i, _ in fr] == [0, 1, 2, 3, 4]
-    for i in (0, 2, 4):
-        dec = decode_mjpeg_frame(avi, i)
-        assert dec.shape == frames[i].shape
-        assert np.abs(dec.astype(float) - frames[i].astype(float)).max() <= 6
-    with pytest.raises(ValueError, match="AVI"):
-        mjpeg_frames(b"RIFFxxxxWAVE")
-
-
-def test_mjpeg_video_rows_decode_in_spark(spark):
-    """video/x-msvideo MJPEG rows: extract_features flags decoded=true with
-    frame-derived stats, and sample_frames_decoded really decodes every
-    k-th JPEG frame (n_frames taken from the container, not metadata)."""
-    from enterprise_warp_spark.pipeline.codecs import mjpeg_video_features
-    from enterprise_warp_spark.pipeline.mjpeg import encode_mjpeg
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        sample_frames_decoded,
-    )
-
-    frames = _mjpeg_clip(n=6)
-    avi = encode_mjpeg(frames, fps=10, quality=95)
-    media = spark.createDataFrame(
-        [(81, "video", avi, "video/x-msvideo", 32, 24, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(mjpeg_video_features(avi))
-    assert row["feature"][0] == 6.0  # n_frames from the container
-
-    sampled = {
-        r["frame_idx"]: r for r in sample_frames_decoded(media, every_k=2).collect()
-    }
-    assert set(sampled) == {0, 2, 4}
-    for idx, r in sampled.items():
-        assert r["decoded"] is True
-        assert r["frame_mean"] == pytest.approx(float(frames[idx].mean()), abs=2.0)
-
-
-def test_mjpeg_corrupt_frame_degrades_not_crashes(spark):
-    """A well-formed AVI with one corrupt JPEG frame: the bad frame emits a
-    decoded=false row; good frames still decode. Sparse dc chunks (non-JPEG
-    frames interleaved) sample the frames that exist, not a dense range."""
-    import struct as _s
-
-    from enterprise_warp_spark.pipeline.mjpeg import encode_mjpeg, mjpeg_frames
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        sample_frames_decoded,
-    )
-
-    frames = _mjpeg_clip(n=4)
-    avi = bytearray(encode_mjpeg(frames, fps=10, quality=95))
-    # corrupt frame 2's JPEG body (keep the FFD8 magic so it stays "a frame")
-    blobs = mjpeg_frames(bytes(avi))
-    target = blobs[2][1]
-    i = avi.find(target)
-    avi[i + 6 : i + 30] = b"\x01" * 24
-
-    media = spark.createDataFrame(
-        [(91, "video", bytes(avi), "video/x-msvideo", 32, 24, None, None)],
-        MEDIA_SCHEMA,
-    )
-    out = {r["frame_idx"]: r for r in sample_frames_decoded(media, every_k=1).collect()}
-    assert set(out) == {0, 1, 2, 3}
-    assert out[0]["decoded"] is True and out[3]["decoded"] is True
-    assert out[2]["decoded"] is False and out[2]["frame_mean"] is None
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1294,7 +625,7 @@ def test_adpcm_decodes_for_real_in_spark_and_fingerprint_invariant(spark):
 
 def test_prefer_native_false_uses_pure_decoder_despite_plugin(spark):
     """Bit-reproducibility switch: with prefer_native=False the pure-python
-    JPEG decoder wins even when a (different-answer) native plugin is
+    PNG decoder wins even when a (different-answer) native plugin is
     installed; the plugin still catches formats the pure path cannot."""
     from enterprise_warp_spark.pipeline.codecs import image_features
     from enterprise_warp_spark.pipeline.multimodal import (
@@ -1305,14 +636,14 @@ def test_prefer_native_false_uses_pure_decoder_despite_plugin(spark):
     def fake_image_decoder(payload: bytes) -> np.ndarray:
         return np.full((8, 8, 3), 200, dtype=np.uint8)  # wrong on purpose
 
-    from enterprise_warp_spark.pipeline.jpeg import encode_jpeg
+    from enterprise_warp_spark.pipeline.codecs import encode_png
 
-    payload = encode_jpeg(_gradient_rgb(), quality=95, subsample=True)
+    payload = encode_png(_gradient_rgb())
     media = spark.createDataFrame(
-        [(77, "image", payload, "image/jpeg", 37, 21, None, None)], MEDIA_SCHEMA
+        [(77, "image", payload, "image/png", 37, 21, None, None)], MEDIA_SCHEMA
     )
     pure = extract_features(media, decoders={}).first()
-    assert pure["decoded"] is True  # the pure JPEG decoder handles this row
+    assert pure["decoded"] is True  # the pure PNG decoder handles this row
     native = extract_features(
         media, decoders={"image": fake_image_decoder}
     ).first()
@@ -1325,6 +656,42 @@ def test_prefer_native_false_uses_pure_decoder_despite_plugin(spark):
     assert repro["decoded"] is True
     assert repro["feature"] == pytest.approx(pure["feature"], abs=0)
     assert repro["feature"] != pytest.approx(native["feature"], abs=0)
+
+
+# an 8x8 gray baseline JPEG (quality 50) of the ramp arange(64) * 4
+_JPEG_8X8 = bytes.fromhex(
+    "ffd8ffe000104a46494600010100000100010000ffdb004300100b0c0e0c0a100e0d0e"
+    "1211101318281a181616183123251d283a333d3c3933383740485c4e404457453738"
+    "506d51575f626768673e4d71797064785c656763ffc0000b080008000801011100ff"
+    "c4001f0000010501010101010100000000000000000102030405060708090a0bffc4"
+    "00b5100002010303020403050504040000017d010203000411051221314106135161"
+    "07227114328191a1082342b1c11552d1f02433627282090a161718191a2526272829"
+    "2a3435363738393a434445464748494a535455565758595a636465666768696a7374"
+    "75767778797a838485868788898a92939495969798999aa2a3a4a5a6a7a8a9aab2b3"
+    "b4b5b6b7b8b9bac2c3c4c5c6c7c8c9cad2d3d4d5d6d7d8d9dae1e2e3e4e5e6e7e8e9"
+    "eaf1f2f3f4f5f6f7f8f9faffda0008010100003f00483c1dff004cff004affd9"
+)
+
+
+def test_jpeg_row_undecoded_beside_png_row(spark):
+    """JPEG is not a decoded mime: a real JPEG in the same batch as a PNG
+    comes back decoded=false with a null fingerprint, and the PNG row keeps
+    its pinned dHash."""
+    from enterprise_warp_spark.pipeline.codecs import encode_png
+    from enterprise_warp_spark.pipeline.multimodal import (
+        MEDIA_SCHEMA,
+        image_fingerprints,
+    )
+
+    rows = [
+        (1, "image", encode_png(_grad_rgb(16, 16, seed=9), 4), "image/png",
+         16, 16, None, None),
+        (2, "image", _JPEG_8X8, "image/jpeg", 8, 8, None, None),
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)
+    fps = {r["media_id"]: r for r in image_fingerprints(media).collect()}
+    assert fps[1]["decoded"] and fps[1]["fingerprint"] == 6341059479244569594
+    assert not fps[2]["decoded"] and fps[2]["fingerprint"] is None
 
 
 def _png_raw(w, h, depth, color, body_rows, plte=None, interlace=0):
@@ -1619,7 +986,6 @@ def test_sniff_mime_magic_bytes(spark):
     from enterprise_warp_spark.pipeline.codecs import encode_png, encode_wav
     from enterprise_warp_spark.pipeline.multimodal import sniff_mime
     from enterprise_warp_spark.pipeline.tiff import encode_tiff
-    from enterprise_warp_spark.pipeline.vorbis import encode_vorbis
 
     img = np.zeros((2, 2, 3), dtype=np.uint8)
     sig = np.zeros(600)
@@ -1634,7 +1000,7 @@ def test_sniff_mime_magic_bytes(spark):
         (6, encode_tiff(img, big_endian=True), "image/tiff"),
         (7, encode_wav(sig, 8000), "audio/wav"),
         (8, b"RIFF\x00\x00\x00\x00AVI " + bytes(4), "video/x-msvideo"),
-        (9, encode_vorbis(sig, 8000), "audio/ogg"),
+        (9, b"OggS\x00\x02" + bytes(8), "audio/ogg"),
         (10, b"fLaC" + bytes(8), "audio/flac"),
         (11, b"ID3\x04" + bytes(8), "audio/mpeg"),
         (12, b"%PDF-1.7 ...", "application/pdf"),
@@ -1756,10 +1122,7 @@ def test_decoders_survive_corrupt_inputs():
         encode_png,
         encode_wav,
     )
-    from enterprise_warp_spark.pipeline.gif import decode_gif
-    from enterprise_warp_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
     from enterprise_warp_spark.pipeline.tiff import decode_tiff, encode_tiff
-    from enterprise_warp_spark.pipeline.vorbis import decode_vorbis, encode_vorbis
 
     rng = np.random.default_rng(13)
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
@@ -1768,9 +1131,7 @@ def test_decoders_survive_corrupt_inputs():
         (decode_png, encode_png(img)),
         (decode_bmp, encode_bmp(img)),
         (decode_tiff, encode_tiff(img, compression=5)),
-        (decode_jpeg, encode_jpeg(img, quality=90)),
         (decode_wav, encode_wav(sig, 8000)),
-        (decode_vorbis, encode_vorbis(sig, 8000)),
     ]
 
     def with_alarm(fn, payload, seconds=20):
@@ -1798,88 +1159,3 @@ def test_decoders_survive_corrupt_inputs():
             for _ in range(rng.integers(1, 6)):
                 bad[rng.integers(0, len(bad))] ^= 1 << rng.integers(0, 8)
             with_alarm(fn, bytes(bad))
-
-
-# ---------------------------------------------------------------------------
-# Canonical-decoder pins, import-gated (VERDICT r10 #3): this container has
-# no libFLAC/libsndfile, so these SKIP here — but on any machine with
-# soundfile installed they pin encode_flac's output against libFLAC's
-# decoder sample-for-sample. The in-container canonical pin for ADPCM lives
-# in tests/test_adpcm_audioop.py (CPython's audioop IS the IMA reference
-# codec); FLAC/Vorbis decode correctness in this container rests on
-# hermetic twins + spec structure checks, documented in pipeline/flac.py.
-# ---------------------------------------------------------------------------
-
-
-def test_flac_encode_read_by_libflac_when_available():
-    sf = pytest.importorskip("soundfile")
-    import io
-
-    from enterprise_warp_spark.pipeline.flac import encode_flac
-
-    rng = np.random.default_rng(5)
-    t = np.arange(4096)
-    mono = (7000 * np.sin(2 * np.pi * 523 * t / 16000)
-            + rng.normal(0, 40, t.size)).astype(np.int16)
-    data, rate = sf.read(io.BytesIO(encode_flac(mono, 16000)), dtype="int16")
-    assert rate == 16000
-    assert np.array_equal(np.asarray(data).reshape(-1), mono)
-
-
-def test_vorbis_encode_read_by_libvorbis_when_available():
-    sf = pytest.importorskip("soundfile")
-    import io
-
-    from enterprise_warp_spark.pipeline.vorbis import encode_vorbis
-
-    t = np.arange(8192)
-    mono = (0.4 * np.sin(2 * np.pi * 440 * t / 16000)).astype(np.float64)
-    data, rate = sf.read(io.BytesIO(encode_vorbis(mono, 16000)))
-    assert rate == 16000
-    got = np.asarray(data, dtype=np.float64).reshape(len(data), -1)[:, 0]
-    n = min(len(got), len(mono))
-    err = got[:n] - mono[:n]
-    snr = 10 * np.log10(
-        float(np.sum(mono[:n] ** 2)) / max(float(np.sum(err**2)), 1e-30)
-    )
-    assert snr > 15.0  # lossy codec: decoded-by-libvorbis must track input
-
-
-def test_flac_streaminfo_md5_written_and_verified():
-    """r11: encode_flac writes the spec's decoded-audio MD5 into
-    STREAMINFO (independent hashlib twin here) and decode_flac verifies
-    it — so any REAL FLAC file (canonical encoders always write the MD5)
-    self-validates our decoder's output at runtime, and corruption can
-    never round-trip silently."""
-    import hashlib
-
-    from enterprise_warp_spark.pipeline.flac import decode_flac, encode_flac
-
-    rng = np.random.default_rng(9)
-    t = np.arange(3000)
-    st = np.stack(
-        [(6000 * np.sin(2 * np.pi * 330 * t / 16000) + rng.normal(0, 30, t.size)),
-         (4000 * np.sin(2 * np.pi * 660 * t / 16000) + rng.normal(0, 30, t.size))],
-        axis=1,
-    ).astype(np.int16)
-    payload = bytearray(encode_flac(st, 16000))
-    # STREAMINFO md5 lives at bytes 8+18 .. 8+34 of the first metadata
-    # block (4 magic + 4 block header + 18 fixed fields)
-    want = hashlib.md5(st.astype("<i2").tobytes()).digest()
-    assert bytes(payload[26:42]) == want
-
-    out, rate = decode_flac(bytes(payload))
-    assert np.array_equal(out, st) and rate == 16000
-
-    # tampered header MD5 -> loud failure (proves verification runs)
-    payload[30] ^= 0xFF
-    with pytest.raises(ValueError, match="MD5 mismatch"):
-        decode_flac(bytes(payload))
-    payload[30] ^= 0xFF
-
-    # corrupt one byte mid-payload: must fail LOUDLY one way or another
-    # (lost sync / reserved code / CRC-region garbage / MD5 mismatch) —
-    # never silently return wrong samples
-    payload[len(payload) // 2] ^= 0x5A
-    with pytest.raises(ValueError):
-        decode_flac(bytes(payload))

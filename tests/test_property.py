@@ -414,88 +414,6 @@ def test_cap_per_group_property(spark, data, cap, seed):
     assert got == want
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    seed=st.integers(0, 10_000),
-    gray=st.booleans(),
-    quality=st.sampled_from([50, 80, 95]),
-)
-def test_progressive_jpeg_equals_baseline_property(h, w, seed, gray, quality):
-    """Progressive and baseline encodes quantize identically, so decodes
-    must match EXACTLY for arbitrary image content / dims / quality."""
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    img = rng.integers(0, 256, shape, dtype=np.uint8)
-    baseline = decode_jpeg(encode_jpeg(img, quality=quality))
-    progressive = decode_jpeg(encode_jpeg_progressive(img, quality=quality))
-    assert np.array_equal(progressive, baseline)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    h=st.integers(1, 30),
-    w=st.integers(1, 30),
-    n_colors=st.integers(1, 256),
-    seed=st.integers(0, 10_000),
-)
-def test_gif_round_trip_property(h, w, n_colors, seed):
-    """GIF encode/decode is exact for ANY image within the 256-color
-    palette limit (fuzzes LZW width bumps, palette sizes, dims)."""
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.gif import decode_gif, encode_gif
-
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
-    idx = rng.integers(0, n_colors, (h, w))
-    img = palette[idx]
-    assert np.array_equal(decode_gif(encode_gif(img)), img)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    n=st.integers(1, 5000),
-    stereo=st.booleans(),
-    block=st.sampled_from([192, 1024, 4096]),
-    seed=st.integers(0, 10_000),
-)
-def test_flac_round_trip_property(n, stereo, block, seed):
-    """FLAC is lossless for arbitrary int16 content, channel counts, and
-    block sizes (fuzzes rice parameters, fixed-order choice, partial
-    final blocks)."""
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.flac import decode_flac, encode_flac
-
-    rng = np.random.default_rng(seed)
-    shape = (n, 2) if stereo else (n,)
-    x = rng.integers(-32768, 32767, shape).astype(np.int16)
-    out, rate = decode_flac(encode_flac(x, 16000, block_size=block))
-    assert rate == 16000 and np.array_equal(out, x)
-
-
 @given(
     texts=_st.lists(
         _st.text(

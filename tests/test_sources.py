@@ -137,28 +137,32 @@ def _write_bilby_result(tmp_path, label="dynesty_run", n=400):
 
 
 def test_bilby_result_round_trip(spark, tmp_path):
-    from enterprise_warp_spark.sources.bilby import read_bilby_dir
+    from enterprise_warp_spark.analytics.results_pipeline import (
+        load_run_dirs,
+        read_run_dir,
+    )
 
+    labels = ["red_noise_log10_A", "red_noise_gamma", "nmodel"]
     run_dir, post = _write_bilby_result(tmp_path)
-    chain, pars = read_bilby_dir(spark, str(run_dir))
-    rows = chain.orderBy("step").collect()
+    run = read_run_dir(spark, str(run_dir))
+    assert run.labels == labels and run.n_samples == 400
+    rows = run.chain.orderBy("step").collect()
     assert len(rows) == 400
-    assert [r["par"] for r in pars.orderBy("idx").collect()] == [
-        "red_noise_log10_A",
-        "red_noise_gamma",
-        "nmodel",
-    ]
     # values keep parameter order; lnpost = log_likelihood + log_prior
     for i in (0, 123, 399):
         r = rows[i]
         assert r["run_id"] == "J0000+0000"
-        assert r["values"] == [
-            post["red_noise_log10_A"][i],
-            post["red_noise_gamma"][i],
-            post["nmodel"][i],
-        ]
+        assert r["values"] == [post[p][i] for p in labels]
         assert abs(r["lnlike"] - post["log_likelihood"][i]) < 1e-12
         assert abs(r["lnpost"] - (post["log_likelihood"][i] + post["log_prior"][i])) < 1e-12
+
+    # the long form the results CLI loads, with no burn-in
+    long, run_pars = load_run_dirs(spark, str(tmp_path), burn_frac=0.0)
+    assert run_pars == {"J0000+0000": labels}
+    got = {(r["step"], r["par"]): r["value"] for r in long.collect()}
+    assert len(got) == 400 * len(labels)
+    for i in (0, 123, 399):
+        assert [got[(i, p)] for p in labels] == [post[p][i] for p in labels]
 
 
 def test_bilby_chain_runs_results_pipeline(spark, tmp_path):
@@ -167,18 +171,14 @@ def test_bilby_chain_runs_results_pipeline(spark, tmp_path):
     import numpy as np
 
     from enterprise_warp_spark.analytics.chains import (
-        burn_in,
         credible_levels_by_par,
         log_bayes_factors_from_chain,
         noise_summary,
     )
-    from enterprise_warp_spark.sources.bilby import read_bilby_dir
-    from enterprise_warp_spark.sources.chains import chains_long
+    from enterprise_warp_spark.analytics.results_pipeline import load_run_dirs
 
-    run_dir, post = _write_bilby_result(tmp_path)
-    chain, pars = read_bilby_dir(spark, str(run_dir))
-    long = chains_long(chain, pars)
-    kept = burn_in(long, 0.25)
+    _, post = _write_bilby_result(tmp_path)
+    kept, _ = load_run_dirs(spark, str(tmp_path), burn_frac=0.25)
     assert kept.filter("par = 'nmodel'").count() == 300
 
     cl = {
