@@ -10,6 +10,7 @@ kernels for the per-pulsar linear-algebra likelihood (§2.6 F10/F12).
 
 Layout:
     session     SparkSession factory (AQE, Arrow, UTC timezone)
+    worker_daemon  the Python worker daemon of get_spark sessions
     tables      testdata/parquet table loaders
     sources/    .tim/.par/json/chain text scans (SURVEY §2.1)
     operators/  relational operator library (SURVEY §2.2-2.5)
@@ -29,8 +30,20 @@ Layout:
 
 __version__ = "0.1.0"
 
-from enterprise_warp_spark.session import get_spark  # noqa: F401
-from enterprise_warp_spark.tables import load_tables, save_snapshot, write_bucketed  # noqa: F401
+
+def __getattr__(name):
+    """get_spark and the table helpers import pyspark, so they load on first
+    use: a get_spark session's Python workers run this file before their
+    daemon (worker_daemon) has set the path pyspark imports from."""
+    if name == "get_spark":
+        from enterprise_warp_spark.session import get_spark
+
+        return get_spark
+    if name in ("load_tables", "save_snapshot", "write_bucketed"):
+        from enterprise_warp_spark import tables
+
+        return getattr(tables, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def run_inference(*args, **kwargs):

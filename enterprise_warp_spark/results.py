@@ -205,13 +205,14 @@ def expand_orfs(spec: str) -> list[str]:
 
 
 def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
-                          noise_df, chains=None) -> dict:
+                          noise_df, chains=None, chain_pars=()) -> dict:
     """§3.3 from the CLI: rebuild the array's TOA setup from the paramfile
     (standalone-residual mode), positions from .par RAJ/DECJ, apply THIS
     run's noise summary, then run_os_pipeline per requested ORF. Results
     land as parquet under <outdir_all>/os_results/<orf>/ (K6). When the
     posterior chain is supplied and -N > 0, the noise-marginalised OS (A12)
-    runs over -N gamma draws from the chain (results.py:819-844)."""
+    runs over -N gamma draws from the chain (results.py:819-844);
+    chain_pars names the parameters the chain holds rows for."""
     from enterprise_warp_spark.analytics.optimal_statistic import run_os_pipeline
     from enterprise_warp_spark.run_paramfile import (
         _resolve,
@@ -258,11 +259,7 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
             draws_from_chain,
         )
 
-        gamma_pars = sorted(
-            r["par"]
-            for r in chains.select("par").distinct().collect()
-            if r["par"].endswith("_gamma")
-        )
+        gamma_pars = sorted({p for p in chain_pars if p.endswith("_gamma")})
         pick = [p for p in gamma_pars if "gw" in p] or gamma_pars
         if pick:
             draws = draws_from_chain(
@@ -342,12 +339,13 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     shared long-form chain frame."""
     from enterprise_warp_spark.analytics.chains import (
         credible_levels_by_par,
+        log_bayes_factors_from_chain,
         mode_positions_by_par,
+        noise_summary,
     )
     from enterprise_warp_spark.analytics.results_pipeline import (
         discover_run_dirs,
         load_run_dirs,
-        results_stages,
     )
     from enterprise_warp_spark.sinks import write_noise_json_files
 
@@ -374,10 +372,8 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         # results.py:427-470)
         par_label="_".join(opts.par) if opts.par else None,
     )
-    out = results_stages(kept)
-    chains = _filter_pars(
-        _filter_runs(out["chains_long"], opts.name), opts.par
-    ).persist()
+    # the stage frames are built only under the flags that read them
+    chains = _filter_pars(_filter_runs(kept, opts.name), opts.par).persist()
     # the runs and parameters `chains` holds rows for, known on the driver
     run_pars = {}
     for rid, pars in all_run_pars.items():
@@ -386,6 +382,7 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         if wanted and (opts.name == "all" or opts.name in rid):
             run_pars[rid] = wanted
     run_ids = sorted(run_pars)
+    chain_pars = sorted({p for ps in run_pars.values() for p in ps})
     results = {"outdir_all": outdir_all, "run_ids": run_ids}
 
     if opts.info:
@@ -411,11 +408,10 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
                     f"ess {info.get('ess', float('nan')):.1f}  "
                     f"waves {info.get('n_waves')}"
                 )
-        pars = {p for ps in run_pars.values() for p in ps}
-        print("Parameters:", " ".join(sorted(pars)))
+        print("Parameters:", " ".join(chain_pars))
 
     if opts.logbf:
-        log_bf = _filter_runs(out["log_bf"], opts.name)
+        log_bf = _filter_runs(log_bayes_factors_from_chain(kept), opts.name)
         for r in log_bf.collect():
             print(f"{r['run_id']}: log Bayes factor "
                   f"{r['model_b']} vs {r['model_a']} = {r['log_bf']:.4f}")
@@ -423,7 +419,7 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
 
     noise_dir = os.path.join(outdir_all, "noisefiles")
     if opts.noisefiles:
-        noise = _filter_runs(out["noise"], opts.name)
+        noise = _filter_runs(noise_summary(kept), opts.name)
         results["noisefiles"] = write_noise_json_files(noise, noise_dir)
         print(f"wrote {len(results['noisefiles'])} noise files -> {noise_dir}")
 
@@ -501,14 +497,14 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         paths = results.get("noisefiles")
         if not paths:
             paths = write_noise_json_files(
-                _filter_runs(out["noise"], opts.name), noise_dir
+                _filter_runs(noise_summary(kept), opts.name), noise_dir
             )
         noise_df = read_noise_files(spark, [str(p) for p in paths]).withColumn(
             "psr", F.regexp_extract("key", r"^(\d+_)?([JB][\d+-]+[AB]?)", 2)
         )
         results["os"] = run_optimal_statistic(
             spark, opts, params, opts.result, outdir_all, noise_df,
-            chains=chains,
+            chains=chains, chain_pars=chain_pars,
         )
         # K7 OS plots (plot_os_orf / plot_noisemarg_os)
         from enterprise_warp_spark import plotting
@@ -533,12 +529,12 @@ def render_plots(spark, opts, outdir_all: str, chains,
     """K7 — PNG plot sinks for the -c/-a/-H flags, reference filenames
     (results.py:634-636, 677-679, 697-699): per-run corner (one per nmodel
     value, over the burned chain), hist grid, and trace grid. Spark bins,
-    the driver rasterizes (see plotting.py module docstring). run_pars maps
-    each run_id in `chains` to the parameters it holds rows for."""
+    the driver rasterizes (see plotting.py module docstring). `chains` is
+    the long form load_run_dirs has already burned; run_pars maps each
+    run_id in it to the parameters it holds rows for."""
     from pyspark.sql import functions as F
 
     from enterprise_warp_spark import plotting
-    from enterprise_warp_spark.analytics.chains import burn_in
 
     truths = None
     if opts.truths:
@@ -556,11 +552,10 @@ def render_plots(spark, opts, outdir_all: str, chains,
                 ch, os.path.join(outdir_all, f"{rid}_samples_trace_.png")
             ))
         if opts.corner:
-            burned = burn_in(ch)
             pars = sorted(set(run_pars[rid]))
             if "nmodel" in pars:  # one corner per model (results.py:621-627)
                 models = sorted(
-                    r["m"] for r in burned.filter(F.col("par") == "nmodel")
+                    r["m"] for r in ch.filter(F.col("par") == "nmodel")
                     .select(F.round("value").alias("m")).distinct().collect()
                 )
             else:
@@ -569,7 +564,7 @@ def render_plots(spark, opts, outdir_all: str, chains,
                 tag = "" if jj is None else str(int(jj))
                 try:
                     p = plotting.make_corner_plot(
-                        burned, pars,
+                        ch, pars,
                         os.path.join(outdir_all, f"{rid}_corner_{tag}_.png"),
                         model=jj, truths=truths,
                     )

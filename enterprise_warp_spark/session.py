@@ -5,6 +5,13 @@ that matter on a 1000-executor cluster too: AQE (runtime re-planning + skew
 join + partition coalescing), Arrow for any pandas-UDF kernel, UTC session
 timezone so timestamp values hash identically across engines, and a shuffle
 partition count that AQE can coalesce downward.
+
+Its Python workers start through `worker_daemon`, not Spark's default
+`pyspark.daemon`: they import the installed pyspark rather than the copy in
+Spark's zip archives, so a task does not re-read those archives (see that
+module). The daemon conf is static: a session this factory does not create
+keeps Spark's daemon, and `tune_for_any_session` cannot change that. The
+package must be importable on the workers, as its kernels already need.
 """
 
 from __future__ import annotations
@@ -12,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from enterprise_warp_spark import worker_daemon
 
 
 def get_spark(
@@ -34,6 +43,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
