@@ -20,13 +20,15 @@ computed with the Woodbury identity so only a 2k x 2k system is solved:
 Execution shape: `groupBy('psr').applyInPandas` — one Arrow batch per
 pulsar; ALL parameter samples are evaluated vectorized inside the kernel
 (the per-sample work reuses the per-pulsar basis F), then A13 sums lnL over
-pulsars per sample. TOA data crosses the wire once regardless of how many
+pulsars per sample (`sum_over_pulsars` on the driver, `total_loglik` as a
+Spark aggregate). TOA data crosses the wire once regardless of how many
 samples are scored. At 100 TB / many pulsars this is embarrassingly parallel
-over the psr partition key with skew handled by AQE.
+over the psr partition key.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Iterable
 
@@ -38,6 +40,10 @@ from pyspark.sql import functions as F
 FYR = 1.0 / (365.25 * 86400.0)
 
 RESIDUAL_COLS = ("psr", "toa_s", "residual_s", "toa_err_s", "efac", "equad")
+
+# the kernel's TOA order: time, then frequency, then the TOA's line index
+# in its .tim file (`toa_idx`), where the residual frame carries them
+TOA_ORDER = ("toa_s", "freq_mhz", "toa_idx")
 
 
 def powerlaw_phi(f: np.ndarray, df: np.ndarray, log10_A: float, gamma: float) -> np.ndarray:
@@ -246,8 +252,17 @@ def gp_loglik_per_pulsar(
     components: tuple[RedComponent | DetComponent | TMComponent, ...] | None = None,
     sample_blocks: int = 1,
     sample_batch: bool = True,
+    psrs: list[str] | None = None,
 ) -> DataFrame:
     """Score every sample against every pulsar: -> (psr, sample_id, lnl).
+
+    psrs: the pulsars the residuals hold, when the caller knows them. The
+    kernel stage then runs min(len(psrs), default parallelism) tasks with
+    the pulsars dealt round-robin in sorted order, so an array's kernels
+    run in parallel; with one such task the residuals are coalesced into
+    it with no shuffle (meant for small driver-built frames such as the
+    CLI's). Without psrs the grouping exchange is the session's (adaptive
+    execution may pack every pulsar into one task).
 
     components may mix RedComponent (GP terms), DetComponent (F13
     deterministic terms with sampled coefficients, e.g. BayesEphem) and at
@@ -351,7 +366,11 @@ def gp_loglik_per_pulsar(
             if sample_blocks > 1
             else samp_all
         )
-        order = np.argsort(pdf["toa_s"].to_numpy())
+        # tied TOA times (sub-banded files repeat an MJD per frequency)
+        # keep a fixed order whatever order the shuffle delivered them in
+        order = np.lexsort(
+            [pdf[c].to_numpy() for c in TOA_ORDER[::-1] if c in pdf.columns]
+        )
         t = pdf["toa_s"].to_numpy()[order]
         r = pdf["residual_s"].to_numpy()[order]
         sig = pdf["toa_err_s"].to_numpy()[order]
@@ -712,9 +731,76 @@ def gp_loglik_per_pulsar(
             .groupBy("psr", "_block")
             .applyInPandas(kernel, "psr string, sample_id long, lnl double")
         )
+    if psrs:
+        return _by_pulsar_slot(residuals, sorted(set(psrs))).applyInPandas(
+            kernel, "psr string, sample_id long, lnl double"
+        )
     return residuals.groupBy("psr").applyInPandas(
         kernel, "psr string, sample_id long, lnl double"
     )
+
+
+def _by_pulsar_slot(residuals: DataFrame, psrs: list[str]):
+    """Group by pulsar with pulsar j in partition j mod k,
+    k = min(len(psrs), default parallelism). One partition needs no
+    shuffle. Otherwise an explicit partition count, which adaptive
+    execution never coalesces, on an int key whose Spark hash lands in
+    the wanted partition; grouping by (key, psr) reuses that partitioning."""
+    k = min(len(psrs), residuals.sparkSession.sparkContext.defaultParallelism)
+    if k == 1:
+        return residuals.coalesce(1).groupBy("psr")
+    keys = _partition_keys(k)
+    slot = F.create_map(*[
+        x for j, p in enumerate(psrs) for x in (F.lit(p), F.lit(keys[j % k]))
+    ])
+    return (
+        residuals.withColumn("_slot", slot[F.col("psr")])
+        .repartition(k, "_slot")
+        .groupBy("_slot", "psr")
+    )
+
+
+@functools.lru_cache(maxsize=64)
+def _partition_keys(k: int) -> tuple[int, ...]:
+    """keys[j]: the smallest int that `repartition(k, <int column>)` sends
+    to partition j — Spark partitions by pmod(murmur3_x86_32(v, 42), k)."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < k:
+        keys.setdefault(_murmur3_int(v) % k, v)
+        v += 1
+    return tuple(keys[j] for j in range(k))
+
+
+def _murmur3_int(v: int, seed: int = 42) -> int:
+    """Spark's Murmur3_x86_32.hashInt as a signed 32-bit int."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k1 = rotl((v & m) * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h1 = (rotl(seed ^ k1, 13) * 5 + 0xE6546B64) & m
+    h1 ^= 4
+    h1 = ((h1 ^ (h1 >> 16)) * 0x85EBCA6B) & m
+    h1 = ((h1 ^ (h1 >> 13)) * 0xC2B2AE35) & m
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 >= 1 << 31 else h1
+
+
+def sum_over_pulsars(per_pulsar: pd.DataFrame) -> pd.DataFrame:
+    """A13 on the driver: collected (psr, sample_id, lnl) rows ->
+    (sample_id, lnl) in sample_id order, each draw's pulsar scores summed
+    in psr order with math.fsum — the total does not depend on the order
+    the rows arrived in."""
+    rows = per_pulsar.sort_values(["sample_id", "psr"], kind="mergesort")
+    ids, starts = np.unique(rows["sample_id"].to_numpy(), return_index=True)
+    lnl = rows["lnl"].to_numpy(dtype=np.float64)
+    ends = [*starts[1:], len(lnl)]
+    return pd.DataFrame({
+        "sample_id": ids.astype(np.int64),
+        "lnl": [math.fsum(lnl[a:b]) for a, b in zip(starts, ends)],
+    })
 
 
 def gp_loglik_reduced(
@@ -780,7 +866,9 @@ def gp_loglik_reduced(
 
 def total_loglik(per_pulsar: DataFrame) -> DataFrame:
     """A13 — the PTA likelihood factorizes over pulsars given common params
-    (signal_base.PTA at enterprise_warp.py:542): sum lnL per sample."""
+    (signal_base.PTA at enterprise_warp.py:542): sum lnL per sample, as a
+    Spark aggregate (its sum order follows the shuffle; `sum_over_pulsars`
+    is the driver-side sum the inference paths use)."""
     return per_pulsar.groupBy("sample_id").agg(F.sum("lnl").alias("lnl"))
 
 

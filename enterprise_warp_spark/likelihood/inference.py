@@ -5,9 +5,9 @@ paramfile -> noise-model JSON -> per-pulsar signal terms -> PTA -> sequential
 sampler. Here the same config compiles to a sample-parallel plan:
 
     noise-model rows (plans/noisemodel) -> red-noise components + priors
-      -> samples table (likelihood/sampling, rand(seed) columns)
+      -> samples table (likelihood/sampling, numpy draws on the driver)
       -> GP kernel x pulsars (likelihood/gp, applyInPandas)
-      -> A13 sum -> importance-weighted posterior summary
+      -> A13 sum on the driver -> importance-weighted posterior summary
 
 Kernel-compiled signal families: any number of red-noise GP terms
 (spin_noise achromatic, dm_noise nu^-2, chromred nu^-idx; powerlaw /
@@ -26,19 +26,19 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from enterprise_warp_spark.likelihood.gp import (
     DetComponent,
     RedComponent,
     TMComponent,
     gp_loglik_per_pulsar,
-    total_loglik,
+    sum_over_pulsars,
 )
 from enterprise_warp_spark.likelihood.sampling import (
     Prior,
+    draw_priors,
     posterior_summary,
-    sample_priors,
+    sample_priors,  # noqa: F401  (public here too: callers resolve it here)
 )
 from enterprise_warp_spark.plans.registry import build_signal
 
@@ -178,26 +178,32 @@ def compile_model(
 
 # The sample-parallel design intentionally materializes the samples table
 # (n_samples x n_params) on the DRIVER: it ships whole into every
-# per-pulsar kernel invocation, so the bound scales with posterior draws
-# and model width — NEVER with TOA data volume. That makes it safe at
-# 100 TB of residuals, but it is still a real driver-memory contract, so
-# make it loud (VERDICT r7 #4) instead of letting a 10^9-cell request OOM.
+# per-pulsar kernel invocation, and the per-pulsar scores (n_samples x
+# n_pulsars rows) come back to be summed there. The bound scales with
+# posterior draws, model width and pulsar count — NEVER with TOA data
+# volume. That makes it safe at 100 TB of residuals, but it is still a real
+# driver-memory contract, so make it loud (VERDICT r7 #4) instead of letting
+# a 10^9-cell request OOM.
 MAX_DRIVER_SAMPLE_CELLS = 10_000_000
 
 
-def check_sample_table_bound(n_rows: int, n_cols: int, where: str) -> None:
-    """Refuse sample tables past MAX_DRIVER_SAMPLE_CELLS cells (~80 MB of
-    float64 — far below driver limits, far above any real sampling run).
+def check_sample_table_bound(
+    n_rows: int, n_cols: int, where: str, n_psr: int = 0
+) -> None:
+    """Refuse driver tables past MAX_DRIVER_SAMPLE_CELLS cells (~80 MB of
+    float64 — far below driver limits, far above any real sampling run):
+    the sample table (n_rows x n_cols) plus, with n_psr pulsars, their
+    collected scores (n_rows x n_psr rows of psr, sample_id, lnl).
     Escape hatch: score in chunks — split the draw range into k calls of
-    n_samples/k (seeded distinctly), run gp_loglik_per_pulsar/total_loglik
-    per chunk, and union the scored outputs; every downstream op
-    (posterior_summary, log_bayes_factors) is an aggregate over sample
-    rows, so chunk unions compose exactly."""
-    cells = n_rows * max(1, n_cols)
+    n_samples/k (seeded distinctly) and concatenate the scored tables;
+    every downstream op (posterior_summary, log_bayes_factors) is an
+    aggregate over sample rows, so chunk unions compose exactly."""
+    cells = n_rows * (max(1, n_cols) + 3 * n_psr)
     if cells > MAX_DRIVER_SAMPLE_CELLS:
         raise ValueError(
-            f"{where}: sample table would be {n_rows} draws x {n_cols} "
-            f"params = {cells} cells, past the driver-side bound "
+            f"{where}: {n_rows} draws x {n_cols} params"
+            + (f" scored against {n_psr} pulsars" if n_psr else "")
+            + f" = {cells} cells on the driver, past the bound "
             f"({MAX_DRIVER_SAMPLE_CELLS}). Score in chunks instead: split "
             "the draws into several smaller runs (distinct seeds) and "
             "union the scored sample tables — posterior aggregates "
@@ -215,23 +221,24 @@ def score_prior_draws(
     fixed: dict[str, float] | None = None,
     backends: list[str] | None = None,
     tm: TMComponent | None = None,
-) -> tuple[DataFrame, pd.DataFrame, list[str]]:
-    """-> (lnl, samples_pd, sampled_names): the lazy per-draw total log
-    likelihood (sample_id, lnl), the prior table it scores (drawn once,
-    collected to the driver for the kernel closure) and the names of the
-    non-constant parameters. Arguments as in run_inference.
-
-    The row order of lnl is the order its aggregate emits; a caller that
-    SIR-resamples by position must keep it (run_paramfile joins the draws
-    on the driver with a left-ordered merge)."""
+    psrs: list[str] | None = None,
+) -> tuple[pd.DataFrame, list[str]]:
+    """-> (scored, sampled_names): the prior table drawn on the driver
+    with its total log likelihood joined in — (sample_id, lnl, <params>)
+    in sample_id order — and the names of the non-constant parameters.
+    One kernel pass scores every draw against every pulsar; the driver
+    sums the collected per-pulsar scores. Arguments as in run_inference."""
     priors, comps = compile_priors_and_components(model_rows, fixed, nfreqs, backends)
     priors, comps = _wire_tm(priors, comps, tm, nfreqs)
-    check_sample_table_bound(n_samples, len(priors) + 1, "score_prior_draws")
-    samples_pd = sample_priors(spark, priors, n_samples, seed).toPandas()
-    lnl = total_loglik(
-        gp_loglik_per_pulsar(residuals, samples_pd, nfreqs, components=comps or None)
+    check_sample_table_bound(
+        n_samples, len(priors) + 1, "score_prior_draws", len(psrs or ())
     )
-    return lnl, samples_pd, [p.name for p in priors if p.kind != "constant"]
+    samples_pd = draw_priors(priors, n_samples, seed)
+    per_pulsar = gp_loglik_per_pulsar(
+        residuals, samples_pd, nfreqs, components=comps or None, psrs=psrs
+    ).toPandas()
+    scored = sum_over_pulsars(per_pulsar).merge(samples_pd, on="sample_id")
+    return scored, [p.name for p in priors if p.kind != "constant"]
 
 
 def run_inference(
@@ -244,26 +251,27 @@ def run_inference(
     fixed: dict[str, float] | None = None,
     backends: list[str] | None = None,
     tm: TMComponent | None = None,
+    psrs: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (samples_with_lnl, posterior_summary_row).
 
     residuals: (psr, toa_s, residual_s, toa_err_s, efac, equad
-    [, epoch_id][, freq_mhz][, backend][, band][, flags]). model_rows:
-    normalized noise-model rows; backends enables per-backend 'by_backend'
-    white noise. tm: the paramfile-level `tm:` choice
+    [, epoch_id][, freq_mhz][, toa_idx][, backend][, band][, flags]).
+    model_rows: normalized noise-model rows; backends enables per-backend
+    'by_backend' white noise. tm: the paramfile-level `tm:` choice
     (enterprise_warp.py:500-508) — a TMComponent whose specs come from
     functions.timingmodel.tm_spec_from_par_file; 'ridge' mode adds the
-    reference's Uniform(-20, -10) tm_log10_variance prior.
+    reference's Uniform(-20, -10) tm_log10_variance prior. psrs: the
+    pulsars residuals holds, when known (gp_loglik_per_pulsar).
 
-    The prior table is drawn once (score_prior_draws) and joins the scores
-    as a broadcast Arrow local relation. run_paramfile joins the same
-    table on the driver instead, which saves the broadcast's job.
+    The draws are scored by score_prior_draws, the same path the CLI
+    takes; both frames read one Arrow local relation of its table.
     """
-    lnl, samples_pd, sampled_names = score_prior_draws(
+    scored, sampled_names = score_prior_draws(
         spark, residuals, model_rows, n_samples, nfreqs, seed, fixed,
-        backends, tm,
+        backends, tm, psrs,
     )
-    joined = lnl.join(F.broadcast(spark.createDataFrame(samples_pd)), "sample_id")
+    joined = spark.createDataFrame(scored)
     return joined, posterior_summary(joined, sampled_names)
 
 
@@ -336,9 +344,10 @@ def run_adaptive_inference(
 
     def score(samples_df: DataFrame) -> DataFrame:
         pdf = samples_df.toPandas()
-        return total_loglik(
-            gp_loglik_per_pulsar(residuals, pdf, nfreqs, components=comps or None)
-        )
+        per_pulsar = gp_loglik_per_pulsar(
+            residuals, pdf, nfreqs, components=comps or None
+        ).toPandas()
+        return spark.createDataFrame(sum_over_pulsars(per_pulsar))
 
     return adaptive_posterior(
         spark, priors, score, rounds, n_per_round, seed,

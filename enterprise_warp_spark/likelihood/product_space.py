@@ -14,7 +14,7 @@ Spark-native equivalent: importance sampling over the same product space.
   1. compile every model section to (priors, kernel components)
      (likelihood/inference.compile_priors_and_components);
   2. sample the union parameter space + nmodel from the prior
-     (rand(seed) columns, sample-parallel);
+     (sampling.sample_priors: numpy draws on the driver);
   3. partition samples by round(nmodel) and score each slice with ITS
      model's GP kernel only (gp_loglik_per_pulsar) — like the reference,
      a sample never pays for the other models' likelihoods;
@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from enterprise_warp_spark.likelihood.gp import (
     RedComponent,
     gp_loglik_per_pulsar,
-    total_loglik,
+    sum_over_pulsars,
 )
 from enterprise_warp_spark.likelihood.inference import (
     check_sample_table_bound,
@@ -142,17 +142,19 @@ def hypermodel_sample(
             comps = (RedComponent(nfreqs=2),)
             slice_pd["log10_A"] = NULL_LOG10_A
             slice_pd["gamma"] = 2.0
-        lnl = total_loglik(
-            gp_loglik_per_pulsar(residuals, slice_pd, nfreqs, components=comps)
-        )
+        lnl = spark.createDataFrame(sum_over_pulsars(
+            gp_loglik_per_pulsar(
+                residuals, slice_pd, nfreqs, components=comps
+            ).toPandas()
+        ))
         scored_parts.append(lnl.withColumn("model", F.lit(i)))
     if not scored_parts:
         raise ValueError("no samples to score — n_samples must be positive")
     scored = scored_parts[0]
     for part in scored_parts[1:]:
         scored = scored.unionByName(part)
-    # lnl joined back to the sampled params DISTRIBUTEDLY on sample_id — the
-    # driver never holds the scored table (VERDICT r3 "What's wrong" #1)
+    # lnl (summed over pulsars on the driver) joined back to the sampled
+    # params on sample_id
     inf = float("inf")
     finite = (
         scored.join(samples_df.drop("_model"), "sample_id")

@@ -2,9 +2,12 @@
 
 Reference priors (enterprise_models.py:578-589 + bilby adapters
 bilby_warp.py:40-106): Uniform, LinearExponential (log-uniform amplitude),
-Normal, TruncatedNormal, Constant. Here each prior is a column expression
-over rand(seed) — deterministic, reproducible, and generated distributed
-(no driver-side RNG loops).
+Normal, TruncatedNormal, Constant. A prior table is drawn on the driver with
+numpy (`draw_priors`, one generator stream per parameter): it is at most a
+few thousand rows, every caller collects it anyway, and its values depend
+on the seed alone, not on the session's parallelism. The importance waves
+draw their proposals as column expressions over rand(seed) streams with a
+pinned partition count.
 
 Posterior estimation: importance weights w_i = exp(lnl_i - max lnl) over the
 prior sample; summaries (mean, credible intervals) are weighted aggregates.
@@ -14,8 +17,11 @@ number of likelihood evaluations is the same, but they all run at once.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,9 +37,9 @@ class Prior:
 
 
 # Acklam's inverse normal CDF — a piecewise rational approximation
-# (~1.15e-9 relative error), published algorithm; expressed as pure column
-# arithmetic so truncated-normal sampling stays JVM-side (no erfinv in
-# Spark SQL and no scipy in this environment).
+# (~1.15e-9 relative error), published algorithm (no erfinv in Spark SQL
+# and no scipy in this environment). `probit` spells it as column
+# arithmetic, `_probit_np` as the same operations over numpy arrays.
 _ACK_A = (-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
           1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00)
 _ACK_B = (-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
@@ -42,24 +48,26 @@ _ACK_C = (-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
           -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00)
 _ACK_D = (7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
           3.754408661907416e00)
+# clamp away the open-interval endpoints: a uniform draw can be exactly
+# 0.0 (and an infinite truncation bound maps it there), where
+# sqrt(-2*log(0)) = inf and the rational tail becomes inf/inf = NaN — one
+# poisoned sample row. 1e-15 keeps ~|z| <= 8, far outside any realistic
+# truncation window.
+_P_EPS = 1e-15
+_P_LOW = 0.02425
 
 
-def _poly(q: F.Column, coeffs) -> F.Column:
-    out = F.lit(float(coeffs[0]))
+def _poly(q, coeffs):
+    """Horner evaluation; q is a Column or a numpy array."""
+    out = coeffs[0] if isinstance(q, np.ndarray) else F.lit(float(coeffs[0]))
     for c in coeffs[1:]:
-        out = out * q + F.lit(float(c))
+        out = out * q + c
     return out
 
 
 def probit(p: F.Column) -> F.Column:
     """Inverse standard-normal CDF as a column expression (Acklam)."""
-    # clamp away the open-interval endpoints: F.rand() can return exactly
-    # 0.0 (and an infinite truncation bound maps it there), where
-    # sqrt(-2*log(0)) = inf and the rational tail becomes inf/inf = NaN —
-    # one poisoned sample row. 1e-15 keeps ~|z| <= 8, far outside any
-    # realistic truncation window.
-    p = F.greatest(F.least(p, F.lit(1.0 - 1e-15)), F.lit(1e-15))
-    p_low = 0.02425
+    p = F.greatest(F.least(p, F.lit(1.0 - _P_EPS)), F.lit(_P_EPS))
     q_c = p - 0.5
     r_c = q_c * q_c
     central = (_poly(r_c, _ACK_A) * q_c) / (_poly(r_c, _ACK_B) * r_c + F.lit(1.0))
@@ -68,45 +76,78 @@ def probit(p: F.Column) -> F.Column:
     q_u = F.sqrt(-2.0 * F.log(1.0 - p))
     upper = -_poly(q_u, _ACK_C) / (_poly(q_u, _ACK_D) * q_u + F.lit(1.0))
     return (
-        F.when(p < p_low, lower)
-        .when(p > 1.0 - p_low, upper)
+        F.when(p < _P_LOW, lower)
+        .when(p > 1.0 - _P_LOW, upper)
         .otherwise(central)
     )
 
 
-def _column(p: Prior, u: F.Column, g: F.Column) -> F.Column:
-    if p.kind == "uniform":
-        return u * (p.b - p.a) + p.a
-    if p.kind == "linearexp":  # log10-amplitude uniform in [a, b]
+def _probit_np(p: np.ndarray) -> np.ndarray:
+    """`probit` over a numpy array: the same clamp, branches and operation
+    order."""
+    p = np.maximum(np.minimum(p, 1.0 - _P_EPS), _P_EPS)
+    q_c = p - 0.5
+    r_c = q_c * q_c
+    central = (_poly(r_c, _ACK_A) * q_c) / (_poly(r_c, _ACK_B) * r_c + 1.0)
+    q_l = np.sqrt(-2.0 * np.log(p))
+    lower = _poly(q_l, _ACK_C) / (_poly(q_l, _ACK_D) * q_l + 1.0)
+    q_u = np.sqrt(-2.0 * np.log(1.0 - p))
+    upper = -_poly(q_u, _ACK_C) / (_poly(q_u, _ACK_D) * q_u + 1.0)
+    return np.where(p < _P_LOW, lower, np.where(p > 1.0 - _P_LOW, upper, central))
+
+
+def _trunc_cdf(p: Prior) -> tuple[float, float]:
+    """Standard-normal CDF of a truncnormal prior's bounds, (alpha, beta)
+    (bilby_warp.py:67-68 TruncatedGaussian); infinite bounds give 0 and 1."""
+
+    def cdf(x: float) -> float:
+        return (math.erf(((x - p.a) / p.b) / math.sqrt(2.0)) + 1.0) / 2.0
+
+    return (
+        cdf(p.lo) if math.isfinite(p.lo) else 0.0,
+        cdf(p.hi) if math.isfinite(p.hi) else 1.0,
+    )
+
+
+def _column(p: Prior, u, g, probit_fn=probit):
+    """One prior's draws from a uniform u and a standard normal g — Columns,
+    or numpy arrays with probit_fn=_probit_np."""
+    if p.kind in ("uniform", "linearexp"):  # linearexp: log10-amplitude
         return u * (p.b - p.a) + p.a
     if p.kind == "normal":
         return g * p.b + p.a
     if p.kind == "truncnormal":
-        # exact inverse-CDF sampling of N(a, b) truncated to [lo, hi]
-        # (bilby_warp.py:67-68 TruncatedGaussian): the bound CDFs are
-        # plain driver-side constants, only probit runs per row
-        import math as _math
-
-        alpha = ( _math.erf(((p.lo - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-            if _math.isfinite(p.lo) else 0.0
-        beta = (_math.erf(((p.hi - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-            if _math.isfinite(p.hi) else 1.0
-        return probit(u * (beta - alpha) + F.lit(alpha)) * p.b + p.a
+        # exact inverse-CDF sampling of N(a, b) truncated to [lo, hi]: the
+        # bound CDFs are driver-side constants, only probit runs per row
+        alpha, beta = _trunc_cdf(p)
+        return probit_fn(u * (beta - alpha) + alpha) * p.b + p.a
     if p.kind == "constant":
         return F.lit(p.a)
     raise ValueError(f"unknown prior kind {p.kind}")
 
 
+def draw_priors(priors: list[Prior], n: int, seed: int = 42) -> pd.DataFrame:
+    """(sample_id, <param columns>) drawn on the driver: parameter i reads
+    its own generator, np.random.default_rng([seed, i]) (the seed taken
+    modulo 2**64), so a table is a function of the priors, n and the seed
+    only."""
+    cols = {"sample_id": np.arange(n, dtype=np.int64)}
+    for i, p in enumerate(priors):
+        rng = np.random.default_rng([seed % 2**64, i])
+        if p.kind == "constant":
+            cols[p.name] = np.full(n, float(p.a))
+        elif p.kind == "normal":
+            cols[p.name] = _column(p, None, rng.standard_normal(n))
+        else:
+            cols[p.name] = _column(p, rng.random(n), None, _probit_np)
+    return pd.DataFrame(cols)
+
+
 def sample_priors(
     spark: SparkSession, priors: list[Prior], n: int, seed: int = 42
 ) -> DataFrame:
-    """(sample_id, <param columns>) — one rand/randn stream per parameter,
-    all in one projection (a withColumn per parameter re-analyses the
-    growing plan each time)."""
-    return spark.range(n).select(F.col("id").alias("sample_id"), *[
-        _column(p, F.rand(seed + 1000 * i), F.randn(seed + 1000 * i)).alias(p.name)
-        for i, p in enumerate(priors)
-    ])
+    """`draw_priors` as a DataFrame over one Arrow local relation."""
+    return spark.createDataFrame(draw_priors(priors, n, seed))
 
 
 def posterior_summary(
@@ -240,10 +281,7 @@ def _log_prior_density(priors: list[Prior], of=F.col) -> F.Column:
                 -_math.log(p.b) - 0.5 * _math.log(2.0 * _math.pi)
             )
             if p.kind == "truncnormal":
-                alpha = (_math.erf(((p.lo - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-                    if _math.isfinite(p.lo) else 0.0
-                beta = (_math.erf(((p.hi - p.a) / p.b) / _math.sqrt(2.0)) + 1.0) / 2.0 \
-                    if _math.isfinite(p.hi) else 1.0
+                alpha, beta = _trunc_cdf(p)
                 total = total + F.lit(-_math.log(max(beta - alpha, 1e-300)))
                 ok = ok & (x >= p.lo) & (x <= p.hi)
         else:
@@ -421,8 +459,7 @@ def importance_posterior(
             lw > _LOG_ZERO / 2
         )
         if fin.any():
-            w_all = _np.exp(lw[fin] - lw[fin].max())
-            ess_now = float(w_all.sum() ** 2 / (w_all**2).sum())
+            ess_now = effective_sample_size(_np.exp(lw[fin] - lw[fin].max()))
         else:
             ess_now = 0.0
         ess_per_wave.append(round(ess_now, 2))
@@ -467,7 +504,15 @@ def importance_posterior(
     return spark.createDataFrame(pooled)
 
 
-def log_evidence(pooled: DataFrame, logw_col: str = "logw") -> float:
+def effective_sample_size(w: np.ndarray) -> float:
+    """Kish ESS of importance weights, (sum w)^2 / sum w^2: 1 when one
+    draw carries all the weight, len(w) when the weights are equal."""
+    return float(w.sum() ** 2 / (w**2).sum())
+
+
+def log_evidence(
+    pooled: DataFrame | pd.DataFrame, logw_col: str = "logw"
+) -> float:
     """Marginal-likelihood (Bayesian evidence) estimate from an
     importance_posterior table: since logw = ln L + ln pi - ln q for
     samples drawn from q, E_q[exp(logw)] = integral of L * pi = Z, so
@@ -478,14 +523,18 @@ def log_evidence(pooled: DataFrame, logw_col: str = "logw") -> float:
     factors between separately-run models are differences of this value.
 
     Driver cost: one logsumexp over the sample table's weight column (the
-    same MAX_ADAPTIVE_N_PER_ROUND-bounded table every summary reads)."""
+    same MAX_ADAPTIVE_N_PER_ROUND-bounded table every summary reads). A
+    table already collected to pandas is read without a Spark job."""
     import math as _math
 
     import numpy as _np
 
-    lw = _np.array(
-        [r[0] for r in pooled.select(logw_col).collect()], dtype=float
-    )
+    if isinstance(pooled, pd.DataFrame):
+        lw = pooled[logw_col].to_numpy(dtype=float)
+    else:
+        lw = _np.array(
+            [r[0] for r in pooled.select(logw_col).collect()], dtype=float
+        )
     n = len(lw)
     lw = lw[_np.isfinite(lw) & (lw > _LOG_ZERO / 2)]
     if not len(lw):

@@ -204,6 +204,21 @@ def expand_orfs(spec: str) -> list[str]:
     return orfs
 
 
+# run-dir diagnostics `results -i` lists: (file prefix, one-line format)
+_INFO_FILES = (
+    ("adaptive", lambda info: (
+        f"log_evidence {info.get('log_evidence', float('nan')):.4f}  "
+        f"ess {info.get('ess', float('nan')):.1f}  "
+        f"waves {info.get('n_waves')}"
+    )),
+    ("sampler", lambda info: (
+        f"ess {info.get('ess', float('nan')):.1f}  "
+        f"distinct rows {info.get('distinct_rows')} "
+        f"of {info.get('n_draws')} draws"
+    )),
+)
+
+
 def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
                           noise_df, chains=None, chain_pars=()) -> dict:
     """§3.3 from the CLI: rebuild the array's TOA setup from the paramfile
@@ -216,7 +231,7 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
     from enterprise_warp_spark.analytics.optimal_statistic import run_os_pipeline
     from enterprise_warp_spark.run_paramfile import (
         _resolve,
-        build_standalone_residuals,
+        build_array_residuals,
         paired_data_files,
         psr_position,
     )
@@ -237,12 +252,7 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
 
     peps = [_par_value(par, "PEPOCH", 0.0) for _, par, _ in pairs]
     common_mjd0 = next((v for v in peps if v), 50000.0)
-    res = None
-    for psr, par, tim in pairs:
-        df, _, _ = build_standalone_residuals(
-            spark, psr, par, tim, mjd0=common_mjd0
-        )
-        res = df if res is None else res.unionByName(df)
+    res_pd, res, _, _ = build_array_residuals(spark, pairs, mjd0=common_mjd0)
     # through Arrow, a local relation: no Python task on any ORF pass
     positions = spark.createDataFrame(
         pd.DataFrame({"psr": [psr for psr, _, _ in pairs],
@@ -251,8 +261,7 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
     )
     import pyspark.sql.functions as F
 
-    b = res.agg(F.max("toa_s").alias("hi"), F.min("toa_s").alias("lo")).first()
-    tspan = float(b["hi"] - b["lo"])
+    tspan = float(res_pd["toa_s"].max() - res_pd["toa_s"].min())
     draws = None
     if chains is not None and opts.optimal_statistic_nsamples > 0:
         from enterprise_warp_spark.analytics.optimal_statistic import (
@@ -388,26 +397,24 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     if opts.info:
         for rid in run_ids:
             print("Processing", rid)
-            # adaptive run dirs carry evidence + ESS diagnostics
-            # (run_paramfile adaptive_info.json, r14) — surface them in
-            # the info listing so posterior quality is visible at a glance
-            p = os.path.join(outdir_all, rid, "adaptive_info.json")
-            if os.path.isfile(p):
+            # run_paramfile writes the posterior-quality diagnostics next
+            # to the chain (adaptive_info.json: evidence, ESS, waves;
+            # sampler_info.json: the default path's ESS and distinct rows)
+            # — surface them so posterior quality is visible at a glance
+            for kind, fmt in _INFO_FILES:
+                p = os.path.join(outdir_all, rid, f"{kind}_info.json")
+                if not os.path.isfile(p):
+                    continue
                 try:
                     with open(p) as fh:
                         info = json.load(fh)
                 except (json.JSONDecodeError, OSError) as exc:
                     # one truncated file (run killed mid-dump) must not
                     # abort the listing for every other run
-                    print(f"  adaptive: unreadable ({exc})")
+                    print(f"  {kind}: unreadable ({exc})")
                     continue
-                results.setdefault("adaptive_info", {})[rid] = info
-                print(
-                    f"  adaptive: log_evidence "
-                    f"{info.get('log_evidence', float('nan')):.4f}  "
-                    f"ess {info.get('ess', float('nan')):.1f}  "
-                    f"waves {info.get('n_waves')}"
-                )
+                results.setdefault(f"{kind}_info", {})[rid] = info
+                print(f"  {kind}: " + fmt(info))
         print("Parameters:", " ".join(chain_pars))
 
     if opts.logbf:

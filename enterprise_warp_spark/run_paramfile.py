@@ -17,9 +17,10 @@ Spark shape: a thin argparse wrapper over `plans.parse_paramfile` +
 driver (KB-scale config), prior-sample scoring runs distributed through the
 `applyInPandas` GP kernel, and the posterior chain is produced by
 importance resampling (SIR) of the scored prior draws. The one Python task
-per pulsar is the GP kernel: residual frames are Arrow-built local
-relations and the prior table joins the scores on the driver
-(docs/paramfile.md, "Spark shape").
+per pulsar is the GP kernel: every `.tim` is read in one scan, the
+residual frame is an Arrow-built local relation, and the prior draws and
+the sum over pulsars are driver-side numpy (docs/paramfile.md, "Spark
+shape").
 
 Standalone-residual mode: this container has no tempo2, so the phase-
 connected residuals the reference gets from libstempo are not computable
@@ -44,6 +45,7 @@ import zlib
 import numpy as np
 import pandas as pd
 
+from enterprise_warp_spark.likelihood.sampling import effective_sample_size
 from enterprise_warp_spark.plans import Params, parse_paramfile
 
 DAY_S = 86400.0
@@ -193,6 +195,13 @@ def psr_position(par_path: str) -> list[float]:
     return _hms_dms_to_unit(raj, decj)
 
 
+RESIDUAL_SCHEMA = (
+    "psr string, toa_s double, residual_s double, toa_err_s double, "
+    "efac double, equad double, freq_mhz double, toa_idx long, "
+    "backend string, flags map<string,string>"
+)
+
+
 def build_standalone_residuals(
     spark, psr: str, par_path: str, tim_path: str, noise: dict | None = None,
     nfreqs: int = 8, seed: int | None = None, mjd0: float | None = None,
@@ -205,17 +214,50 @@ def build_standalone_residuals(
     unit (libstempo materializes each pulsar fully); the numpy injection
     here is per-pulsar-bounded driver work at CLI-config scale. The frame
     is one pandas table handed to Arrow, so Spark holds it as a local
-    relation (`LocalTableScan`) and reads it without a Python task. The
-    callers (`run_from_paramfile` for array runs, the OS CLI) union the
-    per-pulsar frames.
+    relation (`LocalTableScan`) and reads it without a Python task. Array
+    callers (`run_from_paramfile`, the OS CLI) build every pulsar's frame
+    into one such relation with `build_array_residuals`.
     """
+    from enterprise_warp_spark.sources.tim import read_tim_tables
+
+    (toas,) = read_tim_tables(spark, [tim_path]).values()
+    pdf, spec, backends = _standalone_frame(
+        psr, par_path, toas, noise, nfreqs, seed, mjd0
+    )
+    return spark.createDataFrame(pdf, RESIDUAL_SCHEMA), spec, backends
+
+
+def build_array_residuals(spark, selected, noise_docs=None, mjd0=None):
+    """Standalone residuals of several pulsars from one `.tim` scan.
+    selected: (psr, par, tim) triples; noise_docs: {psr: noise dict}.
+    -> (residuals pandas, residuals DF over one Arrow local relation,
+    {psr: TMSpec}, sorted backends)."""
+    from enterprise_warp_spark.sources.tim import read_tim_tables
+
+    noise_docs = noise_docs or {}
+    toas = read_tim_tables(spark, [tim for _, _, tim in selected])
+    frames, specs, backends = [], {}, set()
+    for psr, par, tim in selected:
+        pdf, specs[psr], bks = _standalone_frame(
+            psr, par, toas[os.path.basename(tim)[: -len(".tim")]],
+            noise_docs.get(psr), mjd0=mjd0,
+        )
+        frames.append(pdf)
+        backends.update(bks)
+    pdf = pd.concat(frames, ignore_index=True)
+    return (pdf, spark.createDataFrame(pdf, RESIDUAL_SCHEMA), specs,
+            sorted(backends))
+
+
+def _standalone_frame(psr, par_path, toas, noise=None, nfreqs=8, seed=None,
+                      mjd0=None):
+    """One pulsar's residual rows (pandas, RESIDUAL_SCHEMA) from its
+    collected TOA table -> (frame, TMSpec, sorted backends)."""
     from enterprise_warp_spark.functions.timingmodel import tm_spec_from_par_file
     from enterprise_warp_spark.likelihood.gp import powerlaw_phi
-    from enterprise_warp_spark.sources.tim import read_tim
 
     noise = noise or {}
     seed = zlib.crc32(psr.encode()) if seed is None else seed
-    toas = read_tim(spark, tim_path).toPandas()
     # mjd0 overrides the time origin — array-level callers (the OS CLI)
     # must put EVERY pulsar on one origin or the shared GW Fourier basis
     # phases misalign across pulsars (the TM projector subspace is
@@ -232,7 +274,6 @@ def build_standalone_residuals(
         [m.get("group") or m.get("f") or obs or "default"
          for m, obs in zip(flag_dicts, toas["obs"])]
     )
-    backends = sorted(set(backend))
 
     rng = np.random.default_rng(seed)
     efac = np.array([noise.get(f"{psr}_{b}_efac", 1.0) for b in backend])
@@ -257,16 +298,11 @@ def build_standalone_residuals(
 
     pdf = pd.DataFrame({
         "psr": psr, "toa_s": t, "residual_s": r, "toa_err_s": sig,
-        "efac": 1.0, "equad": 0.0, "freq_mhz": freq, "backend": backend,
-        "flags": flag_dicts,
+        "efac": 1.0, "equad": 0.0, "freq_mhz": freq,
+        "toa_idx": toas["toa_idx"].to_numpy(dtype=np.int64),
+        "backend": backend, "flags": flag_dicts,
     })
-    res = spark.createDataFrame(
-        pdf,
-        "psr string, toa_s double, residual_s double, toa_err_s double, "
-        "efac double, equad double, freq_mhz double, backend string, "
-        "flags map<string,string>",
-    )
-    return res, spec, backends
+    return pdf, spec, sorted(set(backend))
 
 
 # ------------------------------------------------------------ run logic
@@ -294,9 +330,10 @@ def reference_par_name(psr: str, kernel_name: str) -> str:
 
 def _sir_resample(samples_pd, lnl_col: str, n_out: int, seed: int):
     """Importance (SIR) resample weighted draws -> unweighted posterior
-    rows. lnl_col is the LOG-WEIGHT: 'lnl' for prior draws (proposal =
-    prior), 'logw' for importance_posterior tables. Non-finite weights
-    (out-of-support defensive draws) are dropped before resampling."""
+    rows -> (chain, ESS of the weights). lnl_col is the LOG-WEIGHT: 'lnl'
+    for prior draws (proposal = prior), 'logw' for importance_posterior
+    tables. Non-finite weights (out-of-support defensive draws) are dropped
+    before resampling."""
     lnl = samples_pd[lnl_col].to_numpy(dtype=np.float64)
     finite = np.isfinite(lnl) & (lnl > -1e29)
     if not finite.any():
@@ -310,7 +347,7 @@ def _sir_resample(samples_pd, lnl_col: str, n_out: int, seed: int):
     w = w / w.sum()
     rng = np.random.default_rng(seed)
     idx = rng.choice(len(samples_pd), size=n_out, replace=True, p=w)
-    return samples_pd.iloc[idx].reset_index(drop=True)
+    return samples_pd.iloc[idx].reset_index(drop=True), effective_sample_size(w)
 
 
 def write_chain_dir(samples_pd, par_names: list[str], out_dir: str) -> None:
@@ -387,16 +424,9 @@ def run_from_paramfile(
     if len(selected) > 1:
         peps = [_par_value(par, "PEPOCH", 0.0) for _, par, _ in selected]
         common_mjd0 = next((v for v in peps if v), 50000.0)
-    res = None
-    specs: dict[str, tuple] = {}
-    backends: set[str] = set()
-    for psr, par, tim in selected:
-        df, spec, bks = build_standalone_residuals(
-            spark, psr, par, tim, noise=noise_docs.get(psr), mjd0=common_mjd0
-        )
-        specs[psr] = spec
-        backends.update(bks)
-        res = df if res is None else res.unionByName(df)
+    _, res, specs, bk = build_array_residuals(
+        spark, selected, noise_docs, common_mjd0
+    )
 
     # fixed white-noise constants from noise files (P10)
     fixed: dict[str, float] = {}
@@ -450,7 +480,6 @@ def run_from_paramfile(
     if wipe_old_output and os.path.isdir(out_dir):
         shutil.rmtree(out_dir)
 
-    bk = sorted(backends)
     # sampler: adaptive -> the CEM + tempered-importance posterior
     # (likelihood/sampling.py importance_posterior); any reference sampler
     # label (ptmcmcsampler/dynesty/...) takes the default one-round
@@ -488,16 +517,13 @@ def run_from_paramfile(
             pdf = joined.toPandas()
             w_col = "logw"
         else:
-            lnl, samples_pd, sampled = score_prior_draws(
+            # the draws with their scores, in sample_id order (the SIR
+            # resample picks rows by position)
+            pdf, sampled = score_prior_draws(
                 spark, res, models[min(models)], n_samples=n_samples,
                 seed=seed, fixed=fixed or None, backends=bk, tm=tm,
+                psrs=[psr for psr, _, _ in selected],
             )
-            # join the draws on the driver; a left merge keeps the
-            # aggregate's row order, which the SIR resample indexes by.
-            # run_inference's lazy Spark join of the same table costs one
-            # broadcast job more and was 0.41 s slower per op in the
-            # median (docs/paramfile.md, "Spark shape")
-            pdf = lnl.toPandas().merge(samples_pd, on="sample_id", how="left")
             summary = posterior_summary(spark.createDataFrame(pdf), sampled)
             w_col = "lnl"
         par_names = [
@@ -505,7 +531,7 @@ def run_from_paramfile(
             if c not in ("sample_id", "lnl", "logw", "wave")
             and pdf[c].nunique() > 1
         ]
-        chain = _sir_resample(pdf, w_col, min(2000, 4 * len(pdf)), seed)
+        chain, ess = _sir_resample(pdf, w_col, min(2000, 4 * len(pdf)), seed)
         if not array_run:
             rename = {k: reference_par_name(psr0, k) for k in par_names}
             chain = chain.rename(columns=rename)
@@ -513,14 +539,22 @@ def run_from_paramfile(
         write_chain_dir(chain, par_names, out_dir)
         out = {"output_dir": out_dir, "pars": par_names, "chain": chain,
                "summary": summary, "job_config": job_config}
-        if w_col == "logw":
+        if w_col == "lnl":
+            # the default path's posterior quality: the SIR weights' ESS
+            # and how many distinct draws the chain holds
+            out["ess"] = ess
+            info = {"ess": ess, "n_draws": len(pdf),
+                    "distinct_rows": int(chain["sample_id"].nunique())}
+            with open(os.path.join(out_dir, "sampler_info.json"), "w") as fh:
+                json.dump(info, fh, sort_keys=True, indent=2)
+        else:
             # the adaptive path's weights carry the marginal likelihood
             # for free (the reference reads evidence off dynesty results)
             from enterprise_warp_spark.likelihood.sampling import (
                 log_evidence,
             )
 
-            out["log_evidence"] = log_evidence(joined)
+            out["log_evidence"] = log_evidence(pdf)
             # adaptive run-dir JSON (r13 verdict #6): evidence + the
             # ESS/wave diagnostics land next to the chain so a user (and
             # the results CLI) can judge posterior quality without

@@ -56,6 +56,24 @@ def read_tim(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     )
 
 
+def read_tim_tables(spark: SparkSession, paths: list[str]) -> dict:
+    """Every .tim file in one scan, collected once -> {file stem: pandas
+    `toas` table}. Each table keeps its file's line order and adds
+    `toa_idx`, the TOA's index in that order (a tie-breaker for TOAs that
+    share a time). The collect returns the scan's partitions in order and
+    a file's splits in offset order, so a stable split by psr keeps it."""
+    from urllib.parse import unquote
+
+    toas = read_tim(spark, paths).toPandas()
+    out = {}
+    for psr, rows in toas.groupby("psr", sort=False):
+        rows = rows.reset_index(drop=True)
+        rows["toa_idx"] = rows.index.astype("int64")
+        # input_file_name() is a URI: a space in the name arrives as %20
+        out[unquote(psr)] = rows
+    return out
+
+
 def toas_with_seconds(toas: DataFrame, mjd_epoch: int = 0) -> DataFrame:
     """Add exact second-scale arithmetic columns without double precision loss:
     split MJD into integer day + fractional-day DOUBLE (SURVEY §4.2)."""

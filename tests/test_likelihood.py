@@ -95,6 +95,96 @@ def test_spark_kernel_matches_local(spark, residuals_df):
     )
 
 
+def test_psrs_deals_pulsars_one_per_kernel_task(spark, residuals_df):
+    """With psrs given, the kernel exchange has one partition per pulsar
+    (up to the width) and the scores equal the unsized grouping's."""
+    samples = pd.DataFrame(
+        {"sample_id": [0, 1], "log10_A": [-13.0, -14.0], "gamma": [4.0, 3.0]}
+    )
+    want = gp_loglik_per_pulsar(residuals_df, samples, nfreqs=12).toPandas()
+    sized = gp_loglik_per_pulsar(
+        residuals_df, samples, nfreqs=12, psrs=["J0002-0002", "J0001+0001"]
+    )
+    got = sized.withColumn("part", F.spark_partition_id()).toPandas()
+    assert got.groupby("psr")["part"].nunique().eq(1).all()
+    assert got["part"].nunique() == 2
+    key = ["psr", "sample_id"]
+    pd.testing.assert_frame_equal(
+        got.drop(columns="part").sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+    )
+
+
+@pytest.mark.parametrize("k", [2, 3, 4, 8, 32])
+def test_partition_keys_land_in_their_partition(spark, k):
+    """Spark's hash partitioning sends partition key j to partition j, and
+    the driver's murmur3 of each key equals Spark's hash()."""
+    from enterprise_warp_spark.likelihood.gp import _murmur3_int, _partition_keys
+
+    keys = _partition_keys(k)
+    df = spark.createDataFrame(
+        pd.DataFrame({"key": np.array(keys, dtype=np.int32), "j": range(k)})
+    )
+    got = df.repartition(k, "key").select(
+        "j", F.spark_partition_id().alias("part"), F.hash("key").alias("h")
+    ).toPandas()
+    assert (got["j"] == got["part"]).all()
+    assert all(_murmur3_int(keys[j]) == h for j, h in zip(got["j"], got["h"]))
+
+
+def test_tied_toa_times_score_the_same_in_any_row_order(spark):
+    """Sub-banded TOAs share a time at two frequencies: the kernel sorts
+    by (time, frequency, line index), so the same rows delivered in
+    reverse order score bit-equal lnl."""
+    from enterprise_warp_spark.likelihood.gp import RedComponent
+
+    rng = np.random.default_rng(11)
+    t, r, sig = _make_pulsar(rng, n=120)
+    n = len(t)
+    pdf = pd.DataFrame({
+        "psr": "J0003+0003",
+        "toa_s": np.repeat(t, 2),
+        "residual_s": np.repeat(r, 2) + rng.normal(0, 1e-7, 2 * n),
+        "toa_err_s": np.repeat(sig, 2) * rng.uniform(0.8, 1.2, 2 * n),
+        "efac": 1.0, "equad": 0.0,
+        "freq_mhz": np.tile([1400.0, 3100.0], n),
+        "toa_idx": np.arange(2 * n, dtype=np.int64),
+    })
+    samples = pd.DataFrame(
+        {"sample_id": [0, 1, 2], "dm_noise_log10_A": [-13.0, -14.0, -12.5],
+         "dm_noise_gamma": [4.0, 3.0, 2.0]}
+    )
+    comps = (RedComponent(name="dm_noise", chrom_idx=2.0, nfreqs=10),)
+
+    def score(frame):
+        df = spark.createDataFrame(frame).coalesce(1)
+        return gp_loglik_per_pulsar(df, samples, components=comps).toPandas()
+
+    fwd = score(pdf)
+    rev = score(pdf.iloc[::-1].reset_index(drop=True))
+    assert fwd["lnl"].tolist() == rev["lnl"].tolist()
+    assert np.isfinite(fwd["lnl"]).all()
+
+
+def test_sum_over_pulsars_is_order_free():
+    """The driver-side A13 sum: per draw, in sample_id order, the same
+    bits whatever order the per-pulsar rows arrive in."""
+    from enterprise_warp_spark.likelihood.gp import sum_over_pulsars
+
+    rng = np.random.default_rng(3)
+    rows = pd.DataFrame({
+        "psr": np.repeat([f"J{i:04d}" for i in range(7)], 50),
+        "sample_id": np.tile(np.arange(50), 7),
+        "lnl": rng.normal(0, 1e6, 350),
+    })
+    got = sum_over_pulsars(rows)
+    assert got["sample_id"].tolist() == list(range(50))
+    for sid in (0, 17, 49):
+        assert got["lnl"][sid] == math.fsum(rows.loc[rows.sample_id == sid, "lnl"])
+    shuffled = rows.sample(frac=1.0, random_state=9)
+    assert sum_over_pulsars(shuffled).equals(got)
+
+
 def test_inject_recover_grid(spark, residuals_df):
     """Posterior over a (log10_A, gamma) grid must peak near the injection
     (log10_A=-13, gamma=4) — SURVEY §5.2.4 round-trip validation."""
