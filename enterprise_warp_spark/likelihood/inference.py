@@ -251,7 +251,6 @@ def run_inference(
     fixed: dict[str, float] | None = None,
     backends: list[str] | None = None,
     tm: TMComponent | None = None,
-    psrs: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (samples_with_lnl, posterior_summary_row).
 
@@ -261,15 +260,14 @@ def run_inference(
     'by_backend' white noise. tm: the paramfile-level `tm:` choice
     (enterprise_warp.py:500-508) — a TMComponent whose specs come from
     functions.timingmodel.tm_spec_from_par_file; 'ridge' mode adds the
-    reference's Uniform(-20, -10) tm_log10_variance prior. psrs: the
-    pulsars residuals holds, when known (gp_loglik_per_pulsar).
+    reference's Uniform(-20, -10) tm_log10_variance prior.
 
     The draws are scored by score_prior_draws, the same path the CLI
     takes; both frames read one Arrow local relation of its table.
     """
     scored, sampled_names = score_prior_draws(
         spark, residuals, model_rows, n_samples, nfreqs, seed, fixed,
-        backends, tm, psrs,
+        backends, tm,
     )
     joined = spark.createDataFrame(scored)
     return joined, posterior_summary(joined, sampled_names)

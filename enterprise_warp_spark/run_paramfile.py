@@ -220,7 +220,7 @@ def build_standalone_residuals(
     """
     from enterprise_warp_spark.sources.tim import read_tim_tables
 
-    (toas,) = read_tim_tables(spark, [tim_path]).values()
+    toas = read_tim_tables(spark, [tim_path])[os.path.basename(tim_path)]
     pdf, spec, backends = _standalone_frame(
         psr, par_path, toas, noise, nfreqs, seed, mjd0
     )
@@ -239,7 +239,7 @@ def build_array_residuals(spark, selected, noise_docs=None, mjd0=None):
     frames, specs, backends = [], {}, set()
     for psr, par, tim in selected:
         pdf, specs[psr], bks = _standalone_frame(
-            psr, par, toas[os.path.basename(tim)[: -len(".tim")]],
+            psr, par, toas[os.path.basename(tim)],
             noise_docs.get(psr), mjd0=mjd0,
         )
         frames.append(pdf)

@@ -57,20 +57,26 @@ def read_tim(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 
 
 def read_tim_tables(spark: SparkSession, paths: list[str]) -> dict:
-    """Every .tim file in one scan, collected once -> {file stem: pandas
-    `toas` table}. Each table keeps its file's line order and adds
-    `toa_idx`, the TOA's index in that order (a tie-breaker for TOAs that
-    share a time). The collect returns the scan's partitions in order and
-    a file's splits in offset order, so a stable split by psr keeps it."""
+    """Every .tim file in one scan, collected once -> {file name: pandas
+    `toas` table}, one entry per path (no rows for a file with no TOA).
+    Each table keeps its file's line order and adds `toa_idx`, the TOA's
+    index in that order (a tie-breaker for TOAs that share a time). The
+    collect returns the scan's partitions in order and a file's splits in
+    offset order, so a stable split by file keeps it."""
+    import os
     from urllib.parse import unquote
 
-    toas = read_tim(spark, paths).toPandas()
-    out = {}
-    for psr, rows in toas.groupby("psr", sort=False):
-        rows = rows.reset_index(drop=True)
-        rows["toa_idx"] = rows.index.astype("int64")
-        # input_file_name() is a URI: a space in the name arrives as %20
-        out[unquote(psr)] = rows
+    toas = (
+        read_tim(spark, paths)
+        .withColumn("_file", F.regexp_extract(F.input_file_name(), "[^/]*$", 0))
+        .toPandas()
+    )
+    toas["toa_idx"] = toas.groupby("_file", sort=False).cumcount().astype("int64")
+    # input_file_name() is a URI: a space in the name arrives as %20
+    files = toas.pop("_file").map(unquote)
+    out = {os.path.basename(p): toas.iloc[:0] for p in paths}
+    for name, rows in toas.groupby(files, sort=False):
+        out[name] = rows.reset_index(drop=True)
     return out
 
 

@@ -107,7 +107,7 @@ def test_psrs_deals_pulsars_one_per_kernel_task(spark, residuals_df):
     )
     got = sized.withColumn("part", F.spark_partition_id()).toPandas()
     assert got.groupby("psr")["part"].nunique().eq(1).all()
-    assert got["part"].nunique() == 2
+    assert got["part"].nunique() == min(2, spark.sparkContext.defaultParallelism)
     key = ["psr", "sample_id"]
     pd.testing.assert_frame_equal(
         got.drop(columns="part").sort_values(key).reset_index(drop=True),

@@ -76,6 +76,29 @@ def test_tspan_per_selection(toas):
     assert any(r["tspan"] < glob["tspan"] for r in per)
 
 
+def test_read_tim_tables_keys_each_file_by_its_name(spark, tmp_path):
+    """One scan over several files: each path maps to its own table in
+    line order with `toa_idx`, whatever the directory is called, and a
+    file with no active TOA maps to an empty table."""
+    from enterprise_warp_spark.sources.tim import read_tim_tables
+
+    d = tmp_path / "obs.timing dir"
+    d.mkdir()
+    (d / "J1.tim").write_text(
+        "FORMAT 1\n J1 1400.0 55000.2 1.0 ao -be A\n"
+        "C 1400.0 55000.0 1.0 ao\n J1 800.0 55000.1 1.0 ao\n"
+    )
+    (d / "J2.tim").write_text(" J2 1400.0 56000.5 2.0 gbt\n")
+    (d / "J3.tim").write_text("FORMAT 1\n")
+    got = read_tim_tables(spark, [str(d / f"J{i}.tim") for i in (1, 2, 3)])
+    assert sorted(got) == ["J1.tim", "J2.tim", "J3.tim"]
+    assert got["J1.tim"]["toa_mjd_str"].tolist() == ["55000.2", "55000.1"]
+    assert got["J1.tim"]["toa_idx"].tolist() == [0, 1]
+    assert got["J2.tim"]["freq_mhz"].tolist() == [1400.0]
+    assert got["J2.tim"]["toa_idx"].tolist() == [0]
+    assert got["J3.tim"].empty and "toa_idx" in got["J3.tim"]
+
+
 def test_par_parse(spark):
     from enterprise_warp_spark.sources.par import read_par
 
