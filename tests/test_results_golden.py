@@ -18,6 +18,7 @@ import json
 import os
 
 import numpy as np
+import pytest
 
 # chain-dir name -> (backends, chain rows, carries nmodel)
 CHAIN_RUNS = {
@@ -66,6 +67,65 @@ GOLDEN = {
     },
 }
 COVM_DIGEST = "6a1db0bae3d033510a14f55b88a2d1de63b88eca482f3317d39f2852f6f79703"
+
+# one command each over fresh run dirs: the -p and -n filters, a corner
+# over a run without nmodel, and the hist and trace grids
+FLAG_COMMANDS = {
+    "par": ["-i", "1", "-f", "1", "-l", "1", "-p", "efac", "-p", "gamma"],
+    "name": ["-f", "1", "-l", "1", "-n", "J2145-0750"],
+    "corner_no_nmodel": ["-c", "1", "-n", "J0437-4715"],
+    "hists_chains": ["-H", "1", "-a", "1"],
+}
+GOLDEN_FLAGS = {
+    "corner_no_nmodel": {
+        "0_J0437-4715/0_J0437-4715_corner.json":
+            "af4a22bcd09527c939f0f2f3710375faf87144d99c5729b6a2cbda9755a3d420",
+        "0_J0437-4715_corner__.png":
+            "84d3bb55a9da5d88f911e418cde6f1ba1fed37237fbc67c5690416c6f7464277",
+    },
+    "hists_chains": {
+        "0_J0437-4715_hist_pars_.png":
+            "0f13bb7d5cf27847f294dc210d02a5cf985abc341bc8c7860d9714ab6b3fdfc7",
+        "0_J0437-4715_samples_trace_.png":
+            "bd8f31dd9de243aef2d0e8bfffad16ce0e8e6e2fe35a2e8f0003b65baec797c2",
+        "1_J1953+3232_hist_pars_.png":
+            "72c846a34cf73b16c34ce67a7bc9b08f53cb4fa18ba2bbac75007d2fd8dee331",
+        "1_J1953+3232_samples_trace_.png":
+            "d0036187d94619a42d5098bd0c3fb0d59baac1e3a3a19d0951ab1278f06ba35d",
+        "2_J2145-0750_hist_pars_.png":
+            "2f46c8de29d1b8fc44cd4fb6a101aae92bb98a07c4ad3efa38078c6b98cf3802",
+        "2_J2145-0750_samples_trace_.png":
+            "b71f4d7b49dcd29367fa347179997e7e23d810ce141436783a274b77f0c92ef7",
+        "3_J1909-3744_hist_pars_.png":
+            "9127e584052168f89d0f744eceeb8860fd5e023d894cdd5d32b906b540da428d",
+        "3_J1909-3744_samples_trace_.png":
+            "f856c91edcb289c23e60e71f7783a5f0f304f7f3e6749f7977f6fc2735df656a",
+    },
+    "name": {
+        "noisefiles/2_J2145-0750_credlvl.json":
+            "9aae698dbd20b1023ff2b03380ffdfd1a765eed86f8e9182c07382fe12cb1b8d",
+        "noisefiles/2_J2145-0750_noise.json":
+            "f45e5152a7d55c186d713946ee9f615a045d8cb176357bd9b0ff855123e20e09",
+    },
+    "par": {
+        "noisefiles/0_J0437-4715_credlvl.json":
+            "362a9ade6621be4f79ab758d26fd6595633f8ec321e2352fc0942f6b26d43d0c",
+        "noisefiles/0_J0437-4715_noise.json":
+            "32ce57e63c9e6d16bfab0fe6f0bf33ba2e6c5cdbfc122f9fe36163252d8bfe1f",
+        "noisefiles/1_J1953+3232_credlvl.json":
+            "e16ac016dfe9c90bd1ed620b5634041129149b23993ee58f3ee654f770d60585",
+        "noisefiles/1_J1953+3232_noise.json":
+            "85fcd7d6fa8a66c99b2cf38d85de5e0dc3e9bfa4e872620c9273443b0627f4cc",
+        "noisefiles/2_J2145-0750_credlvl.json":
+            "da86551a9e0b216e989220d0bfc06d3574dede002a79359b2b85e5fcb62a007d",
+        "noisefiles/2_J2145-0750_noise.json":
+            "f45e5152a7d55c186d713946ee9f615a045d8cb176357bd9b0ff855123e20e09",
+        "noisefiles/3_J1909-3744_credlvl.json":
+            "335447c7cd2545068cc8e6ec6421e96a1f96b4860ca71d3d42de014e320e704b",
+        "noisefiles/3_J1909-3744_noise.json":
+            "d78f1b6702f9ffbae300c6793a61bec80a9e12e66b94961bc7cb5aaa4476d5ff",
+    },
+}
 
 
 def _write_chain_dir(run_dir, psr, backends, rows, nmodel, rng):
@@ -153,6 +213,15 @@ def run_golden_commands(spark, base):
 def test_results_cli_golden_digests(spark, tmp_path):
     base = make_run_dirs(str(tmp_path / "results base" / "out"))
     assert run_golden_commands(spark, base) == GOLDEN
+
+
+@pytest.mark.parametrize("step", sorted(FLAG_COMMANDS))
+def test_results_cli_flag_digests(spark, tmp_path, step):
+    from enterprise_warp_spark.results import main
+
+    base = make_run_dirs(str(tmp_path / "out"))
+    main(["--result", base] + FLAG_COMMANDS[step], spark=spark)
+    assert output_digests(base) == GOLDEN_FLAGS[step]
 
 
 def test_results_cli_covm_digest(spark, tmp_path):
