@@ -12,9 +12,11 @@ Reference semantics reproduced:
                            mode, otherwise median (results.py:172-234
                            suitable_estimator + make_noise_files input)
 
-All grouped per (run_id, par): one shuffle each, map-side combinable; the
-histogram mode does two passes (bounds, then counts) with the 1-row-per-par
-bounds broadcast back — same shape the reference uses, distribution-safe.
+A4, A5 and A6 are selects over one grouped pass, `par_stats`, whose keys
+all start with run_id: over the results ingest's frame (hash-partitioned on
+run_id) it runs without another shuffle. `stats_by_run` folds that pass
+into one row per run, the noise file document included, so a results
+command collects every statistic it writes at once.
 """
 
 from __future__ import annotations
@@ -60,92 +62,86 @@ def log_bayes_factors_from_chain(chain_long: DataFrame) -> DataFrame:
     )
 
 
-def credible_levels_by_par(
-    chain_long: DataFrame, probs: tuple[float, ...] = (0.16, 0.5, 0.84)
-) -> DataFrame:
-    aggs = [
-        F.percentile("value", F.lit(p)).alias(f"p{int(p * 100)}") for p in probs
-    ]
-    return chain_long.groupBy("run_id", "par").agg(*aggs)
+STAT_COLUMNS = ("par", "p16", "p50", "p84", "mode_position", "lo", "hi")
+
+
+def par_stats(chain_long: DataFrame, bins: int = 50) -> DataFrame:
+    """A4 + A5 in one grouped pass -> (run_id, par, p16, p50, p84,
+    mode_position, lo, hi): the credible levels, the histogram argmax left
+    edge (numpy.histogram, results.py:154-170 dist_mode_position) and the
+    value range of every (run_id, par). min, max and one percentile call
+    are window aggregates; the values are then counted per bucket and the
+    first bucket of highest count wins. Every key starts with run_id, so a
+    frame hash-partitioned on run_id is not shuffled again."""
+    w = Window.partitionBy("run_id", "par")
+    lo, hi = F.col("lo"), F.col("hi")
+    probs = F.array(F.lit(0.16), F.lit(0.5), F.lit(0.84))
+    counted = chain_long.select(
+        "run_id", "par", "value",
+        F.min("value").over(w).alias("lo"),
+        F.max("value").over(w).alias("hi"),
+        F.percentile("value", probs).over(w).alias("q"),
+    ).groupBy(
+        "run_id", "par", "lo", "hi", "q",
+        # degenerate chains (all values equal — e.g. a constant-prior
+        # column) have zero width: everything lands in bucket 0 and the
+        # mode is the value itself, instead of an ANSI divide-by-zero
+        F.when(hi == lo, F.lit(0)).otherwise(F.least(
+            F.floor((F.col("value") - lo) / ((hi - lo) / bins)).cast("bigint"),
+            F.lit(bins - 1),
+        )).alias("bucket"),
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    top = w.orderBy(F.desc("cnt"), F.asc("bucket"))
+    first = counted.withColumn("_r", F.row_number().over(top)).filter("_r = 1")
+    return first.select(
+        "run_id", "par",
+        *[F.col("q")[i].alias(c) for i, c in enumerate(STAT_COLUMNS[1:4])],
+        (lo + F.col("bucket") * (hi - lo) / bins).alias("mode_position"),
+        "lo", "hi",
+    )
+
+
+def credible_levels_by_par(chain_long: DataFrame) -> DataFrame:
+    """A4 — 16/50/84 percentiles per (run_id, par) (results.py:201-213)."""
+    return par_stats(chain_long).select("run_id", "par", "p16", "p50", "p84")
 
 
 def mode_positions_by_par(chain_long: DataFrame, bins: int = 50) -> DataFrame:
     """A5 — numpy.histogram(50) argmax left edge, per (run_id, par)."""
-    bounds = chain_long.groupBy("run_id", "par").agg(
-        F.min("value").alias("_lo"), F.max("value").alias("_hi")
-    )
-    width = (F.col("_hi") - F.col("_lo")) / bins
-    bucketed = (
-        chain_long.join(F.broadcast(bounds), ["run_id", "par"])
-        .select(
-            "run_id",
-            "par",
-            "_lo",
-            "_hi",
-            # degenerate chains (all values equal — e.g. a constant-prior
-            # column) have zero width: everything lands in bucket 0 and the
-            # mode is the value itself, instead of an ANSI divide-by-zero
-            F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.floor((F.col("value") - F.col("_lo")) / width).cast(
-                        "bigint"
-                    ),
-                    F.lit(bins - 1),
-                )
-            )
-            .alias("bucket"),
-        )
-    )
-    counted = bucketed.groupBy("run_id", "par", "_lo", "_hi", "bucket").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("run_id", "par").orderBy(F.desc("cnt"), F.asc("bucket"))
-    return (
-        counted.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select(
-            "run_id",
-            "par",
-            (
-                F.col("_lo")
-                + F.col("bucket") * (F.col("_hi") - F.col("_lo")) / bins
-            ).alias("mode_position"),
-        )
-    )
+    return par_stats(chain_long, bins).select("run_id", "par", "mode_position")
+
+
+def _noise_value() -> F.Column:
+    """suitable_estimator (results.py:172-182): efac/equad-like params use
+    the histogram mode, others the median."""
+    mode = F.col("par").rlike("efac|equad")
+    return F.when(mode, F.col("mode_position")).otherwise(F.col("p50")).alias("value")
 
 
 def noise_summary(chain_long: DataFrame) -> DataFrame:
-    """A6 — the dict make_noise_files(results.py:215-248) serializes:
-    efac/equad-like params use the histogram mode, others the median
-    (suitable_estimator, results.py:172-182)."""
-    modes = mode_positions_by_par(chain_long)
-    medians = chain_long.groupBy("run_id", "par").agg(
-        F.percentile("value", F.lit(0.5)).alias("median")
-    )
-    return (
-        modes.join(medians, ["run_id", "par"])
-        .select(
-            "run_id",
-            "par",
-            F.when(
-                F.col("par").rlike("efac|equad"), F.col("mode_position")
-            )
-            .otherwise(F.col("median"))
-            .alias("value"),
-        )
-    )
+    """A6 — the (run_id, par, value) dict make_noise_files
+    (results.py:215-248) serializes."""
+    return par_stats(chain_long).select("run_id", "par", _noise_value())
+
+
+def _noise_json(value: F.Column) -> F.Column:
+    """The group's (par, value) pairs as one sorted-key flat JSON object."""
+    pairs = F.sort_array(F.collect_list(F.struct("par", value)))
+    return F.to_json(F.map_from_entries(pairs)).alias("noise_json")
 
 
 def noise_files_json(noise: DataFrame) -> DataFrame:
     """K2 — one sorted-key JSON document per run (PAL2 flat format)."""
-    return (
-        noise.groupBy("run_id")
-        .agg(F.sort_array(F.collect_list(F.struct("par", "value"))).alias("kv"))
-        .select(
-            "run_id",
-            F.to_json(F.map_from_entries("kv")).alias("noise_json"),
-        )
+    return noise.groupBy("run_id").agg(_noise_json(F.col("value")))
+
+
+def stats_by_run(chain_long: DataFrame) -> DataFrame:
+    """par_stats folded per run -> (run_id, noise_json, stats): the run's
+    noise file document (noise_files_json of its noise_summary) and its
+    par_stats rows, so one collect feeds every results sink."""
+    return par_stats(chain_long).groupBy("run_id").agg(
+        _noise_json(_noise_value()),
+        F.collect_list(F.struct(*STAT_COLUMNS)).alias("stats"),
     )
 
 

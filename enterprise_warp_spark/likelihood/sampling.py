@@ -5,7 +5,8 @@ bilby_warp.py:40-106): Uniform, LinearExponential (log-uniform amplitude),
 Normal, TruncatedNormal, Constant. A prior table is drawn on the driver with
 numpy (`draw_priors`, one generator stream per parameter): it is at most a
 few thousand rows, every caller collects it anyway, and its values depend
-on the seed alone, not on the session's parallelism. The importance waves
+on the seed alone, not on the session's parallelism. So are the proposal
+rounds of `adaptive_posterior` (`refined_samples`). The importance waves
 draw their proposals as column expressions over rand(seed) streams with a
 pinned partition count.
 
@@ -232,27 +233,25 @@ def refined_samples(
     scales: dict[str, float],
     n: int,
     seed: int,
+    round_: int,
 ) -> DataFrame:
-    """Gaussian proposal around `centers`, clipped to the prior box —
-    one adaptive-importance-sampling round (all rand/randn columns)."""
-    df = spark.range(n).withColumnRenamed("id", "sample_id")
+    """Gaussian proposal around `centers`, clipped to the prior box — one
+    adaptive-importance-sampling round, drawn on the driver like
+    `draw_priors`: parameter i reads np.random.default_rng([seed, round_,
+    i]), and the table reaches Spark as one Arrow local relation."""
+    cols = {"sample_id": np.arange(n, dtype=np.int64)}
     for i, p in enumerate(priors):
         if p.kind == "constant":
-            df = df.withColumn(p.name, F.lit(p.a))
+            cols[p.name] = np.full(n, float(p.a))
             continue
-        g = F.randn(seed + 1000 * i)
+        g = np.random.default_rng([seed % 2**64, round_, i]).standard_normal(n)
         col = g * float(scales[p.name]) + float(centers[p.name])
         if p.kind in ("uniform", "linearexp"):
-            col = F.greatest(F.lit(p.a), F.least(F.lit(p.b), col))
+            col = np.clip(col, p.a, p.b)
         elif p.kind == "truncnormal":
-            import math as _math
-
-            if _math.isfinite(p.lo):
-                col = F.greatest(F.lit(p.lo), col)
-            if _math.isfinite(p.hi):
-                col = F.least(F.lit(p.hi), col)
-        df = df.withColumn(p.name, col)
-    return df
+            col = np.clip(col, p.lo, p.hi)
+        cols[p.name] = col
+    return spark.createDataFrame(pd.DataFrame(cols))
 
 
 _LOG_ZERO = -1.0e30  # finite stand-in for log(0): keeps column arithmetic
@@ -608,7 +607,8 @@ def adaptive_posterior(
     n_elite = max(int(n_per_round * elite_frac), 12)
     for rnd in range(rounds):
         joined = score_fn(samples).join(samples, "sample_id")
-        part = joined.toPandas()
+        # in sample order, whatever the partitioning the rows arrive in
+        part = joined.toPandas().sort_values("sample_id", ignore_index=True)
         part = part[_np_isfinite(part["lnl"])]  # -inf/NaN scores carry no info
         part["sample_id"] = part["sample_id"] + rnd * n_per_round
         seen = part if seen is None else _pd.concat([seen, part], ignore_index=True)
@@ -620,7 +620,7 @@ def adaptive_posterior(
             c: max(float(elites[c].std()), 0.02 * abs(widths[c])) for c in names
         }
         samples = refined_samples(
-            spark, priors, centers, scales, n_per_round, seed + 7919 * (rnd + 1)
+            spark, priors, centers, scales, n_per_round, seed, rnd + 1
         )
     if final_is:
         elites = seen.nlargest(n_elite, "lnl")

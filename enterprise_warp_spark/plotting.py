@@ -218,11 +218,13 @@ def _draw_trace_panel(cv: Canvas, ox: int, oy: int, values, label: str):
 
 
 def pair_histograms_2d(chains_long, pars: list[str], bins: int = 30,
-                       model: float | None = None):
+                       model: float | None = None,
+                       bounds: dict[str, tuple[float, float]] | None = None):
     """2D histogram counts for every parameter pair in ONE shuffle:
     pivot long->wide on (run_id, step), bucketize each parameter against
-    driver-collected per-par (lo, hi) (P rows — bounded), explode the
-    P(P-1)/2 pair structs per row, and count by (pair, bx, by).
+    its (lo, hi) range, explode the P(P-1)/2 pair structs per row, and
+    count by (pair, bx, by). `bounds`, each parameter's (min, max) over
+    the rows counted (par_stats' lo, hi), saves the job that collects them.
 
     At cluster scale this is the corner-plot contract: O(n * P^2) explode
     rows, one hash aggregation keyed by pair x bins^2 (bounded output).
@@ -248,13 +250,14 @@ def pair_histograms_2d(chains_long, pars: list[str], bins: int = 30,
     )
     if model is not None and "nmodel" in pars:
         wide = wide.filter(F.round(F.col("`nmodel`")) == float(model))
-    stats = wide.agg(
-        *[F.min(F.col(f"`{p}`")).alias(f"lo_{i}") for i, p in enumerate(pars)],
-        *[F.max(F.col(f"`{p}`")).alias(f"hi_{i}") for i, p in enumerate(pars)],
-    ).first()
+    if bounds is None:
+        cols = [F.col(f"`{p}`") for p in pars]
+        bounds = dict(zip(pars, wide.agg(
+            *[F.array(F.min(c), F.max(c)) for c in cols]).first()))
+    edges = {p: (float(bounds[p][0]), float(bounds[p][1])) for p in pars}
     bucket_cols = []
     for i, p in enumerate(pars):
-        lo, hi = float(stats[f"lo_{i}"]), float(stats[f"hi_{i}"])
+        lo, hi = edges[p]
         c = F.col(f"`{p}`")
         if hi == lo:
             b = F.lit(0).cast("int")
@@ -275,8 +278,7 @@ def pair_histograms_2d(chains_long, pars: list[str], bins: int = 30,
         for j in range(i + 1, len(pars))
     ]
     if not pair_structs:
-        return None, {p: (float(stats[f"lo_{i}"]), float(stats[f"hi_{i}"]))
-                      for i, p in enumerate(pars)}
+        return None, edges
     counts = (
         bucketed.select(
             "run_id", F.explode(F.array(*pair_structs)).alias("s")
@@ -285,8 +287,6 @@ def pair_histograms_2d(chains_long, pars: list[str], bins: int = 30,
         .groupBy("run_id", "pair", "bx", "by")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    edges = {p: (float(stats[f"lo_{i}"]), float(stats[f"hi_{i}"]))
-             for i, p in enumerate(pars)}
     return counts, edges
 
 
@@ -370,13 +370,15 @@ def make_chain_trace_grid(chains_long, out_path: str,
 
 def make_corner_plot(chains_long, pars: list[str], out_path: str,
                      bins: int = 30, model: float | None = None,
-                     truths: dict[str, float] | None = None) -> str | None:
+                     truths: dict[str, float] | None = None,
+                     bounds: dict | None = None) -> str | None:
     """_make_corner_plot (results.py:618-658): P x P lower-triangle corner —
     1D histograms on the diagonal, 2D count heatmaps below, optional truth
-    lines. All counting is the one-shuffle pair_histograms_2d plan."""
+    lines. All counting is the one-shuffle pair_histograms_2d plan
+    (`bounds` as there)."""
     from pyspark.sql import functions as F
 
-    counts, edges = pair_histograms_2d(chains_long, pars, bins, model)
+    counts, edges = pair_histograms_2d(chains_long, pars, bins, model, bounds)
     rows = counts.collect() if counts is not None else []
     _single_run(rows, "make_corner_plot")
     # diagonal 1D hists from the same bucket edges so panels line up

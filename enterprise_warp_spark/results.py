@@ -18,9 +18,11 @@ window; bilby dirs are unioned in. The run ids and parameter names each
 flag iterates over (after the -n/-p filters) come from that driver-side
 resolution, not from distinct() jobs, so a command's job count does not
 grow with the number of PTMCMC run dirs (each bilby dir is read on its
-own). Each flag then gates one aggregation + sink over the shared frame. Plot flags (--corner/--chains/--hists) compute
-their feeding aggregations (mode positions, credible levels — A4/A5),
-write them as JSON data files and render PNGs on the driver (K7).
+own). One grouped pass, `analytics.chains.stats_by_run`, collected once,
+gives every statistic -f, -l, -c and -o's noise summary write (A4-A6);
+its keys start with run_id, so it adds no exchange to the ingest's. Plot
+flags (--corner/--chains/--hists) bin in Spark and render PNGs on the
+driver (K7).
 """
 
 from __future__ import annotations
@@ -127,6 +129,18 @@ def _filter_runs(df, name: str):
     from pyspark.sql import functions as F
 
     return df if name == "all" else df.filter(F.col("run_id").contains(name))
+
+
+def _write_json(path: str, doc: dict) -> str:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        json.dump(doc, fh, sort_keys=True, indent=4)
+    return path
+
+
+def _wanted(par: str, par_substrings) -> bool:
+    """-p rule: no substrings keep every parameter, else any must match."""
+    return not par_substrings or any(s in par for s in par_substrings)
 
 
 def _filter_pars(df, par_substrings):
@@ -347,10 +361,8 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     """main_pipeline (results.py:359-386) — flag-gated stages over one
     shared long-form chain frame."""
     from enterprise_warp_spark.analytics.chains import (
-        credible_levels_by_par,
         log_bayes_factors_from_chain,
-        mode_positions_by_par,
-        noise_summary,
+        stats_by_run,
     )
     from enterprise_warp_spark.analytics.results_pipeline import (
         discover_run_dirs,
@@ -381,13 +393,16 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         # results.py:427-470)
         par_label="_".join(opts.par) if opts.par else None,
     )
-    # the stage frames are built only under the flags that read them
-    chains = _filter_pars(_filter_runs(kept, opts.name), opts.par).persist()
+    runs = _filter_runs(kept, opts.name)
+    chains = _filter_pars(runs, opts.par)
+    # -H and -a run one action per run over `chains`; the statistics pass
+    # and the other sinks read it once or twice and run faster uncached
+    if opts.hists or opts.chains:
+        chains = chains.persist()
     # the runs and parameters `chains` holds rows for, known on the driver
     run_pars = {}
     for rid, pars in all_run_pars.items():
-        wanted = [p for p in pars
-                  if not opts.par or any(s in p for s in opts.par)]
+        wanted = [p for p in pars if _wanted(p, opts.par)]
         if wanted and (opts.name == "all" or opts.name in rid):
             run_pars[rid] = wanted
     run_ids = sorted(run_pars)
@@ -425,46 +440,40 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
         results["log_bf"] = log_bf
 
     noise_dir = os.path.join(outdir_all, "noisefiles")
+    # every statistic -f, -l, -c and -o's noise summary write, in one pass
+    # over the -n runs collected once; noise files ignore -p, the other
+    # sinks keep the parameters it selects
+    runs_stats = []
+    if (opts.noisefiles or opts.credlevels or opts.corner
+            or (opts.optimal_statistic
+                and not opts.load_optimal_statistic_results)):
+        runs_stats = sorted(stats_by_run(runs).collect(), key=lambda r: r["run_id"])
+    # {run_id: {par: its par_stats row}} over the -p parameters
+    stats = {r["run_id"]: {s["par"]: s for s in r["stats"] if _wanted(s["par"], opts.par)}
+             for r in runs_stats}
     if opts.noisefiles:
-        noise = _filter_runs(noise_summary(kept), opts.name)
-        results["noisefiles"] = write_noise_json_files(noise, noise_dir)
+        results["noisefiles"] = write_noise_json_files(runs_stats, noise_dir)
         print(f"wrote {len(results['noisefiles'])} noise files -> {noise_dir}")
 
     if opts.credlevels:
         # <run>_credlvl.json in noisefiles/ (results.py:531-536)
-        levels = credible_levels_by_par(chains).collect()
-        os.makedirs(noise_dir, exist_ok=True)
-        docs: dict[str, dict] = {}
-        for r in levels:
-            d = r.asDict()
-            rid = d.pop("run_id")
-            par = d.pop("par")
-            docs.setdefault(rid, {})[par] = d
-        paths = []
-        for rid, doc in docs.items():
-            p = os.path.join(noise_dir, f"{rid}_credlvl.json")
-            with open(p, "w") as fh:
-                json.dump(doc, fh, sort_keys=True, indent=4,
-                          separators=(",", ": "))
-            paths.append(p)
-        results["credlevels"] = paths
+        results["credlevels"] = [
+            _write_json(os.path.join(noise_dir, f"{rid}_credlvl.json"),
+                        {p: {k: r[k] for k in ("p16", "p50", "p84")}
+                         for p, r in rows.items()})
+            for rid, rows in stats.items() if rows
+        ]
 
     if opts.corner:
         # corner's feeding aggregation as a JSON data artifact
-        modes = mode_positions_by_par(chains).collect()
-        docs = {}
-        for r in modes:
-            docs.setdefault(r["run_id"], {})[r["par"]] = r["mode_position"]
-        for rid, doc in docs.items():
-            path = os.path.join(outdir_all, rid, f"{rid}_corner.json")
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            with open(path, "w") as fh:
-                json.dump(doc, fh, sort_keys=True, indent=4)
-        results["modes"] = docs
+        results["modes"] = {rid: {p: r["mode_position"] for p, r in rows.items()}
+                            for rid, rows in stats.items() if rows}
+        for rid, doc in results["modes"].items():
+            _write_json(os.path.join(outdir_all, rid, f"{rid}_corner.json"), doc)
 
     if opts.corner or opts.hists or opts.chains:
         results["plots"] = render_plots(spark, opts, outdir_all, chains,
-                                        run_pars)
+                                        run_pars, stats)
 
     if opts.covm:
         results["covm"] = collect_covariances(spark, outdir_all)
@@ -472,21 +481,9 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
     if opts.optimal_statistic and opts.load_optimal_statistic_results:
         # -L: reuse the persisted K6 parquet, no TOA rebuild (so --result
         # may be a plain directory), then render the same plots
-        from enterprise_warp_spark import plotting
-
         results["os"] = load_os_results(
             spark, outdir_all, expand_orfs(opts.optimal_statistic_orfs)
         )
-        tag = opts.name
-        os_plots = [plotting.make_os_orf_plot(
-            results["os"], os.path.join(outdir_all, f"{tag}_os_orf_.png")
-        )]
-        os_plots += plotting.make_noisemarg_os_plots(
-            results["os"],
-            os.path.join(outdir_all, f"{tag}_os_SNR_.png"),
-            os.path.join(outdir_all, f"{tag}_os_A2_.png"),
-        )
-        results["os_plots"] = os_plots
     elif opts.optimal_statistic:
         if params is None:
             raise SystemExit(
@@ -503,9 +500,7 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
 
         paths = results.get("noisefiles")
         if not paths:
-            paths = write_noise_json_files(
-                _filter_runs(noise_summary(kept), opts.name), noise_dir
-            )
+            paths = write_noise_json_files(runs_stats, noise_dir)
         noise_df = read_noise_files(spark, [str(p) for p in paths]).withColumn(
             "psr", F.regexp_extract("key", r"^(\d+_)?([JB][\d+-]+[AB]?)", 2)
         )
@@ -513,32 +508,34 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
             spark, opts, params, opts.result, outdir_all, noise_df,
             chains=chains, chain_pars=chain_pars,
         )
+    if opts.optimal_statistic:
         # K7 OS plots (plot_os_orf / plot_noisemarg_os)
         from enterprise_warp_spark import plotting
 
         tag = opts.name
-        os_plots = [plotting.make_os_orf_plot(
+        results["os_plots"] = [plotting.make_os_orf_plot(
             results["os"], os.path.join(outdir_all, f"{tag}_os_orf_.png")
-        )]
-        os_plots += plotting.make_noisemarg_os_plots(
+        )] + plotting.make_noisemarg_os_plots(
             results["os"],
             os.path.join(outdir_all, f"{tag}_os_SNR_.png"),
             os.path.join(outdir_all, f"{tag}_os_A2_.png"),
         )
-        results["os_plots"] = os_plots
 
-    chains.unpersist()
+    if chains.is_cached:
+        chains.unpersist()
     return results
 
 
 def render_plots(spark, opts, outdir_all: str, chains,
-                 run_pars: dict[str, list[str]]) -> list[str]:
+                 run_pars: dict[str, list[str]],
+                 stats: dict[str, dict] | None = None) -> list[str]:
     """K7 — PNG plot sinks for the -c/-a/-H flags, reference filenames
     (results.py:634-636, 677-679, 697-699): per-run corner (one per nmodel
     value, over the burned chain), hist grid, and trace grid. Spark bins,
     the driver rasterizes (see plotting.py module docstring). `chains` is
     the long form load_run_dirs has already burned; run_pars maps each
-    run_id in it to the parameters it holds rows for."""
+    run_id in it to the parameters it holds rows for; stats, each run's
+    {par: par_stats row}, gives a corner without nmodel its ranges."""
     from pyspark.sql import functions as F
 
     from enterprise_warp_spark import plotting
@@ -574,6 +571,9 @@ def render_plots(spark, opts, outdir_all: str, chains,
                         ch, pars,
                         os.path.join(outdir_all, f"{rid}_corner_{tag}_.png"),
                         model=jj, truths=truths,
+                        bounds=None if jj is not None or not stats else {
+                            p: (r["lo"], r["hi"]) for p, r in stats[rid].items()
+                        },
                     )
                 except ValueError as e:
                     # e.g. the >40-parameter guard: skip THIS corner but

@@ -18,15 +18,17 @@ def write_pars_txt(pars: DataFrame, path: str) -> None:
         fh.write("\n".join(r["par"] for r in rows) + "\n")
 
 
-def write_noise_json_files(noise: DataFrame, out_dir: str) -> list[str]:
+def write_noise_json_files(noise, out_dir: str) -> list[str]:
     """K2 — one sorted-key flat JSON per run_id (PAL2 format,
-    results.py:236-248). noise: (run_id, par, value)."""
+    results.py:236-248). noise: a (run_id, par, value) DataFrame, or the
+    collected rows of analytics.chains.stats_by_run."""
     from enterprise_warp_spark.analytics.chains import noise_files_json
 
+    if isinstance(noise, DataFrame):
+        noise = noise_files_json(noise).collect()
     os.makedirs(out_dir, exist_ok=True)
-    docs = noise_files_json(noise).collect()
     paths = []
-    for r in docs:
+    for r in noise:
         p = os.path.join(out_dir, f"{r['run_id']}_noise.json")
         with open(p, "w") as fh:
             fh.write(r["noise_json"] + "\n")

@@ -10,12 +10,10 @@ CLI's own session settings.
 - `run_paramfile` for each pulsar, two `--drop 1` array runs and one
   `sampler: adaptive` run must write `chain_1.txt` and `pars.txt` with the
   recorded sha256s.
-- One single-pulsar run and the three-pulsar `--drop 1` run write the
-  same chains at local[2], local[8] and at local[4] with adaptive
-  partition coalescing off: the draws and the sum over pulsars depend on
-  the inputs and the seed only. (The adaptive sampler's proposal rounds
-  still draw with `rand` per partition, so its chain is pinned at
-  local[4] only.)
+- One single-pulsar run, the three-pulsar `--drop 1` run and the
+  adaptive run write the same chains at local[2], local[8] and at
+  local[4] with adaptive partition coalescing off: the draws and the sum
+  over pulsars depend on the inputs and the seed only.
 - `results -o 1 -N 50 -g hd` must write `os`, `binned` and `marginalised`
   parquet whose rows, normalised as in `tests/oracle.py`, hash to the
   recorded digests (`perfbench.workloads.frame_digest`).
@@ -26,7 +24,8 @@ CLI's own session settings.
 - Every run returns its posterior summary row.
 
 The OS digests were recorded before the residual frame was built through
-Arrow; the chain digests when the prior draws moved to the driver.
+Arrow; the chain digests when the prior draws moved to the driver, the
+adaptive chain's when its proposal rounds did.
 """
 
 import hashlib
@@ -80,7 +79,7 @@ GOLDEN_CHAINS = {
     },
     "adaptive": {
         "chain_1.txt":
-            "ad87238fed6f07f9a2e08a9c7646454bf35a294ef9b655906fef02c1bf9c6db1",
+            "8175dd594acd9cbdc68395f557d83eedbc1af513aa7baf886f1c136d7fe09029",
         "pars.txt":
             "4175b53794b5b4d8f16b77f8e75662f1c5a328e4da048b04de2522a9bf237a2b",
     },
@@ -202,13 +201,6 @@ def _child(work, labels=None, conf=None):
                                 spark=spark)
             report["sampler_info"] = info.get("sampler_info")
         record("drop", ["--prfile", prfile, "--num", str(warm), "--drop", "1"])
-        if labels is not None:
-            return report
-        wide, _, _ = make_infer_inputs(
-            os.path.join(work, "wide"), INFER_SEED, slots=WIDE_SLOTS
-        )
-        record("drop_wide", ["--prfile", wide, "--num", "0", "--drop", "1"])
-        report["width"] = spark.sparkContext.defaultParallelism
         with open(prfile) as fh:
             text = fh.read()
         adaptive = prfile.replace(".dat", "_adaptive.dat")
@@ -219,6 +211,13 @@ def _child(work, labels=None, conf=None):
                 .replace("nsamp: 400", f"nsamp: {ADAPTIVE_NSAMP}")
             )
         record("adaptive", ["--prfile", adaptive, "--num", str(warm)])
+        if labels is not None:
+            return report
+        wide, _, _ = make_infer_inputs(
+            os.path.join(work, "wide"), INFER_SEED, slots=WIDE_SLOTS
+        )
+        record("drop_wide", ["--prfile", wide, "--num", "0", "--drop", "1"])
+        report["width"] = spark.sparkContext.defaultParallelism
 
         rprfile, _, _ = make_results_inputs(
             os.path.join(work, "results"), RESULTS_SEED
@@ -275,11 +274,11 @@ OTHER_SESSIONS = {
 
 @pytest.mark.parametrize("session", sorted(OTHER_SESSIONS))
 def test_chains_do_not_depend_on_the_session(tmp_path, session):
-    """A single-pulsar and an array run write the local[4] chains at other
-    widths and with coalescing off: draws, scores and sums follow the
-    inputs and the seed only."""
+    """A single-pulsar, an array and an adaptive run write the local[4]
+    chains at other widths and with coalescing off: draws, scores and sums
+    follow the inputs and the seed only."""
     cpus, conf = OTHER_SESSIONS[session]
-    labels = ["single_1", "drop"]
+    labels = ["single_1", "drop", "adaptive"]
     got = _run_child(str(tmp_path), cpus, labels, conf)["chains"]
     assert got == {k: GOLDEN_CHAINS[k] for k in labels}
 

@@ -8,9 +8,16 @@ JSON and PNG files whose sha256 digests equal the recorded ones, and
 with the per-directory ingest that preceded the one-scan ingest, so any
 change to what the CLI writes shows up here.
 
-A run dir whose chain is empty must be skipped exactly as before. The last test pins the ingest's Spark job count: `-i 1 -f 1
--l 1` over 2 and over 6 run dirs launches the same number of jobs, at
-most 9 without a bilby dir, and the same number again with one.
+Four more commands, each over fresh run dirs, pin what the `-p` and `-n`
+filters, a corner over a run without nmodel and the `-H`/`-a` grids
+write; their digests were recorded before the statistics pass
+(`analytics.chains.stats_by_run`) replaced the per-statistic queries.
+
+A run dir whose chain is empty must be skipped exactly as before. The
+last test pins the Spark job count: `-i 1 -f 1 -l 1` over 2 and over 6
+run dirs launches the same number of jobs, at most 2 without a bilby dir,
+and the same number again with one; `-c 1 -n <psr>` launches at most 4,
+the same over 2 and 6 dirs.
 """
 
 import hashlib
@@ -270,10 +277,13 @@ def _count_jobs(spark, group, fn):
 
 def test_results_job_count_is_flat_in_run_dirs(spark, tmp_path):
     """Flat in the number of PTMCMC run dirs, with and without a bilby dir
-    beside them (a bilby dir is read on its own, so it adds jobs)."""
+    beside them (a bilby dir is read on its own, so it adds jobs). Without
+    one, `-i 1 -f 1 -l 1` runs the ingest's exchange and the statistics
+    pass (2 jobs), and `-c 1 -n <psr>` adds the corner's counts over a
+    second read of the chains (4 jobs)."""
     from enterprise_warp_spark.results import main
 
-    jobs = {}
+    jobs, corner_jobs = {}, {}
     for bilby in (False, True):
         for n_dirs in (2, 6):
             names = [f"{i}_J{1000 + i:04d}+{2000 + i:04d}" for i in range(n_dirs)]
@@ -286,5 +296,12 @@ def test_results_job_count_is_flat_in_run_dirs(spark, tmp_path):
             )
             n_files = len(os.listdir(os.path.join(base, "noisefiles")))
             assert n_files == 2 * (n_dirs + bilby)
-    assert jobs[False, 2] == jobs[False, 6] <= 9, jobs
+            if not bilby:
+                argv = ["--result", base, "-c", "1", "-n", names[0].split("_")[1]]
+                corner_jobs[n_dirs] = _count_jobs(
+                    spark, f"results-corner-jobs-{n_dirs}",
+                    lambda: main(argv, spark=spark),
+                )
+    assert jobs[False, 2] == jobs[False, 6] <= 2, jobs
     assert jobs[True, 2] == jobs[True, 6], jobs
+    assert corner_jobs[2] == corner_jobs[6] <= 4, corner_jobs
