@@ -95,7 +95,7 @@ def par_stats(chain_long: DataFrame, bins: int = 50) -> DataFrame:
     first = counted.withColumn("_r", F.row_number().over(top)).filter("_r = 1")
     return first.select(
         "run_id", "par",
-        *[F.col("q")[i].alias(c) for i, c in enumerate(STAT_COLUMNS[1:4])],
+        *[F.col("q")[i].alias(c) for i, c in enumerate(("p16", "p50", "p84"))],
         (lo + F.col("bucket") * (hi - lo) / bins).alias("mode_position"),
         "lo", "hi",
     )
@@ -114,8 +114,8 @@ def mode_positions_by_par(chain_long: DataFrame, bins: int = 50) -> DataFrame:
 def _noise_value() -> F.Column:
     """suitable_estimator (results.py:172-182): efac/equad-like params use
     the histogram mode, others the median."""
-    mode = F.col("par").rlike("efac|equad")
-    return F.when(mode, F.col("mode_position")).otherwise(F.col("p50")).alias("value")
+    by_mode = F.col("par").rlike("efac|equad")
+    return F.when(by_mode, F.col("mode_position")).otherwise(F.col("p50")).alias("value")
 
 
 def noise_summary(chain_long: DataFrame) -> DataFrame:

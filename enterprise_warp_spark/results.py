@@ -528,7 +528,7 @@ def _main_pipeline(spark, opts, outdir_all: str, params):
 
 def render_plots(spark, opts, outdir_all: str, chains,
                  run_pars: dict[str, list[str]],
-                 stats: dict[str, dict] | None = None) -> list[str]:
+                 stats: dict[str, dict]) -> list[str]:
     """K7 — PNG plot sinks for the -c/-a/-H flags, reference filenames
     (results.py:634-636, 677-679, 697-699): per-run corner (one per nmodel
     value, over the burned chain), hist grid, and trace grid. Spark bins,
@@ -571,7 +571,7 @@ def render_plots(spark, opts, outdir_all: str, chains,
                         ch, pars,
                         os.path.join(outdir_all, f"{rid}_corner_{tag}_.png"),
                         model=jj, truths=truths,
-                        bounds=None if jj is not None or not stats else {
+                        bounds=None if jj is not None or rid not in stats else {
                             p: (r["lo"], r["hi"]) for p, r in stats[rid].items()
                         },
                     )

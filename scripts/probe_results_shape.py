@@ -16,10 +16,10 @@ times warm:
   os      -o 1 -N 50 -g hd
 
 Each run prints one JSON line on stdout (the CLI's own output goes to
-stderr): wall seconds, Spark jobs and the sha256 of
-every file it wrote (a parquet directory gets the rows and sha256 of its
-rows, normalised as in `tests/oracle.py`, since part-file names change from
-run to run). Run it on two checkouts to compare them.
+stderr): wall seconds, Spark jobs and the sha256 of every file it wrote
+(a parquet directory gets the rows and sha256 of its rows, normalised as
+in `tests/oracle.py`, since part-file names change from run to run). Run
+it on two checkouts to compare them.
 """
 
 from __future__ import annotations
@@ -49,9 +49,9 @@ def _snapshot(base: str) -> dict[str, tuple[int, int]]:
 def _written(base: str, before: dict) -> dict[str, object]:
     """-> {relative path: sha256} of the files changed since `before`;
     parquet part files are folded into {directory: [rows, sha256]}."""
-    from perfbench.workloads import frame_digest
-
     import pandas as pd
+
+    from perfbench.workloads import frame_digest
 
     out, parquet_dirs = {}, set()
     for p, stamp in sorted(_snapshot(base).items()):
@@ -60,7 +60,7 @@ def _written(base: str, before: dict) -> dict[str, object]:
         name = os.path.basename(p)
         if name.endswith(".parquet"):
             parquet_dirs.add(os.path.dirname(p))
-        elif not (name.startswith((".", "_"))):
+        elif not name.startswith((".", "_")):
             with open(p, "rb") as fh:
                 out[os.path.relpath(p, base)] = hashlib.sha256(fh.read()).hexdigest()
     for d in sorted(parquet_dirs):
@@ -93,7 +93,7 @@ def main(argv=None) -> int:
     with tempfile.TemporaryDirectory() as work:
         infer, warm, _ = inputs.make_infer_inputs(os.path.join(work, "infer"),
                                                   opts.seed)
-        prfile, psrs, by_slot = inputs.make_results_inputs(
+        prfile, _, by_slot = inputs.make_results_inputs(
             os.path.join(work, "results"), opts.seed)
         base = run_paramfile.output_base_dir(parse_paramfile(prfile), prfile)
         corner = by_slot[inputs.RESULTS_CORNER_SLOT]
