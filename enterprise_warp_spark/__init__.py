@@ -23,9 +23,9 @@ Layout:
                 text + repetition metrics, media codecs + multimodal
                 fingerprints, MP3 metadata, curation, packing/chunking,
                 decontamination, LM perplexity, redaction
-    streaming/  Structured Streaming surface: event rollups/dedup/sessions,
-                dedup'd corpus ingest, exactly-once parquet sink
-    maintenance partition upsert / key merge / compaction for parquet tables
+    streaming/  Structured Streaming surface: the events table as a stream,
+                dedup'd corpus ingest
+    maintenance partition upsert / SCD2 history for parquet tables
 """
 
 __version__ = "0.1.0"

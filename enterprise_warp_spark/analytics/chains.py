@@ -145,12 +145,3 @@ def stats_by_run(chain_long: DataFrame) -> DataFrame:
     )
 
 
-def split_chain(chain: DataFrame, frac: float = 0.5) -> tuple[DataFrame, DataFrame]:
-    """K3 — the reference's chain-file split (head fraction to a timestamped
-    segment, remainder rewritten; results.py:579-603) as two filters over the
-    step key; callers write each to versioned parquet instead of file surgery."""
-    bounds = chain.groupBy("run_id").agg(F.floor((F.max("step") + 1) * frac).alias("_k"))
-    joined = chain.join(F.broadcast(bounds), "run_id")
-    head = joined.filter(F.col("step") < F.col("_k")).drop("_k")
-    tail = joined.filter(F.col("step") >= F.col("_k")).drop("_k")
-    return head, tail

@@ -272,14 +272,13 @@ def pair_statistics(
     gamma: float = 13.0 / 3.0,
     tspan_s: float | None = None,
 ) -> DataFrame:
-    """J6 pair join + per-pair rho/sig; xi from sky positions (pair_angle).
+    """J6 pair join + per-pair rho/sig; xi from sky positions.
 
-    The reduction output is persisted before the pair self-join: it is tiny
-    (npsr rows of 2k-vectors) but expensive to produce (one pass over ALL
-    TOAs), and the self-join's two branches would otherwise re-run that pass
-    twice. The broadcast build materializes the cache; the probe side reuses
-    it."""
-    withpos = reduced.join(F.broadcast(positions), "psr").persist()
+    Both sides of the pair self-join read `reduced`: tiny (npsr rows of
+    2k-vectors) but, from per_pulsar_reduction, one pass over ALL TOAs, so
+    the caller persists it (run_os_pipeline does) or passes a local
+    relation."""
+    withpos = reduced.join(F.broadcast(positions), "psr")
     a = withpos.select(*[F.col(c).alias(f"a_{c}") for c in withpos.columns])
     b = withpos.select(*[F.col(c).alias(f"b_{c}") for c in withpos.columns])
     pairs = a.join(F.broadcast(b), F.col("a_psr") < F.col("b_psr"))
@@ -556,8 +555,9 @@ def run_os_pipeline(
       [noise-marginalised per-draw OS + moments]
 
     -> {'reduced', 'pair_stats', 'os', 'binned'[, 'marginalised',
-    'marginalised_moments']}. The reduction is persisted: it is the one
-    pass over the TOA volume and every downstream stage reuses it.
+    'marginalised_moments']}. The reduction and the pair table are
+    persisted: the reduction is the one pass over the TOA volume and every
+    downstream stage reuses it. The caller unpersists both when done.
     """
     from enterprise_warp_spark.functions.orf import dipole_orf, hd_orf, monopole_orf
 

@@ -1,21 +1,15 @@
-"""Table maintenance for parquet-backed snapshots: partition upserts,
-key-level merge, and small-file compaction.
+"""Table maintenance for parquet-backed snapshots: partition upserts and
+SCD Type-2 dimension history.
 
 At 100 TB a table is immutable files + partition directories; "update" means
 rewriting the smallest set of partitions that changed. These helpers are the
-no-lakehouse versions of MERGE INTO / OPTIMIZE: they use Spark's dynamic
-partition overwrite so untouched partitions are never rewritten (and never
-even read, except merge_by_key's pruned read of the affected partitions).
-Swapping the format for Delta/Iceberg upgrades atomicity without changing
-call sites.
+no-lakehouse versions of MERGE INTO: they use Spark's dynamic partition
+overwrite so untouched partitions are never rewritten. Swapping the format
+for Delta/Iceberg upgrades atomicity without changing call sites.
 
 Scale notes:
   upsert_partitions  write-only; shuffle = the writer's partitioning
-  merge_by_key       reads ONLY the partitions present in `updates`
-                     (partition-pruned scan), anti-joins old rows on the
-                     key, unions updates — one shuffle on the key
-  compact            repartitions the listed partitions to a target file
-                     count; data unchanged (asserted cheap by row count)
+  scd2_merge         one read + anti/semi joins on the key + one rewrite
 """
 
 from __future__ import annotations
@@ -56,183 +50,6 @@ def upsert_partitions(df: DataFrame, path: str, partition_cols: Sequence[str]) -
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def merge_by_key(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    partition_cols: Sequence[str],
-) -> None:
-    """MERGE-lite: upsert `updates` into the parquet table at `path` by key.
-
-    Rows in affected partitions whose key matches an update are replaced;
-    unmatched old rows are kept; new keys are inserted. Partitions not named
-    in `updates` are neither read nor written (pruned via an IN filter on
-    the collected distinct partition values — small by construction: it is
-    bounded by the number of partitions being touched, not by rows).
-    """
-    key_cols, partition_cols = list(key_cols), list(partition_cols)
-    if not partition_cols:
-        raise ValueError("merge_by_key requires partition columns")
-    touched = [
-        tuple(r[c] for c in partition_cols)
-        for r in updates.select(*partition_cols).distinct().collect()
-    ]
-    if not touched:
-        return
-    pred = F.struct(*[F.col(c) for c in partition_cols]).isin(
-        [F.struct(*[F.lit(v) for v in t]) for t in touched]
-    )
-    existing = spark.read.parquet(path).filter(pred)
-    kept = existing.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    )
-    merged = kept.unionByName(updates.select(*existing.columns))
-    # The source partitions are being overwritten while still referenced by
-    # the lazy plan — materialize first (localCheckpoint severs the lineage).
-    merged = merged.localCheckpoint(eager=True)
-    upsert_partitions(merged, path, partition_cols)
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    partition_cols: Sequence[str] = (),
-    files_per_partition: int = 1,
-) -> int:
-    """Rewrite the table's files so each partition holds at most
-    `files_per_partition` files (OPTIMIZE-lite for small-file buildup from
-    streaming/incremental writes). Returns the row count (cheap invariance
-    witness for callers). Non-partitioned tables coalesce to
-    `files_per_partition` total files."""
-    df = spark.read.parquet(path).localCheckpoint(eager=True)
-    n = df.count()
-    if partition_cols:
-        # hash-repartition on the partition columns: every partition value
-        # lands in exactly one task, so the writer emits one file per value
-        # (files_per_partition > 1 would need salting; 1 is the compaction
-        # target that matters)
-        out = df.repartition(*[F.col(c) for c in partition_cols])
-    else:
-        out = df.coalesce(files_per_partition)
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    return n
-
-
-def zorder_value(
-    df: DataFrame, cols: Sequence[str], bits: int = 12
-) -> "tuple[DataFrame, str]":
-    """Append a Morton (Z-order) key column interleaving `bits` bits of
-    each column's bucketed rank -> (df_with_key, key_col_name).
-
-    Buckets are equal-width over each column's observed [min, max] (one
-    aggregate; width_bucket is JVM-side). Equal-width is the documented
-    trade-off vs quantile buckets: heavy skew in a column degrades ITS
-    dimension's clustering but never correctness. Bit interleaving is a
-    fixed-size Catalyst expression (bits x n_cols shift/or terms) — no
-    Python in the row path."""
-    import math
-
-    from pyspark.sql.types import NumericType
-
-    if not 1 <= len(cols) <= 4:
-        raise ValueError("zorder over 1-4 columns")
-    if not 1 <= bits * len(cols) <= 63:
-        raise ValueError("bits * n_cols must fit a long")
-    types = {f.name: f.dataType for f in df.schema.fields}
-    for c in cols:
-        if c not in types:
-            raise ValueError(f"zorder column {c!r} not in schema")
-        if not isinstance(types[c], NumericType):
-            raise ValueError(
-                f"zorder column {c!r} has non-numeric type {types[c]}; cast "
-                "timestamps/dates to epoch numbers first"
-            )
-    # finite bounds only: NaN sorts above every double in Spark and would
-    # otherwise be interpolated into the width_bucket SQL as a bare 'nan'
-    bounds = df.agg(
-        *[
-            F.min(F.when(~F.isnan(F.col(c).cast("double")), F.col(c))).alias(
-                f"__lo_{c}"
-            )
-            for c in cols
-        ],
-        *[
-            F.max(F.when(~F.isnan(F.col(c).cast("double")), F.col(c))).alias(
-                f"__hi_{c}"
-            )
-            for c in cols
-        ],
-    ).first()
-    n_buckets = 1 << bits
-    bucket_cols = []
-    for c in cols:
-        blo, bhi = bounds[f"__lo_{c}"], bounds[f"__hi_{c}"]
-        if blo is None or bhi is None:
-            raise ValueError(
-                f"zorder column {c!r} has no non-null values to bucket"
-            )
-        lo, hi = float(blo), float(bhi)
-        if not (math.isfinite(lo) and math.isfinite(hi)):
-            raise ValueError(
-                f"zorder column {c!r} bounds are not finite: [{lo}, {hi}]"
-            )
-        if hi <= lo:
-            bucket_cols.append(F.lit(0))
-            continue
-        # width_bucket returns 1..n+1; clamp into 0..n-1
-        bucket_cols.append(
-            F.least(
-                F.greatest(
-                    F.expr(
-                        f"width_bucket(cast({c} as double), {lo!r}, {hi!r}, {n_buckets})"
-                    )
-                    - 1,
-                    F.lit(0),
-                ),
-                F.lit(n_buckets - 1),
-            ).cast("long")
-        )
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for j, bc in enumerate(bucket_cols):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(bc, bit).bitwiseAND(F.lit(1)),
-                    bit * len(cols) + j,
-                )
-            )
-    key = "__zorder"
-    return df.withColumn(key, z), key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    n_files: int = 16,
-    bits: int = 12,
-) -> None:
-    """OPTIMIZE ... ZORDER BY analogue for plain parquet: range-partition
-    on the Morton key and sort within partitions, so every output file
-    covers a compact hyper-rectangle of the `cols` space. Parquet footer
-    min/max on EACH zorder column then prunes files for predicates on ANY
-    of them — the multi-column data-skipping a single-column sort cannot
-    give (sorting by A leaves B's per-file ranges full-width)."""
-    # materialize FIRST (same reason as compact): the in-place rewrite
-    # reads the path being overwritten, and the upstream plan would
-    # otherwise execute three times (bounds agg, range sampling, write)
-    df = df.localCheckpoint(eager=True)
-    keyed, key = zorder_value(df, cols, bits)
-    (
-        keyed.repartitionByRange(n_files, F.col(key))
-        .sortWithinPartitions(key)
-        .drop(key)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 SCD2_COLS = ("__valid_from", "__valid_to", "__is_current")
 
 
@@ -262,7 +79,7 @@ def scd2_merge(
     Point-in-time reads use scd2_as_of. History is append-mostly: one
     read + anti/semi joins on the key + one rewrite; at scale partition
     the dimension by a stable hash of the key and merge per partition
-    (upsert_partitions), same as merge_by_key."""
+    (upsert_partitions)."""
     key_cols = list(key_cols)
     existing = spark.read.parquet(path)
     attr_cols = [

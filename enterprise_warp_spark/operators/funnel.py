@@ -132,37 +132,3 @@ def retention_cohorts(
     )
 
 
-def frequent_itemsets(
-    df: DataFrame,
-    items_col: str,
-    min_support: float = 0.01,
-    min_confidence: float = 0.5,
-) -> dict:
-    """Market-basket mining over an array<string> items column (e.g. the
-    event types a user touched, tags on a document): MLlib's distributed
-    FP-Growth -> {'itemsets': DF(items, freq), 'rules': DF(antecedent,
-    consequent, confidence, lift, support)}. All JVM; baskets with
-    duplicate items are deduplicated first (FPGrowth requires unique
-    items per transaction); NULL baskets are dropped (they would kill
-    MLlib's fit with an opaque JVM NullPointerException)."""
-    from pyspark.ml.fpm import FPGrowth
-
-    clean = df.select(F.array_distinct(F.col(items_col)).alias("items")).filter(
-        F.col("items").isNotNull()
-    )
-    model = FPGrowth(
-        itemsCol="items", minSupport=min_support, minConfidence=min_confidence
-    ).fit(clean)
-    return {"itemsets": model.freqItemsets, "rules": model.associationRules}
-
-
-def user_event_baskets(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """One basket per user: the distinct set of event types they produced
-    (the standard input shape for frequent_itemsets)."""
-    return events.groupBy(F.col(user_col).alias("user_id")).agg(
-        F.collect_set(F.col(type_col)).alias("items")
-    )

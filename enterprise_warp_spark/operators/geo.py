@@ -247,7 +247,7 @@ def points_in_polygons_join(
         )
     )
     # loud guard, evaluated once on the (already tiny per-row) bbox stats:
-    # one lightweight agg job, the merge_by_key/MAX_GWB_DIM contract shape
+    # one lightweight agg job, the MAX_GWB_DIM contract shape
     worst = g_box.agg(F.max("__ncells").alias("m")).first()["m"]
     if worst is not None and worst > max_cells_per_polygon:
         raise ValueError(

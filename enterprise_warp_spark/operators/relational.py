@@ -116,51 +116,3 @@ def thin(df: DataFrame, order_col: str, k: int, with_rank: bool = False) -> Data
     return out.drop("_n") if with_rank else out.drop("_n", "_rn")
 
 
-def allowlist_filter(df: DataFrame, allowed: Sequence[str], col: str = "psr") -> DataFrame:
-    """P2 — pulsar allow-list (psrlist, enterprise_warp.py:266-271,411);
-    empty list means keep all."""
-    return df if not allowed else df.filter(F.col(col).isin(list(allowed)))
-
-
-def drop_one(df: DataFrame, dropped: str, col: str = "psr") -> DataFrame:
-    """P3 — leave-one-out (--drop/--num, enterprise_warp.py:38-40,413-415)."""
-    return df.filter(F.col(col) != dropped)
-
-
-def classify_noise_param(param: Column | str) -> Column:
-    """P11 — route noise parameters by name substring into their category
-    (the when/rlike cascade of libstempo_warp.py:100-196): efac,
-    log10_equad, log10_ecorr, dm_gp_log10_A, dm_gp_gamma, red log10_A /
-    gamma, log10_P0 (Lorentzian), alpha, else 'other'."""
-    p = F.col(param) if isinstance(param, str) else param
-    low = F.lower(p)
-    return (
-        F.when(low.contains("efac"), "efac")
-        .when(low.contains("log10_equad"), "log10_equad")
-        .when(low.contains("log10_ecorr"), "log10_ecorr")
-        .when(p.contains("dm_gp_log10_A"), "dm_gp_log10_A")
-        .when(p.contains("dm_gp_gamma"), "dm_gp_gamma")
-        .when(p.endswith("_log10_A"), "log10_A")
-        .when(p.endswith("_gamma"), "gamma")
-        .when(p.contains("log10_P0"), "log10_P0")
-        .when(p.contains("alpha"), "alpha")
-        .otherwise("other")
-    )
-
-
-def credible_levels_approx(
-    df: DataFrame,
-    value: Column | str,
-    group_cols: Sequence[str] = (),
-    probs: Sequence[float] = (0.16, 0.5, 0.84),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """A4 at scale — percentile_approx (t-digest style sketch, mergeable
-    map-side): the 100 TB replacement for the exact sort-based percentile.
-    accuracy=10000 keeps rank error ~1e-4 of the population."""
-    value = F.col(value) if isinstance(value, str) else value
-    aggs = [
-        F.percentile_approx(value, F.lit(p), F.lit(accuracy)).alias(f"p{int(p * 100)}")
-        for p in probs
-    ]
-    return df.groupBy(*group_cols).agg(*aggs) if group_cols else df.agg(*aggs)

@@ -8,11 +8,7 @@ is a pure function of the data: reproducible across runs, engines, retries,
 and repartitioning, and expressible as plain SQL for cross-engine checks.
 
 Scale notes (100 TB):
-  hash_sample        pure map-side filter — pushes past shuffles, no state
-  stratified_sample  map-side filter with a broadcast per-stratum rate map
-  reservoir_sample   uniform-k as global top-k by hash: TakeOrderedAndProject
-                     (per-partition heap of k + driver merge), never a full
-                     sort — the distributed equivalent of reservoir sampling
+  stratified_sample  map-side filter with a per-stratum rate CASE expression
   split_dataset      disjoint train/val/test by hash range — a row's split is
                      stable under appends, the property resumable pipelines
                      need
@@ -38,16 +34,6 @@ def _unit_hash(key: Column | str, seed: int) -> Column:
     ) / F.lit(_DENOM)
 
 
-def hash_sample(
-    df: DataFrame, key: Column | str, fraction: float, seed: int = 0
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep rows whose key hashes below
-    `fraction`. Same key + seed -> same decision, always."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(_unit_hash(key, seed) < fraction)
-
-
 def stratified_sample(
     df: DataFrame,
     strata: str,
@@ -66,51 +52,6 @@ def stratified_sample(
             raise ValueError(f"fraction for {value!r} must be in [0, 1], got {frac}")
         rate = F.when(F.col(strata) == value, F.lit(float(frac))).otherwise(rate)
     return df.filter(_unit_hash(key, seed) < rate)
-
-
-def reservoir_sample(df: DataFrame, k: int, key: Column | str, seed: int = 0) -> DataFrame:
-    """Exact uniform sample of k rows, deterministically: the k smallest
-    key-hashes. Physical plan is TakeOrderedAndProject — each partition keeps
-    a size-k heap, the driver merges heaps — so cost is O(n) scan + O(k)
-    driver memory regardless of input size."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    return (
-        df.withColumn("__h", _unit_hash(key, seed))
-        .orderBy("__h")
-        .limit(k)
-        .drop("__h")
-    )
-
-
-def weighted_topk_sample(
-    df: DataFrame, k: int, weight: Column | str, key: Column | str, seed: int = 0
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, k rows (Efraimidis-Spirakis
-    A-ES, 2006): keep the k smallest exponential keys e_i = -ln(u_i)/w_i —
-    equivalent to drawing k rows sequentially with probability proportional
-    to weight, without replacement. u_i is the module's deterministic
-    md5-unit-hash of `key` (UNIQUE per row — the same tie-free contract as
-    reservoir_sample), so the sample is stable across runs, retries and
-    partitionings. ln(e_i) = ln(-ln u_i) - ln w_i = -(ln w_i + Gumbel), so
-    this selects EXACTLY the same rows as Gumbel-top-k over log-weights
-    (dsir_select's resampler) — pinned by test_sampling.
-
-    Rows with weight <= 0 or null are excluded (they can never be drawn).
-    Physical plan is TakeOrderedAndProject: per-partition size-k heaps, one
-    driver merge — O(n) scan, O(k) memory, no shuffle of the data."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    w = F.col(weight) if isinstance(weight, str) else weight
-    u = _unit_hash(key, seed)
-    u = F.least(F.greatest(u, F.lit(1e-15)), F.lit(1.0 - 1e-15))
-    return (
-        df.filter(w.cast("double") > 0)
-        .withColumn("__e", -F.log(u) / w.cast("double"))
-        .orderBy("__e")
-        .limit(k)
-        .drop("__e")
-    )
 
 
 def split_dataset(
@@ -137,19 +78,6 @@ def split_dataset(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = F.lit(names[-1])
     return df.withColumn(split_col, last if expr is None else expr.otherwise(last))
-
-
-def weighted_sample(
-    df: DataFrame, key: Column | str, weight: Column | str, seed: int = 0
-) -> DataFrame:
-    """Per-row deterministic Bernoulli with row-specific keep probability
-    (importance sampling — e.g. keep probability = quality score): keep a
-    row iff its key-hash < its weight. Weights outside [0, 1] are clamped.
-    Same purity guarantees as hash_sample: stable across retries, partitions
-    and engines."""
-    w = F.col(weight) if isinstance(weight, str) else weight
-    bounded = F.least(F.greatest(w.cast("double"), F.lit(0.0)), F.lit(1.0))
-    return df.filter(_unit_hash(key, seed) < bounded)
 
 
 def mixture_rates(
@@ -189,29 +117,6 @@ def mixture_rates(
         g: min((w / wsum) * n_out / counts[g], 1.0) if w > 0 else 0.0
         for g, w in weights.items()
     }
-
-
-def temperature_weights(
-    df: DataFrame, group_col: str, alpha: float = 0.3
-) -> dict[str, float]:
-    """Temperature-scaled (alpha-sampling) mixture weights: w_g
-    proportional to n_g ** alpha — the multilingual rebalancing scheme of
-    mBERT / XLM-R (Conneau et al. 2020): alpha=1 keeps the empirical
-    mix, alpha=0 is uniform, the usual 0.2-0.7 range upweights tail
-    groups without drowning the head. Returns a weights mapping for
-    mixture_rates / mixture_resample, normalized to sum 1. One tiny
-    per-group count aggregate (n_groups rows collected)."""
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    counts = {
-        r[group_col]: r["n"]
-        for r in df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not counts:
-        raise ValueError("temperature_weights: empty input")
-    raw = {g: float(n) ** alpha for g, n in counts.items()}
-    total = sum(raw.values())
-    return {g: v / total for g, v in raw.items()}
 
 
 def cap_per_group(
@@ -391,34 +296,6 @@ def _dsir_smoothed_dist(spark, counts: DataFrame, name: str, dim: int,
     )
 
 
-def dsir_log_ratios(
-    raw: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 1024,
-    smoothing: float = 1.0,
-) -> DataFrame:
-    """(bucket, log_ratio): ln p_target(bucket) - ln q_raw(bucket) under
-    Laplace-smoothed bag-of-hashed-ngrams models. Two dim-bounded
-    aggregates (one per corpus); the result is a `dim`-row broadcastable
-    table."""
-    spark = raw.sparkSession
-
-    def counts(df: DataFrame) -> DataFrame:
-        return (
-            hashed_ngram_buckets(df, text_col, id_col, dim)
-            .groupBy("bucket")
-            .agg(F.sum("cnt").alias("c"))
-        )
-
-    p = _dsir_smoothed_dist(spark, counts(target), "lp", dim, smoothing)
-    q = _dsir_smoothed_dist(spark, counts(raw), "lq", dim, smoothing)
-    return p.join(q, "bucket").select(
-        "bucket", (F.col("lp") - F.col("lq")).alias("log_ratio")
-    )
-
-
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame | None,
@@ -506,31 +383,3 @@ def dsir_weights(
     )
 
 
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 1024,
-    smoothing: float = 1.0,
-    seed: int = 0,
-) -> DataFrame:
-    """Top-k DSIR selection with Gumbel-top-k resampling (the paper's
-    sampling-without-replacement): key = logw + Gumbel(hash(id, seed)) —
-    deterministic (hash noise, not rand()), distributed (TakeOrdered
-    per-partition heaps, no global sort). seed=None semantics are NOT
-    offered: reproducibility is the point of this module."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    w = dsir_weights(raw, target, text_col, id_col, dim, smoothing)
-    u = _unit_hash(F.col(id_col), seed)
-    # clamp away 0/1 so ln never sees them (Spark ln(0) -> null)
-    u = F.least(F.greatest(u, F.lit(1e-15)), F.lit(1.0 - 1e-15))
-    gumbel = -F.log(-F.log(u))
-    return (
-        w.withColumn("__key", F.col("dsir_logw") + gumbel)
-        .orderBy(F.col("__key").desc(), F.col(id_col))
-        .limit(k)
-        .drop("__key")
-    )

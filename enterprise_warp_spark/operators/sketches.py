@@ -260,69 +260,6 @@ def bloom_probe(
     return probed.withColumn(out_col, F.expr(hit)).drop("__bw", "__h1", "__h2")
 
 
-def bloom_probe_join(
-    df: DataFrame,
-    col: str,
-    bloom: DataFrame,
-    m_bits: int,
-    k: int = 5,
-    out_col: str = "maybe_member",
-) -> DataFrame:
-    """The broadcast-join form of bloom_probe, for filters too large to
-    inline as a plan literal (the shape bloom_probe's guard points to):
-    explode the k probe positions, broadcast-join the <= m_bits/64-row
-    word table on word_idx, and AND the bit tests back per key. Same
-    result column as bloom_probe; scales to arbitrarily large m_bits
-    (the word table rides the broadcast, never the plan). Requires the
-    values of `col` to be DISTINCT in df — they are the join-back key
-    (pre-aggregate first otherwise)."""
-    if m_bits % 64 != 0 or m_bits <= 0:
-        raise ValueError(f"m_bits must be a positive multiple of 64, got {m_bits}")
-    if not 1 <= k <= 8:
-        # same bound as bloom_build: h1 + 7*h2 < 8*2^60 = 2^63; beyond it
-        # the position arithmetic overflows long and negative positions
-        # would read as definite misses — bloom FALSE NEGATIVES
-        raise ValueError(f"k must be in [1, 8], got {k}")
-    h1, h2 = _bloom_h1_h2(F.col(col))
-    pos = (
-        df.select(F.col(col).alias("__key"), h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "__key",
-            F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__j"),
-            "__h1",
-            "__h2",
-        )
-        .select(
-            "__key",
-            ((F.col("__h1") + F.col("__j") * F.col("__h2")) % m_bits).alias(
-                "__pos"
-            ),
-        )
-        .select(
-            "__key",
-            F.expr("__pos div 64").alias("word_idx"),
-            F.expr("cast(__pos % 64 as int)").alias("__bit"),
-        )
-    )
-    hit = (
-        pos.join(
-            F.broadcast(bloom.select("word_idx", "word")), "word_idx", "left"
-        )
-        # an absent word row means those 64 bits are all zero
-        .groupBy("__key")
-        .agg(
-            F.min(
-                F.coalesce(
-                    F.expr("((word >> __bit) & 1) = 1"), F.lit(False)
-                )
-            ).alias(out_col)  # min over booleans = AND of the k bit tests
-        )
-    )
-    return df.join(
-        hit, df[col] == hit["__key"], "left"
-    ).drop("__key")
-
-
 def kmv_distinct_by(
     df: DataFrame, group: str, col: str, k: int = 64
 ) -> DataFrame:
@@ -351,9 +288,10 @@ def kmv_distinct_by(
 def kmv_kept(df: DataFrame, group: str, col: str, k: int) -> DataFrame:
     """The KMV sketch STATE: per `group`, the k smallest distinct 60-bit
     portable hashes of `col` -> (group, __h). Public because this is the
-    mergeable unit — per-micro-batch kept tables union + kmv_rekept into
-    an identical global sketch (the global k smallest are each among
-    their own batch's k smallest, so the merge is EXACT, not approximate)."""
+    mergeable unit — the k smallest distinct hashes of a union of
+    per-micro-batch kept tables are an identical global sketch (the global
+    k smallest are each among their own batch's k smallest, so the merge
+    is EXACT, not approximate)."""
     from pyspark.sql import Window
 
     h = (
@@ -377,26 +315,11 @@ def kmv_kept(df: DataFrame, group: str, col: str, k: int) -> DataFrame:
     )
 
 
-def kmv_rekept(kept: DataFrame, group: str, k: int) -> DataFrame:
-    """MERGE step: any union of kept tables (already-hashed (group, __h)
-    rows, duplicates allowed) -> the k smallest distinct per group. Runs
-    in sketch space (batches x G x k rows in, G x k out)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group).orderBy("__h")
-    return (
-        kept.distinct()
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(group, "__h")
-    )
-
-
 def kmv_estimate_from_kept(kept: DataFrame, group: str, k: int) -> DataFrame:
     """(group, __h) kept table -> (group, n_kept, kth_hash, kmv_distinct):
     the Beyer et al. unbiased estimator (k-1)/u_(k), exact below
     saturation. Same output schema whether the sketch came from one batch
-    pass (kmv_distinct_by) or a streamed kmv_rekept merge."""
+    pass (kmv_distinct_by) or a merge of batch kept tables."""
     two60 = float(1 << 60)
     return kept.groupBy(group).agg(
         F.count(F.lit(1)).alias("n_kept"),

@@ -18,9 +18,7 @@
     lm          add-k unigram LM training + per-doc perplexity scoring
     redact      email/URL/IP/number scrubbing with audit counts
     cdc         content-defined chunking dedup for binary media: gear-hash
-                chunker, chunk-share pairs, savings ratio, exactly-once
-                streaming content-addressed store (bloom-probed, manifests,
-                bit-identical restore, replay-safe compaction)
+                chunker, chunk-share pairs, savings ratio
 
 All hot paths are Catalyst expressions (portable 64-bit md5-derived hashes,
 higher-order array functions) — no Python UDFs. Each operator is exposed as a

@@ -307,563 +307,6 @@ def chunk_dedup_pairs(
     )
 
 
-def probe_novel_chunks(
-    chunks: DataFrame,
-    store_path: str,
-    exclude_epoch: int | None = None,
-    bloom_path: str | None = None,
-) -> DataFrame:
-    """Distinct chunks of a batch not yet in the persisted chunk store:
-    (bucket, chunk_hash, length, instances, instance_bytes), where
-    instances/instance_bytes count the batch's occurrences (novel or not
-    — the caller derives batch totals from this one aggregate without
-    re-chunking payloads).
-
-    The store is parquet partitioned by (__epoch, bucket) with
-    bucket = the hash's first byte: the anti-join is an equi-join on
-    (bucket, chunk_hash) — O(batch + store-probe), never all-pairs —
-    and per-bucket layout keeps compaction and bloom-driven pruning
-    local to 256 independent directories. exclude_epoch ignores the
-    batch's own (possibly partially written) epoch during a crash
-    replay — same contract as incremental_minhash_filter.
-
-    bloom_path (written by update_store_bloom) removes the O(store) scan
-    from the steady state: see _probe_store."""
-    return _probe_store(
-        _per_hash(chunks), store_path, exclude_epoch, bloom_path
-    )
-
-
-def _per_hash(chunks: DataFrame) -> DataFrame:
-    return (
-        chunks.groupBy("chunk_hash")
-        .agg(
-            F.max("length").alias("length"),
-            F.count("*").alias("instances"),
-            F.sum("length").alias("instance_bytes"),
-        )
-        .withColumn("bucket", F.substring("chunk_hash", 1, 2))
-    )
-
-
-def _anti_store(
-    per: DataFrame, store_path: str, exclude_epoch: int | None
-) -> DataFrame:
-    from enterprise_warp_spark.pipeline.dedup import _readable_parquet
-
-    store = _readable_parquet(per.sparkSession, store_path)
-    if store is None:
-        return per
-    if exclude_epoch is not None and "__epoch" in store.columns:
-        store = store.filter(F.col("__epoch") != int(exclude_epoch))
-    return per.join(
-        store.select("bucket", "chunk_hash"),
-        ["bucket", "chunk_hash"],
-        "left_anti",
-    )
-
-
-def update_store_bloom(
-    spark,
-    store_path: str,
-    bloom_path: str,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> int:
-    """(Re)build the store's membership bloom — the structure that lets
-    the steady-state probe skip the store scan (see _probe_store). The
-    filter covers every hash in the store AT BUILD TIME and records the
-    covering watermark `max_epoch`; probes treat later epochs as
-    uncovered and anti-join just that (partition-pruned, small) slice,
-    so a STALE bloom costs speed, never correctness.
-
-    MUST be re-run after compact_chunk_store (compaction folds
-    post-watermark epochs into base epoch -1, which probes treat as
-    covered) — compact_chunk_store(bloom_path=...) does both in order.
-    Returns the number of hashes covered. The filter itself is the
-    mergeable portable-md5 bloom of operators/sketches.py; at the
-    default m_bits=2^20 it holds ~10^5 hashes at ~1% false-positive
-    rate — size m_bits to the store (false positives only cost verify
-    joins; production stores shard the filter per bucket and raise
-    m_bits, the same scaling story as every sketch in the module)."""
-    from enterprise_warp_spark.operators.sketches import bloom_build
-
-    store = spark.read.parquet(store_path)
-    wm_row = store.agg(
-        F.max("__epoch").alias("wm"), F.count("*").alias("n")
-    ).first()
-    # empty-but-readable store: nothing to cover; watermark -1 makes every
-    # future epoch "recent" (verified by its own anti-join)
-    wm = -1 if wm_row["wm"] is None else int(wm_row["wm"])
-    bloom = _pad_bloom(
-        spark, bloom_build(store.select("chunk_hash"), "chunk_hash", m_bits, k)
-    )
-    (
-        bloom.withColumn("m_bits", F.lit(m_bits))
-        .withColumn("k", F.lit(k))
-        .withColumn("max_epoch", F.lit(wm))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(bloom_path)
-    )
-    spark.catalog.refreshByPath(bloom_path)
-    return int(wm_row["n"])
-
-
-def _merge_bloom(
-    spark,
-    novel: DataFrame,
-    store_path: str,
-    bloom_path: str,
-    epoch_id: int,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> None:
-    """Fold a batch's novel hashes into the persisted bloom and advance
-    the watermark. Idempotent under crash replay: bit_or re-merging the
-    same hashes is a no-op, and the watermark takes the max. A crash
-    mid-write leaves the path without readable data files, which probes
-    treat as 'no bloom' and fall back to the full anti-join — stale or
-    absent blooms cost speed, never correctness.
-
-    When NO readable bloom exists (first epoch, bloom enabled on a
-    pre-existing store, or recovery after a torn bloom write), the
-    filter is rebuilt from the WHOLE store — stamping this epoch's
-    watermark over a batch-only filter would un-cover every earlier
-    epoch and let already-stored hashes re-enter as 'definite misses'."""
-    from enterprise_warp_spark.operators.sketches import bloom_build
-    from enterprise_warp_spark.pipeline.dedup import _readable_parquet
-
-    existing = _readable_parquet(spark, bloom_path)
-    if existing is None:
-        update_store_bloom(spark, store_path, bloom_path, m_bits, k)
-        return
-    meta = existing.select("m_bits", "k", "max_epoch").first()
-    m_bits, k = int(meta["m_bits"]), int(meta["k"])
-    wm = max(int(meta["max_epoch"]), int(epoch_id))
-    words = _pad_bloom(
-        spark,
-        existing.select("word_idx", "word").unionByName(
-            bloom_build(novel.select("chunk_hash"), "chunk_hash", m_bits, k)
-        ),
-    )
-    out = (
-        words.withColumn("m_bits", F.lit(m_bits))
-        .withColumn("k", F.lit(k))
-        .withColumn("max_epoch", F.lit(wm))
-        .coalesce(1)
-        .localCheckpoint(eager=True)  # materialize BEFORE overwriting the source
-    )
-    out.write.mode("overwrite").parquet(bloom_path)
-    spark.catalog.refreshByPath(bloom_path)
-
-
-def _pad_bloom(spark, words: DataFrame) -> DataFrame:
-    """Re-aggregate a word table with a guaranteed (word_idx=0, word=0)
-    row: an all-zero word is a no-op for every probe form, and it keeps
-    the persisted table non-empty so the per-row meta columns
-    (m_bits/k/max_epoch) always survive — a zero-hash store would
-    otherwise write a rowless bloom whose metadata is unreadable."""
-    zero = spark.createDataFrame([(0, 0)], "word_idx long, word long")
-    return (
-        words.unionByName(zero)
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-
-
-def _probe_store(
-    per: DataFrame,
-    store_path: str,
-    exclude_epoch: int | None,
-    bloom_path: str | None,
-) -> DataFrame:
-    """Split the batch's distinct hashes against the store without
-    scanning it when a bloom is available:
-
-    - bloom definite-miss -> novel with NO store lookup (bloom false
-      negatives are impossible);
-    - bloom maybe-hit (true dups + ~1% false positives) -> verified by
-      an anti-join against ONLY the covered store slice in the
-      suspects' own buckets (driver collects <= 256 bucket strings —
-      metadata, not data — so partition pruning is literal);
-    - epochs newer than the bloom's watermark are uncovered -> one
-      anti-join against that partition-pruned (small) slice for ALL
-      candidates.
-
-    Steady-state per-batch store IO is therefore O(suspect buckets +
-    post-watermark epochs), not O(store)."""
-    from enterprise_warp_spark.operators.sketches import bloom_probe_join
-    from enterprise_warp_spark.pipeline.dedup import _readable_parquet
-
-    if bloom_path is None:
-        return _anti_store(per, store_path, exclude_epoch)
-    spark = per.sparkSession
-    bloom = _readable_parquet(spark, bloom_path)
-    if bloom is None:
-        return _anti_store(per, store_path, exclude_epoch)
-    store = _readable_parquet(spark, store_path)
-    if store is None:
-        return per
-    if "__epoch" not in store.columns:
-        # a store without epoch provenance can't support the watermark
-        # split; degrade to the plain anti-join (speed, not correctness)
-        return _anti_store(per, store_path, exclude_epoch)
-    if exclude_epoch is not None:
-        store = store.filter(F.col("__epoch") != int(exclude_epoch))
-    meta = bloom.select("m_bits", "k", "max_epoch").first()
-    # the JOIN form of the probe: the word table rides a broadcast, so
-    # m_bits can be sized to the store without bloating the plan (the
-    # inline-literal bloom_probe is quadratic-feeling past ~2^16 bits —
-    # the literal array is materialized per ROW); per-hash rows are
-    # distinct by construction, satisfying the join-back contract
-    flagged = bloom_probe_join(
-        per,
-        "chunk_hash",
-        bloom.select("word_idx", "word"),
-        int(meta["m_bits"]),
-        int(meta["k"]),
-        out_col="__maybe",
-    ).localCheckpoint(eager=True)
-    # ^ the probe is consumed three times (bucket collect + both result
-    # branches); without pinning it, each consumer would re-run the
-    # upstream per-hash aggregate — and, in batch mode, the payload
-    # chunking itself, the most expensive stage of the whole flow
-    suspects = flagged.filter(F.col("__maybe")).drop("__maybe")
-    definite = flagged.filter(~F.col("__maybe")).drop("__maybe")
-    buckets = [
-        r["bucket"] for r in suspects.select("bucket").distinct().collect()
-    ]
-    wm = int(meta["max_epoch"])
-    covered = store.filter(
-        (F.col("__epoch") <= wm) & F.col("bucket").isin(buckets)
-    )
-    verified = suspects.join(
-        covered.select("bucket", "chunk_hash"),
-        ["bucket", "chunk_hash"],
-        "left_anti",
-    )
-    recent = store.filter(F.col("__epoch") > wm)
-    return definite.unionByName(verified).join(
-        recent.select("bucket", "chunk_hash"),
-        ["bucket", "chunk_hash"],
-        "left_anti",
-    )
-
-
-def chunk_payloads(
-    media: DataFrame,
-    chunks: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """One exemplar byte-slice per distinct chunk hash:
-    (chunk_hash, length, payload). Entirely JVM-side: the exemplar
-    location is a min-struct aggregate over the (metadata-only) chunk
-    table, and the bytes come from `substring` on the media payload —
-    chunk bytes are shuffled once per DISTINCT hash, never once per
-    occurrence."""
-    ex = (
-        chunks.groupBy("chunk_hash")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col(id_col).alias("mid"),
-                    F.col("offset").alias("off"),
-                    F.col("length").alias("len"),
-                )
-            ).alias("ex")
-        )
-        .select(
-            "chunk_hash",
-            F.col("ex.mid").alias("__mid"),
-            F.col("ex.off").alias("__off"),
-            F.col("ex.len").alias("__len"),
-        )
-    )
-    return (
-        ex.join(
-            media.select(F.col(id_col).alias("__mid"), payload_col), "__mid"
-        )
-        .select(
-            "chunk_hash",
-            F.col("__len").alias("length"),
-            F.expr(
-                f"substring({payload_col}, __off + 1, __len)"
-            ).alias("payload"),
-        )
-    )
-
-
-def reconstruct_media(
-    manifests: DataFrame,
-    store: DataFrame,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Restore path of the content-addressed store: manifests
-    (id, chunk_idx, chunk_hash) join the byte store (chunk_hash, payload)
-    and each media's chunks concatenate back in order ->
-    (id, payload), bit-identical to the original ingest. The join is a
-    plain equi-join on chunk_hash; assembly is one applyInPandas group
-    per media (a media's bytes must fit one task — the same contract as
-    chunking it did). A manifest chunk with NO store row (manifests
-    committed before a crashed store write, a lost bucket file) raises
-    instead of silently returning a truncated payload — the join is
-    LEFT so the gap is visible to the kernel."""
-    import pandas as pd
-
-    id_type = dict(manifests.dtypes)[id_col]
-    j = manifests.select(id_col, "chunk_idx", "chunk_hash").join(
-        store.select("chunk_hash", "payload").dropDuplicates(["chunk_hash"]),
-        "chunk_hash",
-        "left",
-    )
-
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("chunk_idx")
-        missing = pdf["payload"].isna()
-        if missing.any():
-            raise ValueError(
-                f"reconstruct_media: media {pdf[id_col].iloc[0]!r} has "
-                f"{int(missing.sum())} manifest chunk(s) absent from the "
-                "store (first hash "
-                f"{pdf.loc[missing, 'chunk_hash'].iloc[0]}) — store and "
-                "manifests are out of sync; refusing to emit a truncated "
-                "payload"
-            )
-        return pd.DataFrame(
-            {
-                id_col: [pdf[id_col].iloc[0]],
-                "payload": [b"".join(bytes(x) for x in pdf["payload"])],
-            }
-        )
-
-    return j.groupBy(id_col).applyInPandas(
-        kernel, f"{id_col} {id_type}, payload binary"
-    )
-
-
-def chunk_store_stream(
-    media_stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    stats_path: str | None = None,
-    manifest_path: str | None = None,
-    store_payloads: bool = False,
-    bloom_path: str | None = None,
-    bloom_m_bits: int = 1 << 20,
-    bloom_k: int = 5,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    min_size: int = 256,
-    avg_size: int = 1024,
-    max_size: int = 4096,
-):
-    """Streaming content-addressed chunk-store ingest: each micro-batch of
-    media is CDC-chunked, probed against everything already stored, and
-    only NOVEL chunk hashes land — so a blob that streamed in an hour ago
-    already deduplicates today's re-uploads at chunk granularity. The
-    binary-media analog of streaming/corpus.dedup_corpus_stream, with the
-    same exactly-once contract: the probe EXCLUDES the batch's own epoch
-    and both writes are epoch-keyed dynamic-partition OVERWRITES, so any
-    crash replay converges to the identical store (see that module's
-    docstring for the crash analysis).
-
-    Per-batch work is O(batch chunks + store probe); nothing rescans
-    payload bytes already ingested. stats_path (optional) accumulates one
-    row per epoch — (ingested_bytes, stored_bytes, novel_chunks,
-    total_chunks) — the dedup-ratio-over-time series a storage operator
-    monitors.
-
-    OWNERSHIP: one stream (one checkpoint) owns a store. Epoch ids come
-    from the checkpoint, so a second stream — or a fresh checkpoint over
-    NEW source content — re-issues epoch ids whose dynamic-partition
-    overwrites REPLACE the prior owner's partitions and lose chunks. The
-    replay contract covers re-processing the SAME input through a fresh
-    checkpoint (identical epochs rewrite identical content), never
-    sharing a store between different inputs; fan multiple sources into
-    one stream with union, not into one store with two streams. An
-    epoch-collision guard enforces this: a batch refuses (before any
-    write) to overwrite an epoch holding chunks it did not produce.
-
-    bloom_path keeps a persisted membership bloom fresh alongside the
-    store (merged per epoch, watermarked): steady-state probes then skip
-    the store scan for bloom-definite-miss chunks and verify only
-    suspects against bucket-pruned slices — per-batch store IO stops
-    growing with the corpus (see _probe_store / update_store_bloom).
-    Size bloom_m_bits to the EXPECTED store (~10 bits per distinct chunk
-    for ~1% false positives; it is fixed at first build): a saturating
-    bloom costs speed, never correctness — measured at 2x-over-capacity,
-    FPR ~13% turned ~13% of each batch into suspect verifies and
-    per-batch wall crept 7.4 -> 12.9 s over 10 epochs (PERF.md r14).
-
-    store_payloads=True turns the hash INDEX into a full content-
-    addressed STORE: novel chunks land with their exemplar byte slice,
-    and manifest_path (required then, epoch-partitioned
-    (id, chunk_idx, chunk_hash, length)) records each media's chunk
-    sequence — `reconstruct_media(manifests, store)` restores any
-    ingested payload bit-identically while re-uploaded content occupies
-    store space only once."""
-    from enterprise_warp_spark.maintenance import upsert_partitions
-
-    if store_payloads and manifest_path is None:
-        raise ValueError(
-            "store_payloads=True without manifest_path would store bytes "
-            "nothing can reconstruct from — pass manifest_path"
-        )
-
-    def _one_batch(batch: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
-        ch = cdc_chunks(
-            batch, payload_col, id_col, min_size, avg_size, max_size
-        )
-        if manifest_path is not None:
-            # manifests are metadata-scale (one row per chunk, no bytes);
-            # checkpointing them also pins the chunking to run ONCE
-            ch = ch.localCheckpoint(eager=True)
-        # chunk the payloads EXACTLY ONCE: the per-hash aggregate is
-        # checkpointed and reused for the probe, the store write, and
-        # both stats rows (instances/instance_bytes carry batch totals)
-        per = _per_hash(ch).localCheckpoint(eager=True)
-        novel = _probe_store(
-            per, store_path, eid, bloom_path
-        ).localCheckpoint(eager=True)
-        # epoch-collision guard, BEFORE any write: a legit crash replay's
-        # novel set is a SUPERSET of its own (possibly partial) prior
-        # epoch-N rows, so rows in epoch N that this batch cannot explain
-        # mean a DIFFERENT input is re-using the epoch id (second stream
-        # / fresh checkpoint over new content — see OWNERSHIP above). The
-        # check is one partition-pruned anti-join against a single epoch:
-        # empty (and free) on every normal first-write batch.
-        from enterprise_warp_spark.pipeline.dedup import _readable_parquet
-
-        existing = _readable_parquet(batch.sparkSession, store_path)
-        if existing is not None and "__epoch" in existing.columns:
-            foreign = (
-                existing.filter(F.col("__epoch") == eid)
-                .select("bucket", "chunk_hash")
-                .join(
-                    novel.select("bucket", "chunk_hash").unionByName(
-                        # a replay's non-novel hashes (already stored in
-                        # OTHER epochs via this same input) can't appear
-                        # in epoch N, so novel alone is the right bound
-                        per.select("bucket", "chunk_hash")
-                    ),
-                    ["bucket", "chunk_hash"],
-                    "left_anti",
-                )
-            )
-            if foreign.take(1):
-                raise ValueError(
-                    f"chunk_store_stream: store epoch {eid} already holds "
-                    "chunks this batch did not produce — a different input "
-                    "is re-using this epoch id (second stream on one "
-                    "store, or a fresh checkpoint over new content). One "
-                    "checkpoint owns a store; union sources upstream. "
-                    "Refusing to overwrite the prior owner's partitions."
-                )
-        if manifest_path is not None:
-            upsert_partitions(
-                ch.withColumn("__epoch", F.lit(eid)),
-                manifest_path,
-                ["__epoch"],
-            )
-        if novel.take(1):
-            write = novel.select("bucket", "chunk_hash", "length")
-            if store_payloads:
-                write = write.join(
-                    chunk_payloads(
-                        batch, ch, payload_col, id_col
-                    ).select("chunk_hash", "payload"),
-                    "chunk_hash",
-                )
-            upsert_partitions(
-                write.withColumn("__epoch", F.lit(eid)),
-                store_path,
-                ["__epoch", "bucket"],
-            )
-            batch.sparkSession.catalog.refreshByPath(store_path)
-            if bloom_path is not None:
-                # AFTER the store write: a crash in between leaves the
-                # bloom stale (watermark short), which probes handle
-                _merge_bloom(
-                    batch.sparkSession, novel, store_path, bloom_path, eid,
-                    m_bits=bloom_m_bits, k=bloom_k,
-                )
-        if stats_path is not None:
-            tot = per.agg(
-                F.coalesce(F.sum("instance_bytes"), F.lit(0)).alias(
-                    "ingested_bytes"
-                ),
-                F.coalesce(F.sum("instances"), F.lit(0)).alias(
-                    "total_chunks"
-                ),
-            )
-            nov = novel.agg(
-                F.coalesce(F.sum("length"), F.lit(0)).alias("stored_bytes"),
-                F.count("*").alias("novel_chunks"),
-            )
-            upsert_partitions(
-                tot.crossJoin(nov).withColumn("__epoch", F.lit(eid)),
-                stats_path,
-                ["__epoch"],
-            )
-
-    return (
-        media_stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_chunk_store(
-    spark, store_path: str, bloom_path: str | None = None
-) -> int:
-    """Fold every epoch partition of a chunk store into the reserved base
-    epoch -1, one file per bucket — the OPTIMIZE step for small-file
-    buildup from long-running streaming ingest (each micro-batch writes
-    up to 256 bucket files).
-
-    REPLAY-SAFE by construction: a crash-replayed micro-batch probes the
-    store excluding only ITS OWN epoch id; compacted rows live in epoch
-    -1, so the replay still sees every previously stored hash, finds
-    nothing novel, and writes nothing — compaction can run at any time,
-    including between a crash and its replay. Returns the distinct chunk
-    count.
-
-    When the ingest uses a bloom, pass bloom_path here: compaction moves
-    post-watermark rows into epoch -1 (which probes treat as covered),
-    so the bloom MUST be rebuilt in the same maintenance step — this
-    function does it after the fold."""
-    df = spark.read.parquet(store_path)
-    value_cols = [c for c in df.columns if c not in ("bucket", "chunk_hash", "__epoch")]
-    per = (
-        df.groupBy("bucket", "chunk_hash")
-        # defensive max: rows for one hash are identical by the ingest
-        # contract, so any deterministic pick works
-        .agg(*[F.max(c).alias(c) for c in value_cols])
-        .withColumn("__epoch", F.lit(-1))
-        .repartition(F.col("bucket"))
-        .localCheckpoint(eager=True)  # materialize BEFORE overwriting the source
-    )
-    n = per.count()
-    per.write.mode("overwrite").partitionBy("__epoch", "bucket").parquet(
-        store_path
-    )
-    spark.catalog.refreshByPath(store_path)
-    if bloom_path is not None:
-        from enterprise_warp_spark.pipeline.dedup import _readable_parquet
-
-        old = _readable_parquet(spark, bloom_path)
-        kw = {}
-        if old is not None:  # keep the operator's chosen sizing
-            meta = old.select("m_bits", "k").first()
-            kw = {"m_bits": int(meta["m_bits"]), "k": int(meta["k"])}
-        update_store_bloom(spark, store_path, bloom_path, **kw)
-    return n
-
-
 def chunk_savings(chunks: DataFrame) -> DataFrame:
     """Corpus dedup ratio for a content-addressed chunk store: one row
     (total_bytes, unique_bytes, dedup_ratio). unique_bytes counts each

@@ -14,11 +14,11 @@ Spark-first shape:
 - Training is `pyspark.ml.classification.LogisticRegression` — MLlib's
   distributed L-BFGS: each iteration is one map-reduce gradient aggregate
   over the executors, so a 100 TB labeled set trains without any driver
-  materialization (in practice you train on a `hash_sample` of labeled
-  data and SCORE the full corpus).
+  materialization (in practice you train on a sample of labeled data and
+  SCORE the full corpus).
 - Scoring (`score_quality`) is a pure JVM transform chain; the output
-  probability column composes with `weighted_sample` in
-  `operators/sampling.py` for probability-proportional keep decisions.
+  probability column is a per-document keep probability for downstream
+  sampling.
 
 Everything here is public MLlib API; no reference-repo counterpart exists
 (the reference has no text pipeline) — this is part of the training-data

@@ -137,73 +137,3 @@ def strip_contaminated_spans(
     )
 
 
-def semantic_contamination(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.95,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Embedding-level decontamination (the complement to the n-gram gate:
-    paraphrased or reformatted benchmark leakage shares no 8-gram but
-    sits at high cosine) -> corpus rows + (max_eval_cosine double,
-    contaminated boolean).
-
-    Scale shape mirrors the n-gram op's doctrine: the EVAL side is tiny —
-    its embedding matrix is collected once and broadcast; a batched Arrow
-    kernel computes each corpus vector's max cosine against all of it in
-    one BLAS product per batch (corpus x |eval| FLOPs, map-only, no
-    shuffle, no corpus x eval rows). Determinism: cosine rounded at 6
-    before the threshold compare (the module-standard round-6 doctrine),
-    ties irrelevant (max). Raises if the eval table is empty — silently
-    'clean' would be the worst possible failure mode."""
-    import numpy as np
-    import pandas as pd
-
-    from enterprise_warp_spark.pipeline.similarity import _with_norm_sq
-
-    evals = _with_norm_sq(eval_emb, emb_col, id_col).collect()
-    if not evals:
-        raise ValueError("semantic_contamination: empty eval set")
-    E = np.stack([np.asarray(r[emb_col], dtype=np.float64) for r in evals])
-    en = np.sqrt(np.array([float(r["nsq"]) for r in evals]))
-    spark = corpus_emb.sparkSession
-    b = spark.sparkContext.broadcast((E, en))
-    n = _with_norm_sq(corpus_emb, emb_col, id_col)
-    out_schema = ", ".join(f"{c} {t}" for c, t in n.dtypes) + (
-        ", max_eval_cosine double, contaminated boolean"
-    )
-
-    def kernel(batches):
-        Em, enorm = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf[emb_col].to_numpy()).astype(np.float64)
-            cn = np.sqrt(pdf["nsq"].to_numpy(dtype=np.float64))
-            denom = np.outer(cn, enorm)
-            denom[denom == 0.0] = np.inf  # zero vectors: cosine 0, clean
-            mx = np.round((C @ Em.T) / denom, 6).max(axis=1)
-            res = pdf.copy()
-            res["max_eval_cosine"] = mx
-            res["contaminated"] = mx >= threshold
-            yield res
-
-    return n.mapInPandas(kernel, out_schema)
-
-
-def semantic_decontaminate(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.95,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Corpus rows with every semantic near-match of the eval set dropped
-    (the filtering face of semantic_contamination)."""
-    flagged = semantic_contamination(
-        corpus_emb, eval_emb, threshold, emb_col, id_col
-    )
-    return flagged.filter(~F.col("contaminated")).drop(
-        "max_eval_cosine", "contaminated", "nsq"
-    )

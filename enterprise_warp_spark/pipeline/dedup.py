@@ -472,96 +472,6 @@ def cluster_keep_list(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id")
     )
 
 
-def cluster_best_keep_list(
-    docs: DataFrame,
-    pairs: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Docs surviving transitive dedup keeping the BEST-scoring member of
-    each connected component (highest `score_col`, ties to the lowest
-    id), plus every doc in no pair at all — the production variant of
-    cluster_keep_list (pipelines keep the longest / highest-quality
-    duplicate, not the lowest-id one; `score_col` is any column of
-    `docs`: quality_score, n_tokens, ...).
-
-    Shape: the same O(log diameter) component propagation, then ONE rank
-    window partitioned by component over only the paired docs (component
-    tables are pair-bounded, not corpus-bounded) and a broadcast-able
-    anti-join of the losers back against the corpus."""
-    from pyspark.sql import Window
-
-    comp = connected_components(pairs)
-    scored = comp.join(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(score_col).alias("__s")),
-        "doc_id",
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.col("__s").desc(), F.col("doc_id")
-    )
-    losers = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") > 1)
-        .select("doc_id")
-    )
-    return docs.join(
-        losers.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )
-
-
-def simhash_pairs_multiprobe(
-    df: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_tables: int = 4,
-    table_bits: int = 8,
-) -> DataFrame:
-    """SimHash near-dup pairs with FULL recall up to `max_hamming`, via
-    bucket-bit rotation (the multi-pass scheme single-probe simhash_pairs
-    documents but does not run).
-
-    Pigeonhole guarantee: split the 32 fingerprint bits into `n_tables`
-    contiguous tables of `table_bits` bits. Two fingerprints within hamming
-    distance h < n_tables must agree EXACTLY on at least one table — so
-    probing every table (equi-join on that table's bit slice) finds every
-    such pair; hamming is then verified exactly. With the defaults any pair
-    at distance <= 3 is guaranteed caught (and most farther pairs are too).
-
-    Scale: n_tables equi-joins on ~2^table_bits-cardinality keys, unioned
-    then distinct-verified — the same banded-join shape as MinHash-LSH,
-    never an all-pairs scan. Cost scales linearly in n_tables; recall
-    guarantees grow with it (n_tables > max_hamming is the invariant,
-    asserted here).
-    """
-    if n_tables * table_bits > 32:
-        raise ValueError("n_tables * table_bits must fit the 32-bit fingerprint")
-    if n_tables <= max_hamming:
-        raise ValueError(
-            f"pigeonhole needs n_tables > max_hamming ({n_tables} <= {max_hamming})"
-        )
-    sh = simhash(df, text_col).localCheckpoint(eager=True)  # fingerprint once
-    mask = (1 << table_bits) - 1
-    out = None
-    for t in range(n_tables):
-        key = F.expr(f"shiftright(simhash, {t * table_bits}) & {mask}")
-        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"),
-                      key.alias("bucket"))
-        b = sh.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"),
-                      key.alias("bucket"))
-        cand = (
-            a.join(b, "bucket")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "sim_a", "sim_b")
-        )
-        out = cand if out is None else out.unionByName(cand)
-    return (
-        out.distinct()
-        .withColumn("hamming", F.expr("bit_count(sim_a ^ sim_b)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Span-level repeated-substring dedup (the ExactSubstr family: published
 # web-corpus pipelines remove substrings of >= k tokens that occur more than
@@ -652,21 +562,6 @@ def repeated_ngram_spans(
     )
 
 
-def strip_repeated_spans(
-    df: DataFrame, text_col: str = "text", k: int = 8, min_count: int = 2
-) -> DataFrame:
-    """Remove every duplicated span's tokens from every document (the
-    ExactSubstr removal step applied to all occurrences) ->
-    (doc_id, cleaned_text, n_removed_tokens).
-
-    Covered positions come from exploding the span ranges (output volume =
-    removed tokens, bounded by corpus size); tokens are re-assembled with a
-    per-document sort_array over (pos, token) structs — no window, one
-    shuffle on doc_id."""
-    spans = repeated_ngram_spans(df, text_col, k, min_count)
-    return _strip_spans(df, spans, text_col)
-
-
 def _strip_spans(df: DataFrame, spans: DataFrame, text_col: str) -> DataFrame:
     """Rebuild each document's text with the given spans' tokens removed.
 
@@ -742,62 +637,6 @@ def _strip_spans(df: DataFrame, spans: DataFrame, text_col: str) -> DataFrame:
             "aggregate(__cov, 0L, (acc, r) -> acc + r.e - r.s + 1L)"
         ).alias("n_removed_tokens"),
     )
-
-
-def incremental_gram_strip(
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    k: int = 8,
-    update_index: bool = True,
-) -> DataFrame:
-    """Incremental ExactSubstr: strip from an ARRIVING batch every span whose
-    k-gram was already seen (persisted gram index at `index_path`) or occurs
-    >= 2 times within the batch, then append the batch's gram hashes to the
-    index. -> (doc_id, cleaned_text, n_removed_tokens) for the batch.
-
-    Continuous-corpus analogue of repeated_ngram_spans, same cost model as
-    incremental_minhash_filter: the probe is a left-semi equi-join of the
-    batch's gram hashes against the index, so per-batch cost is
-    O(batch tokens) regardless of corpus size — no O(corpus) rescan.
-
-    SEEN-SET semantics: the index records every gram hash the pipeline has
-    ever ingested (including grams this call strips), so a third copy of
-    once-stripped boilerplate is still stripped later. Differs from the
-    batch-mode operator exactly the way incremental_minhash_filter differs
-    from lsh_candidate_pairs: the FIRST occurrence, already ingested in an
-    earlier batch, stays intact.
-    """
-    spark = new_docs.sparkSession
-    hashed = _gram_position_hashes(new_docs, text_col, k).localCheckpoint(
-        eager=True
-    )
-
-    dup_in_batch = (
-        hashed.groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("gh")
-    )
-    index = _readable_parquet(spark, index_path)
-    seen = (
-        dup_in_batch.unionByName(index.select("gh")).distinct()
-        if index is not None
-        else dup_in_batch
-    )
-    flagged = hashed.join(seen, "gh", "left_semi").select("doc_id", "pos")
-    # materialize BEFORE the index append: the plan reads index_path
-    out = _strip_spans(new_docs, _spans_from_positions(flagged, k), text_col)
-    out = out.localCheckpoint(eager=True)
-
-    if update_index:
-        new_ghs = hashed.select("gh").distinct()
-        if index is not None:
-            new_ghs = new_ghs.join(index.select("gh"), "gh", "left_anti")
-        if new_ghs.take(1):
-            new_ghs.write.mode("append").parquet(index_path)
-            spark.catalog.refreshByPath(index_path)
-    return out
 
 
 def leakage_safe_splits(

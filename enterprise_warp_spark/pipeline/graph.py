@@ -1,9 +1,9 @@
-"""Link-graph analytics for corpus curation: PageRank + degree signals.
+"""Link-graph analytics for corpus curation: PageRank.
 
 Web-scale curation pipelines (CCNet/Common-Crawl lineage) use link-graph
 authority as a document-quality prior: a page's host PageRank feeds the
 keep/drop decision alongside text heuristics and learned classifiers.
-This module computes those signals with plain DataFrame ops.
+This module computes host PageRank with plain DataFrame ops.
 
 Scale shape:
 
@@ -27,25 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """(node, out_degree, in_degree) for every node appearing in the edge
-    list. Two hash aggregates + one outer join on the node key."""
-    out_d = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
-    in_d = edges.groupBy(F.col(dst).alias("node")).agg(
-        F.count(F.lit(1)).alias("in_degree")
-    )
-    return (
-        out_d.join(in_d, "node", "full_outer")
-        .select(
-            "node",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
-        )
-    )
 
 
 def pagerank(
@@ -141,38 +122,3 @@ def pagerank(
     return ranks.select("node", "rank")
 
 
-def rank_quality_weights(
-    docs: DataFrame,
-    ranks: DataFrame,
-    doc_node_col: str = "source",
-    floor: float = 0.1,
-) -> DataFrame:
-    """Attach a [floor, 1] keep-probability column `rank_weight` derived
-    from each document's node rank (min-max scaled over the observed
-    ranks; unknown nodes get the floor). Composes with weighted_sample
-    for rank-proportional downsampling, the way host-authority priors
-    feed crawl curation."""
-    lo, hi = ranks.agg(F.min("rank"), F.max("rank")).first()
-    if lo is None:
-        raise ValueError("rank_quality_weights: ranks table is empty")
-    if hi == lo:
-        # uniform ranks (single host / regular graph): every KNOWN host is
-        # equally authoritative -> weight 1, distinguishable from the
-        # unknown-host floor
-        scaled = ranks.select(
-            F.col("node").alias(doc_node_col),
-            F.lit(1.0).alias("rank_weight"),
-        )
-    else:
-        scaled = ranks.select(
-            F.col("node").alias(doc_node_col),
-            (
-                F.lit(floor)
-                + F.lit(1.0 - floor) * (F.col("rank") - F.lit(lo)) / F.lit(hi - lo)
-            ).alias("rank_weight"),
-        )
-    # plain equi-join on the node key: host-level rank tables are usually
-    # broadcastable, but page-level ones are not — let AQE pick the side
-    return docs.join(scaled, doc_node_col, "left").withColumn(
-        "rank_weight", F.coalesce("rank_weight", F.lit(float(floor)))
-    )

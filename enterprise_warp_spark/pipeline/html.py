@@ -1,35 +1,19 @@
-"""HTML text extraction + boilerplate removal for web corpora.
+"""HTML text extraction for web corpora.
 
 Raw web crawls are the largest input to any training-data pipeline; the
-standard first transform is markup -> clean text with navigation/footer
-boilerplate dropped. Two tiers, both dependency-free:
-
-* ``strip_tags_catalyst`` — pure-Catalyst regexp chain (script/style/
-  comment blocks out, block tags to newlines, tags stripped, the common
-  named entities decoded). JVM-side and whole-stage-codegen friendly: the
-  right tool when the corpus is mostly-clean markup and throughput is
-  everything. Numeric character references and exotic entities survive
-  undecoded (regexp_replace cannot compute a codepoint) — documented
-  contract, use the full extractor when that matters.
-
-* ``extract_main_text`` — stdlib ``html.parser`` SAX pass inside
-  Arrow-batched mapInPandas (the codec-module execution shape): skips
-  script/style/head/noscript subtrees, emits block boundaries, decodes
-  ALL entities (``convert_charrefs``), tracks per-block anchor-text
-  share, then applies the classic text-density boilerplate rule (keep
-  blocks that are long enough OR mostly non-link text — the heuristic
-  family of Arc90 readability / jusText, public techniques): navigation
-  bars and footers are short and link-dense, article paragraphs are long
-  and link-sparse. Malformed markup never raises — html.parser is
-  error-tolerant by design.
-
-Scale shape: both are map-only (no shuffle, partitioning preserved); the
-Python tier's cost is one SAX parse per document, batched through Arrow.
+standard first transform is markup -> clean text. ``strip_tags_catalyst``
+is a pure-Catalyst regexp chain (script/style/comment blocks out, block
+tags to newlines, tags stripped, the common named entities decoded).
+JVM-side and whole-stage-codegen friendly: map-only (no shuffle,
+partitioning preserved), the right tool when the corpus is mostly-clean
+markup and throughput is everything. Numeric character references and
+exotic entities survive undecoded (regexp_replace cannot compute a
+codepoint) — documented contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # named entities the Catalyst tier decodes (the overwhelmingly common set).
@@ -37,7 +21,7 @@ from pyspark.sql import functions as F
 # "&amp;lt;" into "&lt;" and then a later pass (or downstream consumer)
 # reads it as markup — the standard entity-decoding order unescapes the
 # ampersand only after every other entity has been handled, so "&amp;lt;"
-# yields the literal text "&lt;" (matching html.unescape and the SAX tier).
+# yields the literal text "&lt;" (matching html.unescape).
 _NAMED_ENTITIES = {
     "&lt;": "<", "&gt;": ">", "&quot;": '"',
     "&#39;": "'", "&apos;": "'", "&nbsp;": " ",
@@ -69,244 +53,3 @@ def strip_tags_catalyst(col: Column | str) -> Column:
     c = F.regexp_replace(c, r"^\n+|\n+$", "")
     return F.trim(c)
 
-
-def _parse_blocks(markup: str) -> list[tuple[str, int, int]]:
-    """SAX-parse one document -> [(block_text, n_chars, n_link_chars)]."""
-    from html.parser import HTMLParser
-
-    skip_tags = {"script", "style", "head", "noscript", "template"}
-    block_re = set(_BLOCK_TAGS.split("|"))
-
-    class Extractor(HTMLParser):
-        def __init__(self):
-            super().__init__(convert_charrefs=True)
-            self.blocks: list[tuple[str, int, int]] = []
-            self.buf: list[str] = []
-            self.link_chars = 0
-            self.skip_depth = 0
-            self.a_depth = 0
-
-        def _flush(self):
-            text = "".join(self.buf).strip()
-            if text:
-                self.blocks.append((text, len(text), self.link_chars))
-            self.buf = []
-            self.link_chars = 0
-
-        def handle_starttag(self, tag, attrs):
-            if tag in skip_tags:
-                self.skip_depth += 1
-            elif tag == "a":
-                self.a_depth += 1
-            if tag in block_re:
-                self._flush()
-
-        def handle_endtag(self, tag):
-            if tag in skip_tags:
-                self.skip_depth = max(0, self.skip_depth - 1)
-            elif tag == "a":
-                self.a_depth = max(0, self.a_depth - 1)
-            if tag in block_re:
-                self._flush()
-
-        def handle_data(self, data):
-            if self.skip_depth:
-                return
-            self.buf.append(data)
-            if self.a_depth:
-                self.link_chars += len(data.strip())
-
-    p = Extractor()
-    try:
-        p.feed(markup)
-        p.close()
-    except Exception:
-        pass  # html.parser is tolerant; belt-and-braces for exotic input
-    p._flush()
-    return p.blocks
-
-
-def extract_main_text(
-    docs: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text",
-    min_block_chars: int = 40,
-    max_link_density: float = 0.35,
-) -> DataFrame:
-    """-> input columns + (out_col string, n_blocks_kept int,
-    n_blocks_total int, link_density double).
-
-    A block survives when it is substantial (>= min_block_chars) AND not
-    link-dominated (anchor-text share <= max_link_density) — the
-    text-density boilerplate rule. Short link-sparse blocks (headlines)
-    survive only when adjacent to a kept block, so isolated menu entries
-    drop but a title directly above its article stays."""
-
-    def kernel(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            texts, kept_ns, total_ns, densities = [], [], [], []
-            for markup in pdf[html_col]:
-                blocks = _parse_blocks(markup or "")
-                substantial = [
-                    (n >= min_block_chars)
-                    and (lc / n <= max_link_density if n else False)
-                    for _, n, lc in blocks
-                ]
-                keep = list(substantial)
-                for i, (_, n, lc) in enumerate(blocks):
-                    if keep[i] or n == 0:
-                        continue
-                    # headline rescue: short but link-sparse and adjacent
-                    # to substantial content
-                    link_sparse = lc / n <= max_link_density
-                    near = (i > 0 and substantial[i - 1]) or (
-                        i + 1 < len(blocks) and substantial[i + 1]
-                    )
-                    keep[i] = link_sparse and near
-                kept = [b for b, k in zip(blocks, keep) if k]
-                text = "\n".join(b[0] for b in kept)
-                tot_chars = sum(n for _, n, _ in blocks) or 1
-                tot_links = sum(lc for _, _, lc in blocks)
-                texts.append(text)
-                kept_ns.append(sum(keep))
-                total_ns.append(len(blocks))
-                densities.append(tot_links / tot_chars)
-            pdf[out_col] = texts
-            pdf["n_blocks_kept"] = kept_ns
-            pdf["n_blocks_total"] = total_ns
-            pdf["link_density"] = densities
-            yield pdf
-
-    base = [c for c in docs.columns if c != out_col]
-    schema = ", ".join(
-        f"{name} {dtype}" for name, dtype in docs.dtypes if name in base
-    ) + (
-        f", {out_col} string, n_blocks_kept int, n_blocks_total int, "
-        "link_density double"
-    )
-    return docs.select(base).mapInPandas(kernel, schema)
-
-
-# ---------------------------------------------------------------------------
-# Link extraction: markup -> the outgoing-link edge list. The web-graph
-# half of crawl processing (feeds pipeline/graph.pagerank and the
-# rank_quality_weights curation prior). Fully JVM-side: anchor hrefs by
-# regexp_extract_all, entity decode by the module's ordered table, and
-# RFC 3986 reference resolution — including remove_dot_segments — as a
-# Catalyst array fold. No Python in the path at any scale.
-# ---------------------------------------------------------------------------
-
-
-def _remove_dot_segments(path: Column) -> Column:
-    """RFC 3986 §5.2.4 as a Catalyst fold: split the absolute path, fold
-    '.'/'..' against an array accumulator ('..' clamps at root), rejoin.
-    A trailing '.' or '..' re-grows the trailing slash, matching urljoin."""
-    segs = F.expr(
-        "aggregate(slice(split(__p, '/'), 2, 1000000), "
-        "cast(array() as array<string>), "
-        "(acc, s) -> CASE WHEN s = '.' THEN acc "
-        "WHEN s = '..' THEN slice(acc, 1, greatest(size(acc) - 1, 0)) "
-        "ELSE concat(acc, array(s)) END)"
-    )
-    out = F.concat(F.lit("/"), F.array_join(segs, "/"))
-    needs_slash = F.col("__p").rlike(r"(^|/)\.{1,2}$") & ~out.rlike("/$")
-    return F.when(needs_slash, F.concat(out, F.lit("/"))).otherwise(out)
-
-
-def _href_parts(
-    base: Column, ref: Column
-) -> tuple[Column, Column, Column, Column, Column, Column]:
-    """The column pieces of RFC 3986 §5 reference resolution against a page
-    URL: (cleaned ref, merged path, ref scheme, base scheme, base origin,
-    ref query). The final when-chain lives in extract_links because the
-    merged path must be STAGED in its own projection before the dot-segment
-    fold references it (lambda subexpressions are not deduplicated —
-    SPARK-35410, same staging rule as the tokenizer sites)."""
-    r = F.trim(ref)
-    r = F.regexp_replace(r, r"#.*$", "")  # fragments are not edges
-    scheme = F.regexp_extract(r, r"^([A-Za-z][A-Za-z0-9+.-]*):", 1)
-    b_scheme = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-    origin = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    b_path = F.regexp_extract(
-        base, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1
-    )
-    b_dir = F.regexp_replace(b_path, r"[^/]*$", "")
-    b_dir = F.when(b_dir == "", F.lit("/")).otherwise(b_dir)
-    r_path = F.regexp_extract(r, r"^([^?#]*)", 1)
-    r_query = F.regexp_extract(r, r"(\?[^#]*)", 1)
-    merged = (
-        F.when(r_path == "", b_path)  # '?q=2' keeps the base's full path
-        .when(r_path.startswith("/"), r_path)
-        .otherwise(F.concat(b_dir, r_path))
-    )
-    return r, merged, scheme, b_scheme, origin, r_query
-
-
-def extract_links(
-    df: DataFrame,
-    html_col: str = "html",
-    base_col: str = "url",
-    out_col: str = "href",
-) -> DataFrame:
-    """One row per resolved anchor: every df column + `out_col` (absolute
-    http/https URL). Drops fragment-only, mailto:/javascript:/data: and
-    unresolvable refs. Map-only explode — no shuffle, no Python."""
-    pat = r"""(?i)<a\s[^>]*?href\s*=\s*("[^"]*"|'[^']*'|[^\s>]+)"""
-    raw = F.regexp_extract_all(F.col(html_col), F.lit(pat), F.lit(1))
-    exploded = df.withColumn("__raw", F.explode(raw))
-    href = F.regexp_replace(F.col("__raw"), "^[\"']|[\"']$", "")
-    for ent, ch in _NAMED_ENTITIES.items():  # hrefs arrive HTML-escaped
-        href = F.regexp_replace(href, ent, ch)
-    r, merged, scheme, b_scheme, origin, r_query = _href_parts(
-        F.col(base_col), href
-    )
-    staged = exploded.withColumn("__r", r).withColumn("__p", merged)
-    folded = _remove_dot_segments(F.col("__p"))
-    resolved = (
-        F.when(F.col("__r") == "", F.lit(None).cast("string"))
-        .when(scheme.rlike("^https?$"), F.col("__r"))
-        .when(scheme != "", F.lit(None).cast("string"))
-        .when(origin == "", F.lit(None).cast("string"))
-        .when(
-            F.col("__r").startswith("//"),
-            F.concat(b_scheme, F.lit(":"), F.col("__r")),
-        )
-        .otherwise(F.concat(origin, folded, r_query))
-    )
-    return (
-        staged.withColumn(out_col, resolved)
-        .filter(F.col(out_col).isNotNull())
-        .drop("__raw", "__r", "__p")
-    )
-
-
-def link_edges(
-    df: DataFrame,
-    html_col: str = "html",
-    base_col: str = "url",
-    by_domain: bool = True,
-) -> DataFrame:
-    """Markup -> the web-graph edge list (src, dst) feeding
-    pipeline/graph.pagerank and rank_quality_weights: extract + resolve
-    every anchor, canonicalize both endpoints (pipeline/weburl), optionally
-    collapse to registrable domains (the usual PageRank granularity —
-    page-level graphs are ~100x larger), drop self-loops and duplicates.
-    One map-only extraction pass + one dedup aggregate; no Python."""
-    from enterprise_warp_spark.pipeline.weburl import (
-        canonical_url,
-        registrable_domain,
-    )
-
-    links = extract_links(df, html_col, base_col, out_col="__dst")
-    src = canonical_url(F.col(base_col))
-    dst = canonical_url(F.col("__dst"))
-    if by_domain:
-        src = registrable_domain(F.parse_url(src, F.lit("HOST")))
-        dst = registrable_domain(F.parse_url(dst, F.lit("HOST")))
-    return (
-        links.select(src.alias("src"), dst.alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )

@@ -15,11 +15,8 @@ Scale shape (the part that matters at 100 TB):
 - Query scoring never touches the corpus text again: the query's terms
   (a handful of rows) are broadcast and hash-joined against the index, so
   only the matched postings flow into the per-document score aggregate.
-  With the index written partitioned/bucketed by a term hash
-  (write_index/load_index), the join prunes to the probe terms' buckets —
-  the 100 TB corpus is never rescanned per query.
 - IDF needs the corpus document count and average length: two scalars,
-  computed once per index build and stored with it, never per query.
+  computed once per index build, never per query.
 
 All scoring is pure Catalyst arithmetic (log/multiply/aggregate) — no
 Python in any per-row path.
@@ -32,18 +29,12 @@ from pyspark.sql import functions as F
 
 from .text import TOKENS
 
-# Number of hash buckets for the persisted index layout. Each probe term
-# reads exactly one bucket directory -> O(index/NB) bytes per term.
-N_TERM_BUCKETS = 64
-
-
 def _tokens(text_col: str):
     return F.expr(TOKENS.format(s=text_col))
 
 
 def _index_from_postings(toks: DataFrame, postings: DataFrame) -> dict:
     """Shared tail of both index builders: doc lengths + corpus stats.
-    total_dl rides the SAME stats aggregate (no extra corpus scan).
     doclen is checkpointed BEFORE the stats read: the stats job then
     scans the tiny cached (doc_id, dl) partitions instead of
     re-tokenizing the corpus, and every downstream doclen consumer
@@ -55,14 +46,12 @@ def _index_from_postings(toks: DataFrame, postings: DataFrame) -> dict:
     stats = doclen.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("dl").alias("avgdl"),
-        F.sum("dl").alias("total"),
     ).first()
     return {
         "postings": postings,
         "doclen": doclen,
         "n_docs": int(stats["n"]),
         "avgdl": float(stats["avgdl"] or 0.0),
-        "total_dl": int(stats["total"] or 0),
     }
 
 
@@ -95,21 +84,13 @@ def _query_tokens(query: str) -> list[str]:
     return [t for t in query.split(" ") if t]
 
 
-def _query_terms(spark: SparkSession, query: str, index: dict) -> DataFrame:
+def _query_terms(spark: SparkSession, query: str) -> DataFrame:
     """Distinct query terms (tiny; broadcast). Term multiplicity in the
     query is deliberately ignored — the classic Okapi k3 weighting is a
-    no-op for the short probe queries this serves. Raises if the index was
-    bucket-pruned for a DIFFERENT query (see load_index)."""
+    no-op for the short probe queries this serves."""
     terms = sorted(set(_query_tokens(query)))
     if not terms:
         raise ValueError("query has no tokens")
-    probe = index.get("probe_terms")
-    if probe is not None and not set(terms) <= probe:
-        raise ValueError(
-            "index was loaded bucket-pruned for query terms "
-            f"{sorted(probe)} and cannot serve {terms}; reload with "
-            "load_index(..., query=<this query>) or without `query`"
-        )
     return spark.createDataFrame([(t,) for t in terms], "term string")
 
 
@@ -133,7 +114,7 @@ def bm25_topk(
     O(matched postings), never O(corpus).
     """
     spark = index["postings"].sparkSession
-    q = _query_terms(spark, query, index)
+    q = _query_terms(spark, query)
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     if n_docs == 0 or avgdl <= 0:
         raise ValueError("empty index")
@@ -179,7 +160,7 @@ def tfidf_topk(index: dict, query: str, k: int = 10) -> DataFrame:
     score(d) = sum_t ln(1 + tf) * ln(N / df) / sqrt(dl). Same join shape
     as bm25_topk; kept as the simpler reference ranking."""
     spark = index["postings"].sparkSession
-    q = _query_terms(spark, query, index)
+    q = _query_terms(spark, query)
     n_docs = index["n_docs"]
     if n_docs == 0:
         raise ValueError("empty index")
@@ -205,72 +186,6 @@ def tfidf_topk(index: dict, query: str, k: int = 10) -> DataFrame:
     return (
         scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     )
-
-
-def write_index(index: dict, path: str) -> None:
-    """Persist the index partitioned by a term-hash bucket so a probe term
-    reads exactly one of N_TERM_BUCKETS directories (same partition-pruned
-    layout as the IVF index in pipeline/similarity.py)."""
-    (
-        index["postings"]
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    index["doclen"].write.mode("overwrite").parquet(f"{path}/doclen")
-    spark = index["postings"].sparkSession
-    # total_dl was computed on the build's own stats aggregate; fall back to
-    # reading the just-written parquet (NOT the lazy corpus lineage) for
-    # index dicts from older builds
-    total_dl = index.get("total_dl")
-    if total_dl is None:
-        total_dl = (
-            spark.read.parquet(f"{path}/doclen").agg(F.sum("dl")).first()[0] or 0
-        )
-    spark.createDataFrame(
-        [(index["n_docs"], index["avgdl"], int(total_dl))],
-        "n_docs long, avgdl double, total_dl long",
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def load_index(spark: SparkSession, path: str, query: str | None = None) -> dict:
-    """Load a persisted index. With `query` given, the postings scan is
-    pre-filtered to the probe terms' hash buckets — partition pruning does
-    the rest (only those directories are read). A query-pruned index is
-    marked with its `probe_terms` and REFUSES any query using other terms
-    (a pruned postings frame would silently miss their matches)."""
-    postings = spark.read.parquet(f"{path}/postings")
-    probe_terms = None
-    if query is not None:
-        buckets = _term_buckets(spark, query)
-        postings = postings.filter(F.col("bucket").isin(buckets))
-        probe_terms = set(_query_tokens(query))
-    stats = spark.read.parquet(f"{path}/stats").first()
-    out = {
-        "postings": postings.drop("bucket"),
-        "doclen": spark.read.parquet(f"{path}/doclen"),
-        "n_docs": int(stats["n_docs"]),
-        "avgdl": float(stats["avgdl"]),
-    }
-    if probe_terms is not None:
-        out["probe_terms"] = probe_terms
-    return out
-
-
-def _term_buckets(spark: SparkSession, query: str) -> list[int]:
-    """Bucket ids for the query's terms, evaluated with the SAME Catalyst
-    expression the writer used (pmod(xxhash64(term), NB)) on a tiny local
-    plan — one job, one definition of the bucket function."""
-    terms = sorted(set(_query_tokens(query)))
-    if not terms:
-        raise ValueError("query has no tokens")
-    rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).alias("b"))
-        .collect()
-    )
-    return sorted({int(r["b"]) for r in rows})
 
 
 def build_positional_index(
@@ -342,295 +257,3 @@ def phrase_match(index: dict, phrase: str) -> DataFrame:
         .select("doc_id", F.size("_starts").alias("n_occurrences"))
     )
 
-
-def append_to_index(
-    spark: SparkSession,
-    path: str,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incrementally add a batch of NEW documents to a persisted index —
-    the search twin of pipeline/dedup.incremental_minhash_filter: per-batch
-    cost is O(batch tokens), the existing postings are never rewritten.
-
-    The batch's postings append into the same term-hash bucket partitions,
-    doclen appends, and the stats row is recomputed from the two scalars it
-    carries (n_docs, total_dl) — no corpus rescan. Batch doc ids MUST be
-    previously unseen: a re-ingested id would duplicate its postings rows
-    (callers dedup upstream, e.g. via the corpus keep-list); this is
-    checked against doclen (and within the batch) and raises loudly.
-
-    CRASH-REPLAY ORDERING (the streaming/corpus.py pattern): doclen — the
-    table the duplicate guard probes — is appended FIRST. If the job dies
-    anywhere after that write, the retry's guard sees the batch ids and
-    raises instead of silently double-appending postings (which would
-    double BM25 term frequencies); recovery is never quiet corruption.
-    Recovery after a raise is an explicit cleanup of EVERYTHING the dead
-    batch may have landed, in all three tables: delete the batch's ids
-    from doclen AND its rows from postings (anti-join both against the
-    batch id list, e.g. via maintenance.merge_by_key's rewrite path — a
-    crash between the postings append and the stats overwrite leaves
-    postings rows that doclen-only cleanup would duplicate on re-append),
-    then recompute/overwrite stats from the cleaned doclen. Only then
-    re-append the batch."""
-    batch = build_index(new_docs, id_col, text_col)
-    counts = batch["doclen"].agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("doc_id").alias("d")
-    ).first()
-    if counts["n"] != counts["d"]:
-        raise ValueError(
-            "append_to_index: batch contains duplicate doc_ids "
-            f"({counts['n']} rows, {counts['d']} distinct)"
-        )
-    existing_len = spark.read.parquet(f"{path}/doclen")
-    dup = (
-        batch["doclen"].join(existing_len, "doc_id", "left_semi").limit(1).count()
-    )
-    if dup:
-        raise ValueError(
-            "append_to_index: batch contains doc_ids already in the index"
-        )
-    stats_row = spark.read.parquet(f"{path}/stats").first()
-    old_n = int(stats_row["n_docs"])
-    # total_dl added r5: older stats rows derive it from avgdl * n
-    old_total = (
-        int(stats_row["total_dl"])
-        if "total_dl" in stats_row.asDict()
-        else int(round(float(stats_row["avgdl"]) * old_n))
-    )
-    batch_total = batch["doclen"].agg(F.sum("dl").alias("t")).first()["t"] or 0
-    n_docs = old_n + batch["n_docs"]
-    total_dl = old_total + int(batch_total)
-
-    batch["doclen"].write.mode("append").parquet(f"{path}/doclen")
-    (
-        batch["postings"]
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)))
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    spark.createDataFrame(
-        [(n_docs, (total_dl / n_docs) if n_docs else 0.0, total_dl)],
-        "n_docs long, avgdl double, total_dl long",
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-    spark.catalog.refreshByPath(f"{path}/postings")
-    spark.catalog.refreshByPath(f"{path}/doclen")
-    spark.catalog.refreshByPath(f"{path}/stats")
-
-
-# ---------------------------------------------------------------------------
-# Impact-ordered index + block-max early termination (VERDICT r5 #8)
-# ---------------------------------------------------------------------------
-
-# impact quantization levels: level 0 = highest impact. Quantization (not a
-# per-term sort) keeps the build fully map-side — a window over a hot
-# term's postings would serialize billions of rows into one task.
-N_IMPACT_LEVELS = 64
-
-
-def _impact_core(k1: float, b: float, avgdl: float):
-    """The df-independent BM25 factor of one posting:
-    tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) in (0, k1+1]. The full
-    contribution is idf(t) * core, idf applied at query time."""
-    return (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
-
-
-def write_impact_index(
-    index: dict, path: str, k1: float = 1.2, b: float = 0.75
-) -> None:
-    """Persist an IMPACT-ORDERED index for early-terminating top-k
-    (the impact-sorted / block-max family — Anh & Moffat impact ordering,
-    Ding & Suel block-max WAND — adapted to Spark's batch model): postings
-    carry a quantized impact `level` (0 = best) and a tiny per-(term,
-    level) metadata table stores the exact max core, so a query can read
-    ONLY the high-impact levels of each term's bucket and still prove its
-    top-k exact. Layout = write_index's term-hash buckets + the level
-    column (sorted within files for parquet row-group skipping) +
-    `impact_meta` + `term_stats` (exact df per term, frozen at build so
-    pruned and exhaustive scoring share idf)."""
-    if index["n_docs"] == 0 or index["avgdl"] <= 0:
-        raise ValueError("empty index")
-    k1, b, avgdl = float(k1), float(b), float(index["avgdl"])
-    core = _impact_core(k1, b, avgdl)
-    level = F.least(
-        F.greatest(
-            F.floor((F.lit(1.0) - core / F.lit(k1 + 1.0)) * N_IMPACT_LEVELS),
-            F.lit(0),
-        ),
-        F.lit(N_IMPACT_LEVELS - 1),
-    ).cast("int")
-    enriched = (
-        index["postings"]
-        .join(index["doclen"], "doc_id")
-        .withColumn("core", core)
-        .withColumn("level", level)
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)))
-    )
-    (
-        enriched.select("term", "doc_id", "tf", "level", "bucket")
-        .sortWithinPartitions("level")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    (
-        enriched.groupBy("term", "level")
-        .agg(F.max("core").alias("max_core"), F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/impact_meta")
-    )
-    (
-        index["postings"]
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/term_stats")
-    )
-    index["doclen"].write.mode("overwrite").parquet(f"{path}/doclen")
-    spark = index["postings"].sparkSession
-    spark.createDataFrame(
-        [(index["n_docs"], avgdl, k1, b)],
-        "n_docs long, avgdl double, k1 double, b double",
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def bm25_topk_pruned(
-    spark: SparkSession, path: str, query: str, k: int = 10,
-    debug: dict | None = None,
-) -> DataFrame:
-    """EXACT top-k BM25 over an impact-ordered index, reading only as many
-    impact levels as the proof needs.
-
-    Rounds with a doubling level horizon L (driver-coordinated over the
-    tiny impact_meta table): score the postings with level <= L (partition
-    pruning to the probe buckets + pushed-down level filter), giving every
-    doc a LOWER bound; Delta(L) = sum over terms of idf * max_core of the
-    best still-excluded level bounds what ANY doc could still gain. Once
-    the k-th best lower bound theta beats Delta, only docs with
-    partial + Delta >= theta can reach the top-k — that candidate set is
-    re-scored EXACTLY (all levels, semi-joined to candidates) with
-    bm25_topk's expression, so the result equals exhaustive scoring up to
-    float-sum reassociation (the per-doc contrib sum's add order differs
-    between plans by <= 1 ulp; Delta carries matching slack). Common
-    terms' vast low-impact tails are never read once the high-impact
-    levels establish theta."""
-    stats = spark.read.parquet(f"{path}/stats").first()
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-    k1, b = float(stats["k1"]), float(stats["b"])
-    terms = sorted(set(_query_tokens(query)))
-    if not terms:
-        raise ValueError("query has no tokens")
-    buckets = _term_buckets(spark, query)
-    meta = (
-        spark.read.parquet(f"{path}/impact_meta")
-        .filter(F.col("term").isin(terms))
-        .collect()
-    )
-    df_map = {
-        r["term"]: int(r["df"])
-        for r in spark.read.parquet(f"{path}/term_stats")
-        .filter(F.col("term").isin(terms))
-        .collect()
-    }
-    # idf through the SAME Catalyst expression bm25_topk uses (JVM log and
-    # Python math.log differ in the last ulp — bit-identity requires one
-    # engine computes it)
-    idf = {
-        r["term"]: float(r["idf"])
-        for r in spark.createDataFrame(
-            [(t, df) for t, df in df_map.items()], "term string, df long"
-        )
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
-        )
-        .collect()
-    } if df_map else {}
-    # per term: {level: max_core}, driver-side (|terms| x 64 rows max)
-    by_term: dict[str, dict[int, float]] = {}
-    for r in meta:
-        by_term.setdefault(r["term"], {})[int(r["level"])] = float(r["max_core"])
-
-    postings = spark.read.parquet(f"{path}/postings").filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
-    doclen = spark.read.parquet(f"{path}/doclen")
-    qdf = spark.createDataFrame(
-        [(t, float(idf[t])) for t in terms if t in idf], "term string, idf double"
-    )
-
-    def exact_scores(pool: DataFrame) -> DataFrame:
-        # bm25_topk's expression verbatim -> bit-identical scores
-        return (
-            pool.join(F.broadcast(qdf), "term")
-            .join(doclen, "doc_id")
-            .withColumn(
-                "contrib",
-                F.col("idf")
-                * (F.col("tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.sum("contrib").alias("score"),
-                F.count(F.lit(1)).alias("n_terms_matched"),
-            )
-        )
-
-    def delta_beyond(L: int) -> float:
-        # 1e-9 relative slack: stored max_core and the exact-scoring
-        # expression associate float ops differently by one ulp
-        return sum(
-            idf[t] * max(c for lv, c in levels.items() if lv > L) * (1.0 + 1e-9)
-            for t, levels in by_term.items()
-            if t in idf and any(lv > L for lv in levels)
-        )
-
-    max_level = max((lv for ls in by_term.values() for lv in ls), default=0)
-    L = 0
-    while True:
-        if L >= max_level:
-            if debug is not None:
-                debug.update(final_level=L, early_exit=False,
-                             max_level=max_level)
-            return exact_scores(postings).orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(k)
-        partial = exact_scores(postings.filter(F.col("level") <= L)).cache()
-        try:
-            top = partial.orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(k).collect()
-            theta = top[-1]["score"] if len(top) >= k else float("-inf")
-            delta = delta_beyond(L)
-            if delta < theta:
-                if debug is not None:
-                    debug.update(final_level=L, early_exit=True,
-                                 max_level=max_level, delta=delta,
-                                 theta=theta)
-                # materialize the candidate ids BEFORE the finally-block
-                # unpersist: a lazy filter over `partial` would silently
-                # re-run the whole partial scoring pass at consumption
-                cand = partial.filter(
-                    F.col("score") + F.lit(delta) >= F.lit(theta)
-                ).select("doc_id").localCheckpoint(eager=True)
-                pool = postings.join(F.broadcast(cand), "doc_id", "left_semi")
-                return exact_scores(pool).orderBy(
-                    F.col("score").desc(), F.col("doc_id").asc()
-                ).limit(k)
-        finally:
-            partial.unpersist()
-        L = max(1, L * 2)

@@ -494,41 +494,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def kmeans_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    emb_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 10,
-) -> DataFrame:
-    """IVF coarse quantizer, production flavor: Lloyd's k-means (MLlib) over
-    the embedding column, returned in deterministic_centroids' exact
-    (cell_id, c_emb, c_nsq) schema so ivf_topk/build_ivf_cells take either
-    interchangeably. Training cost is iterations x one pass over the corpus
-    (distributed); at 100 TB train on a hash_sample of the corpus — centroid
-    quality needs only a representative sample, not every vector."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.select(array_to_vector(F.col(emb_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(vecs)
-    spark = emb.sparkSession
-    import pandas as pd
-
-    centers = pd.DataFrame(
-        {
-            "cell_id": range(len(model.clusterCenters())),
-            "c_emb": [c.tolist() for c in model.clusterCenters()],
-        }
-    )
-    out = spark.createDataFrame(centers)
-    return out.select(
-        "cell_id",
-        F.col("c_emb").cast("array<float>").alias("c_emb"),
-        F.expr(DOT.format(a="c_emb", b="c_emb")).alias("c_nsq"),
-    )
-
-
 def lloyd_kmeans(
     emb: DataFrame,
     k: int,
@@ -542,12 +507,11 @@ def lloyd_kmeans(
     centroids): assignments = (id, cell_id, dist) labeling every vector
     with its nearest FINAL centroid; centroids = (cell_id, c_emb).
 
-    The reproducible flavor of kmeans_centroids (which delegates to MLlib
-    and is the production quality path): init = the k lowest-id vectors,
-    every distance and every centroid coordinate ROUNDed at `decimals`
-    before any comparison or reuse, ties broken by cell_id — so the whole
-    trajectory is bit-reproducible across runs AND replayable by a plain
-    SQL twin (curation pipelines pin cluster-balanced sampling and
+    The reproducible counterpart of MLlib KMeans: init = the k lowest-id
+    vectors, every distance and every centroid coordinate ROUNDed at
+    `decimals` before any comparison or reuse, ties broken by cell_id — so
+    the whole trajectory is bit-reproducible across runs AND replayable by
+    a plain SQL twin (curation pipelines pin cluster-balanced sampling and
     SemDeDup cells on exactly this property).
 
     Distributed shape: the centroid matrix is INLINED into the plan as
@@ -776,91 +740,6 @@ def prototype_prune(
     return (
         assignments.withColumn("proto_rank", F.row_number().over(w))
         .filter(F.col("proto_rank") <= keep_per_cell)
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    centroids: DataFrame,
-    index_path: str,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    assign: str = "flat",
-    nprobe_super: int = 8,
-) -> None:
-    """Persist the IVF inverted lists: every corpus vector stored under its
-    nearest-centroid cell, as parquet PARTITIONED BY cell_id. This is the
-    piece that makes ANN real at 100 TB: a search touches only its nprobe
-    cell directories (partition pruning at the file-listing level) instead
-    of scanning the corpus. Rebuild = re-run after centroids change; append
-    new vectors by writing their assignments with mode append.
-
-    assign="hier" routes through assign_cells_hierarchical — required once
-    the centroid table outgrows a single broadcast (and measured faster
-    well before that: the flat kernel's N x L distance matrix is quadratic
-    when cells track corpus size, PERF.md r12)."""
-    n = _with_norm_sq(emb, emb_col, id_col)
-    # the index BUILD is the 100 TB-critical path: Arrow argmin assignment
-    # (one row per vector) instead of the corpus x n_cells SQL fan-out
-    if assign == "hier":
-        raw = assign_cells_hierarchical(
-            n, centroids, emb_col, id_col, nprobe_super=nprobe_super
-        )
-    elif assign == "flat":
-        raw = _assign_cells_arrow(n, centroids, emb_col, id_col)
-    else:
-        raise ValueError(f"build_ivf_index: unknown assign mode {assign!r}")
-    assigned = raw.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("c_vec"),
-        F.col("nsq").alias("c_nsq2"),
-        "cell_id",
-    )
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(index_path)
-
-
-def search_ivf_index(
-    spark,
-    index_path: str,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k cosine search against a persisted IVF index: each query probes
-    its nprobe nearest cells; the scan carries `cell_id IN (...)` so parquet
-    partition pruning reads ONLY those directories. The probed-cell list is
-    collected (bounded by n_queries x nprobe — a search-request-sized list,
-    not corpus-sized) to push the filter into the file listing."""
-    qn = _with_norm_sq(queries, emb_col, id_col)
-    qd = _cell_distances(qn, centroids, emb_col)
-    w = Window.partitionBy(id_col).orderBy("dist", "cell_id")
-    probes = (
-        qd.withColumn("prn", F.row_number().over(w))
-        .filter(F.col("prn") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(emb_col).alias("q_emb"),
-            F.col("nsq").alias("q_nsq"),
-            "cell_id",
-        )
-        .localCheckpoint(eager=True)
-    )
-    cells = [r["cell_id"] for r in probes.select("cell_id").distinct().collect()]
-    lists = spark.read.parquet(index_path).filter(F.col("cell_id").isin(cells))
-    dot = DOT.format(a="q_emb", b="c_vec")
-    pairs = (
-        probes.join(lists, "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(F.expr(f"{dot} / sqrt(q_nsq * c_nsq2)"), 6))
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 
@@ -1615,134 +1494,3 @@ def semdedup_keep_list(
         ), id_col
     )
 
-
-# ---------------------------------------------------------------------------
-# Frequent Directions: the matrix sketch (streaming low-rank covariance).
-# Completes the sketch family for the embeddings modality — MG/KMV/CMS/HLL/
-# GK/Bloom/AMS sketch scalar columns; FD sketches the corpus embedding
-# MATRIX (Liberty, KDD 2013; Ghashami-Liberty-Phillips-Woodruff, SIAM 2016).
-# ---------------------------------------------------------------------------
-
-
-def _fd_shrink(B, ell: int):
-    """One FD shrink: SVD, subtract sigma_ell^2 from every squared singular
-    value, return the ell nonzero-padded rows diag(s')Vt[:ell]."""
-    import numpy as np
-
-    if B.shape[0] <= ell:
-        return B
-    _, s, vt = np.linalg.svd(B, full_matrices=False)
-    delta = s[ell - 1] ** 2 if s.shape[0] >= ell else 0.0
-    s2 = np.sqrt(np.maximum(s**2 - delta, 0.0))
-    return s2[:ell, None] * vt[:ell]
-
-
-def frequent_directions(
-    emb: DataFrame, ell: int = 32, emb_col: str = "embedding"
-):
-    """Frequent Directions sketch of the corpus embedding matrix ->
-    numpy (ell x d) matrix B with the FD covariance guarantee
-    ||A^T A - B^T B||_2 <= 2 ||A||_F^2 / ell (and A^T A - B^T B >= 0:
-    shrinkage only ever UNDER-counts covariance).
-
-    Plan shape (100 TB): ONE Arrow mapInPandas pass; each input partition
-    streams its rows through a local FD buffer (SVD on at most
-    (ell + batch) x d — d is the embedding width, so thin and cheap) and
-    emits its <= ell sketch rows. The partials are sketch space
-    (n_partitions x ell x d), collected and merged by one final stacked
-    shrink — FD is mergeable with the bounds ADDING, so the merged sketch
-    keeps the global guarantee (GLPW 2016, Thm 1.1 + mergeability).
-    Not in the oracle catalog: SVD is engine/LAPACK-specific, so
-    correctness is pinned by the covariance-error contract tests
-    (tests/test_similarity.py), the heavy_hitters/HLL precedent."""
-    import numpy as np
-
-    if ell < 1:
-        raise ValueError(f"frequent_directions needs ell >= 1, got {ell}")
-    first = emb.select(emb_col).first()
-    if first is None:
-        raise ValueError("frequent_directions: empty input")
-    d = len(first[0])
-
-    def kernel(batches):
-        import pandas as pd
-
-        B = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            )
-            B = M if B is None else np.vstack([B, M])
-            B = _fd_shrink(B, ell)
-        if B is None:
-            return
-        yield pd.DataFrame({"v": [row.tolist() for row in B]})
-
-    partials = (
-        emb.select(F.col(emb_col).cast("array<double>").alias(emb_col))
-        .mapInPandas(kernel, "v array<double>")
-        .collect()
-    )  # sketch space: <= ell rows per input partition
-    if not partials:
-        return np.zeros((0, d))
-    stacked = np.array([r["v"] for r in partials])
-    return _fd_shrink(stacked, ell)
-
-
-def fd_merge(sketches, ell: int):
-    """Merge Frequent Directions sketches: stack and shrink once. FD is
-    mergeable with the covariance bounds ADDING (GLPW 2016), so folding
-    per-micro-batch sketches through this (e.g. under foreachBatch) keeps
-    the global ||A^T A - B^T B||_2 <= 2 ||A||_F^2 / ell guarantee over
-    everything streamed so far — the DDSketch streamed==batch pattern for
-    the one sketch whose merge is approximate-but-bounded rather than
-    exact. Empty/None entries are skipped; all-empty input -> (0, 0)."""
-    import numpy as np
-
-    mats = [
-        np.asarray(B, dtype=np.float64)
-        for B in sketches
-        if B is not None and np.size(B)
-    ]
-    if not mats:
-        return np.zeros((0, 0))
-    return _fd_shrink(np.vstack(mats), ell)
-
-
-def fd_project(
-    emb: DataFrame, B, k: int, emb_col: str = "embedding"
-) -> DataFrame:
-    """Append `proj` = V_k^T e where V_k are the top-k right singular
-    vectors of an FD sketch B — streaming-PCA dimensionality reduction
-    that composes with the ANN/near-dup bucketing stages exactly like
-    random_projection, but data-adaptive. The k x d matrix is INLINED as
-    literal coefficient arrays (the random_projection pattern): map-only,
-    no join, no shuffle."""
-    import numpy as np
-
-    B = np.asarray(B, dtype=np.float64)
-    if not (1 <= k <= B.shape[0]):
-        raise ValueError(f"fd_project needs 1 <= k <= {B.shape[0]}, got {k}")
-    _, _, vt = np.linalg.svd(B, full_matrices=False)
-    # ONE parsed SQL literal for the k x d matrix (the random_projection
-    # r14 pattern); element_at of a literal matrix constant-folds to the
-    # identical per-row coefficient array
-    from enterprise_warp_spark.functions.arrays import double_matrix_lit
-
-    m_lit = double_matrix_lit(
-        [[float(x) for x in vt[i]] for i in range(k)]
-    )
-    e = F.col(emb_col).cast("array<double>")
-    proj = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(e, F.element_at(m_lit, i + 1), lambda x, y: x * y),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x,
-            )
-            for i in range(k)
-        ]
-    )
-    return emb.withColumn("proj", proj)

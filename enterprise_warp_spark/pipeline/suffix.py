@@ -833,26 +833,3 @@ def strip_exact_duplicate_spans_sharded(
     )
 
 
-def strip_exact_duplicate_spans(
-    docs: DataFrame,
-    min_tokens: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cross_doc_only: bool = True,
-) -> DataFrame:
-    """ExactSubstr removal at EXACT span granularity: every repeated span
-    of >= min_tokens (all occurrences, the strip_repeated_spans policy) is
-    cut from every document -> (doc_id, cleaned_text, n_removed_tokens).
-    Bridges exact_duplicate_spans' 0-based token spans into the existing
-    span-removal machinery (pipeline/dedup.py _strip_spans, 1-based
-    inclusive ranges)."""
-    from enterprise_warp_spark.pipeline.dedup import _strip_spans
-
-    spans = exact_duplicate_spans(
-        docs, min_tokens, text_col, id_col, cross_doc_only
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        (F.col("start_tok") + 1).alias("span_start"),
-        (F.col("start_tok") + F.col("n_tokens")).alias("span_end"),
-    )
-    return _strip_spans(docs, spans, text_col)

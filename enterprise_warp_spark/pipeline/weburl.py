@@ -92,9 +92,7 @@ def registrable_domain(host: Column | str) -> Column:
     final two are a common two-level public suffix (co.uk and friends).
     The full Public Suffix List is a large mutable dataset; this covers
     the overwhelmingly common cases and is DOCUMENTED as approximate —
-    group-by keys need consistency more than perfection. For EXACT
-    grouping (ccTLDs, wildcard and exception rules) feed a PSL snapshot
-    to `registrable_domain_psl`."""
+    group-by keys need consistency more than perfection."""
     h = F.lower(F.col(host) if isinstance(host, str) else host)
     two_level = (
         "co|com|org|net|gov|ac|edu|sch|mil|police"
@@ -111,120 +109,6 @@ def registrable_domain(host: Column | str) -> Column:
         ".", F.element_at(parts, -2), F.element_at(parts, -1)
     )).otherwise(h)
     return F.when(is_two & (n >= 3), take3).otherwise(take2)
-
-
-def psl_rules(spark, rules) -> DataFrame:
-    """Build a public-suffix rules table from an iterable of rule strings
-    in the Public Suffix List's own format (one rule per line: 'com',
-    'co.uk', wildcard '*.ck', exception '!www.ck'; comments '//' and blank
-    lines ignored) — e.g. the lines of a downloaded
-    publicsuffix.org/list/public_suffix_list.dat snapshot. Returns
-    (rule string, is_wildcard boolean, is_exception boolean, n_labels int)
-    where `rule` is the suffix with any '*.'/'!' marker stripped."""
-    rows = []
-    for raw in rules:
-        line = raw.strip().lower()
-        if not line or line.startswith("//"):
-            continue
-        is_exc = line.startswith("!")
-        if is_exc:
-            line = line[1:]
-        is_wild = line.startswith("*.")
-        if is_wild:
-            line = line[2:]
-        rows.append((line, is_wild, is_exc, line.count(".") + 1))
-    return spark.createDataFrame(
-        rows, "rule string, is_wildcard boolean, is_exception boolean, "
-        "n_labels int"
-    )
-
-
-def registrable_domain_psl(
-    df: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    out_col: str = "registrable_domain",
-) -> DataFrame:
-    """EXACT eTLD+1 via a Public Suffix List snapshot (the complement to
-    the approximate `registrable_domain` expression): every host's label
-    suffixes are exploded (hosts have a handful of labels — linear, not
-    quadratic in any real corpus), equi-joined against the BROADCAST rules
-    table, and the winning rule follows the PSL algorithm: exception rules
-    beat everything (the public suffix is the exception minus its first
-    label), else the longest matching rule wins, wildcard rules matching
-    one label deeper; no rule at all means the last label is the suffix.
-    registrable domain = public suffix + one preceding label (NULL when
-    the host IS a public suffix).
-
-    Scale shape: explode (map-side, ~5 rows per host) -> broadcast hash
-    join on the suffix string -> one groupBy(host row) argmax. The rules
-    table is ~10k rows — always broadcast.
-
-    Rows are keyed internally with monotonically_increasing_id, which is
-    deterministic for a fixed partition layout (the id ties the argmax
-    back to its row); if the input is itself nondeterministic (e.g. a
-    fresh sample per action), materialize it first."""
-    from pyspark.sql import Window
-
-    h = F.lower(F.col(host_col))
-    parts = F.split(h, r"\.")
-    n = F.size(parts)
-    base = df.withColumn("__rid", F.monotonically_increasing_id())
-    # suffix starting at label i (1-based), for every i
-    sfx = base.select(
-        "__rid",
-        h.alias("__host"),
-        n.alias("__n"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(split(lower({host_col}), "
-                f"'\\\\.'))), i -> struct(i AS i, concat_ws('.', "
-                f"slice(split(lower({host_col}), '\\\\.'), i, "
-                f"size(split(lower({host_col}), '\\\\.')))) AS sfx))"
-            )
-        ).alias("s"),
-    ).select("__rid", "__host", "__n", F.col("s.i").alias("i"), F.col("s.sfx").alias("sfx"))
-    hits = sfx.join(F.broadcast(rules), sfx.sfx == rules.rule)
-    # suffix length in labels under each rule kind:
-    #   exception: rule minus first label  -> n_labels - 1 (and wins outright)
-    #   wildcard : one label deeper        -> n_labels + 1 (needs i >= 2)
-    #   plain    : the rule itself         -> n_labels
-    cand = hits.select(
-        "__rid",
-        "__host",
-        "__n",
-        F.when(F.col("is_exception"), F.col("n_labels") - 1)
-        .when(F.col("is_wildcard"), F.col("n_labels") + 1)
-        .otherwise(F.col("n_labels"))
-        .alias("ps_labels"),
-        F.col("is_exception"),
-    ).filter(
-        # a wildcard needs the extra label to exist; exceptions always apply
-        (F.col("ps_labels") <= F.col("__n"))
-    )
-    w = Window.partitionBy("__rid").orderBy(
-        F.desc("is_exception"), F.desc("ps_labels")
-    )
-    best = (
-        cand.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select("__rid", "ps_labels")
-    )
-    joined = base.join(best, "__rid", "left").withColumn(
-        "__ps_labels",
-        # PSL default rule '*': unmatched hosts take the last label
-        F.coalesce(F.col("ps_labels"), F.lit(1)),
-    )
-    reg = F.when(
-        n >= F.col("__ps_labels") + 1,
-        F.concat_ws(
-            ".",
-            F.slice(parts, n - F.col("__ps_labels"), F.col("__ps_labels") + 1),
-        ),
-    )
-    return joined.withColumn(out_col, reg).drop(
-        "__rid", "ps_labels", "__ps_labels"
-    )
 
 
 def repair_mojibake(

@@ -303,11 +303,23 @@ def run_optimal_statistic(spark, opts, params, prfile: str, outdir_all: str,
             r["marginalised"].write.mode("overwrite").parquet(
                 os.path.join(dest, "marginalised")
             )
+        # the report and the plots read what was just written, as -L does,
+        # so the cached reduction and pair table go now, once per ORF
+        r["reduced"].unpersist()
+        r["pair_stats"].unpersist()
+        r = _read_os_results(spark, dest, "marginalised" in r)
         row = r["os"].first()
         print(f"OS[{orf}]: a2_hat={row['a2_hat']:.3e} sig={row['sig_os']:.3e} "
               f"snr={row['a2_hat'] / row['sig_os']:.2f}")
         out[orf] = r
     return out
+
+
+def _read_os_results(spark, dest: str, marginalised: bool) -> dict:
+    """One ORF's K6 parquet under dest: os, binned and, if asked, the
+    noise-marginalised draws."""
+    names = ("os", "binned", "marginalised") if marginalised else ("os", "binned")
+    return {n: spark.read.parquet(os.path.join(dest, n)) for n in names}
 
 
 def load_os_results(spark, outdir_all: str, orfs: list[str]) -> dict:
@@ -319,14 +331,9 @@ def load_os_results(spark, outdir_all: str, orfs: list[str]) -> dict:
         dest = os.path.join(outdir_all, "os_results", orf)
         if not os.path.isdir(os.path.join(dest, "os")):
             continue
-        r = {
-            "os": spark.read.parquet(os.path.join(dest, "os")),
-            "binned": spark.read.parquet(os.path.join(dest, "binned")),
-        }
-        if os.path.isdir(os.path.join(dest, "marginalised")):
-            r["marginalised"] = spark.read.parquet(
-                os.path.join(dest, "marginalised")
-            )
+        r = _read_os_results(
+            spark, dest, os.path.isdir(os.path.join(dest, "marginalised"))
+        )
         row = r["os"].first()
         print(f"OS[{orf}] (loaded): a2_hat={row['a2_hat']:.3e} "
               f"sig={row['sig_os']:.3e}")

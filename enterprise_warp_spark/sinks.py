@@ -1,4 +1,4 @@
-"""Compat sinks (SURVEY §2.1 K1/K2/K4): reference-format artifacts written
+"""Compat sinks (SURVEY §2.1 K2/K4): reference-format artifacts written
 from DataFrames. Parquet is the native output everywhere else; these exist
 so downstream consumers of the reference's file formats keep working."""
 
@@ -7,15 +7,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_pars_txt(pars: DataFrame, path: str) -> None:
-    """K1 — parameter-name sidecar, one name per line in idx order
-    (enterprise_warp.py:553-555)."""
-    rows = pars.orderBy("idx").select("par").collect()
-    with open(path, "w") as fh:
-        fh.write("\n".join(r["par"] for r in rows) + "\n")
 
 
 def write_noise_json_files(noise, out_dir: str) -> list[str]:
@@ -46,9 +37,3 @@ def write_covm_csv(covm: DataFrame, path: str) -> None:
     pdf.to_csv(path, index=False)
 
 
-def write_freqs_metadata(freqs: DataFrame, path: str) -> None:
-    """K5 — per-selection Fourier component counts
-    (enterprise_models.py:541-574) as a small parquet metadata table."""
-    freqs.groupBy(*[c for c in freqs.columns if c in ("psr", "selection")]).agg(
-        F.max("k").alias("nfreqs"), F.min("f_hz").alias("f_min_hz")
-    ).write.mode("overwrite").parquet(path)

@@ -1,29 +1,13 @@
-"""S7 — covariance-matrix sources (cov.npy / covm CSV).
+"""S7 — covariance-matrix source (cov.npy).
 
-Reference: cov.npy per run dir (results.py:562); jump-covariance CSV read
-via pandas (enterprise_warp.py:286-290). CSV goes straight through
-spark.read.csv; .npy has no splittable reader, so ingest is a one-shot
-driver-side conversion to the long-form covm table (small matrices).
+Reference: cov.npy per run dir (results.py:562). .npy has no splittable
+reader, so ingest is a one-shot driver-side conversion to the long-form
+covm table (small matrices).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_covm_csv(spark: SparkSession, path: str, run_id: str = "run") -> DataFrame:
-    """Dense CSV (first column = row parameter names) -> long form."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.csv(path, header=True, inferSchema=True)
-    key = df.columns[0]
-    cols = df.columns[1:]
-    stacked = ", ".join(f"'{c}', `{c}`" for c in cols)
-    return df.select(
-        F.lit(run_id).alias("run_id"),
-        F.col(key).alias("row_par"),
-        F.expr(f"stack({len(cols)}, {stacked}) as (col_par, value)"),
-    ).select("run_id", "row_par", "col_par", "value")
 
 
 def ingest_npy(spark: SparkSession, npy_path: str, par_names: list[str], run_id: str = "run") -> DataFrame:

@@ -80,12 +80,3 @@ def read_tim_tables(spark: SparkSession, paths: list[str]) -> dict:
     return out
 
 
-def toas_with_seconds(toas: DataFrame, mjd_epoch: int = 0) -> DataFrame:
-    """Add exact second-scale arithmetic columns without double precision loss:
-    split MJD into integer day + fractional-day DOUBLE (SURVEY §4.2)."""
-    return toas.withColumn("mjd_day", F.col("toa_mjd").cast("bigint")).withColumn(
-        "mjd_frac", (F.col("toa_mjd") - F.col("toa_mjd").cast("bigint")).cast("double")
-    ).withColumn(
-        "toa_s_approx",
-        ((F.col("mjd_day") - F.lit(mjd_epoch)) * 86400.0 + F.col("mjd_frac") * 86400.0),
-    )

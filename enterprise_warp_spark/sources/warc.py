@@ -35,7 +35,6 @@ import zlib
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Output schema of read_warc: one row per WARC record.
 WARC_SCHEMA = (
@@ -181,23 +180,6 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(_parse, WARC_SCHEMA)
-
-
-def wet_documents(records: DataFrame) -> DataFrame:
-    """WET conversion records -> the documents-table shape
-    (doc_id, url, text): keep ``warc_type = 'conversion'`` rows (WET text
-    extracts), decode UTF-8, derive a stable doc_id from the record id
-    (xxhash64 of the globally-unique urn:uuid — engine-internal ids are
-    fine HERE because doc identity never crosses an engine boundary).
-    Pure Catalyst; feeds pipeline/weburl + pipeline/text directly."""
-    return (
-        records.filter(F.col("warc_type") == "conversion")
-        .select(
-            F.xxhash64("record_id").alias("doc_id"),
-            F.col("target_uri").alias("url"),
-            F.decode("content", "UTF-8").alias("text"),
-        )
-    )
 
 
 def encode_warc(

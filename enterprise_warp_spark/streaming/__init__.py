@@ -1,10 +1,5 @@
 """Structured Streaming surface (north-star extension; the reference is
-pure batch — SURVEY §2.7). Same logical aggregations as the batch catalog
-(hourly_event_rollup et al.), expressed over readStream with watermarks."""
+pure batch — SURVEY §2.7): the events table as a stream and the dedup'd
+corpus stream."""
 
-from enterprise_warp_spark.streaming.events import (  # noqa: F401
-    sessionized_activity,
-    stream_events,
-    streaming_dedup,
-    windowed_rollup,
-)
+from enterprise_warp_spark.streaming.events import stream_events  # noqa: F401

@@ -54,7 +54,7 @@ def dedup_corpus_stream(
 
     `transform` (optional, DataFrame -> DataFrame) runs on each raw batch
     BEFORE dedup — the hook where crawl hygiene composes into the stream
-    (pipeline.html.extract_main_text, weburl.repair_mojibake,
+    (pipeline.html.strip_tags_catalyst, weburl.repair_mojibake,
     tokenizer.encode_corpus, ...). It MUST be deterministic (a pure
     function of the batch), or crash replays would write different rows
     into the same epoch partition and break the idempotence contract."""
@@ -106,33 +106,3 @@ def dedup_corpus_stream(
     )
 
 
-def exactly_once_parquet_sink(
-    stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    partition_cols: tuple[str, ...] = (),
-) -> StreamingQuery:
-    """foreachBatch parquet sink with idempotent replays: each micro-batch
-    writes under an epoch-keyed partition (`__epoch=<id>`) using dynamic
-    partition overwrite, so a batch replayed after a crash OVERWRITES its own
-    previous (possibly partial) output instead of appending duplicates.
-    Combined with the checkpoint's exactly-once offset tracking this gives
-    end-to-end exactly-once file output — the property a bare
-    `.writeStream.format("parquet")` only approximates when readers ignore
-    its _spark_metadata log (which plain `spark.read.parquet` does).
-
-    Readers: `spark.read.parquet(out_path)` — `__epoch` appears as an extra
-    partition column; drop it or prune on it for incremental consumption.
-    """
-    from enterprise_warp_spark.maintenance import upsert_partitions
-
-    def _one_batch(batch: DataFrame, epoch_id: int) -> None:
-        tagged = batch.withColumn("__epoch", F.lit(int(epoch_id)))
-        upsert_partitions(tagged, out_path, ["__epoch", *partition_cols])
-
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1,13 +1,12 @@
-"""Streaming operators over the events table.
+"""The events table as a stream.
 
-Batch/stream parity: `windowed_rollup` computes exactly what the batch
-catalog query `hourly_event_rollup` computes, so the batch oracle doubles as
-the streaming correctness check (run with availableNow + memory sink).
-
-Scale notes: watermarks bound state; the rollup state is (window x
-event_type) — small; dedup state is bounded by the watermark horizon. At
-100 TB/day the same code runs against a Kafka/file source with no change —
-only the readStream source line differs.
+`stream_events` reads events.parquet with readStream, normalizes the
+timestamp to (ts, ts_us, ts_ns) whatever unit the file stores, and sizes the
+session's state partitions from the input. The catalog's
+`streaming_hourly_rollup` runs its watermarked rollup on it, and the batch
+oracle doubles as the streaming correctness check (availableNow + memory
+sink). At 100 TB/day the same code runs against a Kafka/file source with no
+change — only the readStream source line differs.
 """
 
 from __future__ import annotations
@@ -97,91 +96,3 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def windowed_rollup(stream: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window count/sum per event_type (streaming twin of the batch
-    hourly_event_rollup catalog query)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w").start.alias("hour"), "event_type", "n", "sum_value")
-    )
-
-
-def streaming_dedup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Exact dedup on event_id within the watermark horizon — the streaming
-    form of the dedup_exact catalog operator; state is bounded by the
-    watermark."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def stream_stream_attribution_join(
-    spark: SparkSession,
-    sf_dir: str,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join with an event-time range condition: each
-    click joined to the same user's views from the preceding `within`
-    interval. Both sides are watermarked so the view-side buffer state is
-    dropped once `click_ts - within` passes the watermark — bounded state,
-    the streaming analogue of `interval_join`.
-
-    Two independent readStream sources (a streaming self-join on one source
-    reads the data once per side anyway)."""
-    clicks = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    views = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("value").alias("view_value"),
-        )
-        .withWatermark("view_ts", watermark)
-    )
-    return clicks.join(
-        views,
-        F.expr(
-            f"c_user = v_user AND view_ts <= click_ts "
-            f"AND view_ts > click_ts - INTERVAL {within}"
-        ),
-    ).select(
-        "click_id",
-        F.col("c_user").alias("user_id"),
-        "click_ts",
-        "view_id",
-        "view_ts",
-        "view_value",
-    )
-
-
-def sessionized_activity(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Session windows per user (gap-based), the stateful custom-operator
-    showcase: count + span per session."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            "user_id",
-            F.col("s").start.alias("session_start"),
-            F.col("s").end.alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )

@@ -49,10 +49,6 @@ def duck(sf_dir):
 # pyproject's `addopts = "-m 'not slow'"` deselects them by default.
 # Full run: pytest tests/ -m "slow or not slow".
 SLOW_TESTS = frozenset((
-    "tests/test_cdc.py::test_chunk_store_stream_full_store_restores",
-    "tests/test_cdc.py::test_chunk_store_stream_incremental_and_replay",
-    "tests/test_cdc.py::test_compact_chunk_store_preserves_contract",
-    "tests/test_cdc.py::test_stream_with_bloom_and_compaction_rebuild",
     "tests/test_classify.py::test_classifier_deterministic_and_filter_schema",
     "tests/test_classify.py::test_classifier_separates_holdout",
     "tests/test_cli.py::test_cross_flag_separate_load_and_saved_os_compose",
@@ -81,17 +77,13 @@ SLOW_TESTS = frozenset((
     "tests/test_golden_recovery.py::test_tier_a_medians_within_30pct",
     "tests/test_golden_recovery.py::test_tier_b_golden_inside_90pct_band",
     "tests/test_golden_recovery.py::test_tier_c_ridge_combination",
-    "tests/test_graph.py::test_degrees_and_quality_weights",
     "tests/test_graph.py::test_pagerank_matches_dense_reference",
-    "tests/test_html.py::TestLinkExtraction::test_link_edges_domain_graph",
     "tests/test_importance_posterior.py::test_high_dimension_takes_diagonal_family",
     "tests/test_maintenance.py::test_dedup_corpus_stream",
     "tests/test_mojibake.py::test_curation_fix_encoding_stage",
     "tests/test_mojibake.py::test_property_repair_inverts_any_cleanly_wreckable_text",
     "tests/test_oracle_parity.py::test_learned_sketch_ops_concurrent_sessions_deterministic",
     "tests/test_product_space.py::test_adaptive_evidence_differences_agree_with_hypermodel_bf",
-    "tests/test_search.py::test_bm25_pruned_equals_exhaustive",
-    "tests/test_search.py::test_query_tokenization_contract_all_five_paths",
     "tests/test_suffix.py::test_cross_shard_span_missed_but_hash_backstop_catches_it",
     "tests/test_suffix.py::test_max_run_members_guard",
     "tests/test_suffix.py::test_randomized_corpora_match_brute",
@@ -153,27 +145,29 @@ def pytest_collection_modifyitems(config, items):
     # match on nodeids relative to the repo root (the rootdir pyproject.toml
     # sets), whatever directory pytest was started from
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    matched, modules = set(), set()
+    nodeids, modules = set(), set()
     for item in items:
         module = os.path.relpath(item.path, root).replace(os.sep, "/")
         nodeid = module + item.nodeid[item.nodeid.index("::"):]
+        nodeids.add(nodeid)
         modules.add(module)
         if nodeid in SLOW_TESTS:
-            matched.add(nodeid)
             item.add_marker(pytest.mark.slow)
     # a listed test is stale when its module is gone, or was collected
     # whole (no ::-selection on the command line) without it
     if any("::" in arg for arg in config.args):
         return
-    stale = sorted(
-        t for t in SLOW_TESTS - matched
-        if t.split("::")[0] in modules
-        or not os.path.exists(os.path.join(root, t.split("::")[0]))
-    )
-    if stale:
-        warnings.warn(
-            pytest.PytestConfigWarning(
-                "SLOW_TESTS entries that match no collected test: "
-                + ", ".join(stale)
-            )
+    for name, listed in (("SLOW_TESTS", SLOW_TESTS),
+                         ("REFERENCE_TESTS", REFERENCE_TESTS)):
+        stale = sorted(
+            t for t in listed - nodeids
+            if t.split("::")[0] in modules
+            or not os.path.exists(os.path.join(root, t.split("::")[0]))
         )
+        if stale:
+            warnings.warn(
+                pytest.PytestConfigWarning(
+                    f"{name} entries that match no collected test: "
+                    + ", ".join(stale)
+                )
+            )

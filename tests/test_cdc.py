@@ -6,7 +6,6 @@ import hashlib
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from enterprise_warp_spark.pipeline.cdc import (
     cdc_chunk_bytes,
@@ -203,561 +202,6 @@ def test_hot_chunk_cap_prevents_quadratic_bucket(spark):
     uncapped = chunk_dedup_pairs(chunks, min_shared=1, max_doc_freq=None)
     assert capped.count() == 0  # only the ubiquitous chunks matched
     assert uncapped.count() == 12 * 11 // 2  # all-pairs via the hot chunks
-
-
-def test_chunk_store_stream_incremental_and_replay(spark, tmp_path):
-    """Streaming content-addressed ingest: a re-upload of batch-1 content
-    with a prepended header stores almost nothing new (CDC resync dedups
-    it against the persisted store), stats record the per-epoch dedup
-    ratio, and a full replay leaves the store byte-identical."""
-    from enterprise_warp_spark.pipeline.cdc import chunk_store_stream
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    common = _blob(21, 40_000)
-    a, b = _blob(22, 10_000) + common, _blob(23, 30_000)
-    reupload = _blob(99, 17) + a  # same content behind a new 17-byte header
-    fresh = _blob(24, 30_000)
-    spark.createDataFrame(
-        [(1, a), (2, b)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(
-        [(3, reupload), (4, fresh)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b2"))
-
-    stream = (
-        spark.readStream.schema("media_id long, payload binary")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-
-    def run(ckpt):
-        q = chunk_store_stream(
-            stream,
-            store_path=str(tmp_path / "store"),
-            checkpoint_path=str(tmp_path / ckpt),
-            stats_path=str(tmp_path / "stats"),
-        )
-        q.awaitTermination(300)
-
-    run("ckpt1")
-    spark.catalog.refreshByPath(str(tmp_path / "store"))
-    store = spark.read.parquet(str(tmp_path / "store"))
-    got = {(r["chunk_hash"], r["length"]) for r in store.collect()}
-    # the store holds exactly the distinct chunks of all four payloads
-    brute = {}
-    for p in (a, b, reupload, fresh):
-        for off, ln, hx in cdc_chunk_bytes(p):
-            brute[hx] = max(brute.get(hx, 0), ln)
-    assert got == set(brute.items())
-    assert store.count() == len(brute)  # each hash stored exactly once
-
-    stats = {
-        r["__epoch"]: r
-        for r in spark.read.parquet(str(tmp_path / "stats")).collect()
-    }
-    assert set(stats) == {0, 1}
-    e0, e1 = stats[0], stats[1]
-    assert e0["ingested_bytes"] == len(a) + len(b)
-    assert sum(e["stored_bytes"] for e in stats.values()) == sum(
-        brute.values()
-    )
-    # epoch 1 re-ingests a's content: most of its bytes dedup against the
-    # store, so it stores far less than it ingested (fresh + resync only)
-    assert e1["ingested_bytes"] == len(reupload) + len(fresh)
-    assert len(fresh) - 4096 < e1["stored_bytes"] < 0.65 * e1["ingested_bytes"]
-
-    # full replay, fresh checkpoint: identical epochs overwrite their own
-    # partitions — store and stats land byte-identical, no duplicates
-    run("ckpt2")
-    spark.catalog.refreshByPath(str(tmp_path / "store"))
-    again = spark.read.parquet(str(tmp_path / "store"))
-    assert {(r["chunk_hash"], r["length"]) for r in again.collect()} == got
-    assert again.count() == len(brute)
-
-
-def test_chunk_payloads_and_reconstruct_roundtrip(spark):
-    """Batch-mode content-addressed store: every exemplar slice re-hashes
-    to its own chunk_hash (the store is self-verifying), and manifests +
-    store reconstruct each payload bit-identically."""
-    from enterprise_warp_spark.pipeline.cdc import (
-        chunk_payloads,
-        reconstruct_media,
-    )
-
-    shared = _blob(41, 20_000)
-    rows = [
-        (1, _blob(42, 15_000) + shared),
-        (2, shared + _blob(43, 5_000)),
-        (3, _blob(44, 2_000)),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    chunks = cdc_chunks(media).cache()
-    store = chunk_payloads(media, chunks)
-    for r in store.collect():
-        assert (
-            hashlib.blake2b(bytes(r["payload"]), digest_size=8).hexdigest()
-            == r["chunk_hash"]
-        )
-        assert len(r["payload"]) == r["length"]
-    got = {
-        r["media_id"]: bytes(r["payload"])
-        for r in reconstruct_media(chunks, store).collect()
-    }
-    assert got == dict(rows)
-
-
-def test_chunk_store_stream_full_store_restores(spark, tmp_path):
-    """Streaming store_payloads=True end-to-end: after two epochs (the
-    second re-uploading epoch-1 content behind a new header), every
-    ingested payload reconstructs bit-identically from the persisted
-    manifests + byte store, while each chunk's bytes are stored once."""
-    from enterprise_warp_spark.pipeline.cdc import (
-        chunk_store_stream,
-        reconstruct_media,
-    )
-
-    base = _blob(51, 35_000)
-    payloads = {
-        1: base + _blob(52, 8_000),
-        2: _blob(53, 20_000),
-        3: _blob(54, 11) + base + _blob(52, 8_000),  # re-upload, new header
-        4: _blob(55, 9_000),
-    }
-    src = tmp_path / "incoming"
-    src.mkdir()
-    spark.createDataFrame(
-        [(k, payloads[k]) for k in (1, 2)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(
-        [(k, payloads[k]) for k in (3, 4)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b2"))
-
-    q = chunk_store_stream(
-        spark.readStream.schema("media_id long, payload binary")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*")),
-        store_path=str(tmp_path / "store"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        manifest_path=str(tmp_path / "manifests"),
-        store_payloads=True,
-    )
-    q.awaitTermination(300)
-
-    store = spark.read.parquet(str(tmp_path / "store"))
-    manifests = spark.read.parquet(str(tmp_path / "manifests"))
-    got = {
-        r["media_id"]: bytes(r["payload"])
-        for r in reconstruct_media(manifests, store).collect()
-    }
-    assert got == payloads  # bit-identical restore of all four
-    # dedup held: each hash stored once, and the re-upload cost the store
-    # far less than its payload size
-    assert store.groupBy("chunk_hash").count().filter("count > 1").count() == 0
-    stored = store.agg(F.sum("length")).first()[0]
-    total = sum(len(p) for p in payloads.values())
-    assert stored < total - 30_000  # the shared ~43 KB is not double-stored
-
-    with pytest.raises(ValueError):
-        chunk_store_stream(
-            spark.readStream.schema("media_id long, payload binary").parquet(
-                str(src / "*")
-            ),
-            store_path=str(tmp_path / "s2"),
-            checkpoint_path=str(tmp_path / "c2"),
-            store_payloads=True,  # no manifest_path
-        )
-
-
-def test_compact_chunk_store_preserves_contract(spark, tmp_path):
-    """Compaction folds epochs into base epoch -1 with one file per
-    bucket; contents are unchanged, restore still works, and a FULL
-    REPLAY after compaction writes nothing (the replay probe sees the
-    compacted rows because they are not its own epoch)."""
-    import os
-
-    from enterprise_warp_spark.pipeline.cdc import (
-        chunk_store_stream,
-        compact_chunk_store,
-        reconstruct_media,
-    )
-
-    payloads = {1: _blob(61, 30_000), 2: _blob(62, 25_000)}
-    src = tmp_path / "incoming"
-    src.mkdir()
-    for k, sub in ((1, "b1"), (2, "b2")):
-        spark.createDataFrame(
-            [(k, payloads[k])], "media_id long, payload binary"
-        ).coalesce(1).write.parquet(str(src / sub))
-
-    def run(ckpt):
-        q = chunk_store_stream(
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src / "*")),
-            store_path=str(tmp_path / "store"),
-            checkpoint_path=str(tmp_path / ckpt),
-            manifest_path=str(tmp_path / "manifests"),
-            store_payloads=True,
-        )
-        q.awaitTermination(300)
-
-    run("ckpt1")
-    store_path = str(tmp_path / "store")
-    before = {
-        (r["chunk_hash"], r["length"], bytes(r["payload"]))
-        for r in spark.read.parquet(store_path).collect()
-    }
-
-    n = compact_chunk_store(spark, store_path)
-    assert n == len(before)
-    compacted = spark.read.parquet(store_path)
-    rows = compacted.collect()
-    assert {
-        (r["chunk_hash"], r["length"], bytes(r["payload"])) for r in rows
-    } == before
-    assert {r["__epoch"] for r in rows} == {-1}
-    # one file per bucket directory
-    base = os.path.join(store_path, "__epoch=-1")
-    for bucket_dir in os.listdir(base):
-        files = [
-            f
-            for f in os.listdir(os.path.join(base, bucket_dir))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, bucket_dir
-
-    # restore still works from the compacted store
-    got = {
-        r["media_id"]: bytes(r["payload"])
-        for r in reconstruct_media(
-            spark.read.parquet(str(tmp_path / "manifests")), compacted
-        ).collect()
-    }
-    assert got == payloads
-
-    # full replay against the compacted store: nothing is novel, nothing
-    # is written — no duplicates, no resurrected epochs
-    run("ckpt2")
-    spark.catalog.refreshByPath(store_path)
-    after = spark.read.parquet(store_path)
-    assert {r["__epoch"] for r in after.collect()} == {-1}
-    assert after.count() == len(before)
-
-
-def test_probe_novel_chunks_batch(spark, tmp_path):
-    """Batch-mode probe: against no store everything is novel (with batch
-    totals carried on the aggregate); after persisting those chunks, a
-    second probe of overlapping content returns only the new hashes."""
-    from enterprise_warp_spark.pipeline.cdc import probe_novel_chunks
-
-    shared = _blob(31, 25_000)
-    m1 = spark.createDataFrame(
-        [(1, shared + shared)], "media_id long, payload binary"
-    )
-    ch1 = cdc_chunks(m1)
-    store = str(tmp_path / "store")
-    novel1 = probe_novel_chunks(ch1, store)
-    rows1 = novel1.collect()
-    # batch totals: instances count BOTH copies of the shared half
-    assert sum(r["instance_bytes"] for r in rows1) == 50_000
-    assert all(r["instances"] >= 1 for r in rows1)
-    novel1.select("bucket", "chunk_hash", "length").write.partitionBy(
-        "bucket"
-    ).parquet(store)
-
-    m2 = spark.createDataFrame(
-        [(2, shared + _blob(32, 10_000))], "media_id long, payload binary"
-    )
-    novel2 = {r["chunk_hash"] for r in probe_novel_chunks(cdc_chunks(m2), store).collect()}
-    stored = {r["chunk_hash"] for r in rows1}
-    assert novel2 and not (novel2 & stored)  # only genuinely new chunks
-    # and the new suffix's bytes dominate what a second ingest would store
-    tail_hashes = {h for _, _, h in cdc_chunk_bytes(shared + _blob(32, 10_000))}
-    assert novel2 <= tail_hashes
-
-
-def test_bloom_probe_matches_full_antijoin_and_handles_staleness(
-    spark, tmp_path
-):
-    """The bloom-accelerated probe must return EXACTLY the novel set of
-    the plain anti-join — including hashes added to the store AFTER the
-    bloom was built (the post-watermark slice is verified by its own
-    partition-pruned anti-join, so a stale bloom can never resurrect a
-    stored chunk)."""
-    from enterprise_warp_spark.pipeline.cdc import (
-        probe_novel_chunks,
-        update_store_bloom,
-    )
-
-    store_path = str(tmp_path / "store")
-    bloom_path = str(tmp_path / "bloom")
-    old_content, late_content = _blob(71, 30_000), _blob(72, 20_000)
-
-    def chunks_of(*payloads):
-        return cdc_chunks(
-            spark.createDataFrame(
-                [(i, p) for i, p in enumerate(payloads)],
-                "media_id long, payload binary",
-            )
-        )
-
-    # epoch 0 in the store, then the bloom covers it (watermark 0)
-    probe_novel_chunks(chunks_of(old_content), store_path).select(
-        "bucket", "chunk_hash", "length"
-    ).withColumn("__epoch", F.lit(0)).write.partitionBy(
-        "__epoch", "bucket"
-    ).parquet(store_path)
-    covered_n = update_store_bloom(spark, store_path, bloom_path)
-    assert covered_n == spark.read.parquet(store_path).count()
-
-    # epoch 1 lands AFTER the bloom build — the bloom is now stale
-    probe_novel_chunks(chunks_of(late_content), store_path).select(
-        "bucket", "chunk_hash", "length"
-    ).withColumn("__epoch", F.lit(1)).write.mode("append").partitionBy(
-        "__epoch", "bucket"
-    ).parquet(store_path)
-    spark.catalog.refreshByPath(store_path)
-
-    # probe a batch mixing covered content, post-watermark content, and
-    # genuinely new bytes: bloom path == plain path, and nothing stored
-    # (before OR after the watermark) comes back as novel
-    batch = chunks_of(old_content + late_content + _blob(73, 15_000))
-    plain = {
-        r["chunk_hash"] for r in probe_novel_chunks(batch, store_path).collect()
-    }
-    fast = {
-        r["chunk_hash"]
-        for r in probe_novel_chunks(
-            batch, store_path, bloom_path=bloom_path
-        ).collect()
-    }
-    assert fast == plain
-    stored = {
-        r["chunk_hash"] for r in spark.read.parquet(store_path).collect()
-    }
-    assert not (fast & stored)
-    assert fast  # the fresh 15 KB did produce novel chunks
-
-
-def test_stream_with_bloom_and_compaction_rebuild(spark, tmp_path):
-    """Streaming ingest with bloom_path: the bloom tracks the store per
-    epoch (watermark = last epoch), a full replay leaves store AND bloom
-    semantics intact, and compact_chunk_store(bloom_path=...) rebuilds
-    the bloom so post-compaction probes still dedup everything."""
-    from enterprise_warp_spark.pipeline.cdc import (
-        chunk_store_stream,
-        compact_chunk_store,
-        probe_novel_chunks,
-    )
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    p1, p2 = _blob(81, 25_000), _blob(82, 25_000)
-    spark.createDataFrame(
-        [(1, p1)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(
-        [(2, p2)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b2"))
-
-    store_path = str(tmp_path / "store")
-    bloom_path = str(tmp_path / "bloom")
-
-    def run(ckpt):
-        q = chunk_store_stream(
-            spark.readStream.schema("media_id long, payload binary")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src / "*")),
-            store_path=store_path,
-            checkpoint_path=str(tmp_path / ckpt),
-            bloom_path=bloom_path,
-        )
-        q.awaitTermination(300)
-
-    run("ckpt1")
-    store = spark.read.parquet(store_path)
-    n = store.count()
-    brute = set()
-    for p in (p1, p2):
-        brute |= {h for _, _, h in cdc_chunk_bytes(p)}
-    assert {r["chunk_hash"] for r in store.collect()} == brute
-    bloom = spark.read.parquet(bloom_path)
-    assert bloom.select("max_epoch").first()[0] == 1
-
-    # replay: same store, bloom watermark unchanged, no duplicates
-    run("ckpt2")
-    spark.catalog.refreshByPath(store_path)
-    assert spark.read.parquet(store_path).count() == n
-    assert spark.read.parquet(bloom_path).select("max_epoch").first()[0] == 1
-
-    # compaction folds epochs into -1 and rebuilds the bloom with it
-    compact_chunk_store(spark, store_path, bloom_path=bloom_path)
-    assert spark.read.parquet(bloom_path).select("max_epoch").first()[0] == -1
-    # post-compaction bloom probe still dedups all previously stored bytes
-    reingest = cdc_chunks(
-        spark.createDataFrame(
-            [(9, p1), (10, p2)], "media_id long, payload binary"
-        )
-    )
-    assert (
-        probe_novel_chunks(
-            reingest, store_path, bloom_path=bloom_path
-        ).count()
-        == 0
-    )
-
-
-def test_bloom_enabled_on_existing_store_covers_old_epochs(
-    spark, tmp_path
-):
-    """Turning bloom_path on over a store built WITHOUT one must not
-    un-cover the old epochs: the first merge rebuilds the filter from
-    the whole store, so a re-upload of pre-bloom content stays deduped
-    (the regression would stamp a batch-only bloom with the current
-    watermark and re-store every old chunk as a 'definite miss')."""
-    from enterprise_warp_spark.pipeline.cdc import chunk_store_stream
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    old = _blob(91, 25_000)
-    spark.createDataFrame(
-        [(1, old)], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-
-    store_path = str(tmp_path / "store")
-
-    # epoch 0: no bloom configured
-    q = chunk_store_stream(
-        spark.readStream.schema("media_id long, payload binary")
-        .parquet(str(src / "*")),
-        store_path=store_path,
-        checkpoint_path=str(tmp_path / "ckpt1"),
-    )
-    q.awaitTermination(300)
-    n0 = spark.read.parquet(store_path).count()
-
-    # later batches arrive with bloom_path ON; the batch re-uploads the
-    # pre-bloom content plus a little new data
-    spark.createDataFrame(
-        [(2, old), (3, _blob(92, 6_000))], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b2"))
-    q = chunk_store_stream(
-        spark.readStream.schema("media_id long, payload binary")
-        .parquet(str(src / "*")),
-        store_path=store_path,
-        checkpoint_path=str(tmp_path / "ckpt2"),
-        bloom_path=str(tmp_path / "bloom"),
-    )
-    q.awaitTermination(300)
-    spark.catalog.refreshByPath(store_path)
-    store = spark.read.parquet(store_path)
-    # no duplicate hashes: the old content was NOT re-stored
-    assert store.groupBy("chunk_hash").count().filter("count > 1").count() == 0
-    assert store.count() < n0 + 6_000 // 256 + 3  # only the new 6 KB landed
-
-
-def test_epoch_collision_guard_blocks_second_owner(spark, tmp_path):
-    """Two different inputs sharing one store re-issue the same epoch ids
-    (each checkpoint starts at 0) and their dynamic-partition overwrites
-    would silently replace each other's chunks. The guard refuses before
-    any write; a legit full replay of the SAME input (fresh checkpoint)
-    still passes — its epoch rows are all explainable."""
-    from pyspark.errors import StreamingQueryException
-
-    from enterprise_warp_spark.pipeline.cdc import chunk_store_stream
-
-    src = tmp_path / "in1"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, _blob(95, 20_000))], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    src2 = tmp_path / "in2"
-    src2.mkdir()
-    spark.createDataFrame(
-        [(2, _blob(96, 20_000))], "media_id long, payload binary"
-    ).coalesce(1).write.parquet(str(src2 / "b1"))
-
-    store_path = str(tmp_path / "store")
-
-    def run(source, ckpt):
-        q = chunk_store_stream(
-            spark.readStream.schema("media_id long, payload binary")
-            .parquet(str(source / "*")),
-            store_path=store_path,
-            checkpoint_path=str(tmp_path / ckpt),
-        )
-        q.awaitTermination(300)
-
-    run(src, "ckpt1")
-    n = spark.read.parquet(store_path).count()
-
-    # same input, fresh checkpoint (the supported replay): passes
-    run(src, "ckpt-replay")
-    spark.catalog.refreshByPath(store_path)
-    assert spark.read.parquet(store_path).count() == n
-
-    # DIFFERENT input, second stream on the same store: refused loudly,
-    # store untouched
-    with pytest.raises(StreamingQueryException, match="owns a store"):
-        run(src2, "ckpt2")
-    spark.catalog.refreshByPath(store_path)
-    assert spark.read.parquet(store_path).count() == n
-
-
-def test_reconstruct_refuses_truncated_payload(spark):
-    """A manifest chunk with no store row (crash between manifest and
-    store writes, lost bucket file) must raise, never return a silently
-    truncated payload."""
-    from pyspark.errors import PythonException
-
-    from enterprise_warp_spark.pipeline.cdc import (
-        chunk_payloads,
-        reconstruct_media,
-    )
-
-    media = spark.createDataFrame(
-        [(1, _blob(93, 20_000))], "media_id long, payload binary"
-    )
-    chunks = cdc_chunks(media).cache()
-    # drop one chunk's bytes from the store
-    victim = chunks.orderBy("chunk_idx").first()["chunk_hash"]
-    store = chunk_payloads(media, chunks).filter(
-        F.col("chunk_hash") != victim
-    )
-    with pytest.raises(PythonException, match="out of sync"):
-        reconstruct_media(chunks, store).collect()
-
-
-def test_update_store_bloom_empty_store(spark, tmp_path):
-    """An empty-but-readable store gets watermark -1 (everything future
-    is 'recent') instead of a TypeError on max(NULL)."""
-    from enterprise_warp_spark.pipeline.cdc import (
-        probe_novel_chunks,
-        update_store_bloom,
-    )
-
-    store_path = str(tmp_path / "store")
-    # non-partitioned empty write: leaves a zero-row parquet footer, so
-    # the path is readable-but-empty (a partitioned empty write leaves
-    # no data files at all and reads as 'no store')
-    spark.createDataFrame(
-        [], "bucket string, chunk_hash string, length long, __epoch int"
-    ).write.parquet(store_path)
-    bloom_path = str(tmp_path / "bloom")
-    assert update_store_bloom(spark, store_path, bloom_path) == 0
-    assert (
-        spark.read.parquet(bloom_path).select("max_epoch").first()[0] == -1
-    )
-    # and the bloom path still classifies everything as novel
-    media = spark.createDataFrame(
-        [(1, _blob(94, 5_000))], "media_id long, payload binary"
-    )
-    ch = cdc_chunks(media)
-    assert (
-        probe_novel_chunks(ch, store_path, bloom_path=bloom_path).count()
-        == probe_novel_chunks(ch, store_path).count()
-    )
 
 
 def test_cdc_chunks_plan_is_map_only(spark):

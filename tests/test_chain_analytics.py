@@ -122,16 +122,6 @@ def test_noise_files_json(loaded):
     assert set(payload) == set(PARS)
 
 
-def test_split_chain(loaded):
-    from enterprise_warp_spark.analytics.chains import split_chain
-
-    long, _ = loaded
-    head, tail = split_chain(long, 0.5)
-    assert head.count() == len(PARS) * (NSTEP // 2)
-    assert tail.count() == len(PARS) * (NSTEP - NSTEP // 2)
-    assert head.agg({"step": "max"}).first()[0] == NSTEP // 2 - 1
-
-
 def test_covariance_assembly(spark):
     from enterprise_warp_spark.analytics.covariance import assemble_block_diag
 

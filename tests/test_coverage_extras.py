@@ -99,7 +99,7 @@ def test_paired_pulsar_files(spark):
 
 def test_matrix_sources_and_covm_sink(spark, tmp_path):
     from enterprise_warp_spark.sinks import write_covm_csv
-    from enterprise_warp_spark.sources.matrix import ingest_npy, read_covm_csv
+    from enterprise_warp_spark.sources.matrix import ingest_npy
 
     m = np.array([[2.0, 0.5], [0.5, 1.0]])
     npy = tmp_path / "cov.npy"
@@ -108,20 +108,14 @@ def test_matrix_sources_and_covm_sink(spark, tmp_path):
     assert covm.count() == 4
     csv = tmp_path / "covm.csv"
     write_covm_csv(covm, str(csv))
-    back = read_covm_csv(spark, str(csv), run_id="r1")
-    vals = {(r["row_par"], r["col_par"]): r["value"] for r in back.collect()}
-    assert vals[("parA", "parA")] == 2.0 and vals[("parB", "parA")] == 0.5
+    back = pd.read_csv(csv, index_col=0)
+    assert back.loc["parA", "parA"] == 2.0 and back.loc["parB", "parA"] == 0.5
 
 
-def test_sinks_pars_and_noise_json(spark, tmp_path):
+def test_sinks_noise_json(spark, tmp_path):
     import json
 
-    from enterprise_warp_spark.sinks import write_noise_json_files, write_pars_txt
-
-    pars = spark.createDataFrame([(0, "alpha"), (1, "beta")], "idx int, par string")
-    p = tmp_path / "pars.txt"
-    write_pars_txt(pars, str(p))
-    assert p.read_text() == "alpha\nbeta\n"
+    from enterprise_warp_spark.sinks import write_noise_json_files
 
     noise = spark.createDataFrame(
         [("J1", "J1_efac", 1.05), ("J1", "J1_lgA", -14.0)],
@@ -130,15 +124,6 @@ def test_sinks_pars_and_noise_json(spark, tmp_path):
     paths = write_noise_json_files(noise, str(tmp_path / "nf"))
     doc = json.loads(open(paths[0]).read())
     assert doc == {"J1_efac": 1.05, "J1_lgA": -14.0}
-
-
-def test_allowlist_and_drop(spark):
-    from enterprise_warp_spark.operators.relational import allowlist_filter, drop_one
-
-    df = spark.createDataFrame([("a",), ("b",), ("c",)], "psr string")
-    assert allowlist_filter(df, []).count() == 3
-    assert allowlist_filter(df, ["a", "c"]).count() == 2
-    assert drop_one(df, "b").count() == 2
 
 
 def test_snapshot_roundtrip(spark, tmp_path):
@@ -187,31 +172,6 @@ def test_multimodal_feature_extraction(spark):
     # frame sampling: stride-10 indices over 25 frames -> 0,10,20
     frames = frame_sample(media, 10).collect()
     assert [r["frame_idx"] for r in frames] == [0, 10, 20]
-
-
-def test_classify_noise_param(spark):
-    from enterprise_warp_spark.operators.relational import classify_noise_param
-
-    df = spark.createDataFrame(
-        [
-            ("J1832-0836_PDFB_20CM_efac",),
-            ("J1832-0836_PDFB_20CM_log10_equad",),
-            ("J1832-0836_basis_ecorr_log10_ecorr",),
-            ("J1832-0836_dm_gp_log10_A",),
-            ("J1832-0836_dm_gp_gamma",),
-            ("J1832-0836_log10_A",),
-            ("J1832-0836_gamma",),
-            ("J1832-0836_log10_P0",),
-            ("J1832-0836_alpha",),
-            ("nmodel",),
-        ],
-        "par string",
-    )
-    got = [r["cat"] for r in df.select(classify_noise_param("par").alias("cat")).collect()]
-    assert got == [
-        "efac", "log10_equad", "log10_ecorr", "dm_gp_log10_A", "dm_gp_gamma",
-        "log10_A", "gamma", "log10_P0", "alpha", "other",
-    ]
 
 
 def test_timestamped_chain_segments(spark, tmp_path):
@@ -342,21 +302,6 @@ def test_curate_repetition_gate(spark):
     assert {r["doc_id"] for r in out2["kept"].select("doc_id").collect()} == {1, 2}
 
 
-def test_credible_levels_approx_close_to_exact(spark, sf_dir):
-    from enterprise_warp_spark.operators.relational import (
-        credible_levels,
-        credible_levels_approx,
-    )
-    from enterprise_warp_spark.tables import table
-
-    ev = table(spark, sf_dir, "events")
-    exact = {r["event_type"]: r for r in credible_levels(ev, "value", ["event_type"]).collect()}
-    approx = {r["event_type"]: r for r in credible_levels_approx(ev, "value", ["event_type"]).collect()}
-    for et in exact:
-        for c in ("p16", "p50", "p84"):
-            assert abs(exact[et][c] - approx[et][c]) < 2.0  # value range ~0..490
-
-
 def test_psd_expressions_match_numpy(spark):
     """F1-F4 — all four PSD column expressions equal the numpy forms
     (libstempo_warp.py:6-18, enterprise_models.py:421-426,593-603)."""
@@ -403,31 +348,6 @@ def test_psd_expressions_match_numpy(spark):
     np.testing.assert_allclose(
         out["lor"], p_lor / (1 + (f / fc_lor) ** 2) ** (alpha / 2), rtol=1e-12
     )
-
-
-def test_write_freqs_metadata_roundtrip(spark, tmp_path):
-    """K5 — per-selection nfreqs/f_min metadata survives the parquet sink."""
-    from enterprise_warp_spark.functions.fourier import freqs_table
-    from enterprise_warp_spark.sinks import write_freqs_metadata
-
-    spans = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "psr": ["J0001+0001", "J0002+0002"],
-                "selection": ["all", "all"],
-                "nfreqs": [5, 8],
-                "tspan_s": [3.0e8, 4.0e8],
-            }
-        )
-    )
-    path = str(tmp_path / "freqs_meta")
-    write_freqs_metadata(freqs_table(spans), path)
-    got = {
-        (r["psr"], r["selection"]): (r["nfreqs"], r["f_min_hz"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got[("J0001+0001", "all")] == (5, pytest.approx(1.0 / 3.0e8))
-    assert got[("J0002+0002", "all")] == (8, pytest.approx(1.0 / 4.0e8))
 
 
 def test_repetition_metrics_match_counter(spark):

@@ -114,45 +114,3 @@ def test_funnel_and_retention_guards(spark, sf_dir):
         retention_cohorts(events, 0)
 
 
-def test_frequent_itemsets_on_events(spark, sf_dir):
-    """FP-Growth over per-user event-type baskets: singleton supports match
-    exact distinct-user counts, and a planted perfect co-occurrence yields
-    a confidence-1 rule."""
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.operators.funnel import (
-        frequent_itemsets,
-        user_event_baskets,
-    )
-    from enterprise_warp_spark.tables import table
-
-    events = table(spark, sf_dir, "events")
-    baskets = user_event_baskets(events)
-    out = frequent_itemsets(baskets, "items", min_support=0.1)
-    singles = {
-        tuple(r["items"])[0]: r["freq"]
-        for r in out["itemsets"].filter(F.size("items") == 1).collect()
-    }
-    # exact check: singleton frequency == distinct users with that type
-    exact = {
-        r["event_type"]: r["n"]
-        for r in events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    for t, freq in singles.items():
-        assert freq == exact[t], t
-
-    # planted rule: every 'alpha' basket also contains 'beta'
-    synth = spark.createDataFrame(
-        [(["alpha", "beta"],)] * 40 + [(["beta"],)] * 30 + [(["gamma"],)] * 30,
-        "items array<string>",
-    )
-    rules = frequent_itemsets(synth, "items", min_support=0.1, min_confidence=0.9)[
-        "rules"
-    ]
-    r = rules.filter(
-        (F.col("antecedent") == F.array(F.lit("alpha")))
-        & (F.col("consequent") == F.array(F.lit("beta")))
-    ).first()
-    assert r is not None and r["confidence"] == 1.0

@@ -1,5 +1,5 @@
-"""Link-graph analytics: PageRank vs a dense numpy reference, degrees,
-and rank-derived quality weights."""
+"""Link-graph analytics: PageRank vs a dense numpy reference, and its
+argument guards."""
 
 import numpy as np
 import pytest
@@ -47,52 +47,12 @@ def test_pagerank_matches_dense_reference(spark):
     assert got["a"] > got["e"]
 
 
-def test_degrees_and_quality_weights(spark):
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.pipeline.graph import (
-        degrees,
-        pagerank,
-        rank_quality_weights,
-    )
-
-    edges = _edges(spark)
-    deg = {r["node"]: (r["out_degree"], r["in_degree"]) for r in degrees(edges).collect()}
-    assert deg["a"] == (3, 3) and deg["d"] == (0, 1) and deg["e"] == (1, 0)
-
-    ranks = pagerank(edges, iterations=10)
-    docs = spark.createDataFrame(
-        [(1, "a"), (2, "e"), (3, "unknown_host")],
-        "doc_id long, source string",
-    )
-    out = {r["doc_id"]: r["rank_weight"] for r in rank_quality_weights(docs, ranks).collect()}
-    assert out[1] == pytest.approx(1.0)          # top-ranked host -> weight 1
-    assert 0.1 <= out[2] < out[1]                # low-rank host in [floor, 1)
-    assert out[3] == pytest.approx(0.1)          # unknown host -> floor
-
-
-def test_pagerank_and_weights_guards(spark):
-    """Validation and edge semantics: bad iterations raise up front; an
-    empty ranks table raises; uniform ranks give every KNOWN host weight 1
-    (distinguishable from the unknown-host floor)."""
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.pipeline.graph import pagerank, rank_quality_weights
+def test_pagerank_guards(spark):
+    """Bad iterations or damping raise up front."""
+    from enterprise_warp_spark.pipeline.graph import pagerank
 
     edges = _edges(spark)
     with pytest.raises(ValueError, match="iterations"):
         pagerank(edges, iterations=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(edges, damping=1.5)
-
-    docs = spark.createDataFrame([(1, "x"), (2, "zz")], "doc_id long, source string")
-    empty = spark.createDataFrame([], "node string, rank double")
-    with pytest.raises(ValueError, match="empty"):
-        rank_quality_weights(docs, empty)
-
-    # 2-cycle: perfectly regular graph -> uniform ranks
-    cyc = spark.createDataFrame([("x", "y"), ("y", "x")], "src string, dst string")
-    uni = pagerank(cyc, iterations=5)
-    out = {r["doc_id"]: r["rank_weight"] for r in rank_quality_weights(docs, uni).collect()}
-    assert out[1] == pytest.approx(1.0)   # known host: full weight
-    assert out[2] == pytest.approx(0.1)   # unknown host: floor

@@ -1,77 +1,23 @@
-"""HTML extraction: tag stripping, entity decode, boilerplate-block rules,
-malformed-markup robustness, Catalyst-vs-SAX agreement on clean markup."""
+"""HTML extraction: tag stripping, entity decode, Catalyst-vs-SAX
+agreement on clean markup."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-
-_PAGE = """<!DOCTYPE html><html><head>
-<title>Ignored title block</title>
-<style>body {{ color: red; }}</style>
-<script>var x = "<p>not text</p>";</script>
-</head><body>
-<nav><a href="/">Home</a> | <a href="/a">News</a> | <a href="/b">Sport</a></nav>
-<h1>Article headline</h1>
-<p>This is the first real paragraph of the article, long enough to be kept
-by the density rule and containing an <a href="x">inline link</a> only.</p>
-<p>Second paragraph with enough characters to be considered substantial
-content by any reasonable threshold &amp; an entity or two &lt;here&gt;.</p>
-<div class="share"><a href="t">Tweet</a> <a href="f">Share</a></div>
-<footer><a href="/p">Privacy</a> <a href="/i">Imprint</a> Copyright</footer>
-</body></html>"""
-
-
-def test_extract_main_text_keeps_article_drops_boilerplate(spark):
-    from enterprise_warp_spark.pipeline.html import extract_main_text
-
-    df = spark.createDataFrame([(1, _PAGE)], "doc_id long, html string")
-    row = extract_main_text(df).first()
-    text = row["text"]
-    assert "first real paragraph" in text
-    assert "Second paragraph" in text
-    assert "Article headline" in text  # rescued: adjacent to content
-    assert "&amp;" not in text and "&" in text  # entities decoded
-    assert "Home" not in text and "Tweet" not in text  # link-dense blocks
-    assert "Privacy" not in text
-    assert "Ignored title block" not in text  # head subtree skipped
-    assert "var x" not in text  # script subtree skipped
-    assert row["n_blocks_kept"] < row["n_blocks_total"]
-    assert 0.0 < row["link_density"] < 1.0
-
-
-def test_extract_malformed_and_empty_never_raise(spark):
-    from enterprise_warp_spark.pipeline.html import extract_main_text
-
-    rows = [
-        (1, "<p>unclosed <b>tags <div>everywhere"),
-        (2, "<<<>>> &#x1F600; &bogus; <a href='x'>"),
-        (3, ""),
-        (4, None),
-        (5, "plain text with no markup at all, but long enough to keep as a block"),
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in extract_main_text(
-            spark.createDataFrame(rows, "doc_id long, html string"),
-            min_block_chars=5,
-        ).collect()
-    }
-    assert len(out) == 5
-    assert "unclosed" in out[1]["text"]
-    assert out[3]["text"] == "" and out[4]["text"] == ""
-    assert "plain text with no markup" in out[5]["text"]
-    assert "\U0001f600" in out[2]["text"] or out[2]["text"] == ""  # charref ok
+from html.parser import HTMLParser
 
 
 def test_strip_tags_catalyst_matches_sax_on_clean_markup(spark):
     """On well-formed markup with only named entities, the JVM tier and the
-    SAX extractor (density rule disabled) agree on the visible words."""
-    from enterprise_warp_spark.pipeline.html import (
-        extract_main_text,
-        strip_tags_catalyst,
-    )
+    stdlib SAX parser agree on the visible words."""
+    from enterprise_warp_spark.pipeline.html import strip_tags_catalyst
+
+    class Text(HTMLParser):
+        def __init__(self):
+            super().__init__(convert_charrefs=True)
+            self.parts = []
+
+        def handle_data(self, data):
+            self.parts.append(data)
 
     page = (
         "<html><body><p>alpha beta</p><p>gamma &amp; delta</p>"
@@ -79,10 +25,9 @@ def test_strip_tags_catalyst_matches_sax_on_clean_markup(spark):
     )
     df = spark.createDataFrame([(1, page)], "doc_id long, html string")
     jvm = df.select(strip_tags_catalyst("html").alias("t")).first()["t"]
-    sax = extract_main_text(
-        df, min_block_chars=1, max_link_density=1.0
-    ).first()["text"]
-    assert jvm.split() == sax.split() == [
+    sax = Text()
+    sax.feed(page)
+    assert jvm.split() == " ".join(sax.parts).split() == [
         "alpha", "beta", "gamma", "&", "delta", "epsilon",
     ]
 
@@ -96,18 +41,6 @@ def test_strip_tags_catalyst_plan_is_jvm_only(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Python" not in plan and "ArrowEval" not in plan
-
-
-def test_extraction_feeds_text_pipeline(spark):
-    """The extracted column drops straight into the existing text operators
-    (token counts) — the curation entry point for web crawls."""
-    from enterprise_warp_spark.pipeline.html import extract_main_text
-    from enterprise_warp_spark.pipeline.text import token_counts
-
-    df = spark.createDataFrame([(1, _PAGE)], "doc_id long, html string")
-    ex = extract_main_text(df).withColumn("text", F.lower("text"))
-    tc = token_counts(ex).first()
-    assert tc["n_ws_tokens"] > 20
 
 
 def test_strip_tags_escaped_entities_do_not_double_decode(spark):
@@ -127,74 +60,3 @@ def test_strip_tags_escaped_entities_do_not_double_decode(spark):
     assert "&lt;b&gt;" in got and "<real>" in got and "&amp;" in got
 
 
-class TestLinkExtraction:
-    """pipeline/html.py extract_links / link_edges: anchor scan + RFC 3986
-    resolution as pure Catalyst (dot-segment removal is an array fold)."""
-
-    BASE = "https://ex.com/a/b/page.html?x=1"
-
-    def test_resolution_matches_urljoin_battery(self, spark):
-        from urllib.parse import urljoin
-
-        from enterprise_warp_spark.pipeline.html import extract_links
-
-        hrefs = [
-            "https://other.com/z", "//cdn.com/lib.js", "/root/x",
-            "rel/y.html", "bare.html", "../up.html",
-            "../../../../clamp.html", "./same.html", ".", "..", "?q=2",
-            "a/b/../c/./d.html", "x.html?a=1&amp;b=2", "/abs/../top.html",
-            "dir/", "../../other/deep/../file.txt",
-        ]
-        quoted = (
-            [f'<a href="{h}">t</a>' for h in hrefs]
-            + ["<a href='sq.html'>t</a>", "<a href=bare2.html>t</a>"]
-        )
-        df = spark.createDataFrame(
-            [(self.BASE, "".join(quoted))], "url string, html string"
-        )
-        got = [r["href"] for r in extract_links(df).collect()]
-        want = [
-            urljoin(self.BASE, h.replace("&amp;", "&")) for h in hrefs
-        ] + [urljoin(self.BASE, "sq.html"), urljoin(self.BASE, "bare2.html")]
-        assert got == want
-
-    def test_non_edges_dropped(self, spark):
-        from enterprise_warp_spark.pipeline.html import extract_links
-
-        html = (
-            '<a href="#top">t</a><a href="mailto:a@b.c">t</a>'
-            '<a href="javascript:void(0)">t</a><a href="data:text/plain,x">t</a>'
-            '<a href="tel:+123">t</a><a href="">t</a><a href="ok.html">t</a>'
-        )
-        df = spark.createDataFrame(
-            [(self.BASE, html)], "url string, html string"
-        )
-        got = [r["href"] for r in extract_links(df).collect()]
-        assert got == ["https://ex.com/a/b/ok.html"]
-
-    def test_plan_is_jvm_only_map(self, spark):
-        from enterprise_warp_spark.pipeline.html import extract_links
-
-        df = spark.createDataFrame(
-            [(self.BASE, '<a href="x">t</a>')], "url string, html string"
-        )
-        plan = (
-            extract_links(df)._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan
-        assert "Python" not in plan  # no BatchEvalPython / ArrowEval
-
-    def test_link_edges_domain_graph(self, spark):
-        from enterprise_warp_spark.pipeline.html import link_edges
-
-        rows = [
-            ("https://news.ex.com/p1",
-             '<a href="https://blog.other.org/x">t</a>'
-             '<a href="/local">t</a>'                 # same domain: self-loop
-             '<a href="https://blog.other.org/y?utm_source=a">t</a>'),  # dup
-            ("https://blog.other.org/x",
-             '<a href="https://news.ex.com/p2">t</a>'),
-        ]
-        df = spark.createDataFrame(rows, "url string, html string")
-        got = {(r["src"], r["dst"]) for r in link_edges(df).collect()}
-        assert got == {("ex.com", "other.org"), ("other.org", "ex.com")}

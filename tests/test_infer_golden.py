@@ -16,7 +16,9 @@ CLI's own session settings.
   over pulsars depend on the inputs and the seed only.
 - `results -o 1 -N 50 -g hd` must write `os`, `binned` and `marginalised`
   parquet whose rows, normalised as in `tests/oracle.py`, hash to the
-  recorded digests (`perfbench.workloads.frame_digest`).
+  recorded digests (`perfbench.workloads.frame_digest`), and leave the
+  session holding no more persisted RDDs than before it. `results -o 1
+  -L 1 -g hd` then loads frames with the same digests.
 - The residual frame is an Arrow-built local relation, a warm
   single-pulsar op launches at most 3 Spark jobs and one Python task, and
   array runs over 2 and 6 pulsars launch the same number of jobs, with
@@ -222,15 +224,26 @@ def _child(work, labels=None, conf=None):
         rprfile, _, _ = make_results_inputs(
             os.path.join(work, "results"), RESULTS_SEED
         )
+        cached = spark.sparkContext._jsc.getPersistentRDDs
+        before = cached().size()
         results.main(
             ["--result", rprfile, "-o", "1", "-N", "50", "-g", "hd"],
             spark=spark,
         )
+        report["os_cached"] = [before, cached().size()]
         dest = os.path.join(work, "results", "out", "demo_1_bench",
                             "os_results", "hd")
         for part in ("os", "binned", "marginalised"):
             pdf = spark.read.parquet(os.path.join(dest, part)).toPandas()
             report["os"][part] = list(frame_digest(pdf))
+        loaded = results.main(
+            ["--result", rprfile, "-o", "1", "-L", "1", "-g", "hd"],
+            spark=spark,
+        )["os"]["hd"]
+        report["os_loaded"] = {
+            part: list(frame_digest(frame.toPandas()))
+            for part, frame in loaded.items()
+        }
     finally:
         spark.stop()
     return report
@@ -293,6 +306,18 @@ def test_every_run_returns_a_posterior_summary(report):
 
 def test_os_cli_parquet_digests(report):
     assert report["os"] == GOLDEN_OS
+
+
+def test_os_cli_leaves_no_cached_frames(report):
+    """The OS command unpersists what it cached: a long-lived session
+    holds as many persisted RDDs after it as before."""
+    before, after = report["os_cached"]
+    assert after == before
+
+
+def test_os_cli_load_reads_the_saved_frames(report):
+    """`-o 1 -L 1` returns the frames the `-o 1` run saved."""
+    assert report["os_loaded"] == GOLDEN_OS
 
 
 def test_residual_frame_is_an_arrow_local_relation(report):

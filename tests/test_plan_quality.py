@@ -463,42 +463,18 @@ def test_exact_duplicate_spans_never_single_partition(spark, sf001):
     assert "CartesianProduct" not in p
 
 
-def test_cdc_pair_join_and_probe_plan_shape(spark, tmp_path):
-    """CDC plans hold their 100 TB contracts: the chunk-share pair join
-    is a hash-bucket equi-join (no CartesianProduct, no SinglePartition
-    anywhere in the aggregate chain), and the bloom probe's suspect
-    verify reads the store through a partition filter on (__epoch,
-    bucket) — the pruning that keeps per-batch store IO bounded."""
+def test_cdc_pair_join_plan_shape(spark):
+    """The chunk-share pair join holds its 100 TB contract: a hash-bucket
+    equi-join (no CartesianProduct, no SinglePartition anywhere in the
+    aggregate chain)."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.pipeline.cdc import (
-        cdc_chunks,
-        chunk_dedup_pairs,
-        probe_novel_chunks,
-        update_store_bloom,
-    )
+    from enterprise_warp_spark.pipeline.cdc import cdc_chunks, chunk_dedup_pairs
 
     rows = [
         (i, random.Random(400 + i).randbytes(12_000)) for i in range(4)
     ]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    chunks = cdc_chunks(media)
-    p = plan(chunk_dedup_pairs(chunks))
+    p = plan(chunk_dedup_pairs(cdc_chunks(media)))
     assert "CartesianProduct" not in p, p
     assert "SinglePartition" not in p, p
-
-    store = str(tmp_path / "store")
-    probe_novel_chunks(chunks, store).select(
-        "bucket", "chunk_hash", "length"
-    ).withColumn("__epoch", F.lit(0)).write.partitionBy(
-        "__epoch", "bucket"
-    ).parquet(store)
-    bloom = str(tmp_path / "bloom")
-    update_store_bloom(spark, store, bloom)
-    p = plan(probe_novel_chunks(chunks, store, bloom_path=bloom))
-    # the covered-slice scan must carry partition filters (epoch bound +
-    # bucket pruning), and nothing in the probe goes cartesian
-    assert "PartitionFilters: [" in p and "__epoch" in p, p
-    assert "CartesianProduct" not in p, p

@@ -1,74 +1,17 @@
 """Deterministic sampling operators (operators/sampling.py).
 
 Key property under test: the sample is a pure function of (key, seed) —
-stable across runs, repartitioning, and engines (DuckDB twin for the hash).
+stable across runs and repartitioning.
 """
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from enterprise_warp_spark.operators.sampling import (
-    hash_sample,
-    reservoir_sample,
-    split_dataset,
-    stratified_sample,
-)
+from enterprise_warp_spark.operators.sampling import split_dataset, stratified_sample
 from enterprise_warp_spark.tables import table
-
-
-def test_hash_sample_deterministic_and_accurate(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    n = docs.count()
-    got = hash_sample(docs, "doc_id", 0.25, seed=7)
-    ids1 = {r["doc_id"] for r in got.select("doc_id").collect()}
-    # rerun + repartition -> identical membership
-    ids2 = {
-        r["doc_id"]
-        for r in hash_sample(docs.repartition(13), "doc_id", 0.25, seed=7)
-        .select("doc_id")
-        .collect()
-    }
-    assert ids1 == ids2
-    # fraction within binomial 5-sigma
-    import math
-
-    sigma = math.sqrt(n * 0.25 * 0.75)
-    assert abs(len(ids1) - 0.25 * n) < 5 * sigma
-    # different seed -> different (mostly independent) membership
-    ids3 = {
-        r["doc_id"]
-        for r in hash_sample(docs, "doc_id", 0.25, seed=8).select("doc_id").collect()
-    }
-    assert ids3 != ids1
-    with pytest.raises(ValueError):
-        hash_sample(docs, "doc_id", 1.5)
-
-
-def test_hash_sample_matches_duckdb_twin(spark, sf_dir):
-    """The same keep-decision is expressible in ANSI SQL — cross-engine
-    reproducibility, the property F.rand() sampling cannot give."""
-    docs = table(spark, sf_dir, "documents")
-    ids_spark = sorted(
-        r["doc_id"]
-        for r in hash_sample(docs, "doc_id", 0.1, seed=3).select("doc_id").collect()
-    )
-    con = duckdb.connect()
-    ids_duck = [
-        r[0]
-        for r in con.sql(
-            f"""
-            SELECT doc_id FROM '{sf_dir}/documents.parquet'
-            WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|3'), 1, 15) AS BIGINT)
-                  / CAST(16.0**15 AS DOUBLE) < 0.1
-            ORDER BY doc_id
-            """
-        ).fetchall()
-    ]
-    assert ids_spark == ids_duck
 
 
 def test_stratified_sample_rates(spark, sf_dir):
@@ -89,25 +32,6 @@ def test_stratified_sample_rates(spark, sf_dir):
     assert got.count() == got_counts[langs[0]] + got_counts.get(langs[1], 0)
 
 
-def test_reservoir_sample_exact_k_deterministic(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    s1 = sorted(r["doc_id"] for r in reservoir_sample(docs, 17, "doc_id", seed=2).collect())
-    s2 = sorted(
-        r["doc_id"]
-        for r in reservoir_sample(docs.repartition(7), 17, "doc_id", seed=2).collect()
-    )
-    assert len(s1) == 17 and s1 == s2
-    assert "__h" not in reservoir_sample(docs, 3, "doc_id").columns
-    # k >= n returns everything
-    assert reservoir_sample(docs.limit(5), 100, "doc_id").count() == 5
-
-
-def test_reservoir_plan_is_take_ordered(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    plan = reservoir_sample(docs, 10, "doc_id")._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan  # heap-merge, not a global sort
-
-
 def test_split_dataset_disjoint_stable(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     out = split_dataset(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, seed=1)
@@ -123,30 +47,6 @@ def test_split_dataset_disjoint_stable(spark, sf_dir):
     assert {r["doc_id"]: r["split"] for r in sub.collect()} == full
     with pytest.raises(ValueError):
         split_dataset(docs, "doc_id", {"a": 0.5, "b": 0.6})
-
-
-def test_weighted_sample(spark, sf_dir):
-    from enterprise_warp_spark.operators.sampling import weighted_sample
-
-    docs = table(spark, sf_dir, "documents")
-    # weight 1 keeps everything; weight 0 keeps nothing
-    n = docs.count()
-    assert weighted_sample(docs, "doc_id", F.lit(1.0)).count() == n
-    assert weighted_sample(docs, "doc_id", F.lit(0.0)).count() == 0
-    assert weighted_sample(docs, "doc_id", F.lit(7.5)).count() == n  # clamped
-    # row-specific weights: low-weight stratum kept less often
-    w = F.when(F.col("doc_id") % 2 == 0, 0.9).otherwise(0.1)
-    kept = weighted_sample(docs, "doc_id", w, seed=3).collect()
-    even = sum(1 for r in kept if r["doc_id"] % 2 == 0)
-    odd = len(kept) - even
-    assert even > 3 * odd
-    # deterministic across repartition
-    ids1 = {r["doc_id"] for r in kept}
-    ids2 = {
-        r["doc_id"]
-        for r in weighted_sample(docs.repartition(9), "doc_id", w, seed=3).collect()
-    }
-    assert ids1 == ids2
 
 
 def test_normalize_text(spark):
@@ -408,198 +308,3 @@ def test_dsir_weights_match_python_twin(spark):
     assert got[4] == 0.0  # empty text -> weight 0 by contract
 
 
-def test_dsir_select_prefers_target_like_docs(spark):
-    """Two stylistically distinct sub-corpora in raw; target drawn from one
-    style: the top-k selection must be dominated by that style (the
-    paper's headline behavior), deterministically across repartitions."""
-    import random
-
-    from enterprise_warp_spark.operators.sampling import dsir_select
-
-    rng = random.Random(5)
-    sci = ["energy flux spectrum detector noise model likelihood posterior"]
-    web = ["click here buy now free offer deal sale discount shop"]
-
-    def doc(words, n=8):
-        return " ".join(rng.choice(words[0].split()) for _ in range(n))
-
-    raw_rows = [(i, doc(sci)) for i in range(100)] + [
-        (100 + i, doc(web)) for i in range(100)
-    ]
-    target_rows = [(i, doc(sci)) for i in range(40)]
-    raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
-    target = spark.createDataFrame(target_rows, "doc_id long, text string")
-    picked = dsir_select(raw, target, k=50, dim=256, seed=3)
-    ids = [r["doc_id"] for r in picked.collect()]
-    assert len(ids) == 50
-    sci_share = sum(1 for i in ids if i < 100) / 50
-    assert sci_share > 0.9, sci_share
-    # deterministic under repartitioning (hash noise, not rand())
-    ids2 = [
-        r["doc_id"]
-        for r in dsir_select(
-            raw.repartition(13), target.repartition(7), k=50, dim=256, seed=3
-        ).collect()
-    ]
-    assert sorted(ids) == sorted(ids2)
-
-
-def test_dsir_select_plan_is_topk_not_global_sort(spark):
-    """The selection must be TakeOrderedAndProject (per-partition heaps),
-    never a global Sort, and the ratio table must broadcast."""
-    import contextlib
-    import io
-
-    from enterprise_warp_spark.operators.sampling import dsir_select
-
-    raw = spark.createDataFrame(
-        [(i, f"w{i % 7} w{i % 3}") for i in range(200)],
-        "doc_id long, text string",
-    )
-    target = raw.filter("doc_id % 2 = 0")
-    df = dsir_select(raw, target, k=10, dim=64)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastHashJoin" in p
-
-
-def test_weighted_topk_sample_matches_gumbel_topk(spark):
-    """A-ES exponential keys and Gumbel-top-k over log-weights are the same
-    sampler: ln(-ln(u)/w) = -(ln w + Gumbel(u)), so with the SAME unit
-    hash per row the two orderings are exact mirrors — the selected sets
-    must be identical."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.operators.sampling import (
-        _unit_hash,
-        weighted_topk_sample,
-    )
-
-    df = spark.range(0, 2_000).select(
-        F.col("id"), ((F.col("id") % 17) + 1).cast("double").alias("w")
-    )
-    got = {
-        r["id"] for r in weighted_topk_sample(df, 100, "w", F.col("id"), seed=3).collect()
-    }
-    # Gumbel-top-k over ln(w) with the same u
-    u = F.least(F.greatest(_unit_hash(F.col("id"), 3), F.lit(1e-15)), F.lit(1 - 1e-15))
-    gk = (
-        df.withColumn("__g", F.log("w") - F.log(-F.log(u)))
-        .orderBy(F.col("__g").desc())
-        .limit(100)
-    )
-    want = {r["id"] for r in gk.collect()}
-    assert got == want
-
-
-def test_weighted_topk_sample_favors_heavy_rows_and_is_stable(spark):
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.operators.sampling import weighted_topk_sample
-
-    # two strata: weight 50 vs weight 1, equal counts — the heavy stratum
-    # must dominate the sample, and zero/negative weights never appear
-    df = spark.range(0, 2_000).select(
-        F.col("id"),
-        F.when(F.col("id") < 1_000, 50.0)
-        .when(F.col("id") < 1_900, 1.0)
-        .otherwise(-1.0)
-        .alias("w"),
-    )
-    s1 = weighted_topk_sample(df, 200, "w", F.col("id"), seed=1).toPandas()
-    s2 = weighted_topk_sample(df, 200, "w", F.col("id"), seed=1).toPandas()
-    assert sorted(s1["id"]) == sorted(s2["id"])  # deterministic
-    assert len(s1) == 200
-    assert (s1["w"] > 0).all()
-    heavy = int((s1["id"] < 1_000).sum())
-    assert heavy > 170  # E[heavy] ~ 196 of 200; far from uniform's ~105
-
-
-def test_weighted_topk_sample_plan_is_take_ordered(spark):
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.operators.sampling import weighted_topk_sample
-
-    df = spark.range(0, 100).select(F.col("id"), F.lit(1.0).alias("w"))
-    plan = (
-        weighted_topk_sample(df, 5, "w", F.col("id"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_weighted_topk_sample_matches_duckdb_twin(spark):
-    """The whole sampler is portable arithmetic — DuckDB picks the same
-    rows from the same table."""
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.operators.sampling import weighted_topk_sample
-
-    df = spark.range(0, 500).select(
-        F.col("id"), ((F.col("id") % 7) + 1).cast("double").alias("w")
-    )
-    got = sorted(
-        r["id"] for r in weighted_topk_sample(df, 40, "w", F.col("id"), seed=5).collect()
-    )
-    denom = float(16**15)
-    sql = f"""
-        SELECT id FROM (
-          SELECT id,
-                 -ln(LEAST(GREATEST(
-                     CAST('0x' || substr(md5(CAST(id AS VARCHAR) || '|5'), 1, 15) AS BIGINT)
-                       / {denom}, 1e-15), 1 - 1e-15))
-                 / ((id % 7) + 1) AS e
-          FROM range(0, 500) t(id)
-        ) ORDER BY e LIMIT 40
-    """
-    want = sorted(r[0] for r in duckdb.sql(sql).fetchall())
-    assert got == want
-
-
-def test_temperature_weights(spark, sf_dir):
-    from enterprise_warp_spark.operators.sampling import (
-        mixture_rates,
-        mixture_resample,
-        temperature_weights,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    counts = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # alpha=1 reproduces the empirical mix; alpha=0 is uniform
-    w1 = temperature_weights(docs, "lang", alpha=1.0)
-    total = sum(counts.values())
-    for g, n in counts.items():
-        assert abs(w1[g] - n / total) < 1e-12
-    w0 = temperature_weights(docs, "lang", alpha=0.0)
-    assert all(abs(v - 1.0 / len(counts)) < 1e-12 for v in w0.values())
-    # 0 < alpha < 1 upweights tail groups relative to their empirical share
-    wa = temperature_weights(docs, "lang", alpha=0.3)
-    tail = min(counts, key=counts.get)
-    head = max(counts, key=counts.get)
-    if counts[tail] < counts[head]:
-        assert wa[tail] > w1[tail]
-        assert wa[head] < w1[head]
-    # the weights feed the existing mixture machinery end to end
-    kept = mixture_resample(docs, "lang", wa, key="doc_id", seed=5)
-    rates = mixture_rates(docs, "lang", wa)
-    got = {
-        r["lang"]: r["n"]
-        for r in kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for g, n in got.items():
-        assert n <= counts[g]
-        # kept count tracks rate * n within a loose hash-variance bound
-        assert abs(n - rates[g] * counts[g]) <= 6 * (counts[g] ** 0.5) + 3
-    with pytest.raises(ValueError):
-        temperature_weights(docs, "lang", alpha=-0.1)

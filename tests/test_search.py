@@ -1,7 +1,5 @@
-"""BM25 / TF-IDF search: DuckDB-twin scoring parity, persisted-index
-partition pruning, and per-group cap correctness."""
-
-import math
+"""BM25 / TF-IDF search: DuckDB-twin scoring parity, phrase matching, one
+query-tokenization contract, and per-group cap correctness."""
 
 import pytest
 
@@ -93,39 +91,6 @@ def test_tfidf_topk_runs_and_ranks(spark):
     assert top[0]["doc_id"] == 4  # only doc with both terms
 
 
-def test_persisted_index_prunes_and_matches(spark, tmp_path):
-    """load_index(query=...) must (a) return identical scores to the
-    in-memory index and (b) scan ONLY the probe terms' bucket directories
-    (partition pruning visible in the plan)."""
-    from enterprise_warp_spark.pipeline.search import (
-        N_TERM_BUCKETS,
-        bm25_topk,
-        build_index,
-        load_index,
-        write_index,
-        _term_buckets,
-    )
-
-    docs = _corpus(spark)
-    idx = build_index(docs)
-    path = str(tmp_path / "btx")
-    write_index(idx, path)
-
-    query = "lazy dog"
-    loaded = load_index(spark, path, query=query)
-    got = {r["doc_id"]: r["score"] for r in bm25_topk(loaded, query).collect()}
-    want = {r["doc_id"]: r["score"] for r in bm25_topk(idx, query).collect()}
-    assert set(got) == set(want)
-    for d in want:
-        assert got[d] == pytest.approx(want[d], rel=1e-12)
-
-    buckets = _term_buckets(spark, query)
-    assert len(buckets) <= 2 < N_TERM_BUCKETS
-    plan = loaded["postings"]._jdf.queryExecution().executedPlan().toString()
-    # the postings scan must carry the bucket partition filter
-    assert "bucket" in plan
-
-
 def test_cap_per_group_matches_single_window_reference(spark):
     """Two-phase skew-safe cap == naive global row_number reference, and is
     invariant under repartitioning (determinism)."""
@@ -185,25 +150,6 @@ def test_cap_per_group_small_groups_untouched(spark):
     out = cap_per_group(df, "grp", 5, "k")
     assert out.count() == 20  # all groups have 2 rows < cap
     assert set(out.columns) == {"k", "grp"}
-
-
-def test_pruned_index_refuses_other_queries(spark, tmp_path):
-    """A bucket-pruned index must raise on a query with terms outside its
-    probe set instead of silently returning wrong rankings."""
-    from enterprise_warp_spark.pipeline.search import (
-        bm25_topk,
-        build_index,
-        load_index,
-        write_index,
-    )
-
-    idx = build_index(_corpus(spark))
-    path = str(tmp_path / "btx2")
-    write_index(idx, path)
-    pruned = load_index(spark, path, query="lazy dog")
-    assert bm25_topk(pruned, "lazy dog").count() > 0  # own query fine
-    with pytest.raises(ValueError, match="bucket-pruned"):
-        bm25_topk(pruned, "quick brown fox")
 
 
 def test_mixture_rates_zero_weight_group_may_be_absent(spark):
@@ -300,137 +246,19 @@ def test_phrase_match_matches_python_reference(spark):
     assert got == want and len(want) >= 10
 
 
-def test_append_to_index_equals_full_rebuild(spark, tmp_path):
-    """Appending a batch to a persisted index yields EXACTLY the scores of
-    a full rebuild over the union corpus (IDF shifts with the new n_docs /
-    avgdl included), and re-ingesting a seen doc_id raises."""
-    from enterprise_warp_spark.pipeline.search import (
-        append_to_index,
-        bm25_topk,
-        build_index,
-        load_index,
-        write_index,
-    )
-
-    all_docs = _corpus(spark)
-    first = all_docs.filter("doc_id <= 4")
-    batch = all_docs.filter("doc_id > 4")
-    path = str(tmp_path / "inc")
-    write_index(build_index(first), path)
-    append_to_index(spark, path, batch)
-
-    merged = load_index(spark, path)
-    rebuilt = build_index(all_docs)
-    q = "quick brown fox lazy"
-    got = {r["doc_id"]: r["score"] for r in bm25_topk(merged, q).collect()}
-    want = {r["doc_id"]: r["score"] for r in bm25_topk(rebuilt, q).collect()}
-    assert set(got) == set(want)
-    for d in want:
-        assert got[d] == pytest.approx(want[d], rel=1e-12)
-    assert merged["n_docs"] == rebuilt["n_docs"]
-    assert merged["avgdl"] == pytest.approx(rebuilt["avgdl"], rel=1e-12)
-
-    with pytest.raises(ValueError, match="already in the index"):
-        append_to_index(spark, path, all_docs.filter("doc_id = 1"))
-
-
-def test_append_to_index_rejects_intra_batch_duplicates(spark, tmp_path):
-    """Duplicate ids WITHIN a batch would silently double scores (the
-    doclen join fans out) — must raise in the same O(batch) guard pass."""
-    from enterprise_warp_spark.pipeline.search import (
-        append_to_index,
-        build_index,
-        write_index,
-    )
-
-    first = _corpus(spark).filter("doc_id <= 4")
-    write_index(build_index(first), str(tmp_path / "dup"))
-    batch = spark.createDataFrame(
-        [(100, "aa bb"), (100, "cc dd")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="duplicate doc_ids"):
-        append_to_index(spark, str(tmp_path / "dup"), batch)
-
-
-def test_bm25_pruned_equals_exhaustive(spark, sf_dir, tmp_path):
-    """Impact-ordered early termination (VERDICT r5 #8): bm25_topk_pruned
-    returns the exhaustive top-k (scores equal up to <=1-ulp float-sum
-    reassociation; the final candidate re-score uses bm25_topk's
-    expression) while, on a corpus with
-    a heavy low-impact tail, terminating before reading every impact level."""
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.pipeline.search import (
-        bm25_topk,
-        bm25_topk_pruned,
-        build_index,
-        write_impact_index,
-    )
-    from enterprise_warp_spark.tables import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = build_index(docs)
-    path = str(tmp_path / "impact_idx")
-    write_impact_index(idx, path)
-
-    import pytest as _pytest
-
-    for query in ("spark hash join", "the data of", "window stream"):
-        want = [
-            (r["doc_id"], r["score"], r["n_terms_matched"])
-            for r in bm25_topk(idx, query, k=10).collect()
-        ]
-        got = [
-            (r["doc_id"], r["score"], r["n_terms_matched"])
-            for r in bm25_topk_pruned(spark, query=query, path=path, k=10).collect()
-        ]
-        # same docs in the same order; scores equal up to the <=1-ulp
-        # float-sum reassociation between the two plans
-        assert [(d, n) for d, _, n in got] == [(d, n) for d, _, n in want], query
-        for (_, gs, _), (_, ws, _) in zip(got, want):
-            assert gs == _pytest.approx(ws, rel=1e-14), query
-
-    # heavy-tail corpus: one rare high-impact term decides the top-k; the
-    # common term's low-impact tail must never be fully read
-    rows = [(i, "common " * 200 + "filler") for i in range(400)]
-    rows += [(1000 + i, "common rareterm " + "pad " * (2 + i)) for i in range(12)]
-    heavy = spark.createDataFrame(rows, "doc_id long, text string")
-    hidx = build_index(heavy.select("doc_id", F.expr("trim(text)").alias("text")))
-    hpath = str(tmp_path / "heavy_idx")
-    write_impact_index(hidx, hpath)
-    dbg = {}
-    got = [
-        r["doc_id"]
-        for r in bm25_topk_pruned(
-            spark, query="common rareterm", path=hpath, k=5, debug=dbg
-        ).collect()
-    ]
-    want = [
-        r["doc_id"] for r in bm25_topk(hidx, "common rareterm", k=5).collect()
-    ]
-    assert got == want
-    assert dbg["early_exit"] is True
-    assert dbg["final_level"] < dbg["max_level"]  # tail levels never read
-
-
-def test_query_tokenization_contract_all_five_paths(spark, tmp_path):
+def test_query_tokenization_contract_all_three_paths(spark):
     """ONE contract across every query entry point (r6 verdict #7): a query
     containing a hostile token (embedded tab + punctuation — which
     text.TOKENS keeps INSIDE a token because documents split on single
     spaces only) must retrieve the document holding that exact token
-    through bm25_topk, tfidf_topk, phrase_match, the bucket-pruned
-    load_index path, AND the impact-ordered bm25_topk_pruned — none of the
-    five may re-tokenize differently from the document side."""
+    through bm25_topk, tfidf_topk and phrase_match — none of the three may
+    re-tokenize differently from the document side."""
     from enterprise_warp_spark.pipeline.search import (
         bm25_topk,
-        bm25_topk_pruned,
         build_index,
         build_positional_index,
-        load_index,
         phrase_match,
         tfidf_topk,
-        write_impact_index,
-        write_index,
     )
 
     weird = "foo,bar\tbaz"  # one TOKEN: comma and tab are not separators
@@ -456,15 +284,3 @@ def test_query_tokenization_contract_all_five_paths(spark, tmp_path):
     pos = build_positional_index(docs)
     ph = phrase_match(pos, f"alpha {weird}").collect()
     assert {r["doc_id"] for r in ph} == {1}
-
-    path = str(tmp_path / "idx")
-    write_index(idx, path)
-    pruned_idx = load_index(spark, path, query=q)
-    hits_bucket = {r["doc_id"] for r in bm25_topk(pruned_idx, q, k=3).collect()}
-    assert hits_bucket == hits_bm25
-
-    ipath = str(tmp_path / "impact")
-    write_impact_index(idx, ipath)
-    imp = bm25_topk_pruned(spark, ipath, q, k=3).collect()
-    assert {r["doc_id"] for r in imp} == hits_bm25
-    assert imp[0]["doc_id"] == 1

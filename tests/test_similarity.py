@@ -58,58 +58,6 @@ def test_custom_centroids(spark, emb):
     assert all(1 <= r["rnk"] <= 3 for r in rows)
 
 
-def test_kmeans_centroids_drive_ivf(spark, emb):
-    """Trained (MLlib Lloyd's) centroids in deterministic_centroids' schema:
-    ivf_topk runs unchanged, full-probe still equals exact, and partial-probe
-    recall with trained cells beats the sanity floor."""
-    cents = similarity.kmeans_centroids(emb, 8, seed=7)
-    assert [f.name for f in cents.schema.fields] == ["cell_id", "c_emb", "c_nsq"]
-    assert cents.count() == 8
-    # full probe == exact regardless of centroid quality
-    exact = sorted(map(tuple, similarity.cosine_topk(emb, "vec_id < 4", 3).collect()))
-    full = sorted(
-        map(
-            tuple,
-            similarity.ivf_topk(
-                emb, "vec_id < 4", 3, n_cells=8, nprobe=8, centroids=cents
-            ).collect(),
-        )
-    )
-    assert exact == full
-    # partial probe with trained cells: reasonable recall
-    ex10 = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.cosine_topk(emb, "vec_id < 10", 5).collect()
-    }
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ivf_topk(
-            emb, "vec_id < 10", 5, n_cells=8, nprobe=3, centroids=cents
-        ).collect()
-    }
-    assert len(ex10 & ivf) / len(ex10) >= 0.6
-
-
-def test_persisted_ivf_index_matches_in_memory(spark, emb, tmp_path):
-    """build_ivf_index + search_ivf_index == in-memory ivf_topk, and the
-    scan plan prunes to the probed cell partitions."""
-    idx = str(tmp_path / "ivf")
-    cents = similarity.deterministic_centroids(emb, 16)
-    similarity.build_ivf_index(emb, cents, idx)
-    import glob
-    import os
-
-    assert len(glob.glob(os.path.join(idx, "cell_id=*"))) > 1
-
-    queries = emb.filter("vec_id < 10")
-    got = similarity.search_ivf_index(spark, idx, cents, queries, k=5, nprobe=4)
-    want = similarity.ivf_topk(emb, "vec_id < 10", 5, n_cells=16, nprobe=4)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    # partition pruning reaches the scan: the index read carries cell_id IN
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "cell_id IN" in plan or "cell_id#" in plan
-
-
 def test_pq_exact_when_codebook_contains_subvectors(spark, emb):
     """With k_codes >= corpus size the codebook contains every subvector, so
     PQ encoding is lossless: ADC scores equal exact dot products and the
@@ -475,126 +423,6 @@ def test_sq8_quantization_and_adc_search(spark, sf_dir):
     want1 = {r["query_id"]: r["neighbor_id"]
              for r in ex.filter("rnk = 1").collect()}
     assert top1 == want1 and len(top1) == 10
-
-
-class TestFrequentDirections:
-    """frequent_directions / fd_project (Liberty 2013 matrix sketch):
-    covariance-error contract, PSD under-counting, exact small case,
-    planted-subspace recovery, guards."""
-
-    def test_covariance_error_contract(self, spark):
-        import numpy as np
-
-        from enterprise_warp_spark.pipeline.similarity import (
-            frequent_directions,
-        )
-
-        rng = np.random.default_rng(7)
-        A = rng.normal(size=(600, 24))
-        df = spark.createDataFrame(
-            [(i, row.tolist()) for i, row in enumerate(A)],
-            ["vec_id", "embedding"],
-        ).repartition(8)
-        ell = 12
-        B = frequent_directions(df, ell=ell)
-        assert B.shape == (ell, 24)
-        err = np.linalg.norm(A.T @ A - B.T @ B, 2)
-        assert err <= 2.0 * (np.linalg.norm(A, "fro") ** 2) / ell
-        # shrinkage only UNDER-counts: A^T A - B^T B is PSD
-        assert np.linalg.eigvalsh(A.T @ A - B.T @ B).min() >= -1e-6
-
-    def test_no_shrink_is_exact(self, spark):
-        import numpy as np
-
-        from enterprise_warp_spark.pipeline.similarity import (
-            frequent_directions,
-        )
-
-        rng = np.random.default_rng(3)
-        A = rng.normal(size=(10, 6))
-        df = spark.createDataFrame(
-            [(i, r.tolist()) for i, r in enumerate(A)],
-            ["vec_id", "embedding"],
-        ).coalesce(1)
-        B = frequent_directions(df, ell=16)
-        # ell >= n_rows: no shrink ever fires, so B^T B == A^T A exactly
-        assert np.allclose(A.T @ A, B.T @ B, atol=1e-9)
-
-    def test_planted_subspace_recovery(self, spark):
-        """Rank-3 signal + small noise: projecting onto fd_project's top-3
-        directions retains >= 90% of the signal energy."""
-        import numpy as np
-
-        from enterprise_warp_spark.pipeline.similarity import (
-            fd_project,
-            frequent_directions,
-        )
-
-        rng = np.random.default_rng(11)
-        basis, _ = np.linalg.qr(rng.normal(size=(20, 3)))
-        A = rng.normal(size=(800, 3)) @ (basis.T * 10.0) + rng.normal(
-            size=(800, 20)
-        ) * 0.1
-        df = spark.createDataFrame(
-            [(i, r.tolist()) for i, r in enumerate(A)],
-            ["vec_id", "embedding"],
-        ).repartition(6)
-        B = frequent_directions(df, ell=8)
-        out = fd_project(df, B, k=3).select("vec_id", "proj").collect()
-        P = np.array([r.proj for r in sorted(out, key=lambda r: r.vec_id)])
-        retained = (np.linalg.norm(P, "fro") / np.linalg.norm(A, "fro")) ** 2
-        assert retained >= 0.90
-
-    def test_guards(self, spark):
-        import pytest as _pytest
-
-        from enterprise_warp_spark.pipeline.similarity import (
-            fd_project,
-            frequent_directions,
-        )
-
-        df = spark.createDataFrame([(0, [1.0, 2.0])], ["vec_id", "embedding"])
-        with _pytest.raises(ValueError):
-            frequent_directions(df, ell=0)
-        B = frequent_directions(df, ell=2)
-        with _pytest.raises(ValueError):
-            fd_project(df, B, k=5)
-
-    def test_real_embeddings_table(self, spark, sf_dir):
-        import numpy as np
-
-        from enterprise_warp_spark.pipeline.similarity import (
-            frequent_directions,
-        )
-        from enterprise_warp_spark.tables import table
-
-        emb = table(spark, sf_dir, "embeddings")
-        rows = emb.select("embedding").collect()
-        A = np.array([r.embedding for r in rows], dtype=np.float64)
-        B = frequent_directions(emb, ell=16)
-        err = np.linalg.norm(A.T @ A - B.T @ B, 2)
-        assert err <= 2.0 * (np.linalg.norm(A, "fro") ** 2) / 16
-
-
-def test_persisted_ivf_index_hier_assign_matches_flat(spark, emb, tmp_path):
-    """build_ivf_index(assign='hier', all supers probed) writes the
-    identical inverted lists as the flat build."""
-    cents = similarity.deterministic_centroids(emb, 16)
-    flat_idx = str(tmp_path / "flat")
-    hier_idx = str(tmp_path / "hier")
-    similarity.build_ivf_index(emb, cents, flat_idx)
-    similarity.build_ivf_index(
-        emb, cents, hier_idx, assign="hier", nprobe_super=4
-    )
-    load = lambda p: {  # noqa: E731
-        (r["neighbor_id"], r["cell_id"])
-        for r in spark.read.parquet(p).collect()
-    }
-    assert load(hier_idx) == load(flat_idx)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="assign"):
-        similarity.build_ivf_index(emb, cents, str(tmp_path / "x"), assign="z")
 
 
 def test_cosine_near_dup_auto_plane_sizing(spark, sf_dir):

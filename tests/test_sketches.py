@@ -214,46 +214,6 @@ class TestBloom:
         bound = 10 * (1 - math.exp(-k * n / m)) ** k
         assert fpr <= max(bound, 5e-3), fpr
 
-    def test_probe_join_form_matches_inline_form(self, spark):
-        """bloom_probe_join (the broadcast-join shape for large filters —
-        the inline literal is materialized per ROW, so it degrades past
-        ~2^16 bits) must return the identical membership column, at a
-        small m (dense false positives) AND a large m the inline form
-        could not carry."""
-        from pyspark.sql import functions as F
-
-        from enterprise_warp_spark.operators.sketches import (
-            bloom_build,
-            bloom_probe,
-            bloom_probe_join,
-        )
-
-        items = spark.range(0, 500).select(
-            F.concat(F.lit("k-"), F.col("id")).alias("x")
-        )
-        probe = spark.range(0, 3_000).select(
-            F.col("id"), F.concat(F.lit("k-"), F.col("id")).alias("x")
-        )
-        for m, k in ((1 << 10, 3), (1 << 16, 5)):
-            bl = bloom_build(items, "x", m_bits=m, k=k)
-            inline = {
-                r["id"]: r["maybe_member"]
-                for r in bloom_probe(probe, "x", bl, m_bits=m, k=k).collect()
-            }
-            joined = {
-                r["id"]: r["maybe_member"]
-                for r in bloom_probe_join(
-                    probe, "x", bl, m_bits=m, k=k
-                ).collect()
-            }
-            assert joined == inline, (m, k)
-        # large-m smoke: the join form carries a 2^24-bit filter without
-        # plan bloat, still with zero false negatives
-        m = 1 << 24
-        bl = bloom_build(items, "x", m_bits=m, k=5)
-        out = bloom_probe_join(probe, "x", bl, m_bits=m, k=5)
-        members = out.filter("id < 500")
-        assert members.filter("NOT maybe_member").count() == 0
 
     def test_sharded_build_merges_to_same_filter(self, spark):
         from pyspark.sql import functions as F

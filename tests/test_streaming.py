@@ -1,118 +1,8 @@
-"""Streaming/batch parity: the streaming rollup must equal the batch
-hourly_event_rollup on the same data (availableNow trigger + memory sink)."""
+"""Streaming/batch parity for the sketches, the incremental MinHash index
+under empty batches, and the event source's size probe. The streaming
+rollup's parity is the catalog's `streaming_hourly_rollup` oracle check."""
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def rolled(spark, sf_dir):
-    from enterprise_warp_spark.streaming import stream_events, windowed_rollup
-
-    q = (
-        windowed_rollup(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName("rollup_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql("select * from rollup_test")
-
-
-def test_stream_rollup_matches_batch(spark, sf_dir, rolled):
-    from enterprise_warp_spark.tables import table
-
-    batch = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-    )
-    b = {(r["hour"], r["event_type"]): (r["n"], r["sum_value"]) for r in batch.collect()}
-    s = {(r["hour"], r["event_type"]): (r["n"], r["sum_value"]) for r in rolled.collect()}
-    assert set(b) == set(s)
-    for k in b:
-        assert b[k][0] == s[k][0]
-        assert b[k][1] == pytest.approx(s[k][1], rel=1e-9)
-
-
-def test_streaming_dedup(spark, sf_dir):
-    from enterprise_warp_spark.streaming import stream_events, streaming_dedup
-
-    q = (
-        streaming_dedup(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select count(*) n, count(distinct event_id) d from dedup_test").first()
-    assert got["n"] == got["d"] > 0
-
-
-def test_sessionized_activity(spark, sf_dir):
-    from enterprise_warp_spark.streaming import sessionized_activity, stream_events
-
-    q = (
-        sessionized_activity(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from sessions_test").collect()
-    assert len(rows) > 0
-    assert all(r["session_end"] >= r["session_start"] and r["n_events"] > 0 for r in rows)
-
-
-def test_stream_stream_join_matches_batch(spark, sf_dir):
-    """Stream-stream watermarked range join == the equivalent batch join."""
-    from enterprise_warp_spark.streaming.events import (
-        stream_stream_attribution_join,
-    )
-    from enterprise_warp_spark.tables import table
-
-    q = (
-        stream_stream_attribution_join(spark, sf_dir)
-        .writeStream.format("memory")
-        .queryName("ssj_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["click_id"], r["view_id"])
-        for r in spark.sql("select * from ssj_test").collect()
-    }
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("view_ts"),
-    )
-    want = {
-        (r["click_id"], r["view_id"])
-        for r in clicks.join(
-            views,
-            F.expr(
-                "c_user = v_user AND view_ts <= click_ts "
-                "AND view_ts > click_ts - INTERVAL 1 HOUR"
-            ),
-        ).collect()
-    }
-    assert got == want
-    assert len(want) > 0
 
 
 def test_incremental_filter_empty_batch_never_poisons_index(spark, tmp_path):
@@ -243,104 +133,6 @@ def test_streaming_ams_f2_equals_batch(spark, sf_dir):
         r["event_type"]: r["f2_est"] for r in df.collect()
     }
     assert pick(se) == pick(be)
-
-
-def test_streaming_kmv_foreachbatch_merge_equals_batch(spark, sf_dir, tmp_path):
-    """KMV under foreachBatch: each micro-batch's kept table (its k
-    smallest distinct hashes) merges through kmv_rekept into EXACTLY the
-    batch sketch — the global k smallest are each among their own batch's
-    k smallest, so the merge is exact, and so is the estimate."""
-    from enterprise_warp_spark.operators.sketches import (
-        kmv_distinct_by,
-        kmv_estimate_from_kept,
-        kmv_kept,
-        kmv_rekept,
-    )
-    from enterprise_warp_spark.tables import table
-
-    k = 32
-    ev = table(spark, sf_dir, "events").select("event_type", "user_id")
-    src = str(tmp_path / "ev")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-
-    merged_rows: list = []
-    n_batches = [0]
-
-    def sink(bdf, _bid):
-        n_batches[0] += 1
-        merged_rows.extend(
-            (r["event_type"], r["__h"])
-            for r in kmv_kept(bdf, "event_type", "user_id", k).collect()
-        )
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert n_batches[0] >= 2, "merge path needs multiple micro-batches"
-    union = spark.createDataFrame(merged_rows, "event_type string, __h long")
-    est = kmv_estimate_from_kept(
-        kmv_rekept(union, "event_type", k), "event_type", k
-    )
-    want = kmv_distinct_by(ev, "event_type", "user_id", k=k)
-    pick = lambda df: {  # noqa: E731
-        r["event_type"]: (r["n_kept"], r["kth_hash"], r["kmv_distinct"])
-        for r in df.collect()
-    }
-    got = pick(est)
-    assert got == pick(want) and len(got) > 0
-
-
-def test_streaming_fd_foreachbatch_merge_keeps_contract(spark, tmp_path):
-    """Frequent Directions under foreachBatch: per-micro-batch sketches
-    fold through fd_merge (stack + one shrink); FD mergeability (GLPW
-    2016) keeps the covariance-error contract over EVERYTHING streamed:
-    ||A^T A - B^T B||_2 <= 2 ||A||_F^2 / ell, with A^T A - B^T B PSD."""
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.similarity import (
-        fd_merge,
-        frequent_directions,
-    )
-
-    rng = np.random.default_rng(21)
-    A = rng.normal(size=(800, 16))
-    df = spark.createDataFrame(
-        [(i, row.tolist()) for i, row in enumerate(A)],
-        "vec_id long, embedding array<double>",
-    )
-    src = str(tmp_path / "emb")
-    df.repartition(4).write.mode("overwrite").parquet(src)
-
-    ell = 10
-    state = {"B": None, "batches": 0}
-
-    def sink(bdf, _bid):
-        state["batches"] += 1
-        state["B"] = fd_merge(
-            [state["B"], frequent_directions(bdf, ell=ell)], ell
-        )
-
-    q = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert state["batches"] >= 2
-    B = state["B"]
-    assert B.shape == (ell, 16)
-    err = np.linalg.norm(A.T @ A - B.T @ B, 2)
-    assert err <= 2.0 * (np.linalg.norm(A, "fro") ** 2) / ell
-    assert np.linalg.eigvalsh(A.T @ A - B.T @ B).min() >= -1e-6
 
 
 def test_source_bytes_resolves_non_local_uris(spark, sf_dir):

@@ -223,29 +223,6 @@ def test_single_doc_and_empty_text_edge(spark):
     assert sa2.count() == 4
 
 
-def test_strip_exact_duplicate_spans_removes_the_phrase(spark):
-    from enterprise_warp_spark.pipeline.suffix import (
-        strip_exact_duplicate_spans,
-    )
-
-    texts = [
-        "alpha beta the cat sat on the mat gamma delta",
-        "one two three the cat sat on the mat four five six",
-        "totally unrelated content in this document",
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in strip_exact_duplicate_spans(
-            _docs(spark, texts), min_tokens=6
-        ).collect()
-    }
-    assert out[0]["cleaned_text"] == "alpha beta gamma delta"
-    assert out[1]["cleaned_text"] == "one two three four five six"
-    assert out[0]["n_removed_tokens"] == 6
-    assert out[2]["cleaned_text"] == texts[2]
-    assert out[2]["n_removed_tokens"] == 0
-
-
 def test_non_ascii_corpus_matches_brute(spark):
     """UTF-8 byte order == code-point order by design, so Spark's string
     comparison and Python's sort agree on accented/CJK/emoji tokens —

@@ -215,14 +215,9 @@ def test_gapfill_locf_linear_and_duckdb_twin(spark, sf_dir, duck):
     assert lin[("b", 0)] == 5.0
 
 
-def test_gapfill_null_group_and_zorder_weighted_median_guards(spark, tmp_path):
+def test_gapfill_null_group_and_weighted_median_guards(spark):
     """Review regressions: a NULL group key keeps its observed values
-    through the null-safe join-back; zorder rejects non-numeric/all-null
-    columns and in-place rewrites work; weighted_median ignores NULLs."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from enterprise_warp_spark.maintenance import write_zordered
+    through the null-safe join-back; weighted_median ignores NULLs."""
     from enterprise_warp_spark.operators.temporal import gapfill
     from enterprise_warp_spark.operators.weighted import weighted_median
 
@@ -245,28 +240,6 @@ def test_gapfill_null_group_and_zorder_weighted_median_guards(spark, tmp_path):
         "g string, v double, w double",
     )
     assert weighted_median(wm, "v", "w", ["g"]).first()["wmedian"] == 2.0
-
-    # zorder guards + in-place rewrite
-    path = str(tmp_path / "zz")
-    base = spark.range(100).select(
-        F.col("id").cast("double").alias("x"),
-        (F.col("id") % 7).cast("double").alias("y"),
-    )
-    base.write.parquet(path)
-    src = spark.read.parquet(path)
-    write_zordered(src, path, ["x", "y"], n_files=4)  # same path: must work
-    assert spark.read.parquet(path).count() == 100
-
-    with pytest.raises(ValueError, match="non-numeric"):
-        write_zordered(
-            spark.createDataFrame([("s", 1.0)], "s string, x double"),
-            str(tmp_path / "bad"), ["s", "x"],
-        )
-    with pytest.raises(ValueError, match="no non-null"):
-        write_zordered(
-            spark.createDataFrame([(None, 1.0)], "n double, x double"),
-            str(tmp_path / "bad2"), ["n", "x"],
-        )
 
 
 def test_rolling_zscore_flags_injected_spike(spark):

@@ -117,66 +117,3 @@ def test_canonical_url_keeps_content_identifying_ref_param(spark):
     assert {r["i"]: r["c"] for r in strict}[0] == "https://github.com/o/r/tree"
 
 
-def test_registrable_domain_psl_exact(spark):
-    """PSL-exact eTLD+1 (r6 verdict #6): longest-rule wins, wildcard rules
-    match one label deeper, exception rules beat everything, unmatched
-    hosts fall back to the default '*' rule (last label), and a host that
-    IS a public suffix has no registrable domain."""
-    from enterprise_warp_spark.pipeline.weburl import (
-        psl_rules,
-        registrable_domain_psl,
-    )
-
-    rules = psl_rules(
-        spark,
-        [
-            "// ---- snapshot slice (publicsuffix.org format) ----",
-            "com",
-            "uk",
-            "co.uk",
-            "github.io",
-            "*.ck",
-            "!www.ck",
-            "",
-        ],
-    )
-    hosts = [
-        ("www.Example.COM", "example.com"),
-        ("deep.a.b.example.co.uk", "example.co.uk"),
-        ("example.uk", "example.uk"),       # 'uk' rule, one label added
-        ("user.github.io", "user.github.io"),  # private-domain style rule
-        ("pages.user.github.io", "user.github.io"),
-        ("foo.ck", None),                    # IS a public suffix (*.ck)
-        ("www.foo.ck", "www.foo.ck"),        # wildcard suffix foo.ck
-        ("www.ck", "www.ck"),                # exception: suffix is ck
-        ("x.www.ck", "www.ck"),
-        ("host.unknowntld", "host.unknowntld"),  # default '*' rule
-        ("localhost", None),                 # single label == its suffix
-    ]
-    df = spark.createDataFrame(
-        [(i, h) for i, (h, _) in enumerate(hosts)], "i long, host string"
-    )
-    got = {
-        r["i"]: r["registrable_domain"]
-        for r in registrable_domain_psl(df, rules).collect()
-    }
-    for i, (h, want) in enumerate(hosts):
-        assert got[i] == want, (h, got[i], want)
-
-
-def test_registrable_domain_psl_broadcasts_rules(spark):
-    from enterprise_warp_spark.pipeline.weburl import (
-        psl_rules,
-        registrable_domain_psl,
-    )
-    import contextlib, io
-
-    rules = psl_rules(spark, ["com", "co.uk"])
-    df = spark.createDataFrame([(1, "a.b.com")], "i long, host string")
-    out = registrable_domain_psl(df, rules)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("simple")
-    p = buf.getvalue()
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
