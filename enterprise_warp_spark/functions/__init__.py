@@ -9,5 +9,3 @@ from enterprise_warp_spark.functions.psd import (  # noqa: F401
     lorentzian_psd,
     powerlaw_psd,
 )
-from enterprise_warp_spark.functions.chromatic import chromatic_weight, dm_weight  # noqa: F401
-from enterprise_warp_spark.functions.whitenoise import white_sigma2  # noqa: F401

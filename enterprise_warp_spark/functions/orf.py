@@ -4,8 +4,8 @@ Reference: Hellings–Downs without auto-correlation term
 (enterprise_models.py:605-612 ``hd_orf_noauto``); curve forms for
 HD / monopole / dipole at results.py:138-152.
 
-All pure column expressions over a pair table (operators/pairs.py J6):
-whole-stage-codegen friendly, no UDFs.
+All pure column expressions over a pulsar-pair table (the J6 pair join in
+analytics/optimal_statistic.py): whole-stage-codegen friendly, no UDFs.
 """
 
 from __future__ import annotations
@@ -32,9 +32,3 @@ def dipole_orf(zeta: Column) -> Column:  # results.py:150-152
     return F.cos(zeta)
 
 
-def pair_angle(pos_a: Column, pos_b: Column) -> Column:
-    """Angle between two unit 3-vectors (ARRAY<DOUBLE>): acos(dot(a,b))."""
-    dot = sum(
-        pos_a[i] * pos_b[i] for i in range(3)
-    )  # fixed 3 terms — stays a codegen expression
-    return F.acos(F.least(F.greatest(dot, F.lit(-1.0)), F.lit(1.0)))

@@ -8,8 +8,9 @@ Reference forms:
   free spectrum   10^(2*log10_rho_k) per frequency (enterprise_models.py:421-426)
   lorentzian      P/(1+(f/fc)^2)^(alpha/2) (libstempo_warp.py:17-18)
 
-Frequencies come from a generated `freqs` table (functions/fourier.py); these
-exprs evaluate JVM-side per (frequency, sample) row.
+The frequencies are the k/Tspan grid (k = 1..nfreqs) the GP kernel builds
+its Fourier basis on; these exprs evaluate JVM-side per (frequency, sample)
+row.
 """
 
 from __future__ import annotations

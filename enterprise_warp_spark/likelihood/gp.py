@@ -5,9 +5,8 @@ via pta.get_lnlikelihood at bilby_warp.py:19-35):
 
     C = N + F phi F^T
     N   = diag white noise: EFAC^2 (sigma_toa^2 + EQUAD^2)   [t2 convention,
-          enterprise_models.py:115-145; TempoNest variant in
-          functions/whitenoise.py]
-    F   = Fourier design matrix, sin/cos pairs at k/T (functions/fourier.py)
+          enterprise_models.py:115-145]
+    F   = Fourier design matrix, sin/cos pairs at k/T (built in the kernel)
     phi = diag powerlaw PSD: A^2/(12 pi^2) fyr^-3 (f/fyr)^-gamma * df
 
     lnL = -1/2 [ r^T C^-1 r + logdet C + n ln(2 pi) ]

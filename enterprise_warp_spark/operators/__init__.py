@@ -18,7 +18,5 @@ from enterprise_warp_spark.operators.relational import (  # noqa: F401
 from enterprise_warp_spark.operators.binning import (  # noqa: F401
     histogram_mode,
     ntile_bins,
-    range_bins,
 )
 from enterprise_warp_spark.operators.weighted import weighted_mean  # noqa: F401
-from enterprise_warp_spark.operators.pairs import pair_join  # noqa: F401

@@ -5,7 +5,6 @@ Reference semantics:
                     (results.py:154-170 dist_mode_position)
   - ntile_bins      A8: sort by x, fixed-count bins of n/k rows, per-bin stats
                     (results.py:305-346 avg_ostat_bins)
-  - range_bins      A9: fixed-width bins [z, z+w) (results.py:286-303)
 
 Scale notes: histogram_mode computes (min,max) in one pass and broadcasts the
 1-row stats to the bucketing pass — two scans, no wide shuffle (bucket
@@ -99,17 +98,6 @@ def ntile_bins(
     tiled = df.withColumn("bin", F.ntile(n_bins).over(w))
     default_aggs = [F.count(F.lit(1)).alias("n")]
     return tiled.groupBy("bin").agg(*(list(aggs) or default_aggs))
-
-
-def range_bins(
-    df: DataFrame, value: str, width: float, aggs: Sequence[Column] = ()
-) -> DataFrame:
-    """A9 — fixed-width bins: bucket = floor(x / width)."""
-    bucketed = df.withColumn(
-        "bucket", F.floor(F.col(value) / F.lit(width)).cast("bigint")
-    )
-    default_aggs = [F.count(F.lit(1)).alias("n")]
-    return bucketed.groupBy("bucket").agg(*(list(aggs) or default_aggs))
 
 
 def exact_rank_select(

@@ -45,14 +45,6 @@ def haversine_km(
     return 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 
-def _cell(lat: Column, lng: Column, cell_deg: float) -> tuple[Column, Column]:
-    """Integer (lat_cell, lng_cell) on the equirectangular grid."""
-    return (
-        F.floor(lat / cell_deg).cast("long"),
-        F.floor(lng / cell_deg).cast("long"),
-    )
-
-
 def radius_join(
     left: DataFrame,
     right: DataFrame,

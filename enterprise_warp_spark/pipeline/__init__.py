@@ -3,13 +3,12 @@
     dedup       exact, MinHash+LSH, SimHash, n-gram Jaccard
     similarity  brute-force cosine top-k + LSH-bucketed ANN over embeddings
     text        language-ID, quality scoring, token counting, fingerprinting
-    multimodal  opaque-binary columns with typed metadata; decode kernels as
-                Arrow-batched mapInPandas — REAL decode for the formats in
-                codecs.py; every other mime (JPEG, GIF, FLAC, ...) decodes
-                through an optional plugin or stub-falls back with
+    multimodal  opaque-binary columns with typed metadata; perceptual
+                fingerprint kernels as Arrow-batched mapInPandas — REAL
+                decode of PPM/PGM, PNG and WAV through codecs.py; every
+                other mime (JPEG, BMP, TIFF, WebP, MP3, ...) gives
                 decoded=false
-    codecs      pure struct+numpy WAV / AIFF / AU, netpbm / PNG / BMP /
-                TIFF / lossless WebP, raw-video codecs
+    codecs      pure struct+numpy WAV / AIFF / AU, netpbm / PNG codecs
     mp3meta     MP3 frame/Xing/ID3 metadata census without decode
     curate      end-to-end corpus curation (quality/lang/repetition gates +
                 staged dedup)

@@ -5,15 +5,11 @@ Real decoding, with no external codec library, for:
   WAV / RIFF       PCM, IEEE float, IMA ADPCM (pipeline/adpcm.py) and
                    G.711 mu-law/A-law audio
   AIFF / AU        PCM and G.711 audio (pipeline/aiff.py)
-  PPM (P6) / PGM (P5), PNG, BMP   images; baseline TIFF (pipeline/tiff.py)
-                   and lossless WebP (pipeline/vp8l.py) load lazily
-  raw RGB video    concatenated width*height*3 frames (our canonical
-                   uncompressed video layout for parquet BINARY columns)
+  PPM (P6) / PGM (P5), PNG   images
 
-Every other format (JPEG, GIF, FLAC, Ogg/Vorbis, MP3, H.264, ...) decodes
-only through the optional Pillow/soundfile plugins at the end of this
-module; without them callers fall back to the documented deterministic
-stub and mark rows `decoded=false`.
+`decode_image` and `decode_audio` raise NotImplementedError for every other
+mime (JPEG, GIF, BMP, TIFF, WebP, FLAC, MP3, ...); the multimodal kernels
+turn that into `decoded=false` rows.
 
 These kernels run inside Arrow-batched mapInPandas workers — everything
 is numpy on contiguous buffers, no per-sample Python loops.
@@ -236,63 +232,6 @@ def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return arr[rows[:, None], cols[None, :]]
 
 
-def image_features(arr: np.ndarray) -> list[float]:
-    """8-dim image feature vector: [height, width, channels, mean R, mean G,
-    mean B, overall mean, overall std] (grayscale repeats the mean)."""
-    x = arr.astype(np.float64)
-    if x.ndim == 2:
-        means = [float(x.mean())] * 3
-        n_ch = 1.0
-    else:
-        means = [float(x[..., c].mean()) for c in range(3)]
-        n_ch = float(x.shape[2])
-    return [
-        float(arr.shape[0]),
-        float(arr.shape[1]),
-        n_ch,
-        *means,
-        float(x.mean()),
-        float(x.std()),
-    ]
-
-
-# ---------------------------------------------------------------------------
-# Raw RGB video: concatenated width*height*3 uint8 frames
-# ---------------------------------------------------------------------------
-
-
-def decode_raw_frame(payload: bytes, width: int, height: int, frame_idx: int) -> np.ndarray:
-    """Slice one (height, width, 3) frame out of a concatenated raw-RGB
-    payload — zero-copy via frombuffer on the frame's byte range."""
-    fsz = width * height * 3
-    start = frame_idx * fsz
-    if start + fsz > len(payload):
-        raise ValueError(f"frame {frame_idx} out of range for payload of {len(payload)} bytes")
-    return np.frombuffer(payload[start : start + fsz], dtype=np.uint8).reshape(height, width, 3)
-
-
-def video_features(payload: bytes, width: int, height: int, n_frames: int) -> list[float]:
-    """8-dim video features from ALL frames at once (one reshape, no loop):
-    [n_frames, height, width, mean, std, first-frame mean, last-frame mean,
-    mean |frame-to-frame delta|]."""
-    fsz = width * height * 3
-    frames = np.frombuffer(payload[: fsz * n_frames], dtype=np.uint8).reshape(
-        n_frames, height, width, 3
-    )
-    per_frame = frames.reshape(n_frames, -1).mean(axis=1)
-    delta = float(np.abs(np.diff(per_frame)).mean()) if n_frames > 1 else 0.0
-    return [
-        float(n_frames),
-        float(height),
-        float(width),
-        float(frames.mean()),
-        float(frames.std()),
-        float(per_frame[0]),
-        float(per_frame[-1]),
-        delta,
-    ]
-
-
 # ---------------------------------------------------------------------------
 # PNG — pure stdlib-zlib decode/encode (VERDICT r5 #3: a COMPRESSED format
 # whose decoded=true path really executes in this container). Bit depths
@@ -310,12 +249,9 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _decode_png_raw(
-    payload: bytes,
-) -> tuple[np.ndarray, int, np.ndarray, np.ndarray, int]:
-    """Shared PNG reconstruction -> (samples (h, w, ch) uint8, color_type,
-    palette or None, tRNS bytes or None, bit depth). decode_png /
-    decode_png_alpha apply their own color-type tails."""
+def decode_png(payload: bytes) -> np.ndarray:
+    """Decode a PNG payload to uint8 (h, w, 3) for color images (alpha
+    dropped, matching PIL's convert('RGB')) or (h, w) for grayscale."""
     import zlib
 
     if payload[: len(_PNG_SIG)] != _PNG_SIG:
@@ -324,7 +260,6 @@ def _decode_png_raw(
     ihdr = None
     idat = []
     plte = None
-    trns = None
     while pos + 8 <= len(payload):
         size, ctype = struct.unpack_from(">I4s", payload, pos)
         body = payload[pos + 8 : pos + 8 + size]
@@ -334,8 +269,6 @@ def _decode_png_raw(
             idat.append(body)
         elif ctype == b"PLTE":
             plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"tRNS":
-            trns = np.frombuffer(body, dtype=np.uint8)
         elif ctype == b"IEND":
             break
         pos += 12 + size  # length + type + data + CRC
@@ -450,150 +383,13 @@ def _decode_png_raw(
             sub, used = unfilter(sub_w, sub_h, raw[off:])
             off += used
             img[y0::ys, x0::xs] = sub
-    return img, color, plte, trns, depth
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """Decode a PNG payload to uint8 (h, w, 3) for color images (alpha
-    dropped, matching PIL's convert('RGB')) or (h, w) for grayscale."""
-    img, color, plte, _trns, _depth = _decode_png_raw(payload)
     if color == 3:
         if plte is None:
             raise ValueError("palette PNG without PLTE chunk")
         return plte[img[:, :, 0]]
-    if color == 0:
-        return img[:, :, 0]
-    if color == 4:
-        return img[:, :, 0]  # gray + alpha -> gray (alpha dropped)
+    if color in (0, 4):
+        return img[:, :, 0]  # gray (+ alpha, dropped) -> gray
     return img[:, :, :3]  # RGB / RGBA -> RGB
-
-
-def decode_png_alpha(payload: bytes) -> np.ndarray:
-    """Decode a PNG payload's ALPHA plane to uint8 (h, w): tRNS-expanded
-    for palette images (entries past the tRNS table are opaque, per the
-    PNG spec), the alpha channel for gray+alpha / RGBA, single-key binary
-    transparency for gray / truecolor carrying a tRNS chunk, all-255
-    otherwise. For 16-bit images the key compare folds to the high byte —
-    the same 16->8 fold _decode_png_raw applies to the samples.
-    Independent ground truth for the WebP ALPH interop test."""
-    img, color, _plte, trns, depth = _decode_png_raw(payload)
-    h, w = img.shape[:2]
-    if color == 3 and trns is not None:
-        table = np.full(256, 255, dtype=np.uint8)
-        table[: len(trns)] = trns
-        return table[img[:, :, 0]]
-    if color == 4:
-        return img[:, :, 1]
-    if color == 6:
-        return img[:, :, 3]
-    if color == 0 and trns is not None and len(trns) >= 2:
-        # 2-byte big-endian gray key; samples were high-byte-folded (16)
-        # or range-scaled (sub-byte), so fold/scale the key the same way
-        key = (int(trns[0]) << 8) | int(trns[1])
-        if depth == 16:
-            key >>= 8
-        elif depth < 8:
-            key *= 255 // ((1 << depth) - 1)
-        return np.where(img[:, :, 0] == key, 0, 255).astype(np.uint8)
-    if color == 2 and trns is not None and len(trns) >= 6:
-        keys = [
-            (int(trns[i]) << 8) | int(trns[i + 1]) for i in (0, 2, 4)
-        ]
-        if depth == 16:
-            keys = [k >> 8 for k in keys]
-        hit = (
-            (img[:, :, 0] == keys[0])
-            & (img[:, :, 1] == keys[1])
-            & (img[:, :, 2] == keys[2])
-        )
-        return np.where(hit, 0, 255).astype(np.uint8)
-    return np.full((h, w), 255, dtype=np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# BMP — uncompressed BI_RGB Windows bitmaps (the public BITMAPINFOHEADER
-# layout): 8-bit palette, 24-bit BGR and 32-bit BGRA, bottom-up or
-# top-down rows, 4-byte row padding.
-# ---------------------------------------------------------------------------
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Decode a BMP payload to uint8 (h, w, 3) RGB."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = struct.unpack_from("<I", payload, 14)[0]
-    if hdr_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER BMPs not supported")
-    w, h_raw = struct.unpack_from("<iI", payload, 18)[0], struct.unpack_from(
-        "<i", payload, 22
-    )[0]
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if planes != 1 or compression != 0:
-        raise NotImplementedError(
-            f"BMP compression={compression} needs an external codec"
-        )
-    if bpp not in (8, 24, 32):
-        raise NotImplementedError(f"BMP bpp={bpp} not supported")
-    top_down = h_raw < 0
-    h = abs(h_raw)
-    if w <= 0 or h == 0:
-        raise ValueError("invalid BMP dimensions")
-    palette = None
-    if bpp == 8:
-        n_colors = struct.unpack_from("<I", payload, 46)[0] or 256
-        pal_off = 14 + hdr_size
-        pal = np.frombuffer(
-            payload, dtype=np.uint8, count=n_colors * 4, offset=pal_off
-        ).reshape(n_colors, 4)
-        palette = pal[:, [2, 1, 0]].copy()  # BGRA entries -> RGB
-    row_bytes = ((w * bpp // 8) + 3) & ~3  # rows pad to 4 bytes
-    need = row_bytes * h
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=need, offset=data_off
-    ).reshape(h, row_bytes)
-    if not top_down:
-        rows = rows[::-1]
-    if bpp == 8:
-        idx = rows[:, :w]
-        if int(idx.max(initial=0)) >= palette.shape[0]:
-            # indices past biClrUsed: malformed payload — keep the module's
-            # ValueError contract instead of leaking numpy IndexError
-            raise ValueError("corrupt BMP palette index")
-        return palette[idx]
-    step = bpp // 8
-    px = rows[:, : w * step].reshape(h, w, step)
-    return px[:, :, [2, 1, 0]].copy()  # BGR(A) -> RGB, alpha dropped
-
-
-def encode_bmp(arr: np.ndarray, bpp: int = 24, top_down: bool = False) -> bytes:
-    """Encode uint8 (h, w, 3) RGB as an uncompressed BMP (test-side twin;
-    bpp 24 or 32)."""
-    a = np.ascontiguousarray(arr, dtype=np.uint8)
-    if a.ndim != 3 or a.shape[2] != 3 or bpp not in (24, 32):
-        raise ValueError("encode_bmp takes (h, w, 3) RGB at bpp 24/32")
-    h, w, _ = a.shape
-    step = bpp // 8
-    row_bytes = ((w * step) + 3) & ~3
-    body = np.zeros((h, row_bytes), dtype=np.uint8)
-    bgr = a[:, :, [2, 1, 0]]
-    if bpp == 32:
-        bgra = np.concatenate(
-            [bgr, np.full((h, w, 1), 255, np.uint8)], axis=2
-        )
-        body[:, : w * 4] = bgra.reshape(h, w * 4)
-    else:
-        body[:, : w * 3] = bgr.reshape(h, w * 3)
-    if not top_down:
-        body = body[::-1]
-    data = body.tobytes()
-    hdr = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-    hdr += struct.pack(
-        "<IiiHHIIiiII", 40, w, h if not top_down else -h, 1, bpp, 0,
-        len(data), 2835, 2835, 0, 0,
-    )
-    return hdr + data
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
@@ -665,19 +461,9 @@ DECODABLE_MIMES = {
     "image/x-portable-pixmap": "pnm",
     "image/x-portable-graymap": "pnm",
     "image/png": "png",
-    "image/bmp": "bmp",
-    "image/x-ms-bmp": "bmp",
-    "image/tiff": "tiff",
     "audio/aiff": "aiff",
     "audio/x-aiff": "aiff",
     "audio/basic": "au",  # the Sun/NeXT .snd registered mime
-    "video/x-raw-rgb": "rawvideo",
-    # VP8L lossless decodes natively (incl. VP8X-wrapped); lossy VP8
-    # routes through the optional system-libwebp ctypes plugin and raises
-    # NotImplementedError only when no libwebp shared library exists —
-    # that absence is the plugin boundary, same contract as the
-    # unsupported TIFF compressions
-    "image/webp": "webp",
 }
 
 
@@ -705,88 +491,5 @@ def decode_image(payload: bytes, mime: str) -> np.ndarray:
         return decode_ppm(payload)
     if family == "png":
         return decode_png(payload)
-    if family == "bmp":
-        return decode_bmp(payload)
-    if family == "tiff":
-        from enterprise_warp_spark.pipeline.tiff import decode_tiff
-
-        return decode_tiff(payload)
-    if family == "webp":
-        from enterprise_warp_spark.pipeline.vp8l import decode_webp
-
-        return decode_webp(payload)
     raise NotImplementedError(f"image mime {mime!r} needs an external codec")
 
-
-# ---------------------------------------------------------------------------
-# Optional-dependency codecs — the documented plugin point, feature-gated
-# behind import-try so the pure-python formats stay the always-on path.
-# When Pillow / soundfile are installed, compressed mimes flip to
-# decoded=true through the SAME (bytes) -> array interface; when absent
-# (this container), resolvers return None and callers use the stub.
-# ---------------------------------------------------------------------------
-
-OPTIONAL_IMAGE_MIMES = {
-    "image/jpeg", "image/png", "image/gif", "image/webp", "image/bmp",
-}
-OPTIONAL_AUDIO_MIMES = {"audio/mpeg", "audio/mp3", "audio/flac", "audio/ogg"}
-
-
-def pillow_image_decoder():
-    """bytes -> uint8 (h, w, 3) decoder backed by Pillow, or None when the
-    optional dependency is absent."""
-    try:
-        from PIL import Image  # optional dependency
-    except Exception:
-        return None
-    import io
-
-    def decode(payload: bytes) -> np.ndarray:
-        with Image.open(io.BytesIO(payload)) as im:
-            return np.asarray(im.convert("RGB"))
-
-    return decode
-
-
-def pillow_image_resizer():
-    """(bytes, w, h) -> re-encoded bytes resizer backed by Pillow (keeps the
-    source format), or None when absent."""
-    try:
-        from PIL import Image  # optional dependency
-    except Exception:
-        return None
-    import io
-
-    def resize(payload: bytes, w: int, h: int) -> bytes:
-        with Image.open(io.BytesIO(payload)) as im:
-            fmt = im.format or "PNG"
-            buf = io.BytesIO()
-            im.resize((w, h)).save(buf, format=fmt)
-            return buf.getvalue()
-
-    return resize
-
-
-def soundfile_audio_decoder():
-    """bytes -> (float64 (n, ch) in [-1, 1], sample_rate) decoder backed by
-    soundfile/libsndfile, or None when absent."""
-    try:
-        import soundfile  # optional dependency
-    except Exception:
-        return None
-    import io
-
-    def decode(payload: bytes):
-        data, rate = soundfile.read(io.BytesIO(payload), always_2d=True)
-        return np.asarray(data, dtype=np.float64), int(rate)
-
-    return decode
-
-
-def optional_decoders() -> dict:
-    """Resolve every optional decoder once (called per executor worker)."""
-    return {
-        "image": pillow_image_decoder(),
-        "image_resize": pillow_image_resizer(),
-        "audio": soundfile_audio_decoder(),
-    }

@@ -1,7 +1,7 @@
 """MP3 (MPEG audio) METADATA parser — frame headers, Xing/Info/VBRI VBR
 tags, ID3v1/ID3v2 text tags. No audio decode: Layer III synthesis needs
-normative Huffman tables and filterbank windows that make a faithful
-hermetic decoder a plugin boundary (documented in pipeline/codecs.py) —
+normative Huffman tables and filterbank windows that put a faithful
+hermetic decoder out of scope (pipeline/codecs.py decodes no MP3) —
 but the FRAME STRUCTURE is fully specified by printed tables (ISO/IEC
 11172-3 / 13818-3, and the de-facto Xing/VBRI tag layouts), so duration,
 bitrate, sample rate, channel mode, and tag text are all extractable from

@@ -53,11 +53,6 @@ def tokens(col: str = "text") -> Column:
     return F.expr(TOKENS.format(s=col))
 
 
-def h64(expr: str) -> str:
-    """SQL fragment: portable 64-bit hash of the given string expression."""
-    return H64.format(s=expr)
-
-
 def stopword_hits(tok_expr: str, lang: str) -> str:
     arr = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
     return f"size(filter({tok_expr}, x -> array_contains(array({arr}), x)))"

@@ -31,14 +31,6 @@ def read_noise_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     )
 
 
-def filter_for_pulsars(noise: DataFrame, pulsars: DataFrame) -> DataFrame:
-    """J2 substring join: keep files whose name contains a wanted pulsar."""
-    return noise.join(
-        F.broadcast(pulsars.select("psr").distinct().withColumnRenamed("psr", "want")),
-        F.col("path").contains(F.col("want")) | (F.col("psr") == F.col("want")),
-    ).drop("want")
-
-
 def apply_noise_dict(residuals: DataFrame, noise: DataFrame) -> DataFrame:
     """Apply a noise dictionary DISTRIBUTEDLY — the reference's 'rebuild the
     PTA with the noise dictionary applied' step (the OS flow takes noise

@@ -93,7 +93,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table.
 
     SESSION-LEVEL SIDE EFFECTS (documented API contract, shared with
-    load_tables/register_views and streaming.events.stream_events):
+    load_tables and streaming.events.stream_events):
     * ``spark.sql.session.timeZone`` is pinned to UTC (all queries here
       assume it);
     * loading a nanos-encoded ``events`` sets
@@ -141,11 +141,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def save_snapshot(df: DataFrame, path: str, partition_by: str | None = "psr") -> None:

@@ -140,40 +140,6 @@ def test_snapshot_roundtrip(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "psr=fake_psr_0"))
 
 
-def test_multimodal_feature_extraction(spark):
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        frame_sample,
-    )
-
-    import hashlib
-
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.codecs import encode_wav
-
-    wav = encode_wav(np.sin(2 * np.pi * 440 * np.arange(1600) / 16000.0), 16000)
-    rows = [
-        (1, "image", b"\x89PNG-fake-bytes", "image/png", 32, 32, None, None),
-        (2, "audio", wav, "audio/wav", None, None, 16000, None),
-        (3, "video", b"fake-video", "video/mp4", 64, 48, None, 25),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert feats[1]["n_bytes"] == len(b"\x89PNG-fake-bytes")
-    assert feats[2]["payload_md5"] == hashlib.md5(wav).hexdigest()
-    assert all(r["feature_dim"] == 8 for r in feats.values())
-    # PNG and MP4 need external codecs -> stub; WAV is really decoded:
-    assert not feats[1]["decoded"] and not feats[3]["decoded"]
-    assert feats[2]["decoded"]
-    assert feats[2]["feature"][0] == pytest.approx(0.1)  # duration_s
-    assert feats[2]["feature"][2] == pytest.approx(1 / 2**0.5, rel=1e-3)  # rms
-    # frame sampling: stride-10 indices over 25 frames -> 0,10,20
-    frames = frame_sample(media, 10).collect()
-    assert [r["frame_idx"] for r in frames] == [0, 10, 20]
-
-
 def test_timestamped_chain_segments(spark, tmp_path):
     """S6/X4 — timestamped segments chain_<14 digits>.txt concatenate in
     name order (results.py:427-448, 481-489)."""
@@ -222,36 +188,6 @@ def test_global_rank_and_scalable_ntile(spark, sf_dir):
         orders, ["o_totalprice", "o_orderkey"], 8
     ).collect()}
     assert a == b
-
-
-def test_multimodal_resize(spark):
-    import numpy as np
-
-    from enterprise_warp_spark.pipeline.codecs import (
-        decode_ppm,
-        encode_ppm,
-        resize_nearest,
-    )
-    from enterprise_warp_spark.pipeline.multimodal import MEDIA_SCHEMA, resize_images
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (200, 320, 3), dtype=np.uint8)
-    rows = [
-        (1, "image", encode_ppm(img), "image/x-portable-pixmap", 320, 200, None, None),
-        (2, "image", b"img-bytes", "image/png", 320, 200, None, None),
-        (3, "audio", b"wav-bytes", "audio/wav", None, None, 16000, None),
-    ]
-    out = {
-        r["media_id"]: r
-        for r in resize_images(spark.createDataFrame(rows, MEDIA_SCHEMA), 64, 64).collect()
-    }
-    assert set(out) == {1, 2}  # audio rows filtered out
-    # PPM: REALLY resized — exact nearest-neighbor pixel equality vs numpy
-    assert out[1]["resized"] and out[1]["width"] == 64 and out[1]["height"] == 64
-    assert np.array_equal(decode_ppm(out[1]["payload"]), resize_nearest(img, 64, 64))
-    # PNG needs an external codec: passthrough, flagged not-resized
-    assert not out[2]["resized"]
-    assert out[2]["payload"] == b"img-bytes" and out[2]["width"] == 320
 
 
 def test_curate_corpus(spark, sf_dir):

@@ -1,23 +1,24 @@
 """Every package module and every top-level function or class sits on a
 declared path, or is named here with why.
 
-The declared paths are the catalog (`queries.py`), the two CLIs
-(`results.py`, `run_paramfile.py`), the package `__init__`, the examples,
-`bench.py` and the perfbench workloads. The module walk follows every
-`import` and `from ... import` statement in those files and in each package
-module they reach, function-level imports included, since kernels and
-optional branches import lazily. A module the walk does not reach is code no
-user path runs.
+The declared paths are the catalog (`queries.py`) with its entry module
+(`__spark_entry__.py`), the two CLIs (`results.py`, `run_paramfile.py`), the
+package `__init__`, the examples, `bench.py` and the perfbench workloads.
+The module walk follows every `import` and `from ... import` statement in
+those files and in each package module they reach, function-level imports
+included, since kernels and optional branches import lazily. A module the
+walk does not reach is code no user path runs.
 
 The function walk is finer. It starts from the same files and the
 module-level statements of each package module they import, and follows the
 names each reached statement or def uses: `Name`s, attributes, import
-aliases and the words inside string constants (registries and span tables
-that name functions by string). A reached def's own imports reach modules
-in turn. Decorated defs (registry entries) and dunder names count as
-reached wherever their module is. Names resolve by spelling alone, so a
-def is reached when any reached code uses its name: the walk can keep dead
-code, never flag live code. Docstrings are prose and name nothing.
+aliases and the string constants that are a whole identifier or dotted path
+(registries and span tables that name functions by string; prose in a string
+names nothing). A reached def's own imports reach modules in turn.
+Decorated defs (registry entries) and dunder names count as reached wherever
+their module is. Names resolve by spelling alone, so a def is reached when
+any reached code uses its name: the walk can keep dead code, never flag live
+code. Docstrings are prose and name nothing.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ ROOTS = [
     f"{PACKAGE}/results.py",
     f"{PACKAGE}/run_paramfile.py",
     f"{PACKAGE}/__init__.py",
+    "__spark_entry__.py",
     *sorted(glob.glob("examples/*.py", root_dir=ROOT)),
     "bench.py",
     *sorted(glob.glob("perfbench/*.py", root_dir=ROOT)),
@@ -48,8 +50,6 @@ KEPT_UNREACHED = {
     f"{PACKAGE}.functions.solar_system": "BayesEphem input model",
     # Deletion candidates still pending (ROADMAP item 3): each goes
     # together with its tests in a later change.
-    f"{PACKAGE}.functions.fourier": "pending deletion",
-    f"{PACKAGE}.profiling": "pending deletion",
     f"{PACKAGE}.sources.archive": "pending deletion",
     f"{PACKAGE}.sources.globscan": "pending deletion",
 }
@@ -110,7 +110,7 @@ def test_only_the_recorded_modules_are_unreached():
     assert unreached == set(KEPT_UNREACHED)
 
 
-_WORD = re.compile(r"[A-Za-z_]\w*")
+_NAME_PATH = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -138,8 +138,8 @@ def _uses(node: ast.AST, docstrings: set[int], names: set[str],
         elif isinstance(sub, ast.alias) and sub.asname:
             aliases.setdefault(sub.asname, set()).add(sub.name.split(".")[-1])
         elif (isinstance(sub, ast.Constant) and isinstance(sub.value, str)
-              and id(sub) not in docstrings):
-            names.update(_WORD.findall(sub.value))
+              and id(sub) not in docstrings and _NAME_PATH.fullmatch(sub.value)):
+            names.update(sub.value.split("."))
 
 
 def _def_key(module: str, name: str) -> str:
@@ -230,19 +230,10 @@ KEPT_UNREACHED_DEFS: dict[str, str] = {
         "pipeline.tokenizer:decode_ids",
         "pipeline.tokenizer:encode_text",
     ), _REFERENCE),
-    # Encoders for PNM/BMP, TIFF and lossless WebP: the tests build the
-    # inputs of the reached decoders with them.
+    # The PNM encoder: the tests build the reached PPM/PGM decoder's inputs
+    # with it.
     **dict.fromkeys((
-        "pipeline.codecs:encode_bmp",
         "pipeline.codecs:encode_ppm",
-        "pipeline.tiff:_lzw_encode",
-        "pipeline.tiff:encode_tiff",
-        "pipeline.vp8l:BitWriter",
-        "pipeline.vp8l:_write_literal_stream",
-        "pipeline.vp8l:encode_webp_lossless",
-        "pipeline.vp8l:limited_lengths",
-        "pipeline.vp8l:prefix_value_encode",
-        "pipeline.vp8l:write_prefix_code",
     ), _ENCODER),
     # The general2 loop: the reference-reading tests in
     # tests/test_general2_pipeline.py run it, and ROADMAP item 6 builds its
@@ -257,27 +248,23 @@ KEPT_UNREACHED_DEFS: dict[str, str] = {
         "sources.tempo2:residuals_from_general2",
         "sources.tempo2:run_tempo2_prediction",
     ), _PENDING),
-    # Left for later batches (ROADMAP item 3): the non-PNG codec and
-    # multimodal tree with the aiff/adpcm decoders it alone imports, the
-    # unigram trainer, and small helpers whose tests read reference data.
+    # Left for later batches (ROADMAP item 3): the audio side of the codec
+    # and multimodal tree with the aiff/adpcm decoders it alone imports, the
+    # unigram trainer, small helpers whose tests read reference data, and
+    # the defs that only words in prose strings kept reached before string
+    # constants had to be whole names.
     **dict.fromkeys((
         "analytics.chains:burn_in",
-        "functions.chromatic:chromatic_weight",
-        "functions.chromatic:dm_weight",
         "functions.ephemeris:attach_basis_table",
         "functions.ephemeris:ingest_basis_table",
         "functions.ephemeris:synthetic_basis",
-        "functions.orf:pair_angle",
         "functions.psd:broken_powerlaw_psd",
         "functions.psd:free_spectrum_psd",
         "functions.psd:lorentzian_psd",
         "functions.timingmodel:fit_residuals",
-        "functions.whitenoise:white_sigma2",
         "likelihood.gp:gp_loglik_reduced",
         "likelihood.sampling:posterior_quantiles",
-        "operators.binning:range_bins",
-        "operators.geo:_cell",
-        "operators.pairs:pair_join",
+        "operators.sketches:count_min_by",
         "pipeline.adpcm:_encode_code",
         "pipeline.adpcm:_step_decode",
         "pipeline.adpcm:decode_ima_blocks",
@@ -294,31 +281,20 @@ KEPT_UNREACHED_DEFS: dict[str, str] = {
         "pipeline.codecs:_ulaw_table",
         "pipeline.codecs:audio_features",
         "pipeline.codecs:decode_audio",
-        "pipeline.codecs:decode_png_alpha",
-        "pipeline.codecs:decode_raw_frame",
         "pipeline.codecs:decode_wav",
         "pipeline.codecs:encode_g711",
         "pipeline.codecs:encode_wav",
-        "pipeline.codecs:image_features",
-        "pipeline.codecs:optional_decoders",
-        "pipeline.codecs:pillow_image_decoder",
-        "pipeline.codecs:pillow_image_resizer",
-        "pipeline.codecs:soundfile_audio_decoder",
-        "pipeline.codecs:video_features",
+        "pipeline.decontaminate:_doc_grams",
+        "pipeline.decontaminate:decontaminate",
+        "pipeline.decontaminate:ngram_contamination",
         "pipeline.lm:train_unigram_lm",
         "pipeline.lm:unseen_logp",
-        "pipeline.multimodal:_decode_features",
-        "pipeline.multimodal:_decode_stub",
         "pipeline.multimodal:audio_fingerprints",
         "pipeline.multimodal:audio_near_dup_pairs",
-        "pipeline.multimodal:extract_features",
-        "pipeline.multimodal:frame_sample",
-        "pipeline.multimodal:media_census",
-        "pipeline.multimodal:resize_images",
-        "pipeline.multimodal:sample_frames_decoded",
-        "pipeline.multimodal:sniff_mime",
+        "pipeline.search:build_index",
+        "pipeline.suffix:exact_duplicate_spans_sharded",
+        "pipeline.suffix:strip_exact_duplicate_spans_sharded",
         "pipeline.text:compression_ratio",
-        "pipeline.text:h64",
         "pipeline.text:mojibake_score",
         "pipeline.text:normalize_text",
         "pipeline.text:token_counts",
@@ -328,15 +304,10 @@ KEPT_UNREACHED_DEFS: dict[str, str] = {
         "pipeline.unigram:_forward_backward",
         "pipeline.unigram:candidate_pieces",
         "pipeline.unigram:train_unigram",
-        "pipeline.vp8l:decode_vp8l_alpha",
-        "pipeline.vp8l:decode_webp_alpha",
         "plans.registry:priors_for_model",
-        "session:tune_for_any_session",
-        "sources.noisefiles:filter_for_pulsars",
         "sources.noisefiles:white_noise_constants",
         "sources.par:read_par",
         "tables:load_snapshot",
-        "tables:register_views",
     ), _PENDING),
 }
 

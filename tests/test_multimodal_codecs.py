@@ -1,8 +1,8 @@
 """Pure-python media codecs (pipeline.codecs) + their Spark kernels.
 
-The decode step for WAV / PPM / raw-RGB video is REAL (struct+numpy, no
-external codec libs); these tests pin byte-level round-trips and feature
-math against independent references (stdlib `wave`, hand-built rasters).
+The decode step for WAV / PPM / PNG is REAL (struct+numpy+zlib, no external
+codec libs); these tests pin byte-level round-trips and feature math against
+independent references (stdlib `wave`, hand-built rasters).
 """
 
 from __future__ import annotations
@@ -16,12 +16,10 @@ import pytest
 from enterprise_warp_spark.pipeline.codecs import (
     audio_features,
     decode_ppm,
-    decode_raw_frame,
     decode_wav,
     encode_ppm,
     encode_wav,
     resize_nearest,
-    video_features,
 )
 
 
@@ -113,47 +111,6 @@ def test_resize_nearest_exact():
     assert np.array_equal(resize_nearest(big, 2, 2), big[np.ix_([0, 2], [0, 2])])
 
 
-def test_raw_video_frames_and_features():
-    w, h, n = 4, 3, 5
-    frames = np.stack(
-        [np.full((h, w, 3), 10 * i, dtype=np.uint8) for i in range(n)]
-    )
-    payload = frames.tobytes()
-    for i in range(n):
-        assert np.array_equal(decode_raw_frame(payload, w, h, i), frames[i])
-    with pytest.raises(ValueError):
-        decode_raw_frame(payload, w, h, n)
-    f = video_features(payload, w, h, n)
-    assert f[0] == n and f[1] == h and f[2] == w
-    assert f[3] == pytest.approx(20.0)  # mean of 0,10,20,30,40
-    assert f[5] == pytest.approx(0.0) and f[6] == pytest.approx(40.0)
-    assert f[7] == pytest.approx(10.0)  # mean |frame delta|
-
-
-def test_sample_frames_decoded_spark(spark):
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        sample_frames_decoded,
-    )
-
-    w, h, n = 4, 3, 6
-    frames = np.stack(
-        [np.full((h, w, 3), 5 * i, dtype=np.uint8) for i in range(n)]
-    )
-    rows = [
-        (1, "video", frames.tobytes(), "video/x-raw-rgb", w, h, None, n),
-        (2, "video", b"compressed", "video/mp4", 64, 48, None, 12),
-        (3, "audio", b"x", "audio/wav", None, None, 8000, None),
-    ]
-    out = sample_frames_decoded(spark.createDataFrame(rows, MEDIA_SCHEMA), 2).collect()
-    raw = sorted((r["frame_idx"], r["frame_mean"]) for r in out if r["media_id"] == 1)
-    assert raw == [(0, 0.0), (2, 10.0), (4, 20.0)]
-    assert all(r["decoded"] for r in out if r["media_id"] == 1)
-    comp = [r for r in out if r["media_id"] == 2]
-    assert len(comp) == 6 and all(not r["decoded"] and r["frame_mean"] is None for r in comp)
-    assert not [r for r in out if r["media_id"] == 3]
-
-
 def test_audio_fingerprint_near_dups(spark):
     """Volume-scaled and lightly-edited copies of a track fingerprint within
     hamming range; a different track does not. MP3 rows: decoded=false."""
@@ -243,85 +200,6 @@ def test_image_fingerprint_near_dups(spark):
 
 
 # ---------------------------------------------------------------------------
-# Optional-dependency codec plugins (Pillow / soundfile): both environments
-# must stay green — with the libs absent the resolvers return None and
-# compressed mimes keep the decoded=false stub; with a decoder present (the
-# injected fake stands in for a real install) the SAME rows flip to
-# decoded=true through the plugin interface.
-# ---------------------------------------------------------------------------
-
-
-def _jpeg_row(media_id=1):
-    # a payload with a JPEG mime; content is irrelevant for the stub path
-    return (media_id, "image", b"\xff\xd8\xe0" + bytes(range(64)), "image/jpeg",
-            8, 8, None, None)
-
-
-def test_optional_resolvers_import_gated():
-    from enterprise_warp_spark.pipeline import codecs
-
-    for resolver in (
-        codecs.pillow_image_decoder,
-        codecs.pillow_image_resizer,
-        codecs.soundfile_audio_decoder,
-    ):
-        dec = resolver()
-        assert dec is None or callable(dec)
-
-
-def test_compressed_mime_stub_without_plugins(spark):
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    media = spark.createDataFrame([_jpeg_row()], MEDIA_SCHEMA)
-    # force the no-plugins environment regardless of what's installed
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is False
-    assert row["feature_dim"] == 8
-
-
-def test_plugin_decoder_flips_decoded_true(spark):
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    def fake_image_decoder(payload: bytes) -> np.ndarray:
-        # deterministic stand-in for PIL: gradient image from payload length
-        h = w = 8
-        g = (np.arange(h * w * 3, dtype=np.uint8) + len(payload)).reshape(h, w, 3)
-        return g
-
-    media = spark.createDataFrame([_jpeg_row()], MEDIA_SCHEMA)
-    row = extract_features(media, decoders={"image": fake_image_decoder}).first()
-    assert row["decoded"] is True
-    payload = _jpeg_row()[2]
-    assert row["feature"] == pytest.approx(image_features(fake_image_decoder(payload)))
-
-
-def test_plugin_resizer_flips_resized_true(spark):
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-    )
-
-    def fake_resizer(payload: bytes, w: int, h: int) -> bytes:
-        return b"RSZ" + bytes([w, h]) + payload[:4]
-
-    media = spark.createDataFrame([_jpeg_row()], MEDIA_SCHEMA)
-    # absent plugins: passthrough, resized=false
-    plain = resize_images(media, 4, 4, decoders={}).first()
-    assert plain["resized"] is False
-    # injected plugin: resized=true with the plugin's bytes
-    got = resize_images(media, 4, 4, decoders={"image_resize": fake_resizer}).first()
-    assert got["resized"] is True
-    assert bytes(got["payload"]).startswith(b"RSZ\x04\x04")
-
-
-# ---------------------------------------------------------------------------
 # PNG (VERDICT r5 #3): the compressed decoded=true path really executes
 # ---------------------------------------------------------------------------
 
@@ -407,46 +285,30 @@ def test_png_rgba_palette_and_gray_alpha_decode():
 
 
 def test_png_features_match_uncompressed_twin_spark(spark):
-    """THE round-trip the verdict asked for: a compressed (PNG) payload
-    yields decoded=true features IDENTICAL to its uncompressed (PPM) twin —
-    with no optional decoder plugins involved."""
-    from enterprise_warp_spark.pipeline.codecs import encode_png, encode_ppm
+    """A compressed (PNG) payload decodes to the same pixels as its
+    uncompressed (PPM) twin and gets the same decoded=true fingerprint."""
+    from enterprise_warp_spark.pipeline.codecs import (
+        decode_image,
+        encode_png,
+        encode_ppm,
+    )
     from enterprise_warp_spark.pipeline.multimodal import (
         MEDIA_SCHEMA,
-        extract_features,
         image_fingerprints,
-        resize_images,
     )
 
     rgb = _grad_rgb(16, 16, seed=9)
+    ppm, png = encode_ppm(rgb), encode_png(rgb, 4)
+    assert np.array_equal(decode_image(ppm, "image/x-portable-pixmap"), rgb)
+    assert np.array_equal(decode_image(png, "image/png"), rgb)
     rows = [
-        (1, "image", encode_ppm(rgb), "image/x-portable-pixmap", 16, 16, None, None),
-        (2, "image", encode_png(rgb, 4), "image/png", 16, 16, None, None),
+        (1, "image", ppm, "image/x-portable-pixmap", 16, 16, None, None),
+        (2, "image", png, "image/png", 16, 16, None, None),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    # decoders={} == no optional plugins: the PNG path must be the pure one
-    feats = {
-        r["media_id"]: r
-        for r in extract_features(media, decoders={}).collect()
-    }
-    assert feats[1]["decoded"] and feats[2]["decoded"]
-    assert feats[1]["feature"] == feats[2]["feature"]
-
     fps = {r["media_id"]: r for r in image_fingerprints(media).collect()}
     assert fps[1]["decoded"] and fps[2]["decoded"]
     assert fps[1]["fingerprint"] == fps[2]["fingerprint"]
-
-    rs = {
-        r["media_id"]: r
-        for r in resize_images(media, 8, 8, decoders={}).collect()
-    }
-    assert rs[1]["resized"] and rs[2]["resized"]
-    from enterprise_warp_spark.pipeline.codecs import decode_image
-
-    a = decode_image(bytes(rs[1]["payload"]), "image/x-portable-pixmap")
-    b = decode_image(bytes(rs[2]["payload"]), "image/png")
-    assert a.shape == b.shape == (8, 8, 3)
-    assert np.array_equal(a, b)
 
 
 def test_png_decode_against_pillow_if_available():
@@ -465,92 +327,6 @@ def test_png_decode_against_pillow_if_available():
         decode_png(encode_png(rgb, 3)),
         np.asarray(Image.open(_io.BytesIO(encode_png(rgb, 3))).convert("RGB")),
     )
-
-
-def test_unsupported_png_variant_falls_through_to_plugin(spark):
-    """A PNG the stdlib decoder rejects (here: corrupt bytes standing in for
-    16-bit / interlaced variants) must fall through to the optional image
-    plugin — same as resize_images — not stub out with decoded=false."""
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    def fake_image_decoder(payload: bytes) -> np.ndarray:
-        h = w = 4
-        return (np.arange(h * w * 3, dtype=np.uint8) + len(payload)).reshape(h, w, 3)
-
-    bad_png = b"\x89PNG\r\n\x1a\n" + bytes(range(40))  # magic ok, body junk
-    media = spark.createDataFrame(
-        [(9, "image", bad_png, "image/png", 4, 4, None, None)], MEDIA_SCHEMA
-    )
-    with_plugin = extract_features(media, decoders={"image": fake_image_decoder}).first()
-    assert with_plugin["decoded"] is True
-    assert with_plugin["feature"] == pytest.approx(
-        image_features(fake_image_decoder(bad_png))
-    )
-    without = extract_features(media, decoders={}).first()
-    assert without["decoded"] is False
-
-
-# ---------------------------------------------------------------------------
-# Plugin dispatch order against the pure decoders
-# ---------------------------------------------------------------------------
-
-
-def _gradient_rgb(h=21, w=37):
-    x = np.linspace(0, 255, w)[None, :]
-    y = np.linspace(0, 255, h)[:, None]
-    base = np.clip(0.5 * x + 0.5 * y, 0, 255).astype(np.uint8)
-    return np.stack([base, base[::-1], np.full_like(base, 100)], axis=-1)
-
-
-def test_native_plugin_preferred_over_pure_python(spark):
-    """VERDICT r5 #2 — dispatch order: when a native decoder is importable
-    it runs FIRST (libjpeg-class speed at scale); the pure-python codec
-    stays as the fallback and the correctness oracle. Proven two ways on a
-    payload the pure codec CAN decode:
-
-    1. priority: a plugin returning a deliberately different image wins;
-    2. parity: a plugin that decodes faithfully (here: the pure decoder
-       itself standing in for Pillow) yields byte-identical features to
-       the no-plugin run.
-    """
-    from enterprise_warp_spark.pipeline.codecs import (
-        decode_png,
-        encode_png,
-        image_features,
-    )
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    payload = encode_png(_gradient_rgb())
-    media = spark.createDataFrame(
-        [(41, "image", payload, "image/png", 37, 21, None, None)], MEDIA_SCHEMA
-    )
-
-    marker = np.full((4, 4, 3), 200, dtype=np.uint8)
-    row = extract_features(media, decoders={"image": lambda p: marker}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(marker))  # plugin won
-
-    faithful = extract_features(
-        media, decoders={"image": lambda p: decode_png(p)}
-    ).first()
-    pure = extract_features(media, decoders={}).first()
-    assert pure["decoded"] is True and faithful["decoded"] is True
-    assert faithful["feature"] == pure["feature"]  # cross-checked identical
-
-    # a plugin that REJECTS the payload falls back to the pure codec
-    def broken(p):
-        raise ValueError("cannot decode")
-
-    fb = extract_features(media, decoders={"image": broken}).first()
-    assert fb["decoded"] is True
-    assert fb["feature"] == pure["feature"]
 
 
 # ---------------------------------------------------------------------------
@@ -585,17 +361,15 @@ def test_adpcm_roundtrip_snr_and_stereo():
 
 
 def test_adpcm_decodes_for_real_in_spark_and_fingerprint_invariant(spark):
-    """An ADPCM WAV media row gets decoded=true with NO plugins, its
-    features track the PCM twin's, and the perceptual audio fingerprint
-    lands within near-dup hamming range of the twin's (envelope bits at a
-    comparator threshold may flip under 4:1 ADPCM noise) — the VERDICT
-    r5 #7 acceptance shape."""
+    """An ADPCM WAV media row gets decoded=true with NO plugins, and its
+    perceptual audio fingerprint lands within near-dup hamming range of
+    the PCM twin's (envelope bits at a comparator threshold may flip under
+    4:1 ADPCM noise) — the VERDICT r5 #7 acceptance shape."""
     from enterprise_warp_spark.pipeline.adpcm import encode_ima_wav
     from enterprise_warp_spark.pipeline.codecs import encode_wav
     from enterprise_warp_spark.pipeline.multimodal import (
         MEDIA_SCHEMA,
         audio_fingerprints,
-        extract_features,
     )
 
     rate = 16000
@@ -611,51 +385,10 @@ def test_adpcm_decodes_for_real_in_spark_and_fingerprint_invariant(spark):
         ],
         MEDIA_SCHEMA,
     )
-    rows = {r["media_id"]: r for r in extract_features(media, decoders={}).collect()}
-    assert rows[1]["decoded"] is True and rows[2]["decoded"] is True
-    fa, fb = rows[1]["feature"], rows[2]["feature"]
-    assert fa[0] == fb[0] and fa[7] == fb[7]  # duration, rate exact
-    assert abs(fa[2] - fb[2]) / fb[2] < 0.02  # rms within 2%
-
     fp = {r["media_id"]: r for r in audio_fingerprints(media).collect()}
     assert fp[1]["decoded"] is True and fp[2]["decoded"] is True
     hamming = bin(fp[1]["fingerprint"] ^ fp[2]["fingerprint"]).count("1")
     assert hamming <= 6  # well inside the near-dup bucket radius
-
-
-def test_prefer_native_false_uses_pure_decoder_despite_plugin(spark):
-    """Bit-reproducibility switch: with prefer_native=False the pure-python
-    PNG decoder wins even when a (different-answer) native plugin is
-    installed; the plugin still catches formats the pure path cannot."""
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    def fake_image_decoder(payload: bytes) -> np.ndarray:
-        return np.full((8, 8, 3), 200, dtype=np.uint8)  # wrong on purpose
-
-    from enterprise_warp_spark.pipeline.codecs import encode_png
-
-    payload = encode_png(_gradient_rgb())
-    media = spark.createDataFrame(
-        [(77, "image", payload, "image/png", 37, 21, None, None)], MEDIA_SCHEMA
-    )
-    pure = extract_features(media, decoders={}).first()
-    assert pure["decoded"] is True  # the pure PNG decoder handles this row
-    native = extract_features(
-        media, decoders={"image": fake_image_decoder}
-    ).first()
-    assert native["feature"] == pytest.approx(
-        image_features(fake_image_decoder(b"")), abs=0
-    )
-    repro = extract_features(
-        media, decoders={"image": fake_image_decoder}, prefer_native=False
-    ).first()
-    assert repro["decoded"] is True
-    assert repro["feature"] == pytest.approx(pure["feature"], abs=0)
-    assert repro["feature"] != pytest.approx(native["feature"], abs=0)
 
 
 # an 8x8 gray baseline JPEG (quality 50) of the ramp arange(64) * 4
@@ -673,25 +406,48 @@ _JPEG_8X8 = bytes.fromhex(
 )
 
 
+# a 2x2 24-bit bottom-up BMP and a 2x2 uncompressed RGB TIFF of the pixels
+# red, green / blue, white
+_BMP_2X2 = bytes.fromhex(
+    "424d460000000000000036000000280000000200000002000000010018000000000010"
+    "000000130b0000130b00000000000000000000ff0000ffffff00000000ff00ff000000"
+)
+_TIFF_2X2 = bytes.fromhex(
+    "49492a00080000000a00000103000100000002000000010103000100000002000000"
+    "02010300030000008600000003010300010000000100000006010300010000000200"
+    "000011010400010000008c0000001501030001000000030000001601030001000000"
+    "0200000017010400010000000c0000003d0103000100000001000000000000000800"
+    "08000800ff000000ff000000ffffffff"
+)
+
+
 def test_jpeg_row_undecoded_beside_png_row(spark):
-    """JPEG is not a decoded mime: a real JPEG in the same batch as a PNG
-    comes back decoded=false with a null fingerprint, and the PNG row keeps
-    its pinned dHash."""
+    """Only PPM/PGM and PNG decode: a real JPEG, BMP, TIFF and WebP in the
+    same batch as a PNG come back decoded=false with a null fingerprint,
+    and the PNG row keeps its pinned dHash."""
+    import pathlib
+
     from enterprise_warp_spark.pipeline.codecs import encode_png
     from enterprise_warp_spark.pipeline.multimodal import (
         MEDIA_SCHEMA,
         image_fingerprints,
     )
 
+    webp = (pathlib.Path(__file__).parent / "data" / "python.webp").read_bytes()
     rows = [
         (1, "image", encode_png(_grad_rgb(16, 16, seed=9), 4), "image/png",
          16, 16, None, None),
         (2, "image", _JPEG_8X8, "image/jpeg", 8, 8, None, None),
+        (3, "image", _BMP_2X2, "image/bmp", 2, 2, None, None),
+        (4, "image", _TIFF_2X2, "image/tiff", 2, 2, None, None),
+        (5, "image", webp, "image/webp", None, None, None, None),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)
     fps = {r["media_id"]: r for r in image_fingerprints(media).collect()}
     assert fps[1]["decoded"] and fps[1]["fingerprint"] == 6341059479244569594
-    assert not fps[2]["decoded"] and fps[2]["fingerprint"] is None
+    for media_id in (2, 3, 4, 5):
+        assert not fps[media_id]["decoded"], media_id
+        assert fps[media_id]["fingerprint"] is None, media_id
 
 
 def _png_raw(w, h, depth, color, body_rows, plte=None, interlace=0):
@@ -847,267 +603,6 @@ def test_wav_g711_ulaw_alaw_decode():
         assert snr > 30.0, (law, snr)
 
 
-def test_bmp_decode_shapes(spark):
-    """Uncompressed BMP: 24-bit bottom-up, 32-bit top-down, 8-bit palette
-    with row padding; image/bmp rows get decoded=true in the media kernel."""
-    from enterprise_warp_spark.pipeline.codecs import (
-        decode_bmp,
-        encode_bmp,
-        image_features,
-    )
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    rng = np.random.default_rng(4)
-    img = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)  # w=7: padded rows
-    assert np.array_equal(decode_bmp(encode_bmp(img, bpp=24)), img)
-    assert np.array_equal(
-        decode_bmp(encode_bmp(img, bpp=32, top_down=True)), img
-    )
-
-    # 8-bit palette built by hand
-    import struct as _struct
-
-    idx = rng.integers(0, 4, (3, 5), dtype=np.uint8)
-    pal_rgb = np.array(
-        [[250, 0, 0], [0, 250, 0], [0, 0, 250], [10, 20, 30]], np.uint8
-    )
-    pal_bgra = b"".join(
-        bytes([b, g, r, 0]) for r, g, b in pal_rgb.tolist()
-    )
-    row_bytes = (5 + 3) & ~3
-    body = b""
-    for y in range(2, -1, -1):  # bottom-up
-        body += idx[y].tobytes() + b"\x00" * (row_bytes - 5)
-    off = 54 + len(pal_bgra)
-    hdr = b"BM" + _struct.pack("<IHHI", off + len(body), 0, 0, off)
-    hdr += _struct.pack(
-        "<IiiHHIIiiII", 40, 5, 3, 1, 8, 0, len(body), 0, 0, 4, 0
-    )
-    out = decode_bmp(hdr + pal_bgra + body)
-    assert np.array_equal(out, pal_rgb[idx])
-
-    media = spark.createDataFrame(
-        [(1, "image", encode_bmp(img), "image/bmp", 7, 5, None, None)],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(img))
-
-
-def test_tiff_round_trips_all_variants(spark):
-    """Baseline TIFF: none/LZW compression x predictor x strip splits x
-    byte orders round-trip; PackBits and WhiteIsZero decode from
-    hand-built streams; image/tiff rows get decoded=true in the media
-    kernel."""
-    import struct as _struct
-
-    from enterprise_warp_spark.pipeline.codecs import image_features
-    from enterprise_warp_spark.pipeline.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-    from enterprise_warp_spark.pipeline.tiff import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (13, 11, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, (9, 17), dtype=np.uint8)
-    for kw in (
-        dict(),
-        dict(compression=5),
-        dict(compression=5, predictor=2),
-        dict(predictor=2),
-        dict(rows_per_strip=4),
-        dict(compression=5, rows_per_strip=4, predictor=2),
-        dict(big_endian=True),
-        dict(big_endian=True, compression=5, predictor=2, rows_per_strip=3),
-    ):
-        assert np.array_equal(decode_tiff(encode_tiff(img, **kw)), img), kw
-        assert np.array_equal(decode_tiff(encode_tiff(gray, **kw)), gray), kw
-
-    # LZW + predictor really compresses a smooth scan-like image
-    smooth = (np.arange(64)[:, None] + np.arange(64)[None, :]).astype(np.uint8)
-    p = encode_tiff(smooth, compression=5, predictor=2)
-    assert len(p) < smooth.size // 4
-    assert np.array_equal(decode_tiff(p), smooth)
-
-    media = spark.createDataFrame(
-        [(1, "image", encode_tiff(img, compression=5), "image/tiff",
-          11, 13, None, None)],
-        MEDIA_SCHEMA,
-    )
-    row = extract_features(media, decoders={}).first()
-    assert row["decoded"] is True
-    assert row["feature"] == pytest.approx(image_features(img))
-
-
-def test_tiff_packbits_and_white_is_zero():
-    """Hand-built stream: PackBits (literal + run + no-op codes) and
-    PhotometricInterpretation 0 (white-is-zero inverts)."""
-    import struct as _struct
-
-    from enterprise_warp_spark.pipeline.tiff import decode_tiff
-
-    # 1 row, 8 px gray: literal(3) 10 20 30 | run(5x) 7  -> PackBits
-    strip = bytes([2, 10, 20, 30, 128, 257 - 5, 7])
-    row = [10, 20, 30, 7, 7, 7, 7, 7]
-    end = "<"
-    entries = [
-        (256, 3, 1, 8), (257, 3, 1, 1), (258, 3, 1, 8 << 0),
-        (259, 3, 1, 32773), (262, 3, 1, 0), (277, 3, 1, 1),
-        (278, 3, 1, 1),
-    ]
-    ifd_off = 8
-    n = len(entries) + 2  # + strip offset/count tags
-    data_off = ifd_off + 2 + 12 * n + 4
-    entries += [(273, 4, 1, data_off), (279, 4, 1, len(strip))]
-    entries.sort()
-    out = b"II" + _struct.pack("<H", 42) + _struct.pack("<I", ifd_off)
-    out += _struct.pack("<H", n)
-    for tag, tt, cnt, val in entries:
-        out += _struct.pack("<HHII", tag, tt, cnt, val)
-    out += _struct.pack("<I", 0) + strip
-    got = decode_tiff(out)
-    assert got.shape == (1, 8)
-    assert got[0].tolist() == [255 - v for v in row]  # white-is-zero
-
-
-def test_sniff_mime_magic_bytes(spark):
-    """Pure-Catalyst magic sniffing recognizes every format the engine
-    decodes (and the common ones it deliberately plugin-gates), and
-    disambiguates RIFF containers; unknown magic -> NULL; the plan stays
-    JVM-only."""
-    import contextlib
-    import io as _io
-
-    from enterprise_warp_spark.pipeline.codecs import encode_png, encode_wav
-    from enterprise_warp_spark.pipeline.multimodal import sniff_mime
-    from enterprise_warp_spark.pipeline.tiff import encode_tiff
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    sig = np.zeros(600)
-    from enterprise_warp_spark.pipeline.codecs import encode_bmp
-
-    rows = [
-        (1, encode_png(img), "image/png"),
-        (2, b"\xff\xd8\xff\xe0junk", "image/jpeg"),
-        (3, b"GIF89a" + bytes(8), "image/gif"),
-        (4, encode_bmp(img), "image/bmp"),
-        (5, encode_tiff(img), "image/tiff"),
-        (6, encode_tiff(img, big_endian=True), "image/tiff"),
-        (7, encode_wav(sig, 8000), "audio/wav"),
-        (8, b"RIFF\x00\x00\x00\x00AVI " + bytes(4), "video/x-msvideo"),
-        (9, b"OggS\x00\x02" + bytes(8), "audio/ogg"),
-        (10, b"fLaC" + bytes(8), "audio/flac"),
-        (11, b"ID3\x04" + bytes(8), "audio/mpeg"),
-        (12, b"%PDF-1.7 ...", "application/pdf"),
-        (13, b"P6\n2 2\n255\n" + bytes(12), "image/x-portable-pixmap"),
-        (14, b"\x00\x01\x02random", None),
-        (15, b"RIFF\x00\x00\x00\x00XXXX", None),
-    ]
-    df = spark.createDataFrame(
-        [(i, p) for i, p, _ in rows], "i long, payload binary"
-    )
-    got = {
-        r["i"]: r["mime"]
-        for r in df.select("i", sniff_mime().alias("mime")).collect()
-    }
-    for i, _, want in rows:
-        assert got[i] == want, (i, got[i], want)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.select(sniff_mime().alias("m")).explain("simple")
-    p = buf.getvalue()
-    assert "InPandas" not in p and "BatchEvalPython" not in p
-
-
-def test_media_census_flags_mislabeled_rows(spark):
-    from enterprise_warp_spark.pipeline.codecs import encode_png
-    from enterprise_warp_spark.pipeline.multimodal import media_census
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    rows = [
-        (encode_png(img), "image/png"),     # correct
-        (encode_png(img), "image/jpeg"),    # mislabeled
-        (b"\x00\x01garbage", "image/png"),  # unknown magic
-        (b"\xff\xd8\xffjunk", None),        # undeclared JPEG
-    ]
-    df = spark.createDataFrame(rows, "payload binary, mime string")
-    got = {
-        (r["declared"], r["actual"]): r["n"]
-        for r in media_census(df).collect()
-    }
-    assert got[("image/png", "image/png")] == 1
-    assert got[("image/jpeg", "image/png")] == 1
-    assert got[("image/png", "(unknown)")] == 1
-    assert got[("(none)", "image/jpeg")] == 1
-
-
-def test_tiff_lzw_property_round_trip_with_table_resets():
-    """Random and structured byte streams round-trip through the TIFF LZW
-    pair, including streams long enough to force dictionary resets
-    (>4094 codes)."""
-    import random
-
-    from enterprise_warp_spark.pipeline.tiff import _lzw_decode, _lzw_encode
-
-    rng = random.Random(9)
-    cases = [
-        b"",
-        b"\x00" * 10000,                      # maximal-run chaining
-        bytes(rng.randrange(256) for _ in range(257)),
-        bytes(rng.randrange(4) for _ in range(30000)),   # resets, small alphabet
-        bytes(rng.randrange(256) for _ in range(20000)), # resets, full alphabet
-        bytes(range(256)) * 40,
-    ]
-    for data in cases:
-        enc = _lzw_encode(data)
-        assert _lzw_decode(enc, len(data)) == data, len(data)
-
-
-def test_tiff_packbits_property_round_trip():
-    """A reference PackBits encoder (runs -> repeat codes, literals
-    otherwise) round-trips through _unpackbits on random run-heavy data."""
-    import random
-
-    from enterprise_warp_spark.pipeline.tiff import _unpackbits
-
-    def packbits_encode(data: bytes) -> bytes:
-        out = bytearray()
-        i, n = 0, len(data)
-        while i < n:
-            run = 1
-            while i + run < n and run < 128 and data[i + run] == data[i]:
-                run += 1
-            if run >= 2:
-                out += bytes([257 - run, data[i]])
-                i += run
-            else:
-                lit = i
-                while (
-                    i < n and i - lit < 128
-                    and not (i + 1 < n and data[i + 1] == data[i])
-                ):
-                    i += 1
-                out += bytes([i - lit - 1]) + data[lit:i]
-        return bytes(out)
-
-    rng = random.Random(10)
-    for trial in range(50):
-        chunks = []
-        for _ in range(rng.randrange(1, 20)):
-            if rng.random() < 0.5:
-                chunks.append(bytes([rng.randrange(256)]) * rng.randrange(1, 300))
-            else:
-                chunks.append(bytes(rng.randrange(256) for _ in range(rng.randrange(1, 40))))
-        data = b"".join(chunks)
-        enc = packbits_encode(data)
-        assert _unpackbits(enc, len(data)) == data, trial
-
-
 def test_decoders_survive_corrupt_inputs():
     """Truncations and bit-flips of valid payloads either decode or raise
     cleanly within a time budget — no decoder may hang or crash the
@@ -1115,22 +610,17 @@ def test_decoders_survive_corrupt_inputs():
     import signal
 
     from enterprise_warp_spark.pipeline.codecs import (
-        decode_bmp,
         decode_png,
         decode_wav,
-        encode_bmp,
         encode_png,
         encode_wav,
     )
-    from enterprise_warp_spark.pipeline.tiff import decode_tiff, encode_tiff
 
     rng = np.random.default_rng(13)
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
     sig = 0.3 * np.sin(2 * np.pi * 440 * np.arange(2000) / 8000)
     corpus = [
         (decode_png, encode_png(img)),
-        (decode_bmp, encode_bmp(img)),
-        (decode_tiff, encode_tiff(img, compression=5)),
         (decode_wav, encode_wav(sig, 8000)),
     ]
 

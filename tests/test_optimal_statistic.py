@@ -119,19 +119,6 @@ def test_orf_curves(spark):
     assert row["dip"] == pytest.approx(math.cos(math.pi / 3), rel=1e-12)
 
 
-def test_nfreqs_from_span(spark):
-    from enterprise_warp_spark.functions.fourier import nfreqs_from_span
-
-    ten_years = 10 * 365.25 * 86400.0
-    row = (
-        spark.createDataFrame([(ten_years,)], "tspan_s double")
-        .select(nfreqs_from_span(F.col("tspan_s")).alias("nf"))
-        .first()
-    )
-    # round(T/60d - 1) = round(60.875 - 1) = 60
-    assert row["nf"] == round(ten_years / (60 * 86400) - 1)
-
-
 def test_reduction_tm_projection_matches_kernel_shape(spark):
     """per_pulsar_reduction(tm_specs=...) + gp_loglik_reduced equals the full
     kernel with TMComponent('fast') up to a per-pulsar sample-independent
